@@ -1,8 +1,7 @@
 """Seeded input generators and the reference models the benchmark checks against.
 
 Every input the program sees is written here from ``--seed``: the same seed
-writes byte-identical files (pyarrow writes no timestamps into parquet), and
-the analyst query parameters come from the same random stream.
+writes byte-identical files (pyarrow writes no timestamps into parquet).
 
 Inputs:
   * B3 raw v1 history (FIXTURES.md 1.1): comma-decimal ``part``,
@@ -49,7 +48,7 @@ def _thousands(q):
 
 
 # --------------------------------------------------------------------------
-# B3 v1: raw history for EP2 (full refresh) and the analyst table
+# B3 v1: raw history for EP2 (full refresh)
 # --------------------------------------------------------------------------
 
 V1_SCHEMA = pa.schema([
@@ -132,46 +131,6 @@ def model_v1(rows):
 
 
 # --------------------------------------------------------------------------
-# Analyst queries against the refined v1 table
-# --------------------------------------------------------------------------
-
-def gen_queries(rng, codes, days, n):
-    """``n`` seeded dashboard refreshes, each a point lookup of one ticker,
-    a scan of 2 to 6 consecutive days over all tickers and a whole-table
-    aggregate."""
-    out = []
-    for _ in range(n):
-        a = int(rng.integers(0, len(days) - 1))
-        b = min(len(days) - 1, a + int(rng.integers(1, 6)))
-        out.append([{"kind": "point", "code": codes[int(rng.integers(0, len(codes)))]},
-                    {"kind": "range", "from": days[a], "to": days[b]},
-                    {"kind": "aggregate"}])
-    return out
-
-
-def query_answer(q, refined):
-    """What the harness's summary of each query must equal: the row count
-    followed by per-column sums (see ``Analyst.summarize`` in Harness.scala)."""
-    if q["kind"] == "point":
-        rs = [v for (c, _), v in refined.items() if c == q["code"]]
-        return [len(rs), sum(v["part"] for v in rs), sum(v["mean"] for v in rs),
-                sum(v["max"] for v in rs), sum(v["min"] for v in rs)]
-    if q["kind"] == "range":
-        groups = {}
-        for (c, d), v in refined.items():
-            if q["from"] <= d <= q["to"]:
-                g = groups.setdefault(c, [0, 0, float("-inf")])
-                g[0] += 1
-                g[1] += v["theoricalQty"]
-                g[2] = max(g[2], v["max"])
-        return [len(groups), sum(g[0] for g in groups.values()),
-                sum(g[1] for g in groups.values()), sum(g[2] for g in groups.values())]
-    vals = list(refined.values())
-    return [1, len(vals), sum(v["theoricalQty"] for v in vals),
-            sum(v["part"] for v in vals) / len(vals), len({c for c, _ in refined})]
-
-
-# --------------------------------------------------------------------------
 # Registry tables (FIXTURES.md 2 schemas)
 # --------------------------------------------------------------------------
 
@@ -193,7 +152,9 @@ def gen_registry(rng, root, scale):
     ``scale`` is in rows per unit: customers = 100*scale, orders =
     1000*scale, lineitem about 4 per order, events = 800*scale,
     documents = 50*scale (2% exact and 5% near copies of earlier ones) and
-    embeddings = 40*scale unit vectors in 64 dimensions."""
+    embeddings = 40*scale unit vectors in 64 dimensions, a third of the
+    even-id ones a near copy of an odd-id one (so the near-duplicate rows,
+    which match even ids against odd ones, have pairs to find)."""
     n_cust, n_ord, n_ev = 100 * scale, 1000 * scale, 800 * scale
     n_doc, n_emb = 50 * scale, 40 * scale
     cust = pa.table({
@@ -259,6 +220,9 @@ def gen_registry(rng, root, scale):
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
     })
     vecs = rng.normal(size=(n_emb, 64))
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    for i in range(0, n_emb, 6):
+        vecs[i] = vecs[int(rng.integers(0, n_emb // 2)) * 2 + 1] + 0.05 * rng.normal(size=64)
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
     emb = pa.table({
         "vec_id": np.arange(n_emb, dtype=np.int64),

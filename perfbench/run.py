@@ -8,10 +8,10 @@ harness from source with sbt (offline) into ``.bench_build/``; later runs
 reuse that build while the sources are unchanged. Each run then
 
   1. writes the workload's inputs from ``--seed`` (``gen.py``),
-  2. starts one JVM (``graft.perfbench.Harness``) on ``local[4]`` that sets
-     the workload up three times, warms it, and drives its operation in a
-     closed loop (one client, the next call only after the previous returns)
-     for ``--seconds``,
+  2. starts one JVM (``graft.perfbench.Harness``) on ``local[4]`` that warms
+     the workload up, sets it up several times, and drives its operation in
+     a closed loop (one client, the next call only after the previous
+     returns) for ``--seconds``,
   3. checks every output against the generator's model (or, for the
      registry rows, against each row's DuckDB oracle SQL), and
   4. prints one JSON line: end-to-end metrics with ``--trace 0``, per-layer
@@ -110,17 +110,10 @@ def make_inputs(workload, seed, inputs):
     config fields and what the checks need."""
     size = SETTINGS["inputs"][workload]
     rng = np.random.default_rng([seed, sorted(SETTINGS["inputs"]).index(workload)])
-    if workload in ("b3_full_refresh", "b3_analyst_queries"):
+    if workload == "b3_full_refresh":
         raw = os.path.join(inputs, "raw")
         rows = gen.gen_v1_history(rng, raw, size["tickers"], size["days"])
-        model = gen.model_v1(rows)
-        cfg = {"raw": raw, "days": size["days"]}
-        ctx = {"model": model, "raw": raw}
-        if workload == "b3_analyst_queries":
-            codes = sorted({c for c, _ in model})
-            days = gen.trading_days(gen.B3_START, size["days"])
-            cfg["queries"] = ctx["queries"] = gen.gen_queries(rng, codes, days, size["dashboards"])
-        return cfg, ctx
+        return {"raw": raw, "days": size["days"]}, {"model": gen.model_v1(rows), "raw": raw}
     sf = os.path.join(inputs, "sf")
     gen.gen_registry(rng, sf, size["scale"])
     return {"sf": sf, "rows": SETTINGS["registry_rows"]}, {"sf": sf}
@@ -190,64 +183,53 @@ def check_refresh(res, ctx):
     return failed, tree_bytes(last) / tree_bytes(ctx["raw"])
 
 
-def check_analyst(res, ctx):
-    model = ctx["model"]
-    failed = 0 if (res["registered"] == len(model) and check_v1_root(res["root"], model)) else 1
-    for a in res["answers"]:
-        want = gen.query_answer(ctx["queries"][int(a[0])][int(a[1])], model)
-        if len(want) != len(a) - 2 or not all(close(float(x), float(y))
-                                              for x, y in zip(a[2:], want)):
-            failed += 1
-    return failed, tree_bytes(res["root"]) / tree_bytes(ctx["raw"])
-
-
 def check_registry(res, ctx):
-    """Each row's warm-up result against its DuckDB oracle SQL over the same
-    generated tables, compared as sorted rows. Returns failing row names."""
+    """Each row's result in every pass (the warm-up and each timed one)
+    against its DuckDB oracle SQL over the same generated tables, compared
+    as sorted rows. Returns the failing ``pass/row`` names and each row's
+    expected row count."""
     import duckdb
     con = duckdb.connect()
     for f in sorted(os.listdir(ctx["sf"])):
         con.execute(f"CREATE VIEW {f[:-8]} AS SELECT * FROM read_parquet('{ctx['sf']}/{f}')")
     bad = set(res["row_errors"])
+    expected = {}
     for row in SETTINGS["registry_rows"]:
-        if row in bad:
-            continue
-        sql = res["oracle"].get(row)
         try:
-            exp = con.execute(sql).fetch_arrow_table()
-            got = con.execute(
-                f"SELECT * FROM read_parquet('{res['out']}/{row}/*.parquet')").fetch_arrow_table()
-        except Exception as e:  # noqa: BLE001 - a failing oracle is a failed row
+            exp = con.execute(res["oracle"][row]).fetch_arrow_table()
+            cols = sorted(exp.column_names)
+            expected[row] = (cols, exp.num_rows, sorted_rows(exp, cols))
+        except Exception as e:  # noqa: BLE001 - a failing oracle fails the row
             log(f"{row}: oracle error {e}")
-            bad.add(row)
-            continue
-        cols = sorted(exp.column_names)
-        if cols != sorted(got.column_names) or exp.num_rows != got.num_rows:
-            log(f"{row}: shape differs")
-            bad.add(row)
-            continue
+    for p in res["passes"]:
+        for row in SETTINGS["registry_rows"]:
+            name = f"{p}/{row}"
+            if name in bad:
+                continue
+            if row not in expected:
+                bad.add(name)
+                continue
+            cols, n, want = expected[row]
+            got = con.execute(f"SELECT * FROM read_parquet('{res['out']}/{name}/*.parquet')"
+                              ).fetch_arrow_table()
+            if cols != sorted(got.column_names) or n != got.num_rows:
+                log(f"{name}: shape differs")
+                bad.add(name)
+            elif not all(all(close(x, y) for x, y in zip(a, b))
+                         for a, b in zip(want, sorted_rows(got, cols))):
+                log(f"{name}: values differ")
+                bad.add(name)
+    return bad, {row: e[1] for row, e in expected.items()}
 
-        def rows(t):
-            return sorted((tuple(r[c] for c in cols) for r in t.select(cols).to_pylist()),
-                          key=lambda r: tuple((v is None, str(v)) for v in r))
-        if not all(all(close(x, y) for x, y in zip(a, b))
-                   for a, b in zip(rows(exp), rows(got))):
-            log(f"{row}: values differ")
-            bad.add(row)
-    return bad
+
+def sorted_rows(t, cols):
+    return sorted((tuple(r[c] for c in cols) for r in t.select(cols).to_pylist()),
+                  key=lambda r: tuple((v is None, str(v)) for v in r))
 
 
 # --------------------------------------------------------------------------
-# metrics
+# run
 # --------------------------------------------------------------------------
-
-def tail(xs):
-    """The highest percentile with at least ten samples beyond it (the
-    upper median when there are fewer than 22 samples), and that percentile."""
-    xs = sorted(xs)
-    i = max(len(xs) - 11, len(xs) // 2)
-    return xs[i], 100.0 * (i + 1) / len(xs)
-
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
@@ -302,28 +284,25 @@ def report(args, res, ctx):
     attempted = len(res["setup_s"]) + res["warmup_ops"] + res["ops_run"]
     if args.workload == "b3_full_refresh":
         wrong, stored = check_refresh(res, ctx)
-    elif args.workload == "b3_analyst_queries":
-        wrong, stored = check_analyst(res, ctx)
     else:
         rows = SETTINGS["registry_rows"]
-        bad = check_registry(res, ctx)
-        attempted = len(rows) * (1 + res["ops_run"]) + len(res["setup_s"])
+        bad, sizes = check_registry(res, ctx)
+        attempted = len(res["setup_s"]) + len(rows) * len(res["passes"])
         wrong = len(bad)
         for b in sorted(bad):
             log(f"row failed: {b} {res['row_errors'].get(b, '')}")
         stored = statistics.median(res["scratch_bytes_per_pass"]) / tree_bytes(ctx["sf"])
-        print("# row medians (ms): " + ", ".join(
-            f"{r} {statistics.median(ms):.0f}" for r, ms in res["row_ms"].items()))
+        print("# row times per timed pass (ms): " + ", ".join(
+            f"{r} {[round(x) for x in ms]}" for r, ms in res["row_ms"].items())
+              + f"; result rows {sizes}")
     failed = errors + wrong
-    value, pct = tail(ops)
-    print(f"# {args.workload}: {len(ops)} timed operations, op_tail_ms is p{pct:.1f}; "
-          f"setup samples {res['setup_s']}; {res['before_timing_s']:.1f} s of set-up and "
-          f"warm-up before timing; failed {failed} of {attempted}")
+    print(f"# {args.workload}: {len(ops)} timed operations; setup samples {res['setup_s']}; {res['before_timing_s']:.1f} s of set-up and "
+          f"warm-up before timing; failed {failed} of {attempted}; "
+          f"latencies (ms) {[round(x) for x in ops]}")
     if args.trace == 0:
         metrics = {
             "setup_s": statistics.median(res["setup_s"]),
             "op_p50_ms": statistics.median(ops),
-            "op_tail_ms": value,
             "peak_heap_mb": res["heap_peak_mb"],
             "stored_bytes_per_input_byte": stored,
         }

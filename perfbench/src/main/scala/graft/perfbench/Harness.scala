@@ -11,24 +11,25 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.management.GarbageCollectionNotificationInfo
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.{Bench, SparkEntry}
 import graft.ops.Tables
-import graft.pipeline.{Catalog, Pipeline, Transform}
+import graft.pipeline.{Catalog, Pipeline}
 
 /** One benchmark run in one JVM: `Harness <config.json>`.
   *
   * The config (written by `perfbench/run.py`) names the workload, its
   * generated inputs, the measuring time and whether to trace. The harness
-  * sets the workload up [[Harness.Setups]] times (timing each), warms it,
-  * then drives its operation in a closed loop, one call at a time, until
-  * the time is up. With tracing on, every second operation runs with
-  * [[Trace]] attached, so the run can state its own tracing overhead. Everything it measured, and what the
-  * checker needs to verify the outputs, goes to `result.json` in the work
-  * directory.
+  * warms the workload up, sets it up [[Workload.setups]] times (timing
+  * each, now that the JVM is warm), then drives its operation in a closed
+  * loop, one call at a time, until the time is up. With tracing on, every
+  * second operation runs with [[Trace]] attached, so the run can state its
+  * own tracing overhead.
+  * Everything it measured, and what the checker needs to verify the
+  * outputs, goes to `result.json` in the work directory.
   */
 object Harness {
-  val Setups = 3
   val MaxErrors = 20
 
   def main(args: Array[String]): Unit = {
@@ -51,7 +52,6 @@ object Harness {
     try {
       val w = cfg.get("workload").asText match {
         case "b3_full_refresh" => new Refresh(spark, cfg, work)
-        case "b3_analyst_queries" => new Analyst(spark, cfg, work)
         case "registry_mix" => new Registry(spark, cfg, work)
         case other => throw new IllegalArgumentException(s"unknown workload $other")
       }
@@ -90,13 +90,9 @@ object Result {
   * since the epoch so they line up with the job spans Spark reports.
   */
 final class Spans {
-  val windows = mutable.ArrayBuffer[(String, Long, Long, Double)]()
+  val windows = mutable.ArrayBuffer[(String, Long, Long)]()
   val counts = mutable.Map[String, Double]().withDefaultValue(0.0)
-  def time[T](key: String)(f: => T): T = {
-    val wall = System.currentTimeMillis()
-    val t0 = System.nanoTime()
-    try f finally windows += ((key, wall, System.currentTimeMillis(), (System.nanoTime() - t0) / 1e9))
-  }
+  def add(key: String, from: Long, to: Long): Unit = windows += ((key, from, to))
 }
 
 /** A workload: a repeatable set-up and one operation driven in a loop. */
@@ -104,14 +100,19 @@ abstract class Workload(val spark: SparkSession, val cfg: JsonNode, val work: St
   /** Set when the current operation is traced. */
   var spans: Option[Spans] = None
   var trace: Option[Trace] = None
-  def span[T](key: String)(f: => T): T = spans.fold(f)(_.time(key)(f))
 
+  /** How many times a run sets the workload up; `setup_s` is their median. */
+  def setups: Int = 3
   def setup(k: Int): Unit
-  /** Untimed operations before timing starts; returns how many ran. */
+  /** Untimed operations before the set-ups; returns how many ran. */
   def warmup(): Int = 0
-  /** Warm up before the set-ups instead of after them. */
-  def warmsFirst: Boolean = false
+  /** Untimed operations after the set-ups, before timing; returns how
+    * many ran. */
+  def settle(): Int = 0
   def op(i: Int): Unit
+  /** The last operation's latency in ms when it is not the wall time of
+    * [[op]] (a registry pass leaves out its GC nudges). */
+  def lastOpMs: Option[Double] = None
   /** Untimed work after an operation: facts the checker needs. */
   def afterOp(i: Int): Unit = ()
   /** Partitions of the table the operation scans (0: not partitioned). */
@@ -148,7 +149,8 @@ final class Runner(spark: SparkSession, w: Workload, seconds: Double, traced: Bo
       val i = opsRun
       around(i, {
         val t0 = System.nanoTime()
-        if (guard(s"op $i")(w.op(i))) out += ((i, (System.nanoTime() - t0) / 1e6))
+        if (guard(s"op $i")(w.op(i)))
+          out += ((i, w.lastOpMs.getOrElse((System.nanoTime() - t0) / 1e6)))
       }, guard(s"after op $i")(w.afterOp(i)))
       opsRun += 1
     } while ((System.nanoTime() < end || opsRun - first < atLeast) && errors.size < Harness.MaxErrors)
@@ -170,8 +172,8 @@ final class Runner(spark: SparkSession, w: Workload, seconds: Double, traced: Bo
     w.spans = None; w.trace = None
     t.detach()
     d("jvm.gc_s") += (gcMs() - g0) / 1e3
-    sp.windows.foreach { case (key, from, to, secs) =>
-      d(key) += secs
+    sp.windows.foreach { case (key, from, to) =>
+      d(key) += (to - from) / 1e3
       if (key == "write.s") d("write.commit_s") += t.uncoveredMs(from, to) / 1e3
       if (key == "transform.build_s") d("transform.build_jobs") += t.jobsWithin(from, to).size
     }
@@ -183,14 +185,14 @@ final class Runner(spark: SparkSession, w: Workload, seconds: Double, traced: Bo
   def run(): Unit = {
     var warm = 0
     val start = System.nanoTime()
-    if (w.warmsFirst) guard("warmup") { warm = w.warmup() }
-    val setups = (0 until Harness.Setups).map { k =>
+    guard("warmup") { warm = w.warmup() }
+    val setups = (0 until w.setups).map { k =>
       val t0 = System.nanoTime()
       guard(s"setup $k")(w.setup(k))
       (System.nanoTime() - t0) / 1e9
     }
     res.put("setup_s", setups)
-    if (!w.warmsFirst) guard("warmup") { warm = w.warmup() }
+    guard("settle") { warm += w.settle() }
     res.put("warmup_ops", warm)
     res.put("before_timing_s", (System.nanoTime() - start) / 1e9)
     heap.start()
@@ -198,10 +200,11 @@ final class Runner(spark: SparkSession, w: Workload, seconds: Double, traced: Bo
     if (!traced) res.put("ops_ms", loop(seconds, 1)((_, op, after) => plain(op, after)).map(_._2))
     else {
       // odd operations traced, even ones not, so both halves see the same
-      // warm-up and the same machine
+      // warm-up and the same machine; at least two of each, so the overhead
+      // is not one operation against one other
       val t = new Trace(spark)
       val totals = mutable.Map[String, Double]().withDefaultValue(0.0)
-      val (odd, even) = loop(seconds, 2) { (i, op, after) =>
+      val (odd, even) = loop(seconds, 4) { (i, op, after) =>
         if (i % 2 == 1) traced(t, totals)(op, after) else plain(op, after)
       }.partition(_._1 % 2 == 1)
       val n = totals.remove("ops").getOrElse(1.0)
@@ -255,10 +258,11 @@ final class HeapPeak {
   }
 }
 
-/** EP2: extract → transformV1 → writePartitioned → load over the raw v1
-  * history, into a fresh refined root and fresh catalog databases each
-  * time. Set-up is the extract stage alone (catalog registration of the
-  * raw partitions).
+/** EP2: one `Pipeline.run` (extract → transformV1 → writePartitioned →
+  * load) over the raw v1 history, into a fresh refined root and fresh
+  * catalog databases each time. Set-up is the extract stage alone (catalog
+  * registration of the raw partitions); it is cheap, so a run repeats it
+  * more often for a steadier median.
   */
 final class Refresh(spark: SparkSession, cfg: JsonNode, work: String)
     extends Workload(spark, cfg, work) {
@@ -271,114 +275,77 @@ final class Refresh(spark: SparkSession, cfg: JsonNode, work: String)
   private def root(i: Int) = s"$work/refresh-${tag(i)}"
   private def drop(p: String*): Unit = p.foreach(db => spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE"))
 
+  override def setups: Int = 7
   def setup(k: Int): Unit = {
     new Pipeline(spark, s"b3_raw_s$k", s"b3_refined_s$k").extract(raw)
     drop(s"b3_raw_s$k", s"b3_refined_s$k")
   }
 
-  /** Three untimed refreshes: the first timed ones would otherwise still
-    * be getting faster as the JIT compiles the write path. */
+  /** Two untimed refreshes before the set-ups and one after them: with
+    * one, the timed calls still got faster from one to the next as the JIT
+    * compiled the per-file write path, and the first call after the
+    * set-ups is slower than the next. Calls keep speeding up for several
+    * more refreshes; five untimed ones narrowed the run-to-run spread only
+    * from 0.16 to 0.15 of the median and cost 8 s a run. */
   override def warmup(): Int = {
-    (1 to 3).foreach { k => op(-k); afterOp(-k) }
-    3
+    (1 to 2).foreach { k => op(-k); afterOp(-k) }
+    2
   }
+  override def settle(): Int = { op(-3); afterOp(-3); 1 }
   override def tablePartitions: Double = days
 
   def op(i: Int): Unit = {
-    val p = pipeline(i)
-    spans match {
-      case None => p.run(raw, root(i))
-      case Some(sp) => // Pipeline.run, one layer at a time
-        sp.counts("catalog.partitions_added") += span("catalog.extract_s")(p.extract(raw))
-        val df = spark.read.option("basePath", raw).option("recursiveFileLookup", "false").parquet(raw)
-        val refined = span("transform.build_s")(Transform.transformV1(df))
-        span("write.s")(Transform.writePartitioned(spark, refined, root(i), keys))
-        sp.counts("catalog.partitions_added") += span("catalog.load_s")(p.load(root(i)))
-    }
+    val from = System.currentTimeMillis()
+    pipeline(i).run(raw, root(i))
+    for (t <- trace; sp <- spans) layers(t, sp, from, System.currentTimeMillis())
+  }
+
+  /** Splits one traced `Pipeline.run` call at the SQL executions Spark
+    * reported inside it: extract runs from the call's start to the first
+    * query that scans data (catalog commands and the raw read's listing),
+    * the transform from there to the start of the write (transformV1's
+    * eager jobs and the write's planning), the write is the execution that
+    * writes files, and load is the rest of the call after it.
+    */
+  private def layers(t: Trace, sp: Spans, from: Long, to: Long): Unit = {
+    val ex = t.executionsWithin(from, to)
+    val write = ex.find(_.kind == "write").getOrElse(
+      throw new IllegalStateException("Pipeline.run wrote no files"))
+    val scan = ex.filter(e => e.kind == "scan" && e.start <= write.start)
+      .map(_.start).minOption.getOrElse(write.start)
+    sp.add("catalog.extract_s", from, scan)
+    sp.add("transform.build_s", scan, write.start)
+    sp.add("write.s", write.start, write.end)
+    sp.add("catalog.load_s", write.end, to)
   }
 
   override def afterOp(i: Int): Unit = {
     val rawListed = Catalog.discoverPartitions(spark, raw, Seq("date")).size
     val listed = Catalog.discoverPartitions(spark, root(i), keys).size
-    spans.foreach(_.counts("catalog.partitions_listed") += rawListed + listed)
-    iterations += Map("root" -> root(i), "listed" -> listed,
-      "registered" -> Catalog.listPartitions(spark, s"b3_refined_${tag(i)}", "pregao_refined").size,
-      "raw_registered" -> Catalog.listPartitions(spark, s"b3_raw_${tag(i)}", "pregao_raw").size)
+    val registered = Catalog.listPartitions(spark, s"b3_refined_${tag(i)}", "pregao_refined").size
+    val rawRegistered = Catalog.listPartitions(spark, s"b3_raw_${tag(i)}", "pregao_raw").size
+    // the databases are fresh, so every registered partition was added by this call
+    spans.foreach { sp =>
+      sp.counts("catalog.partitions_listed") += rawListed + listed
+      sp.counts("catalog.partitions_added") += rawRegistered + registered
+    }
+    iterations += Map("root" -> root(i), "listed" -> listed, "registered" -> registered,
+      "raw_registered" -> rawRegistered)
     drop(s"b3_raw_${tag(i)}", s"b3_refined_${tag(i)}")
   }
 
   def finish(res: Result, opsRun: Int): Unit = res.put("iterations", iterations)
 }
 
-/** Read-only analyst reads against the refined table that set-up builds
-  * and registers with `runRegistered`. One operation is a dashboard
-  * refresh: a point lookup, a date-range scan and a whole-table aggregate
-  * through the catalog, one after the other.
-  */
-final class Analyst(spark: SparkSession, cfg: JsonNode, work: String)
-    extends Workload(spark, cfg, work) {
-  private val raw = cfg.get("raw").asText
-  private val queries = cfg.get("queries").elements().asScala.toIndexedSeq
-  private val table = s"b3_refined_a${Harness.Setups - 1}.pregao_refined"
-  private val answers = mutable.ArrayBuffer[Seq[Double]]()
-  // the first dashboards run ~30% slower while the JIT compiles
-  private val Warm = 10
-  private var partitions = 0
-
-  def setup(k: Int): Unit =
-    new Pipeline(spark, s"b3_raw_a$k", s"b3_refined_a$k").runRegistered(raw, s"$work/analyst-$k")
-
-  private def sql(q: JsonNode): String = q.get("kind").asText match {
-    case "point" =>
-      s"SELECT part, mean_part_7_days, max_part_7_days, min_part_7_days FROM $table " +
-        s"WHERE code = '${q.get("code").asText}'"
-    case "range" =>
-      s"SELECT code, COUNT(*) AS n, SUM(theoricalQty) AS q, MAX(max_part_7_days) AS mx " +
-        s"FROM $table WHERE reference_date BETWEEN '${q.get("from").asText}' " +
-        s"AND '${q.get("to").asText}' GROUP BY code"
-    case _ =>
-      s"SELECT COUNT(*) AS n, SUM(theoricalQty) AS q, AVG(part) AS p, " +
-        s"COUNT(DISTINCT code) AS c FROM $table"
-  }
-
-  /** Row count, then the sum of each numeric column. */
-  private def summarize(rows: Array[Row]): Seq[Double] = {
-    val sums = mutable.ArrayBuffer[Double]()
-    rows.foreach(r => r.toSeq.collect { case n: java.lang.Number => n.doubleValue }
-      .zipWithIndex.foreach { case (v, j) =>
-        if (j < sums.size) sums(j) += v else sums += v
-      })
-    rows.length.toDouble +: sums.toSeq
-  }
-
-  private def ask(n: Int): Unit = {
-    val b = n % queries.size
-    queries(b).elements().asScala.zipWithIndex.foreach { case (q, j) =>
-      answers += (Seq(b.toDouble, j.toDouble) ++ summarize(spark.sql(sql(q)).collect()))
-    }
-  }
-
-  override def warmup(): Int = {
-    partitions = Catalog.listPartitions(spark, s"b3_refined_a${Harness.Setups - 1}",
-      "pregao_refined").size
-    (0 until Warm).foreach(ask)
-    Warm
-  }
-  override def tablePartitions: Double = partitions
-
-  def op(i: Int): Unit = ask(Warm + i)
-
-  def finish(res: Result, opsRun: Int): Unit = {
-    res.put("answers", answers)
-    res.put("registered", partitions)
-    res.put("root", s"$work/analyst-${Harness.Setups - 1}")
-  }
-}
-
-/** One pass over a fixed list of `SparkEntry.queries` rows, each sent to
-  * a noop sink the way `graft.Bench` does (with a GC nudge before each row).
-  * Warm-up, before set-up, writes every row's result to parquet for the
-  * oracle compare; set-up builds the BM25 index the `q_bm25_*` rows probe.
+/** One pass over a fixed list of `SparkEntry.queries` rows, with a GC
+  * nudge before each row as `graft.Bench` does. Each row's result is
+  * fetched with `collect()`, which materializes every row and column as
+  * Bench's noop sink does, and, untimed, written to parquet so the checker
+  * compares every pass, timed ones included, with the row's oracle.
+  * Set-up builds a BM25 index of the documents (the build
+  * `q_bm25_indexed` times). One untimed pass runs before the set-ups and
+  * one after them, both checked the same way.
+  * A pass's latency is the sum of its rows' times, without the nudges.
   */
 final class Registry(spark: SparkSession, cfg: JsonNode, work: String)
     extends Workload(spark, cfg, work) {
@@ -387,44 +354,69 @@ final class Registry(spark: SparkSession, cfg: JsonNode, work: String)
   private val fns = rows.map(r => r -> SparkEntry.queries(r)).toMap
   private val rowMs = mutable.Map[String, mutable.ArrayBuffer[Double]]()
   private val rowErrors = mutable.Map[String, String]()
+  private val results = mutable.Map[String, (StructType, Array[Row])]()
+  private val passes = mutable.ArrayBuffer[String]()
   private val scratch = new File(System.getProperty("java.io.tmpdir"))
   private val scratchBytes = mutable.ArrayBuffer[Double]()
   private var lastScratch = 0L
+  private var passMs = 0.0
 
   def setup(k: Int): Unit =
     graft.text.Bm25.writeBm25Index(Tables.read(spark, sf, "documents"),
       s"$work/registry-setup-$k", nBuckets = 16)
 
-  override def warmsFirst: Boolean = true
+  private def tag(i: Int) = if (i < 0) s"w${-i}" else i.toString
 
-  private def each(nudge: Boolean)(f: String => Unit): Unit = rows.foreach { r =>
-    if (nudge) System.gc()
-    try f(r) catch {
-      case e: Throwable =>
-        rowErrors.getOrElseUpdate(r, s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}")
-    }
-  }
-
-  override def warmup(): Int = {
-    each(nudge = false)(r =>
-      fns(r)(spark, sf).coalesce(1).write.mode("overwrite").parquet(s"$work/registry-out/$r"))
-    lastScratch = Registry.bytes(scratch)
-    rows.size
-  }
-
-  def op(i: Int): Unit = each(nudge = true) { r =>
+  /** Runs every row once; returns the summed row times in ms. */
+  private def pass(i: Int): Double = rows.map { r =>
+    System.gc()
     val before = trace.map(_.snapshot())
-    val t0 = System.nanoTime()
-    fns(r)(spark, sf).write.format("noop").mode("overwrite").save()
-    val ms = (System.nanoTime() - t0) / 1e6
-    rowMs.getOrElseUpdate(r, mutable.ArrayBuffer()) += ms
-    for (t <- trace; b <- before; sp <- spans) {
-      sp.counts(s"registry.$r.jobs") += Trace.diff(t.snapshot(), b)("exec.jobs")
-      sp.counts(s"registry.${Bench.tierOf(r)}_s") += ms / 1e3
+    try {
+      val t0 = System.nanoTime()
+      val df = fns(r)(spark, sf)
+      val got = df.collect()
+      val ms = (System.nanoTime() - t0) / 1e6
+      results(r) = (df.schema, got)
+      for (t <- trace; b <- before; sp <- spans) {
+        sp.counts(s"registry.$r.jobs") += Trace.diff(t.snapshot(), b)("exec.jobs")
+        sp.counts(s"registry.${Bench.tierOf(r)}_s") += ms / 1e3
+      }
+      if (i >= 0) rowMs.getOrElseUpdate(r, mutable.ArrayBuffer()) += ms
+      ms
+    } catch {
+      case e: Throwable =>
+        results.remove(r)
+        rowErrors(s"${tag(i)}/$r") =
+          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}"
+        0.0
     }
+  }.sum
+
+  /** Writes the results the last pass collected, for the checker. */
+  private def save(i: Int): Unit = {
+    results.foreach { case (r, (schema, got)) =>
+      spark.createDataFrame(java.util.Arrays.asList(got: _*), schema).coalesce(1)
+        .write.mode("overwrite").parquet(s"$work/registry-out/${tag(i)}/$r")
+    }
+    results.clear()
+    passes += tag(i)
   }
+
+  override def warmup(): Int = { pass(-1); save(-1); 1 }
+
+  /** One more untimed pass after the set-ups: the first pass that follows
+    * them runs 10-15% slower in every row than the next. */
+  override def settle(): Int = {
+    pass(-2); save(-2)
+    lastScratch = Registry.bytes(scratch)
+    1
+  }
+
+  def op(i: Int): Unit = passMs = pass(i)
+  override def lastOpMs: Option[Double] = Some(passMs)
 
   override def afterOp(i: Int): Unit = {
+    save(i)
     val now = Registry.bytes(scratch)
     scratchBytes += (now - lastScratch).toDouble
     lastScratch = now
@@ -432,6 +424,7 @@ final class Registry(spark: SparkSession, cfg: JsonNode, work: String)
 
   def finish(res: Result, opsRun: Int): Unit = {
     res.put("out", s"$work/registry-out")
+    res.put("passes", passes)
     res.put("oracle", rows.flatMap(r => SparkEntry.oracleSql.get(r).map(r -> _)).toMap)
     res.put("row_ms", rowMs)
     res.put("row_errors", rowErrors)

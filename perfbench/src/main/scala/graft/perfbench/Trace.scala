@@ -8,10 +8,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.BenchBus
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan, SparkPlanInfo}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -23,11 +24,17 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Counters only grow. A caller brackets one operation with [[snapshot]]
   * calls and takes the difference; [[snapshot]] first drains the listener
   * bus, so every event posted before it returns has been counted.
+  *
+  * It also keeps the span of every job and of every top-level SQL
+  * execution, so a caller can split the wall time of one call into the
+  * parts that wrote, scanned or ran no job at all.
   */
 final class Trace(spark: SparkSession) {
   private val counters = new ConcurrentHashMap[String, Double]()
   private val jobStarts = new ConcurrentHashMap[Int, Long]()
   private val jobSpans = new ConcurrentLinkedQueue[(Long, Long)]()
+  private val execStarts = new ConcurrentHashMap[Long, (String, Long)]()
+  private val execSpans = new ConcurrentLinkedQueue[Trace.Execution]()
 
   private def add(key: String, v: Double): Unit = counters.merge(key, v, (a, b) => a + b)
 
@@ -38,6 +45,15 @@ final class Trace(spark: SparkSession) {
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       Option(jobStarts.remove(e.jobId)).foreach(s => jobSpans.add((s, e.time)))
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+        execStarts.put(s.executionId, (Trace.kind(s.sparkPlanInfo), s.time))
+      case x: SparkListenerSQLExecutionEnd =>
+        Option(execStarts.remove(x.executionId)).foreach { case (k, t) =>
+          execSpans.add(Trace.Execution(k, t, x.time))
+        }
+      case _ =>
+    }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = add("exec.stages", 1)
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
       add("exec.tasks", 1)
@@ -104,6 +120,12 @@ final class Trace(spark: SparkSession) {
     spark.streams.removeListener(streams)
   }
 
+  /** Top-level SQL executions that started inside `[from, to]`, by start. */
+  def executionsWithin(from: Long, to: Long): Seq[Trace.Execution] = {
+    BenchBus.drain(spark.sparkContext)
+    execSpans.asScala.toSeq.filter(e => e.start >= from && e.start <= to).sortBy(_.start)
+  }
+
   def snapshot(): Map[String, Double] = {
     BenchBus.drain(spark.sparkContext)
     counters.asScala.toMap
@@ -126,6 +148,19 @@ final class Trace(spark: SparkSession) {
 }
 
 object Trace {
+  /** One SQL execution: `kind` is "write" when it writes files, "scan"
+    * when it reads them, else "command"; times in epoch milliseconds.
+    */
+  final case class Execution(kind: String, start: Long, end: Long)
+
+  def kind(p: SparkPlanInfo): String = {
+    def all(q: SparkPlanInfo): Seq[SparkPlanInfo] = q +: q.children.flatMap(all)
+    val names = all(p).map(_.nodeName)
+    if (names.exists(n => n.startsWith("Execute ") && n.contains("Insert"))) "write"
+    else if (names.exists(_.startsWith("Scan "))) "scan"
+    else "command"
+  }
+
   /** Every physical operator that ran, looking through adaptive
     * execution, query stages and command wrappers; a reused exchange is
     * skipped so its subtree is not counted twice.
