@@ -11,11 +11,13 @@ reuse that build while the sources are unchanged. Each run then
   2. starts one JVM (``graft.perfbench.Harness``) on ``local[4]`` that warms
      the workload up, sets it up several times, and drives its operation in
      a closed loop (one client, the next call only after the previous
-     returns) for ``--seconds``,
+     returns) for ``--seconds`` and at least a fixed number of calls,
+     taking each call's CPU time (the program's threads, not the JVM's own)
+     and wall time,
   3. checks every output against the generator's model (or, for the
      registry rows, against each row's DuckDB oracle SQL), and
   4. prints one JSON line: end-to-end metrics with ``--trace 0``, per-layer
-     metrics with ``--trace 1`` (whose run traces every second operation
+     metrics with ``--trace 1`` (whose run traces half the operations
      and compares them with the others to state the tracing overhead).
 
 Workloads and metrics are listed in ``BENCHMARK.json`` at the root; input
@@ -254,6 +256,9 @@ def main():
         json.dump(cfg, open(cfg_path, "w"))
         s = SETTINGS["session"]
         cmd = (["java", f"-Xmx{s['heap']}", f"-Xms{s['heap']}", "-XX:-UsePerfData",
+                # a fixed set of JIT compiler threads, so the harness can
+                # leave their CPU time out of the operations' (Harness.cpuNs)
+                "-XX:-UseDynamicNumberOfCompilerThreads",
                 f"-Djava.io.tmpdir={work}/tmp"]
                + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
                + ["-cp", classpath, "graft.perfbench.Harness", cfg_path])
@@ -278,6 +283,7 @@ def main():
 
 def report(args, res, ctx):
     ops = res["ops_ms"]
+    cpu = res["ops_cpu_ms"]
     errors = len(res["errors"])
     if not ops:
         raise SystemExit("no timed operation succeeded")
@@ -292,29 +298,32 @@ def report(args, res, ctx):
         for b in sorted(bad):
             log(f"row failed: {b} {res['row_errors'].get(b, '')}")
         stored = statistics.median(res["scratch_bytes_per_pass"]) / tree_bytes(ctx["sf"])
-        print("# row times per timed pass (ms): " + ", ".join(
-            f"{r} {[round(x) for x in ms]}" for r, ms in res["row_ms"].items())
+        print("# row CPU times per timed pass (ms): " + ", ".join(
+            f"{r} {[round(x) for x in ms]}" for r, ms in res["row_cpu_ms"].items())
               + f"; result rows {sizes}")
     failed = errors + wrong
     print(f"# {args.workload}: {len(ops)} timed operations; setup samples {res['setup_s']}; {res['before_timing_s']:.1f} s of set-up and "
           f"warm-up before timing; failed {failed} of {attempted}; "
-          f"latencies (ms) {[round(x) for x in ops]}")
+          f"CPU times (ms) {[round(x) for x in cpu]}; wall times (ms) {[round(x) for x in ops]}; "
+          f"{100 * res['steal_share']:.1f}% of the machine's CPU time stolen while timing")
     if args.trace == 0:
         metrics = {
             "setup_s": statistics.median(res["setup_s"]),
-            "op_p50_ms": statistics.median(ops),
+            "op_cpu_ms": statistics.median(cpu),
             "peak_heap_mb": res["heap_peak_mb"],
             "stored_bytes_per_input_byte": stored,
         }
         units = {m["name"]: m["unit"] for m in BENCH["end_to_end"]}
     else:
         layers = dict(res.get("layers", {}))
-        traced = res.get("traced_ms") or []
+        traced = res.get("traced_cpu_ms") or []
         if traced:
             layers["trace.overhead_pct"] = 100.0 * (statistics.median(traced) /
-                                                    statistics.median(ops) - 1.0)
+                                                    statistics.median(cpu) - 1.0)
+        layers["wall.op_p50_ms"] = statistics.median(ops)
+        layers["wall.steal_pct"] = 100.0 * res["steal_share"]
         print(f"# traced run: {len(ops)} untraced and {len(traced)} traced operations; "
-              f"tracing overhead {layers.get('trace.overhead_pct', 0.0):+.1f}% on the median")
+              f"tracing overhead {layers.get('trace.overhead_pct', 0.0):+.1f}% on the median CPU time")
         units = {m["name"]: m["unit"] for m in BENCH["per_layer"]}
         metrics = {k: layers.get(k, 0.0) for k in units}
     out = {"correct": failed == 0, "attempted": attempted, "failed": failed,

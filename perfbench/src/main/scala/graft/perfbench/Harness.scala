@@ -31,6 +31,50 @@ import graft.pipeline.{Catalog, Pipeline}
   */
 object Harness {
   val MaxErrors = 20
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** CPU time the program's threads have spent so far, user and system:
+    * the process's CPU time less that of the JVM's own threads (JIT
+    * compilers, code sweeper, garbage collectors, VM thread). The JVM is
+    * started with a fixed set of compiler threads, so none of them exits
+    * and takes its time out of the count.
+    *
+    * Why not wall time: on a shared host the hypervisor steals CPU time
+    * from the VM, and on a 4-vCPU VM the same refresh took 3 s in one run
+    * and 7 s in a run minutes later. Why not the whole process: the JIT
+    * spent 1.5-4.5 s of CPU time in every refresh, at a pace set by how
+    * much CPU time the host lent the VM. Left out, five runs of a refresh
+    * spread 0.05 of their median while 1% to 25% of the machine's CPU time
+    * was stolen.
+    */
+  def cpuNs(): Long = os.getProcessCpuTime - jvmNs()
+
+  private val jvmThreads = Seq("C1 CompilerThre", "C2 CompilerThre", "Sweeper thread",
+    "Service Thread", "VM Thread", "VM Periodic Tas", "GC Thread#", "G1 ")
+
+  /** CPU time of the JVM's own threads so far, from /proc (clock ticks of
+    * 10 ms). */
+  def jvmNs(): Long = Option(new File("/proc/self/task").listFiles()).toSeq.flatten.map { t =>
+    try {
+      val stat = new String(java.nio.file.Files.readAllBytes(new File(t, "stat").toPath))
+      val name = stat.substring(stat.indexOf('(') + 1, stat.lastIndexOf(')'))
+      if (!jvmThreads.exists(name.startsWith)) 0L
+      else {
+        val f = stat.substring(stat.lastIndexOf(')') + 2).split(' ')
+        (f(11).toLong + f(12).toLong) * 10000000L // utime, stime
+      }
+    } catch { case _: java.io.IOException => 0L }
+  }.sum
+
+  /** (steal, all) jiffies of the machine so far, from /proc/stat. */
+  def stealJiffies(): (Long, Long) = {
+    val f = scala.io.Source.fromFile("/proc/stat")
+    try {
+      val v = f.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+      (if (v.length > 7) v(7) else 0L, v.sum)
+    } finally f.close()
+  }
 
   def main(args: Array[String]): Unit = {
     val cfg = new ObjectMapper().readTree(new File(args(0)))
@@ -110,9 +154,18 @@ abstract class Workload(val spark: SparkSession, val cfg: JsonNode, val work: St
     * many ran. */
   def settle(): Int = 0
   def op(i: Int): Unit
-  /** The last operation's latency in ms when it is not the wall time of
-    * [[op]] (a registry pass leaves out its GC nudges). */
-  def lastOpMs: Option[Double] = None
+  /** The last operation's cost when it is not what the runner measured
+    * around [[op]] (a registry pass leaves out its GC nudges). */
+  def lastOpCost: Option[Cost] = None
+  /** How many operations an untraced run times at the least. The run
+    * goes on past them only while its seconds are not up, and the
+    * benchmark's seconds are set so that they are: every run then times
+    * the same calls of the sequence, and the calls still get cheaper from
+    * one to the next as the JVM warms up. */
+  def timedOps: Int = 2
+  /** Whether the runner collects garbage, untimed, before each operation,
+    * so that no operation pays for the garbage of the one before. */
+  def nudgeGc: Boolean = false
   /** Untimed work after an operation: facts the checker needs. */
   def afterOp(i: Int): Unit = ()
   /** Partitions of the table the operation scans (0: not partitioned). */
@@ -137,20 +190,19 @@ final class Runner(spark: SparkSession, w: Workload, seconds: Double, traced: Bo
     }
 
   /** Runs operations until `secs` have passed and at least `atLeast` ran;
-    * returns `(operation index, latency in ms)` of each one that
-    * succeeded. `around` brackets each operation and its untimed
-    * follow-up, for tracing.
+    * returns the index and cost of each one that succeeded. `around`
+    * brackets each operation and its untimed follow-up, for tracing.
     */
-  private def loop(secs: Double, atLeast: Int)(around: (Int, => Unit, => Unit) => Unit): Seq[(Int, Double)] = {
-    val out = mutable.ArrayBuffer[(Int, Double)]()
+  private def loop(secs: Double, atLeast: Int)(around: (Int, => Unit, => Unit) => Unit): Seq[(Int, Cost)] = {
+    val out = mutable.ArrayBuffer[(Int, Cost)]()
     val end = System.nanoTime() + (secs * 1e9).toLong
     val first = opsRun
     do {
       val i = opsRun
       around(i, {
-        val t0 = System.nanoTime()
-        if (guard(s"op $i")(w.op(i)))
-          out += ((i, w.lastOpMs.getOrElse((System.nanoTime() - t0) / 1e6)))
+        if (w.nudgeGc) System.gc()
+        val start = Cost.start()
+        if (guard(s"op $i")(w.op(i))) out += ((i, w.lastOpCost.getOrElse(start.stop())))
       }, guard(s"after op $i")(w.afterOp(i)))
       opsRun += 1
     } while ((System.nanoTime() < end || opsRun - first < atLeast) && errors.size < Harness.MaxErrors)
@@ -196,17 +248,24 @@ final class Runner(spark: SparkSession, w: Workload, seconds: Double, traced: Bo
     res.put("warmup_ops", warm)
     res.put("before_timing_s", (System.nanoTime() - start) / 1e9)
     heap.start()
+    val st0 = Harness.stealJiffies()
     def plain(op: => Unit, after: => Unit): Unit = { op; after }
-    if (!traced) res.put("ops_ms", loop(seconds, 1)((_, op, after) => plain(op, after)).map(_._2))
+    def put(ops: Seq[(Int, Cost)]): Unit = {
+      res.put("ops_ms", ops.map(_._2.wallMs))
+      res.put("ops_cpu_ms", ops.map(_._2.cpuMs))
+    }
+    if (!traced) put(loop(seconds, w.timedOps)((_, op, after) => plain(op, after)))
     else {
-      // odd operations traced, even ones not, so both halves see the same
-      // warm-up and the same machine; at least two of each, so the overhead
-      // is not one operation against one other
+      // operations traced in the order untraced, traced, traced, untraced,
+      // so both halves see the same machine and, on average, the same point
+      // of the warm-up (calls still get cheaper from one to the next); at
+      // least two of each, so the overhead is not one call against another
+      val isTraced = (i: Int) => i % 4 == 1 || i % 4 == 2
       val t = new Trace(spark)
       val totals = mutable.Map[String, Double]().withDefaultValue(0.0)
-      val (odd, even) = loop(seconds, 4) { (i, op, after) =>
-        if (i % 2 == 1) traced(t, totals)(op, after) else plain(op, after)
-      }.partition(_._1 % 2 == 1)
+      val (tracedOps, plainOps) = loop(seconds, 4) { (i, op, after) =>
+        if (isTraced(i)) traced(t, totals)(op, after) else plain(op, after)
+      }.partition(o => isTraced(o._1))
       val n = totals.remove("ops").getOrElse(1.0)
       val layers = totals.map { case (k, v) => k -> v / n }
       val files = layers.getOrElse("write.files", 0.0)
@@ -217,11 +276,13 @@ final class Runner(spark: SparkSession, w: Workload, seconds: Double, traced: Bo
         if (w.tablePartitions > 0 && scans > 0)
           layers.getOrElse("scan.partitions", 0.0) / (scans * w.tablePartitions)
         else 0.0
-      res.put("ops_ms", even.map(_._2))
-      res.put("traced_ms", odd.map(_._2))
+      put(plainOps)
+      res.put("traced_cpu_ms", tracedOps.map(_._2.cpuMs))
       res.put("layers", layers)
     }
     heap.stop()
+    val st1 = Harness.stealJiffies()
+    res.put("steal_share", (st1._1 - st0._1).toDouble / (st1._2 - st0._2).max(1L))
     res.put("heap_peak_mb", heap.peak / 1048576.0)
     res.put("ops_run", opsRun)
     guard("finish")(w.finish(res, opsRun))
@@ -229,10 +290,26 @@ final class Runner(spark: SparkSession, w: Workload, seconds: Double, traced: Bo
   }
 }
 
-/** Highest heap occupancy left after a garbage collection while `on`: the
-  * heap the operations retain, not how far the collector let garbage pile
-  * up before collecting. [[stop]] forces one last collection so a window
-  * without any still reports its retained heap.
+/** What one operation cost: wall time and CPU time (see [[Harness.cpuNs]]),
+  * in ms. */
+final case class Cost(wallMs: Double, cpuMs: Double) {
+  def +(o: Cost): Cost = Cost(wallMs + o.wallMs, cpuMs + o.cpuMs)
+}
+
+object Cost {
+  val zero: Cost = Cost(0.0, 0.0)
+  final class Started(t0: Long, c0: Long) {
+    def stop(): Cost = Cost((System.nanoTime() - t0) / 1e6, (Harness.cpuNs() - c0) / 1e6)
+  }
+  def start(): Started = new Started(System.nanoTime(), Harness.cpuNs())
+}
+
+/** Highest heap occupancy left after the full collections the harness
+  * asks for while `on` (before each operation or registry row, and in
+  * [[stop]]): the heap the program retains between calls. A young
+  * collection in the middle of a call is not counted: what it leaves
+  * includes old-generation garbage that no young collection frees, which
+  * made one run in five of the same refresh report 118 MB against 67 MB.
   */
 final class HeapPeak {
   @volatile private var on = false
@@ -244,9 +321,11 @@ final class HeapPeak {
       e.addNotificationListener((n: Notification, _: AnyRef) =>
         if (on && n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
           val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
-          val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
-            .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
-          peak = peak.max(used)
+          if (info.getGcCause == "System.gc()") {
+            val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
+              .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+            peak = peak.max(used)
+          }
         }, null, null)
     case _ =>
   }
@@ -281,18 +360,19 @@ final class Refresh(spark: SparkSession, cfg: JsonNode, work: String)
     drop(s"b3_raw_s$k", s"b3_refined_s$k")
   }
 
-  /** Two untimed refreshes before the set-ups and one after them: with
-    * one, the timed calls still got faster from one to the next as the JIT
-    * compiled the per-file write path, and the first call after the
-    * set-ups is slower than the next. Calls keep speeding up for several
-    * more refreshes; five untimed ones narrowed the run-to-run spread only
-    * from 0.16 to 0.15 of the median and cost 8 s a run. */
+  /** Two untimed refreshes before the set-ups and one after them. The
+    * refreshes keep getting cheaper for several more calls as the JIT
+    * works through its queue; a run cannot afford to wait that out, so it
+    * times the same calls of the sequence in every run instead
+    * ([[timedOps]]). */
   override def warmup(): Int = {
     (1 to 2).foreach { k => op(-k); afterOp(-k) }
     2
   }
   override def settle(): Int = { op(-3); afterOp(-3); 1 }
+  override def timedOps: Int = 3
   override def tablePartitions: Double = days
+  override def nudgeGc: Boolean = true
 
   def op(i: Int): Unit = {
     val from = System.currentTimeMillis()
@@ -352,14 +432,14 @@ final class Registry(spark: SparkSession, cfg: JsonNode, work: String)
   private val sf = cfg.get("sf").asText
   private val rows = cfg.get("rows").elements().asScala.map(_.asText).toIndexedSeq
   private val fns = rows.map(r => r -> SparkEntry.queries(r)).toMap
-  private val rowMs = mutable.Map[String, mutable.ArrayBuffer[Double]]()
+  private val rowCpuMs = mutable.Map[String, mutable.ArrayBuffer[Double]]()
   private val rowErrors = mutable.Map[String, String]()
   private val results = mutable.Map[String, (StructType, Array[Row])]()
   private val passes = mutable.ArrayBuffer[String]()
   private val scratch = new File(System.getProperty("java.io.tmpdir"))
   private val scratchBytes = mutable.ArrayBuffer[Double]()
   private var lastScratch = 0L
-  private var passMs = 0.0
+  private var passCost = Cost.zero
 
   def setup(k: Int): Unit =
     graft.text.Bm25.writeBm25Index(Tables.read(spark, sf, "documents"),
@@ -367,30 +447,30 @@ final class Registry(spark: SparkSession, cfg: JsonNode, work: String)
 
   private def tag(i: Int) = if (i < 0) s"w${-i}" else i.toString
 
-  /** Runs every row once; returns the summed row times in ms. */
-  private def pass(i: Int): Double = rows.map { r =>
+  /** Runs every row once; returns the summed cost of the rows. */
+  private def pass(i: Int): Cost = rows.map { r =>
     System.gc()
     val before = trace.map(_.snapshot())
     try {
-      val t0 = System.nanoTime()
+      val started = Cost.start()
       val df = fns(r)(spark, sf)
       val got = df.collect()
-      val ms = (System.nanoTime() - t0) / 1e6
+      val cost = started.stop()
       results(r) = (df.schema, got)
       for (t <- trace; b <- before; sp <- spans) {
         sp.counts(s"registry.$r.jobs") += Trace.diff(t.snapshot(), b)("exec.jobs")
-        sp.counts(s"registry.${Bench.tierOf(r)}_s") += ms / 1e3
+        sp.counts(s"registry.${Bench.tierOf(r)}_s") += cost.wallMs / 1e3
       }
-      if (i >= 0) rowMs.getOrElseUpdate(r, mutable.ArrayBuffer()) += ms
-      ms
+      if (i >= 0) rowCpuMs.getOrElseUpdate(r, mutable.ArrayBuffer()) += cost.cpuMs
+      cost
     } catch {
       case e: Throwable =>
         results.remove(r)
         rowErrors(s"${tag(i)}/$r") =
           s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}"
-        0.0
+        Cost.zero
     }
-  }.sum
+  }.foldLeft(Cost.zero)(_ + _)
 
   /** Writes the results the last pass collected, for the checker. */
   private def save(i: Int): Unit = {
@@ -404,16 +484,16 @@ final class Registry(spark: SparkSession, cfg: JsonNode, work: String)
 
   override def warmup(): Int = { pass(-1); save(-1); 1 }
 
-  /** One more untimed pass after the set-ups: the first pass that follows
-    * them runs 10-15% slower in every row than the next. */
+  /** No untimed pass after the set-ups, as a run cannot afford another:
+    * the first timed pass costs 5-10% more CPU time than the second, and
+    * every run times the same two ([[timedOps]]). */
   override def settle(): Int = {
-    pass(-2); save(-2)
     lastScratch = Registry.bytes(scratch)
-    1
+    0
   }
 
-  def op(i: Int): Unit = passMs = pass(i)
-  override def lastOpMs: Option[Double] = Some(passMs)
+  def op(i: Int): Unit = passCost = pass(i)
+  override def lastOpCost: Option[Cost] = Some(passCost)
 
   override def afterOp(i: Int): Unit = {
     save(i)
@@ -426,7 +506,7 @@ final class Registry(spark: SparkSession, cfg: JsonNode, work: String)
     res.put("out", s"$work/registry-out")
     res.put("passes", passes)
     res.put("oracle", rows.flatMap(r => SparkEntry.oracleSql.get(r).map(r -> _)).toMap)
-    res.put("row_ms", rowMs)
+    res.put("row_cpu_ms", rowCpuMs)
     res.put("row_errors", rowErrors)
     res.put("scratch_bytes_per_pass", scratchBytes)
   }
