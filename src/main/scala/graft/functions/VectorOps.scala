@@ -57,10 +57,4 @@ object VectorOps {
     val c = try_divide(dotAB, normA * normB)
     when(isnan(c), lit(null).cast(DoubleType)).otherwise(c)
   }
-
-  /** Squared euclidean distance (elements widened before subtraction, per
-    * the module contract).
-    */
-  def distSq(a: Column, b: Column): Column =
-    aggregate(zip_with(toDoubles(a), toDoubles(b), (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
 }

@@ -71,13 +71,6 @@ object Windows {
     when(cnt > 1, sqrt(greatest(sx2 - sx * sx / cnt, lit(0.0)) / (cnt - lit(1))))
   }
 
-  /** Engine-native sample stddev over a window. Prefer
-    * [[rollingStddevExact]] anywhere results must be reproducible outside
-    * Spark — this one's accumulation algorithm (and hence its last ulp) is
-    * Spark's own.
-    */
-  def rollingStddev(c: Column, w: WindowSpec): Column = stddev_samp(c).over(w)
-
   /** W8/W9: rolling max / min. */
   def rollingMax(c: Column, w: WindowSpec): Column = max(c).over(w)
   def rollingMin(c: Column, w: WindowSpec): Column = min(c).over(w)

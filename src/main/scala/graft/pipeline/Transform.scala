@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.NioLocalFileSystem
 import graft.ops.{Cleansing, Dedup, Windows}
 
 /** The reference's two transform chains, re-expressed as pure
@@ -122,18 +123,30 @@ object Transform {
 
   /** K1/K2 sink (`etl.py:94-107`, `transform_1.py:108-115`): partitioned
     * snappy parquet with dynamic partition overwrite — the reference's
-    * "upsert" semantics. K3/K4 confs are set here so callers can't forget.
+    * "upsert" semantics. K3 is a per-write option, so the caller's session
+    * keeps its own `partitionOverwriteMode` for every other write.
+    *
+    * The write runs on [[graft.io.NioLocalFileSystem]]: without the native
+    * Hadoop library, the stock local filesystem forks `/bin/chmod` for
+    * every part file, `.crc` checksum and partition directory it creates,
+    * one process at a time inside the write task. The filesystem is
+    * chosen through writer options, which reach only this write's Hadoop
+    * conf, so it applies to `file:` roots alone; reads, other writers and
+    * other schemes (s3a, hdfs) keep their own filesystems. The output tree
+    * (files, checksums, modes) is the one the stock filesystem writes.
+    * [[writePartitionedToTable]] cannot do the same: `saveAsTable` would
+    * store the writer options in the table's metadata.
     */
   def writePartitioned(spark: SparkSession, df: DataFrame, path: String,
                        partitionCols: Seq[String],
-                       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic") // K3 :40
+                       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write
       .partitionBy(partitionCols: _*)
       .mode(mode)
+      .option("partitionOverwriteMode", "dynamic") // K3 :40
       .option("compression", "snappy") // `etl.py:106`
+      .options(NioLocalFileSystem.writerOptions)
       .parquet(path)
-  }
 
   /** Atomic write+register sink — the reference's `UPDATE_IN_DATABASE`
     * semantics (`etl/etl.py:94-107`: the Glue sink registers partitions AS
@@ -144,26 +157,40 @@ object Transform {
     * `df`, and in both cases Spark's catalog partition management records
     * new partitions as the commit happens — queries through the table name
     * never see unregistered data.
+    *
+    * `insertInto` reads the overwrite mode from the session only, so it is
+    * set for the call and the caller's value restored afterwards. This
+    * sink stays on the stock filesystem: `saveAsTable` persists writer
+    * options into the table's storage properties, which every later read
+    * of the table would inherit.
     */
   def writePartitionedToTable(spark: SparkSession, df: DataFrame,
                               db: String, table: String, location: String,
                               partitionCols: Seq[String]): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    Catalog.ensureDatabase(spark, db)
-    val fq = s"$db.$table"
-    if (!spark.catalog.tableExists(fq)) {
-      df.write
-        .partitionBy(partitionCols: _*)
-        .option("path", location)
-        .option("compression", "snappy")
-        .saveAsTable(fq)
-    } else {
-      // insertInto is position-based — realign to the table's declared
-      // column order (data columns first, partition columns last)
-      val order = spark.table(fq).columns
-      df.select(order.map(col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .insertInto(fq)
+    val overwriteKey = "spark.sql.sources.partitionOverwriteMode"
+    // getAll holds only explicitly set keys: an unset key is restored unset
+    val previous = spark.conf.getAll.get(overwriteKey)
+    spark.conf.set(overwriteKey, "dynamic")
+    try {
+      Catalog.ensureDatabase(spark, db)
+      val fq = s"$db.$table"
+      if (!spark.catalog.tableExists(fq)) {
+        df.write
+          .partitionBy(partitionCols: _*)
+          .option("path", location)
+          .option("compression", "snappy")
+          .saveAsTable(fq)
+      } else {
+        // insertInto is position-based — realign to the table's declared
+        // column order (data columns first, partition columns last)
+        val order = spark.table(fq).columns
+        df.select(order.map(col): _*)
+          .write.mode(SaveMode.Overwrite)
+          .insertInto(fq)
+      }
+    } finally previous match {
+      case Some(v) => spark.conf.set(overwriteKey, v)
+      case None => spark.conf.unset(overwriteKey)
     }
   }
 }

@@ -228,6 +228,36 @@ class PipelineSpec extends SparkTestBase {
     assert(after.filter(col("part") === 99.9).count() === 2)
   }
 
+  test("writePartitioned writes through the fork-free local filesystem") {
+    // Bytes written by the sink are counted under NioLocalFileSystem's
+    // raw layer; a sink that lost its writer options would write through
+    // the stock filesystem (one forked chmod per file) and count nothing.
+    val stats = org.apache.hadoop.fs.FileSystem.getStatistics("file",
+      classOf[graft.io.NioLocalFileSystem.Raw])
+    val before = stats.getBytesWritten
+    Transform.writePartitioned(spark, Transform.transformV1(rawV1Fixture),
+      tmpDir(), Seq("code", "reference_date"))
+    assert(stats.getBytesWritten > before)
+  }
+
+  test("sinks leave the session's partitionOverwriteMode as they found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    def setting = spark.conf.getAll.get(key)
+    val refined = Transform.transformV1(rawV1Fixture)
+    val db = s"t_mode_${System.nanoTime()}"
+    val tableDir = tmpDir()
+    for (initial <- Seq(None, Some("STATIC"))) {
+      initial.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Transform.writePartitioned(spark, refined, tmpDir(), Seq("code", "reference_date"))
+      assert(setting === initial)
+      // first call creates the table (saveAsTable), the second inserts
+      Transform.writePartitionedToTable(spark, refined, db, "pregao_refined",
+        tableDir, Seq("code", "reference_date"))
+      assert(setting === initial)
+    }
+    spark.conf.unset(key)
+  }
+
   test("catalog: discover, register, diff, incremental from path") {
     val dir = tmpDir()
     Transform.writePartitioned(spark, Transform.transformV1(rawV1Fixture),
