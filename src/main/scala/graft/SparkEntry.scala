@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.NioLocalFileSystem
 import graft.ops.{Cleansing, Dedup, Normalize, Tables, Windows}
 
 /** Driver contract — one named query per implemented operator from
@@ -149,10 +150,10 @@ object SparkEntry {
     (s, dir) => {
       val sup = t(s, dir, "supplier")
       val p = scratchDir("graft_s2_raw")
-      sup.filter(col("s_suppkey") % 2 === 0)
-        .write.parquet(p.resolve("d1").resolve("inner").toString)
-      sup.filter(col("s_suppkey") % 2 =!= 0)
-        .write.parquet(p.resolve("d2").toString)
+      NioLocalFileSystem.write(sup.filter(col("s_suppkey") % 2 === 0))
+        .parquet(p.resolve("d1").resolve("inner").toString)
+      NioLocalFileSystem.write(sup.filter(col("s_suppkey") % 2 =!= 0))
+        .parquet(p.resolve("d2").toString)
       graft.ops.Tables.readRecursive(s, p.toString)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
         .orderBy("s_suppkey")
@@ -175,6 +176,7 @@ object SparkEntry {
     (s, dir) => {
       val nat = t(s, dir, "nation")
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_s3 LOCATION '$s3DbLoc'")
+      // stock filesystem: the table would persist the writer options
       nat.write.mode("overwrite").saveAsTable("graft_s3.nation_cat")
       graft.ops.Tables.readTable(s, "graft_s3.nation_cat")
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -2213,10 +2215,10 @@ object SparkEntry {
       val pairsPath = tmp.resolve("pairs").toString
       val storePath = tmp.resolve("labels").toString
       val ckpt = tmp.resolve("ckpt").toString
-      graft.dedup.NearDup.minHashLsh(
+      NioLocalFileSystem.write(graft.dedup.NearDup.minHashLsh(
           docs, "doc_id", "text", bands = 4, rowsPerBand = 4, threshold = 0.9)
-        .repartition(4)
-        .write.mode("overwrite").parquet(pairsPath)
+          .repartition(4))
+        .mode("overwrite").parquet(pairsPath)
       val sch = s.read.parquet(pairsPath).schema
       val pairStream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(pairsPath)
@@ -2779,8 +2781,8 @@ object SparkEntry {
       val srcPath = tmp.resolve("src").toString
       val storePath = tmp.resolve("labels").toString
       val ckpt = tmp.resolve("ckpt").toString
-      emb.filter(col("vec_id") % 2 === 0).repartition(4)
-        .write.mode("overwrite").parquet(srcPath)
+      NioLocalFileSystem.write(emb.filter(col("vec_id") % 2 === 0).repartition(4))
+        .mode("overwrite").parquet(srcPath)
       val sch = s.read.parquet(srcPath).schema
       val vecStream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(srcPath)
@@ -2834,8 +2836,8 @@ object SparkEntry {
       val srcPath = tmp.resolve("src").toString
       val storePath = tmp.resolve("labels").toString
       val ckpt = tmp.resolve("ckpt").toString
-      emb.filter(col("vec_id") % 2 === 0).repartition(4)
-        .write.mode("overwrite").parquet(srcPath)
+      NioLocalFileSystem.write(emb.filter(col("vec_id") % 2 === 0).repartition(4))
+        .mode("overwrite").parquet(srcPath)
       val sch = s.read.parquet(srcPath).schema
       val vecStream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(srcPath)
@@ -10744,8 +10746,9 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val vPath = steadyIndex("graft_ug_refined", dir) { p =>
         val v0 = graft.text.Unigram.vocab(d, "doc_id", "text", minCount = 50L)
-        graft.text.Unigram.refineVocab(d, "doc_id", "text", v0, iters = 1)
-          .write.parquet(p)
+        NioLocalFileSystem.write(
+            graft.text.Unigram.refineVocab(d, "doc_id", "text", v0, iters = 1))
+          .parquet(p)
       }
       graft.text.Unigram.encode(d, "doc_id", "text", s.read.parquet(vPath))
         .orderBy("id")

@@ -28,8 +28,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(name.contains) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.io.NioLocalFileSystem.write(fn(spark, sfDir).coalesce(1))
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

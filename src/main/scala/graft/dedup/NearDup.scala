@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.NioLocalFileSystem
 import graft.text.TextAnalysis
 
 /** Near-duplicate detection for document corpora: exact, n-gram Jaccard,
@@ -366,8 +367,8 @@ object NearDup {
     */
   def writeNearDupIndex(docs: DataFrame, idCol: String, textCol: String,
                         numHashes: Int, path: String): Unit =
-    nearDupIndex(docs, idCol, textCol, numHashes)
-      .write.mode("overwrite").parquet(path)
+    NioLocalFileSystem.write(nearDupIndex(docs, idCol, textCol, numHashes))
+      .mode("overwrite").parquet(path)
 
   /** Append an accepted ingest batch to the index — the post-dedup step
     * of the production loop (check batch against index → keep survivors
@@ -375,8 +376,8 @@ object NearDup {
     */
   def appendNearDupIndex(docs: DataFrame, idCol: String, textCol: String,
                          numHashes: Int, path: String): Unit =
-    nearDupIndex(docs, idCol, textCol, numHashes)
-      .write.mode("append").parquet(path)
+    NioLocalFileSystem.write(nearDupIndex(docs, idCol, textCol, numHashes))
+      .mode("append").parquet(path)
 
   /** Delete documents from the stored index WITHOUT rebuild — the erase
     * verb the BM25 and IVF indexes already have (takedowns, retention,
@@ -395,8 +396,8 @@ object NearDup {
     // generic, and casting (say) string ids to long here would yield
     // NULL tombstones whose anti-join never matches — a takedown that
     // silently becomes a no-op
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(s"$path.tombstones")
+    NioLocalFileSystem.write(ids.select(col(idCol).as("id")).distinct())
+      .mode("append").parquet(s"$path.tombstones")
 
   /** Load the stored index minus tombstones — THE read path for index
     * queries (identical to a plain read until the first delete; the
@@ -801,8 +802,8 @@ object NearDup {
       // one file per (batch, pkey), not tasks × pkeys (the index fan-out rule)
       .partitionBy("batch_id", "pkey").parquet(s"$path/post")
     import spark.implicits._
-    Seq((maxHamming, parts)).toDF("maxhamming", "parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    NioLocalFileSystem.write(Seq((maxHamming, parts)).toDF("maxhamming", "parts").coalesce(1))
+      .mode("overwrite").parquet(s"$path/meta")
   }
 
   /** Append a batch's hashes to the stored simhash index with the STORED
@@ -868,7 +869,7 @@ object NearDup {
       srcDirs.foreach(p => fs.delete(new HPath(p), true))
       return srcIds.size
     }
-    spark.read.option("basePath", post).parquet(srcDirs: _*)
+    val folded = spark.read.option("basePath", post).parquet(srcDirs: _*)
       .drop("batch_id")
       // full-row dedupe: a crash between an earlier fold's write and its
       // source delete leaves overlapping segments; pairs stay correct
@@ -878,7 +879,7 @@ object NearDup {
       // one task — and so one file — per pkey directory: the fold's whole
       // point is replacing per-(batch × pkey) file piles with one file
       .repartition(col("pkey"))
-      .write.mode("overwrite").partitionBy("pkey").parquet(target)
+    NioLocalFileSystem.write(folded).mode("overwrite").partitionBy("pkey").parquet(target)
     srcDirs.foreach(p => fs.delete(new HPath(p), true))
     srcIds.size
   }

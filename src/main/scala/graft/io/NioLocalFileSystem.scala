@@ -5,6 +5,7 @@ import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 
 /** Hadoop's checksummed local filesystem (`.crc` siblings included) with
   * one change: `setPermission` is a `chmod(2)` through `java.nio` instead
@@ -21,17 +22,39 @@ import org.apache.hadoop.fs.permission.FsPermission
   * bit, or a target that already carries setuid/setgid/sticky (`chmod`
   * keeps a directory's setgid bit, which a NIO `chmod` would clear). So
   * does a default filesystem without POSIX attributes.
+  *
+  * [[NioLocalFileSystem.write]] is the engine's one local write path:
+  * the refined sink, every index and sketch segment, the ingest stores,
+  * the compaction rewrites, the `Tables` exports and the registry's
+  * scratch fixtures all start their writer there. Three kinds of writer
+  * stay on the stock filesystem:
+  *  - the `saveAsTable`/`insertInto` sinks
+  *    ([[graft.pipeline.Transform.writePartitionedToTable]],
+  *    [[graft.pipeline.Bucketing.writeBucketed]], the registry's catalog
+  *    round trip), because the table would persist the writer options;
+  *  - streaming checkpoints and `_spark_metadata` logs, which Spark
+  *    writes through the FileContext `CheckpointFileManager`; a session
+  *    setting selects it, and the program does not own the session. They
+  *    still fork: 39 `chmod` and 96 `readlink` per perfbench
+  *    registry_mix run;
+  *  - `graft.tools` probes, which are slated for deletion.
+  * `WriterPathSpec` fails when any other `DataFrameWriter` bypasses the
+  * helper.
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
 
 object NioLocalFileSystem {
 
-  /** Writer options that route one `DataFrameWriter`'s `file:` I/O through
-    * this class. They reach only that write's Hadoop conf, driver-side
-    * commit and executor tasks alike; the uncached instance keeps a
-    * stock `LocalFileSystem` cached under the same key from being reused.
+  /** `df.write` with its `file:` I/O routed through this class. The
+    * options reach only that write's Hadoop conf, driver-side commit and
+    * executor tasks alike, so reads keep the stock filesystem and other
+    * schemes (s3a, hdfs) their own; the uncached instance keeps a stock
+    * `LocalFileSystem` cached under the same key from being reused. The
+    * written tree (files, `.crc` checksums, modes) is a stock write's.
     */
-  val writerOptions: Map[String, String] = Map(
+  def write(df: DataFrame): DataFrameWriter[Row] = df.write.options(writerOptions)
+
+  private val writerOptions = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
 

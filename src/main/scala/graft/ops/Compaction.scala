@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.NioLocalFileSystem
+
 /** Small-file compaction planning — the table-maintenance pass every
   * long-lived 100 TB lake needs: streaming ingest and partitioned
   * writes leave thousands of kilobyte files per partition, and read
@@ -101,8 +103,8 @@ object Compaction {
     if (toRewrite.isEmpty) return (before.length, before.length)
     val tmp = new HPath(hPath, s".compact_tmp_${java.util.UUID.randomUUID()}")
     toRewrite.foreach { binFiles =>
-      spark.read.parquet(binFiles: _*).coalesce(1)
-        .write.mode("append").parquet(tmp.toString)
+      NioLocalFileSystem.write(spark.read.parquet(binFiles: _*).coalesce(1))
+        .mode("append").parquet(tmp.toString)
     }
     val newFiles = fs.listStatus(tmp).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
@@ -194,10 +196,10 @@ object Compaction {
       .drop("batch_id")
     innerCol match {
       case Some(c) =>
-        df.repartition(col(c))
-          .write.mode("overwrite").partitionBy(c).parquet(target)
+        NioLocalFileSystem.write(df.repartition(col(c)))
+          .mode("overwrite").partitionBy(c).parquet(target)
       case None =>
-        df.coalesce(1).write.mode("overwrite").parquet(target)
+        NioLocalFileSystem.write(df.coalesce(1)).mode("overwrite").parquet(target)
     }
     srcDirs.foreach(p => fs.delete(new HPath(p), true))
     srcIds.size

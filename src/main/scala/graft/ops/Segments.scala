@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 
+import graft.io.NioLocalFileSystem
+
 /** Shared write-side helper for batch-keyed index segments — the
   * exactly-once building block used by every persistent index family
   * ([[graft.text.Bm25]], [[graft.similarity.Ivf]],
@@ -26,12 +28,22 @@ object Segments {
     * returns a writer in the right mode — dynamic partition overwrite
     * when the segment is batch-keyed, the caller's mode otherwise.
     * Callers finish with `.partitionBy("batch_id", ...).parquet(path)`.
+    *
+    * The writer comes from [[graft.io.NioLocalFileSystem.write]], the
+    * engine's one local write path, so a segment's files, checksums and
+    * directories are created without forking `/bin/chmod` for each. This
+    * covers the BM25, IVF and PQ segments, the Kmv, Hll, TopK, quantile
+    * and PCA sketch segments and the streaming ingest stores. The
+    * streaming loops' checkpoint logs still fork: Spark writes them
+    * through a checkpoint manager the session selects, which the
+    * helper's writer options cannot reach.
     */
   def writer(df: DataFrame, mode: String,
              batchId: Option[Long]): DataFrameWriter[Row] = {
-    val keyed = df.withColumn("batch_id", lit(batchId.getOrElse(-1L)))
+    val keyed = NioLocalFileSystem.write(
+      df.withColumn("batch_id", lit(batchId.getOrElse(-1L))))
     if (batchId.isDefined)
-      keyed.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    else keyed.write.mode(mode)
+      keyed.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    else keyed.mode(mode)
   }
 }

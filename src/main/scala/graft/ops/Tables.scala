@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.io.NioLocalFileSystem
+
 /** Table access for the driver testdata layout (`TESTDATA.md`): one parquet
   * file per table under a scale-factor directory.
   *
@@ -131,7 +133,7 @@ object Tables {
     */
   def writeJsonl(df: org.apache.spark.sql.DataFrame, path: String,
                  compression: String = "none"): Unit =
-    df.write.mode("overwrite").option("compression", compression).json(path)
+    NioLocalFileSystem.write(df).mode("overwrite").option("compression", compression).json(path)
 
   /** JSON-Lines import with an EXPLICIT schema — inference over JSONL
     * is a full extra pass and type-guesses (longs vs doubles, empty vs
@@ -152,7 +154,7 @@ object Tables {
     */
   def writeCsv(df: org.apache.spark.sql.DataFrame, path: String,
                header: Boolean = true, compression: String = "none"): Unit =
-    df.write.mode("overwrite")
+    NioLocalFileSystem.write(df).mode("overwrite")
       .option("header", header.toString)
       .option("quote", "\"").option("escape", "\"")
       .option("compression", compression)
@@ -165,7 +167,7 @@ object Tables {
     */
   def writeOrc(df: org.apache.spark.sql.DataFrame, path: String,
                compression: String = "zlib"): Unit =
-    df.write.mode("overwrite").option("compression", compression).orc(path)
+    NioLocalFileSystem.write(df).mode("overwrite").option("compression", compression).orc(path)
 
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)

@@ -16,6 +16,7 @@ object Bucketing {
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
                     numBuckets: Int, sortCols: Seq[String] = Seq.empty,
                     mode: SaveMode = SaveMode.Overwrite): Unit = {
+    // stock filesystem: the table would persist the writer options
     val w = df.write.mode(mode).format("parquet")
       .bucketBy(numBuckets, bucketCol)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)

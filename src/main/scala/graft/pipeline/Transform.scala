@@ -126,26 +126,21 @@ object Transform {
     * "upsert" semantics. K3 is a per-write option, so the caller's session
     * keeps its own `partitionOverwriteMode` for every other write.
     *
-    * The write runs on [[graft.io.NioLocalFileSystem]]: without the native
-    * Hadoop library, the stock local filesystem forks `/bin/chmod` for
-    * every part file, `.crc` checksum and partition directory it creates,
-    * one process at a time inside the write task. The filesystem is
-    * chosen through writer options, which reach only this write's Hadoop
-    * conf, so it applies to `file:` roots alone; reads, other writers and
-    * other schemes (s3a, hdfs) keep their own filesystems. The output tree
-    * (files, checksums, modes) is the one the stock filesystem writes.
-    * [[writePartitionedToTable]] cannot do the same: `saveAsTable` would
-    * store the writer options in the table's metadata.
+    * The write starts from [[graft.io.NioLocalFileSystem.write]], the
+    * engine's one local write path, so it forks no `/bin/chmod` per part
+    * file, `.crc` checksum and partition directory, and leaves the tree
+    * the stock filesystem writes. [[writePartitionedToTable]] cannot do
+    * the same: `saveAsTable` would store the writer options in the
+    * table's metadata.
     */
   def writePartitioned(spark: SparkSession, df: DataFrame, path: String,
                        partitionCols: Seq[String],
                        mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write
+    NioLocalFileSystem.write(df)
       .partitionBy(partitionCols: _*)
       .mode(mode)
       .option("partitionOverwriteMode", "dynamic") // K3 :40
       .option("compression", "snappy") // `etl.py:106`
-      .options(NioLocalFileSystem.writerOptions)
       .parquet(path)
 
   /** Atomic write+register sink — the reference's `UPDATE_IN_DATABASE`
@@ -175,6 +170,7 @@ object Transform {
       Catalog.ensureDatabase(spark, db)
       val fq = s"$db.$table"
       if (!spark.catalog.tableExists(fq)) {
+        // stock filesystem: the table would persist the writer options
         df.write
           .partitionBy(partitionCols: _*)
           .option("path", location)
@@ -184,6 +180,7 @@ object Transform {
         // insertInto is position-based — realign to the table's declared
         // column order (data columns first, partition columns last)
         val order = spark.table(fq).columns
+        // stock filesystem, as the table's first write above
         df.select(order.map(col): _*)
           .write.mode(SaveMode.Overwrite)
           .insertInto(fq)

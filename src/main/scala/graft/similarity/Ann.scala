@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.io.NioLocalFileSystem
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -359,17 +360,18 @@ object Ann {
     val spark = seenVecs.sparkSession
     val bits = resolveBits(nBits, seenVecs)
     val planes = hyperplanes(bits, dim, seed)
-    requireDim(
+    val vecs = requireDim(
         seenVecs.select(col(idCol).as("id"), col(vecCol).as("vec")),
         col("vec"), dim, "writeEmbedNearDupIndex")
       .withColumn("bucket", bucketExpr(col("vec"), planes))
       .withColumn("nrm", VectorOps.norm(col("vec")))
       // one file per bucket, not tasks × buckets (the index fan-out rule)
       .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/vecs")
+    NioLocalFileSystem.write(vecs)
+      .mode("overwrite").partitionBy("bucket").parquet(s"$path/vecs")
     import spark.implicits._
-    Seq((bits, dim, seed)).toDF("nbits", "dim", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    NioLocalFileSystem.write(Seq((bits, dim, seed)).toDF("nbits", "dim", "seed").coalesce(1))
+      .mode("overwrite").parquet(s"$path/meta")
   }
 
   /** Append an ingest batch to the stored embed index with the STORED
@@ -387,13 +389,14 @@ object Ann {
     val (bits, dim, seed) =
       (meta.getAs[Int]("nbits"), meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
     val planes = hyperplanes(bits, dim, seed)
-    requireDim(
+    val vecs = requireDim(
         newVecs.select(col(idCol).as("id"), col(vecCol).as("vec")),
         col("vec"), dim, "appendEmbedNearDupIndex")
       .withColumn("bucket", bucketExpr(col("vec"), planes))
       .withColumn("nrm", VectorOps.norm(col("vec")))
       .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/vecs")
+    NioLocalFileSystem.write(vecs)
+      .mode("append").partitionBy("bucket").parquet(s"$path/vecs")
   }
 
   /** Erase vectors from the stored embed index WITHOUT rebuild — the
@@ -405,8 +408,8 @@ object Ann {
     */
   def deleteFromEmbedNearDupIndex(ids: DataFrame, path: String,
                                   idCol: String = "vec_id"): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
+    NioLocalFileSystem.write(ids.select(col(idCol).as("id")).distinct())
+      .mode("append").parquet(s"$path/tombstones")
 
   private def minusEmbedTombstones(spark: org.apache.spark.sql.SparkSession,
                                    df: DataFrame, path: String): DataFrame = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.functions.VectorOps
+import graft.io.NioLocalFileSystem
 
 /** IVF-style ANN: partition the corpus into `nLists` cells around sampled
   * centroids; queries scan only the `nProbe` nearest cells.
@@ -119,9 +120,10 @@ object Ivf {
   def writeIvfIndex(corpus: DataFrame, nLists: Int, path: String,
                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val cents = centroids(corpus, nLists, idCol, vecCol)
-    corpus.sparkSession.createDataFrame(cents).toDF("cell", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    buildIndex(corpus, cents, idCol, vecCol)
+    NioLocalFileSystem.write(
+        corpus.sparkSession.createDataFrame(cents).toDF("cell", "cv").coalesce(1))
+      .mode("overwrite").parquet(s"$path/centroids")
+    val lists = buildIndex(corpus, cents, idCol, vecCol)
       // repartition ON the partition column first: without it every
       // upstream task writes a file into every cell directory —
       // tasks × cells files per rebuild (~160k at 10k-task cluster
@@ -130,7 +132,8 @@ object Ivf {
       // further (cell + salt) only when one cell outgrows a task.
       .repartition(col("cell"))
       .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch_id", "cell").parquet(s"$path/lists")
+    NioLocalFileSystem.write(lists)
+      .mode("overwrite").partitionBy("batch_id", "cell").parquet(s"$path/lists")
   }
 
   /** The stored centroid set, driver-side (≤ nLists rows — the same
@@ -178,8 +181,8 @@ object Ivf {
                          idCol: String = "vec_id"): Unit =
     // no cast: tombstones keep the stored id type so the anti-join
     // matches (a long cast of string ids yields NULLs = silent no-op)
-    ids.select(col(idCol).as("cid")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
+    NioLocalFileSystem.write(ids.select(col(idCol).as("cid")).distinct())
+      .mode("append").parquet(s"$path/tombstones")
 
   private[similarity] def minusTombstones(
       spark: org.apache.spark.sql.SparkSession,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.io.NioLocalFileSystem
 
 /** Product quantization for embedding compression + asymmetric-distance
   * ANN (Jégou, Douze, Schmid 2011, "Product Quantization for Nearest
@@ -278,19 +279,20 @@ object Pq {
                       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
     val cents = Ivf.centroids(corpus, nLists, idCol, vecCol)
-    spark.createDataFrame(cents).toDF("cell", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    NioLocalFileSystem.write(spark.createDataFrame(cents).toDF("cell", "cv").coalesce(1))
+      .mode("overwrite").parquet(s"$path/centroids")
     val cb = sampledCodebooks(corpus, m, ksub, dim, idCol, vecCol)
     val cbRows = for { s <- 0 until m; (j, bv) <- cb.books(s) } yield (s, j, bv)
-    spark.createDataFrame(cbRows).toDF("s", "j", "bv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    encode(Ivf.buildIndex(corpus, cents, idCol, vecCol), cb, "cid", "cvec",
+    NioLocalFileSystem.write(spark.createDataFrame(cbRows).toDF("s", "j", "bv").coalesce(1))
+      .mode("overwrite").parquet(s"$path/codebooks")
+    val codes = encode(Ivf.buildIndex(corpus, cents, idCol, vecCol), cb, "cid", "cvec",
         passthrough = Seq("cell"))
       // repartition ON cell first — otherwise tasks × cells files per
       // rebuild (the [[Ivf.writeIvfIndex]] scale-hygiene rule)
       .repartition(col("cell"))
       .withColumn("batch_id", lit(-1L)) // segment dimension (Segments contract)
-      .write.mode("overwrite").partitionBy("batch_id", "cell").parquet(s"$path/codes")
+    NioLocalFileSystem.write(codes)
+      .mode("overwrite").partitionBy("batch_id", "cell").parquet(s"$path/codes")
   }
 
   /** The stored codebooks, driver-side (m·ksub rows — the same bounded

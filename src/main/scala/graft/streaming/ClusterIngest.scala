@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.io.NioLocalFileSystem
 
 /** Streaming duplicate-CLUSTER maintenance: a continuous feed of
   * near-dup PAIR edges (the output of the incremental detectors —
@@ -49,8 +52,10 @@ object ClusterIngest {
     * for consumers pass None (everything committed so far).
     */
   def readLabels(spark: SparkSession, path: String,
-                 beforeBatch: Option[Long] = None): DataFrame = {
-    val seg = spark.read.parquet(path)
+                 beforeBatch: Option[Long] = None): DataFrame =
+    latestPerId(spark.read.parquet(path), beforeBatch)
+
+  private def latestPerId(seg: DataFrame, beforeBatch: Option[Long]): DataFrame = {
     val sliced = beforeBatch.map(b => seg.filter(col("batch_id") < b)).getOrElse(seg)
     sliced.groupBy("id")
       .agg(max_by(col("cluster_id"), col("batch_id")).as("cluster_id"))
@@ -61,14 +66,21 @@ object ClusterIngest {
                  aCol: String = "id_a", bCol: String = "id_b"): Unit = {
     val spark = pairs.sparkSession
     val current =
-      if (storeExists(spark, path))
+      if (storeExists(spark, path)) {
+        // explicit schema, typed like the batch's ids: a store whose
+        // batches so far merged nothing is a directory without one data
+        // file, where inference throws and a schema'd read is empty
+        val idType = pairs.schema(aCol).dataType
+        val segments = spark.read.schema(new StructType().add("id", idType)
+          .add("cluster_id", idType).add("batch_id", LongType)).parquet(path)
         // pinned: mergeComponentsDelta consumes the labeling three ways
         // (both endpoint remaps + the changed-history join) — unpinned,
         // each consumer re-lists and re-reads the segment store and
         // re-runs the latest-per-id aggregation, 3 store reads per
         // micro-batch (guide §2.4). The pin is the same history-sized
         // executor-storage trade the steady-gate handles already make.
-        readLabels(spark, path, beforeBatch = Some(batchId)).localCheckpoint()
+        latestPerId(segments, beforeBatch = Some(batchId)).localCheckpoint()
+      }
       // first segment: empty labeling typed like the batch's id column
       else pairs.select(col(aCol).as("id"), col(aCol).as("cluster_id")).limit(0)
     graft.ops.Segments.writer(
@@ -115,10 +127,10 @@ object ClusterIngest {
       srcDirs.foreach(p => fs.delete(new HPath(p), true))
       return srcIds.size
     }
-    spark.read.option("basePath", path).parquet(srcDirs: _*)
+    val folded = spark.read.option("basePath", path).parquet(srcDirs: _*)
       .groupBy("id")
       .agg(max_by(col("cluster_id"), col("batch_id")).as("cluster_id"))
-      .coalesce(1).write.mode("overwrite").parquet(target)
+    NioLocalFileSystem.write(folded.coalesce(1)).mode("overwrite").parquet(target)
     srcDirs.foreach(p => fs.delete(new HPath(p), true))
     srcIds.size
   }
@@ -148,7 +160,7 @@ object ClusterIngest {
         writeBatch(batch, batchId, path, aCol, bCol)
         maybeCompact(spark, path, batchId, compactEvery)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -230,7 +242,7 @@ object ClusterIngest {
           batchId, path, aCol = "new_id", bCol = "seen_id")
         maybeCompact(spark, path, batchId, compactEvery)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 }

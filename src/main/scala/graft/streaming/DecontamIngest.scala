@@ -65,7 +65,7 @@ object DecontamIngest {
             "append", Some(batchId))
           .partitionBy("batch_id").parquet(outPath)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
   }
@@ -110,7 +110,7 @@ object DecontamIngest {
             "append", Some(batchId))
           .partitionBy("batch_id").parquet(outPath)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
   }

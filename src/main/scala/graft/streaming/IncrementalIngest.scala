@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.io.NioLocalFileSystem
 import graft.pipeline.Transform
 
 /** EP1's event-driven shape (S3 ObjectCreated → per-file job run,
@@ -30,7 +31,7 @@ object IncrementalIngest {
       .parquet(rawDir)
     val query = stream.writeStream
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // APPEND, not dynamic overwrite: one AvailableNow drain spans many
         // micro-batches, and a partition whose rows land in two batches
@@ -38,7 +39,7 @@ object IncrementalIngest {
         // second. The checkpoint makes file intake exactly-once; replace-
         // the-partition upsert semantics belong to the per-run batch entry
         // (`Pipeline.runIncremental`), where one invocation = one file set.
-        transform(batch).write
+        NioLocalFileSystem.write(transform(batch))
           .partitionBy(partitionKeys: _*)
           .mode(org.apache.spark.sql.SaveMode.Append)
           .option("compression", "snappy")

@@ -68,7 +68,7 @@ object IndexIngest {
         appendBm25Batch(batch, batchId, indexPath, nBuckets, idCol, textCol,
           compactEvery)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -95,7 +95,7 @@ object IndexIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appendIvfBatch(batch, batchId, indexPath, idCol, vecCol, compactEvery)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 }

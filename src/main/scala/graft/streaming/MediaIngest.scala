@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.io.NioLocalFileSystem
+
 /** Streaming IMAGE near-dup at ingest: every micro-batch of media
   * payloads is decoded + perceptually hashed ONCE, checked against the
   * accumulated hash table, and both the new pairs and the batch's own
@@ -89,7 +91,7 @@ object MediaIngest {
         writeBatch(batch, batchId, hashPath, pairsPath, maxHamming, idCol,
           payloadCol, kind)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -174,8 +176,8 @@ object MediaIngest {
     val geo =
       if (!metaP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(metaP)) {
         import spark.implicits._
-        Seq((maxHamming, parts)).toDF("maxhamming", "parts")
-          .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/meta")
+        NioLocalFileSystem.write(Seq((maxHamming, parts)).toDF("maxhamming", "parts").coalesce(1))
+          .mode("overwrite").parquet(s"$indexPath/meta")
         (maxHamming, parts)
       } else {
         // a pre-seeded index wins: its stored geometry IS the blocking
@@ -193,7 +195,7 @@ object MediaIngest {
           ()
         }
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
   }

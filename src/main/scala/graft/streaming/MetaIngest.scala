@@ -61,7 +61,7 @@ object MetaIngest {
         writeBatch(batch, batchId, metaPath, keptPath,
           minWidth, minHeight, minSampleRate, idCol, payloadCol)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 }

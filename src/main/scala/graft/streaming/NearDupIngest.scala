@@ -96,7 +96,7 @@ object NearDupIngest {
             "append", Some(batchId))
           .partitionBy("batch_id").parquet(outPath)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
   }

@@ -57,7 +57,7 @@ object SketchIngest {
         appendQuantileBatch(batch, batchId, keyCols, valCol, lo, hi, nBins,
           path, compactEvery)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -81,7 +81,7 @@ object SketchIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appendHllBatch(batch, batchId, keyCols, valCol, path, compactEvery)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -111,7 +111,7 @@ object SketchIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appendKmvBatch(batch, batchId, keyCols, valCol, k, path, compactEvery)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -157,7 +157,7 @@ object SketchIngest {
         appendMomentBatch(batch, batchId + batchIdOffset, dim, vecCol, path,
           compactEvery)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -181,7 +181,7 @@ object SketchIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appendTopKBatch(batch, batchId, keyCols, itemCol, k, path)
       }
-      .option("checkpointLocation", checkpoint)
+      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
       .trigger(Trigger.AvailableNow())
       .start()
 }

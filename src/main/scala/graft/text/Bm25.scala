@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.NioLocalFileSystem
+
 /** Okapi BM25 lexical retrieval: for each query document, the top-k corpus
   * documents by BM25 score — the standard "pull training docs related to
   * this eval/seed set" tool of a data-curation pipeline (and the lexical
@@ -294,16 +296,18 @@ object Bm25 {
     val deadPostings = spark.read.parquet(s"$path/postings")
       .join(broadcast(del), "id")
     // corrections are ordinary NEGATIVE segments under batch_id=-2
-    deadPostings.groupBy("token").agg((-count(lit(1))).as("df"))
+    val dfCorrection = deadPostings.groupBy("token").agg((-count(lit(1))).as("df"))
       .withColumn("pbucket", pbucket(col("token"), nBuckets))
       .withColumn("batch_id", lit(-2L))
       .repartition(col("pbucket")) // one file per bucket, not tasks × buckets
-      .write.mode("append").partitionBy("batch_id", "pbucket").parquet(s"$path/dfreq")
-    spark.read.parquet(s"$path/doclen").join(broadcast(del), "id")
+    NioLocalFileSystem.write(dfCorrection)
+      .mode("append").partitionBy("batch_id", "pbucket").parquet(s"$path/dfreq")
+    val statsCorrection = spark.read.parquet(s"$path/doclen").join(broadcast(del), "id")
       .agg((-count(lit(1))).as("n"), (-sum(col("dl"))).as("tot"))
       .withColumn("batch_id", lit(-2L))
-      .coalesce(1).write.mode("append").partitionBy("batch_id").parquet(s"$path/stats")
-    del.write.mode("append").parquet(s"$path/tombstones")
+    NioLocalFileSystem.write(statsCorrection.coalesce(1))
+      .mode("append").partitionBy("batch_id").parquet(s"$path/stats")
+    NioLocalFileSystem.write(del).mode("append").parquet(s"$path/tombstones")
   }
 
   private def minusTombstones(spark: org.apache.spark.sql.SparkSession,

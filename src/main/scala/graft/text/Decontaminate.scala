@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.NearDup
+import graft.io.NioLocalFileSystem
 
 /** Benchmark decontamination for training corpora: flag training documents
   * whose token n-grams overlap an evaluation/benchmark set (the exact-match
@@ -283,8 +284,10 @@ object Decontaminate {
     writeBenchSegment(bench, idCol, textCol, path, bands, rowsPerBand,
       nBuckets, "overwrite", None)
     import spark.implicits._
-    Seq((bands, rowsPerBand, nBuckets)).toDF("bands", "rows_per_band", "n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    NioLocalFileSystem.write(
+        Seq((bands, rowsPerBand, nBuckets)).toDF("bands", "rows_per_band", "n_buckets")
+          .coalesce(1))
+      .mode("overwrite").parquet(s"$path/meta")
   }
 
   /** The stored banding config — read once per append/probe (3 ints). */
@@ -318,10 +321,10 @@ object Decontaminate {
   def deleteFromBenchIndex(ids: DataFrame, path: String,
                            idCol: String = "doc_id"): Unit = {
     val spark = ids.sparkSession
-    minusBenchTombstones(spark,
+    NioLocalFileSystem.write(minusBenchTombstones(spark,
         ids.select(concat(lit("b:"), col(idCol).cast("string")).as("id")).distinct(),
-        path)
-      .write.mode("append").parquet(s"$path/tombstones")
+        path))
+      .mode("append").parquet(s"$path/tombstones")
   }
 
   private def minusBenchTombstones(spark: org.apache.spark.sql.SparkSession,

@@ -63,6 +63,19 @@ class ClusterIngestSpec extends SparkTestBase {
       "a retried batch must replace its segment, not append a second copy")
   }
 
+  test("an empty micro-batch, then pairs: the labeling is the one-shot fixpoint") {
+    val tmp = java.nio.file.Files.createTempDirectory("cluster_ingest_empty")
+    val store = tmp.resolve("labels")
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+    ClusterIngest.writeBatch(pairs.limit(0), 0L, store.toString)
+    // the empty batch leaves a store directory without one data file
+    assert(java.nio.file.Files.isDirectory(store))
+    assert(leafFileCounts(store.toString).values.sum === 0)
+    ClusterIngest.writeBatch(pairs, 1L, store.toString)
+    assert(labelMap(ClusterIngest.readLabels(spark, store.toString)) ===
+      labelMap(DupClusters.connectedComponentsStar(pairs)))
+  }
+
   test("compactLabels: one latest-per-id segment, read-identical, sources consumed") {
     val tmp = java.nio.file.Files.createTempDirectory("cluster_ingest_compact")
     val store = tmp.resolve("labels").toString

@@ -4,16 +4,20 @@ import java.net.URI
 import java.nio.file.{Files, Path => JPath}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.io.NioLocalFileSystem
+import graft.ops.Segments
 import graft.pipeline.Transform
+import graft.similarity.Ann
+import graft.text.Bm25
 
-/** [[NioLocalFileSystem]] sets the modes stock Hadoop sets, and a sink
-  * writing through it leaves the tree a stock write leaves.
+/** [[NioLocalFileSystem]] sets the modes stock Hadoop sets, a sink
+  * writing through it leaves the tree a stock write leaves, and the index
+  * writers write through it.
   */
 class NioLocalFileSystemSpec extends SparkTestBase {
   import scala.jdk.CollectionConverters._
@@ -68,6 +72,30 @@ class NioLocalFileSystemSpec extends SparkTestBase {
     assert((got & 0x400) !== 0)
   }
 
+  private val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+
+  /** Every path under `root`, relative and with job uuids masked, and its mode. */
+  private def tree(root: JPath): Seq[(String, Int)] =
+    Files.walk(root).iterator().asScala.filter(_ != root).map { p =>
+      root.relativize(p).toString.replaceAll(uuid, "<uuid>") -> modeOf(p)
+    }.toSeq.sorted
+
+  /** Asserts the sink's tree equals the stock one, has `parts` part files,
+    * each with a `.crc` sibling, and only 644/755 modes.
+    */
+  private def assertStockTree(viaSink: JPath, viaStock: JPath, parts: Int): Unit = {
+    val got = tree(viaSink)
+    assert(got === tree(viaStock))
+    val names = got.map(_._1)
+    val files = names.filter(_.endsWith(".parquet"))
+    assert(files.size === parts)
+    files.foreach { f =>
+      val (dir, file) = f.splitAt(f.lastIndexOf('/') + 1)
+      assert(names.contains(s"$dir.$file.crc"), s"$f has no .crc sibling")
+    }
+    assert(got.forall { case (_, m) => m == 0x1a4 || m == 0x1ed }) // 644 or 755
+  }
+
   test("writePartitioned leaves the tree, checksums and modes of a stock write") {
     val rows = spark.range(0, 24)
       .select(
@@ -84,22 +112,52 @@ class NioLocalFileSystemSpec extends SparkTestBase {
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", "snappy")
       .parquet(viaStock.toString)
+    assertStockTree(viaSink, viaStock, parts = 24)
+  }
 
-    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
-    def tree(root: JPath): Seq[(String, Int)] =
-      Files.walk(root).iterator().asScala.filter(_ != root).map { p =>
-        root.relativize(p).toString.replaceAll(uuid, "<uuid>") -> modeOf(p)
-      }.toSeq.sorted
+  test("a batch-keyed segment write leaves the tree, checksums and modes of a stock write") {
+    val rows = spark.range(0, 12)
+      .select(col("id"), (col("id") % 4).as("cell"), (col("id") * 0.5).as("v"))
+      .repartition(col("cell"))
+    val viaSink = Files.createTempDirectory("graft-nio-seg").resolve("out")
+    val viaStock = Files.createTempDirectory("graft-nio-seg-stock").resolve("out")
+    // a streaming append: dynamic overwrite of its own batch_id partitions
+    Segments.writer(rows, "append", Some(3L))
+      .partitionBy("batch_id", "cell").parquet(viaSink.toString)
+    rows.withColumn("batch_id", lit(3L))
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id", "cell").parquet(viaStock.toString)
+    assertStockTree(viaSink, viaStock, parts = 4)
+  }
 
-    val got = tree(viaSink)
-    assert(got === tree(viaStock))
-    val names = got.map(_._1)
-    val parts = names.filter(_.endsWith(".parquet"))
-    assert(parts.size === 24)
-    parts.foreach { f =>
-      val (dir, file) = f.splitAt(f.lastIndexOf('/') + 1)
-      assert(names.contains(s"$dir.$file.crc"), s"$f has no .crc sibling")
+  /** `body` writes through the fork-free raw layer and writes no byte
+    * through the stock one, which forks `chmod` for each file it creates.
+    */
+  private def assertForkFree(what: String)(body: => Unit): Unit = {
+    def stats(c: Class[_ <: FileSystem]) = FileSystem.getStatistics("file", c)
+    val (nio, stock) = (stats(classOf[NioLocalFileSystem.Raw]), stats(classOf[RawLocalFileSystem]))
+    val (nio0, stock0) = (nio.getBytesWritten, stock.getBytesWritten)
+    body
+    assert(nio.getBytesWritten > nio0, s"$what wrote nothing through NioLocalFileSystem")
+    assert(stock.getBytesWritten === stock0, s"$what wrote through the stock local filesystem")
+  }
+
+  test("index and segment writers write through the fork-free local filesystem") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-nio-index")
+    val docs = Seq((1L, "the quick brown fox"), (2L, "a lazy dog"), (3L, "quick dogs"))
+      .toDF("doc_id", "text")
+    assertForkFree("Bm25.writeBm25Index") {
+      Bm25.writeBm25Index(docs, root.resolve("bm25").toString, nBuckets = 4)
     }
-    assert(got.forall { case (_, m) => m == 0x1a4 || m == 0x1ed }) // 644 or 755
+    assertForkFree("a batch-keyed Segments.writer append") {
+      Segments.writer(docs, "append", Some(7L))
+        .partitionBy("batch_id").parquet(root.resolve("seg").toString)
+    }
+    val rnd = new scala.util.Random(11)
+    val vecs = (1L to 8L).map(i => (i, Array.fill(4)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
+    assertForkFree("Ann.writeEmbedNearDupIndex") {
+      Ann.writeEmbedNearDupIndex(vecs, root.resolve("embed").toString, nBits = 2, dim = 4)
+    }
   }
 }
