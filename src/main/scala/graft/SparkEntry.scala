@@ -11079,10 +11079,16 @@ object SparkEntry {
             .filter(pred).select(col("embedding")),
           seg, tmp.resolve(ckpt).toString, dim = 64, batchIdOffset = off)
       // the two epoch drains are INDEPENDENT (disjoint batch_id ranges,
-      // own checkpoints, dynamic-overwrite writes stage under per-job
-      // .spark-staging dirs) — start both, then await both, so epoch B's
+      // own checkpoints) — start both, then await both, so epoch B's
       // work back-fills executors idled by epoch A's tail instead of
-      // paying two serial stream startups (guide §2.6)
+      // paying two serial stream startups (guide §2.6).
+      // Committer assumption: two dynamic-overwrite writes into one root
+      // are safe together because each job stages under its own
+      // `.spark-staging-<jobId>` directory and, at commit, replaces only
+      // the `batch_id` partitions it wrote, which are disjoint here.
+      // SegmentsSpec pins it: concurrent batch-keyed `Segments.writer`
+      // writes into one root keep both batches and leave no staging or
+      // `_temporary` directory behind.
       val qa = epoch(col("vec_id") % 2 === 0, "ckptA", 0L)
       val qb = epoch(col("vec_id") % 2 =!= 0, "ckptB", offset)
       qa.awaitTermination(); qb.awaitTermination()

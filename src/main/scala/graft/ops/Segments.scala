@@ -46,4 +46,43 @@ object Segments {
       keyed.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     else keyed.mode(mode)
   }
+
+  /** Runs independent table writes as concurrent Spark jobs. At index
+    * sizes each write is mostly fixed per-job latency, so overlapping
+    * them keeps the cores busy that a serial chain leaves idle between
+    * jobs. The writes must not read one another's output.
+    *
+    * The caller's thread runs the first write; each other write gets a
+    * FRESH thread, which inherits the caller's SparkContext local
+    * properties (job group, description, scheduler pool) and active
+    * session. A pooled thread would carry whatever an earlier task left.
+    * Every thread is joined before the call returns, so no write is
+    * still running afterwards; the first failure in argument order is
+    * rethrown with the others added as suppressed. An interrupt during
+    * the join is held back until all writes are done, then restored.
+    */
+  def writeAll(writes: (() => Unit)*): Unit = {
+    val errors = new Array[Throwable](writes.size)
+    def run(i: Int): Unit =
+      try writes(i)() catch { case t: Throwable => errors(i) = t }
+    val threads = writes.indices.drop(1).flatMap { i =>
+      val t = new Thread(() => run(i), s"segments-write-$i")
+      t.setDaemon(true)
+      try { t.start(); Some(t) }
+      catch { case e: Throwable => errors(i) = e; None }
+    }
+    writes.indices.headOption.foreach(run)
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    errors.filter(_ != null) match {
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ =>
+    }
+  }
 }

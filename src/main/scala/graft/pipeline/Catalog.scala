@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
 
 /** Catalog/partition synchronization, re-homed from the reference's boto3
   * Glue calls (SURVEY.md §2.10) onto Spark's own catalog.
@@ -39,17 +40,20 @@ object Catalog {
   }
 
   /** M3: registered partitions as value-lists, e.g. Seq("2024-01-02") or
-    * Seq("PETR4", "2024-01-02") (`extract.py:105-113`).
+    * Seq("PETR4", "2024-01-02") (`extract.py:105-113`). `SHOW PARTITIONS`
+    * path-escapes each `k=v`, so values come back unescaped.
     */
   def listPartitions(spark: SparkSession, db: String, table: String): Set[Seq[String]] =
     spark.sql(s"SHOW PARTITIONS `$db`.`$table`")
       .collect()
-      .map(_.getString(0).split("/").map(_.split("=", 2)(1)).toSeq)
+      .map(_.getString(0).split("/").map(kv => unescapePathName(kv.split("=", 2)(1))).toSeq)
       .toSet
 
   /** M4: discover partitions from storage by listing `k=v` directories
     * under `location`, one level per partition key (`extract.py:116-125`,
     * `load.py:120-129` — their S3-list + regex, on the Hadoop FS API).
+    * Values are unescaped: a partitioned write path-escapes `=`, `/`,
+    * `%`, `:` and the like in directory names.
     */
   def discoverPartitions(spark: SparkSession, location: String,
                          keys: Seq[String]): Set[Seq[String]] = {
@@ -58,22 +62,24 @@ object Catalog {
       remaining match {
         case Nil => Seq(acc)
         case key +: rest =>
-          val prefix = s"$key="
+          val prefix = s"${escapePathName(key)}="
           if (!fs.exists(dir)) Seq.empty
           else fs.listStatus(dir).toSeq
             .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-            .flatMap(st => walk(st.getPath, rest, acc :+ st.getPath.getName.stripPrefix(prefix)))
+            .flatMap(st => walk(st.getPath, rest,
+              acc :+ unescapePathName(st.getPath.getName.stripPrefix(prefix))))
       }
     walk(new Path(location), keys, Seq.empty).toSet
   }
 
   /** M5: parse the partition of a single triggering file out of its path
-    * (`extract.py:128-132`, `load.py:114-118`).
+    * (`extract.py:128-132`, `load.py:114-118`), values unescaped as in
+    * [[discoverPartitions]].
     */
   def partitionFromPath(path: String, keys: Seq[String]): Option[Seq[String]] = {
     val found = keys.map { k =>
       s"(?:^|/)${java.util.regex.Pattern.quote(k)}=([^/]+)".r
-        .findFirstMatchIn(path).map(_.group(1))
+        .findFirstMatchIn(path).map(m => unescapePathName(m.group(1)))
     }
     if (found.forall(_.isDefined)) Some(found.map(_.get)) else None
   }
@@ -90,7 +96,9 @@ object Catalog {
     val parts = batch.map { values =>
       val spec = keys.zip(values)
         .map { case (k, v) => s"`$k`='${v.replace("'", "''")}'" }.mkString(", ")
-      val dir = keys.zip(values).map { case (k, v) => s"$k=$v" }.mkString("/")
+      // the directory is the one a partitioned write creates: escaped
+      val dir = keys.zip(values)
+        .map { case (k, v) => s"${escapePathName(k)}=${escapePathName(v)}" }.mkString("/")
       // LOCATION is a string literal too — quote-escape the whole path,
       // not just the PARTITION values
       val loc = s"$location/$dir".replace("'", "''")

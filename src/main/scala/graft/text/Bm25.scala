@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.NioLocalFileSystem
+import graft.ops.Segments
 
 /** Okapi BM25 lexical retrieval: for each query document, the top-k corpus
   * documents by BM25 score — the standard "pull training docs related to
@@ -151,9 +152,6 @@ object Bm25 {
                       batchId: Option[Long] = None): Unit =
     writeSegment(corpus, path, nBuckets, idCol, textCol, "append", batchId)
 
-  private def segmentWriter(df: DataFrame, mode: String, batchId: Option[Long]) =
-    graft.ops.Segments.writer(df, mode, batchId)
-
   private def writeSegment(corpus: DataFrame, path: String, nBuckets: Int,
                            idCol: String, textCol: String, mode: String,
                            batchId: Option[Long]): Unit =
@@ -163,9 +161,10 @@ object Bm25 {
       batchId)
 
   /** STREAMING append (batchId set): the four segment writes are four
-    * independent actions, so everything they share is pinned ONCE per
-    * micro-batch (guide §2.4) — both pins BATCH-sized by the micro-batch
-    * contract. `arr` pins the tokenized batch (one tokenize pass total;
+    * independent actions, run as concurrent jobs ([[Segments.writeAll]]),
+    * so everything they share is pinned ONCE per micro-batch (guide
+    * §2.4) — both pins BATCH-sized by the micro-batch contract. `arr`
+    * pins the tokenized batch (one tokenize pass total;
     * r17's (id, text) pin still re-tokenized per consumer — 2 tokenize
     * + 2 tokenCount regex passes per batch), and `tfp` pins the
     * (id, token, tf) grid AFTER its aggregation + pbucket shuffle, so
@@ -191,19 +190,13 @@ object Bm25 {
       .withColumn("pbucket", pbucket(col("token"), nBuckets))
       .repartition(col("pbucket"))
       .localCheckpoint()
-    segmentWriter(tfp, mode, batchId)
-      .partitionBy("batch_id", "pbucket").parquet(s"$path/postings")
-    segmentWriter(tfp.groupBy("token").agg(count(lit(1)).as("df"))
-        .withColumn("pbucket", pbucket(col("token"), nBuckets))
-        .repartition(col("pbucket")), mode, batchId)
-      .partitionBy("batch_id", "pbucket").parquet(s"$path/dfreq")
-    segmentWriter(arr.select(col("id"),
-        size(col("__toks")).cast("long").as("dl")), mode, batchId)
-      .partitionBy("batch_id").parquet(s"$path/doclen")
-    segmentWriter(arr.agg(count(lit(1)).as("n"),
-        sum(size(col("__toks")).cast("long")).as("tot"))
-        .coalesce(1), mode, batchId)
-      .partitionBy("batch_id").parquet(s"$path/stats")
+    val t = new SegmentTables(path, nBuckets, mode, batchId)
+    Segments.writeAll(
+      () => t.postings(tfp),
+      () => t.dfreq(tfp),
+      () => t.doclen(arr.select(col("id"), size(col("__toks")).cast("long").as("dl"))),
+      () => t.stats(arr.agg(count(lit(1)).as("n"),
+        sum(size(col("__toks")).cast("long")).as("tot"))))
   }
 
   /** Full REBUILD / batchless append (batchId None): deliberately
@@ -217,11 +210,23 @@ object Bm25 {
     * column of the fresh postings segment instead of re-running the
     * whole corpus tokenize + (id, token) shuffle, and stats re-reads
     * the fresh doclen (8-byte dl column) instead of a second regex
-    * tokenCount pass over the text. Corpus text is now scanned TWICE
-    * per rebuild (tf, doclen) instead of four times, at zero extra
+    * tokenCount pass over the text. Corpus text is scanned TWICE per
+    * rebuild (tf, doclen) instead of four times, at zero extra
     * materialization — the write is the contract. Identical tables:
     * dfreq aggregates exactly the tf rows, stats' n = one doclen row
     * per corpus row and tot = Σdl = Σ tokenCount.
+    *
+    * The two chains (postings → dfreq, doclen → stats) share nothing,
+    * so they run as concurrent jobs ([[Segments.writeAll]]). At index
+    * sizes a write is mostly fixed per-job latency, which the overlap
+    * hides; at scale the rebuild is CPU-bound and the two-pass read-back
+    * is what counts. Measured at local[4] on a 4-vCPU VM, median wall
+    * per rebuild in one session: 100 documents (the perfbench
+    * registry_mix set-up) serial 0.85 s → chains 0.62 s; 500k documents
+    * (100× of sf0.1) serial 18.7 s, chains 19.4 s. Writing all four
+    * tables concurrently from the corpus was faster still at 100
+    * documents (0.40 s) but took 29.2 s and 1.7× the CPU time at 500k,
+    * from its two extra corpus passes.
     *
     * A batchless APPEND cannot use the read-back: its rows stack under
     * batch_id=-1 next to every earlier append's, so the freshly-written
@@ -230,15 +235,12 @@ object Bm25 {
   private def writeRebuildSegment(corpus: DataFrame, path: String, nBuckets: Int,
                                   idCol: String, textCol: String, mode: String,
                                   batchId: Option[Long]): Unit = {
-    val src = corpus
+    val spark = corpus.sparkSession
     val readBack = mode == "overwrite"
-    val tf = src
+    val t = new SegmentTables(path, nBuckets, mode, batchId)
+    val tf = corpus
       .select(col(idCol).as("id"), explode(TextAnalysis.tokens(col(textCol))).as("token"))
       .groupBy("id", "token").agg(count(lit(1)).as("tf"))
-    // same files-per-bucket ≈ 1 rule as the streaming path
-    segmentWriter(tf.withColumn("pbucket", pbucket(col("token"), nBuckets))
-        .repartition(col("pbucket")), mode, batchId)
-      .partitionBy("batch_id", "pbucket").parquet(s"$path/postings")
     // read-backs carry EXPLICIT schemas (derived from the frames just
     // written): an empty-corpus rebuild writes a fileless directory,
     // where schema inference would throw but a schema'd read returns
@@ -248,28 +250,49 @@ object Bm25 {
       .add("id", tf.schema("id").dataType).add("token", StringType)
       .add("tf", LongType).add("pbucket", IntegerType)
       .add("batch_id", LongType)
-    val tfForDf =
-      if (readBack)
-        src.sparkSession.read.schema(postingsSchema).parquet(s"$path/postings")
-      else tf
-    segmentWriter(tfForDf.groupBy("token").agg(count(lit(1)).as("df"))
-        .withColumn("pbucket", pbucket(col("token"), nBuckets))
-        .repartition(col("pbucket")), mode, batchId)
-      .partitionBy("batch_id", "pbucket").parquet(s"$path/dfreq")
-    segmentWriter(src.select(col(idCol).as("id"),
-        TextAnalysis.tokenCount(col(textCol)).cast("long").as("dl")), mode, batchId)
-      .partitionBy("batch_id").parquet(s"$path/doclen")
     val doclenSchema = new StructType()
       .add("id", tf.schema("id").dataType).add("dl", LongType)
       .add("batch_id", LongType)
-    val statsSrc =
-      if (readBack)
-        src.sparkSession.read.schema(doclenSchema).parquet(s"$path/doclen")
-          .agg(count(lit(1)).as("n"), sum(col("dl")).as("tot"))
-      else src.agg(count(lit(1)).as("n"),
-        sum(TextAnalysis.tokenCount(col(textCol)).cast("long")).as("tot"))
-    segmentWriter(statsSrc.coalesce(1), mode, batchId)
-      .partitionBy("batch_id").parquet(s"$path/stats")
+    Segments.writeAll(
+      () => {
+        // same files-per-bucket ≈ 1 rule as the streaming path
+        t.postings(tf.withColumn("pbucket", pbucket(col("token"), nBuckets))
+          .repartition(col("pbucket")))
+        t.dfreq(if (readBack) spark.read.schema(postingsSchema).parquet(s"$path/postings")
+          else tf)
+      },
+      () => {
+        t.doclen(corpus.select(col(idCol).as("id"),
+          TextAnalysis.tokenCount(col(textCol)).cast("long").as("dl")))
+        t.stats(
+          if (readBack) spark.read.schema(doclenSchema).parquet(s"$path/doclen")
+            .agg(count(lit(1)).as("n"), sum(col("dl")).as("tot"))
+          else corpus.agg(count(lit(1)).as("n"),
+            sum(TextAnalysis.tokenCount(col(textCol)).cast("long")).as("tot")))
+      })
+  }
+
+  /** The four table writes of one segment. `postings` takes (id, token,
+    * tf, pbucket) already repartitioned on pbucket; `dfreq` counts the
+    * rows of an (id, token, ...) frame per token; `doclen` takes (id, dl)
+    * and `stats` the one (n, tot) row.
+    */
+  private final class SegmentTables(path: String, nBuckets: Int, mode: String,
+                                    batchId: Option[Long]) {
+    def postings(p: DataFrame): Unit =
+      Segments.writer(p, mode, batchId)
+        .partitionBy("batch_id", "pbucket").parquet(s"$path/postings")
+    def dfreq(tf: DataFrame): Unit =
+      Segments.writer(tf.groupBy("token").agg(count(lit(1)).as("df"))
+          .withColumn("pbucket", pbucket(col("token"), nBuckets))
+          .repartition(col("pbucket")), mode, batchId)
+        .partitionBy("batch_id", "pbucket").parquet(s"$path/dfreq")
+    def doclen(dl: DataFrame): Unit =
+      Segments.writer(dl, mode, batchId)
+        .partitionBy("batch_id").parquet(s"$path/doclen")
+    def stats(nTot: DataFrame): Unit =
+      Segments.writer(nTot.coalesce(1), mode, batchId)
+        .partitionBy("batch_id").parquet(s"$path/stats")
   }
 
   /** Delete documents from the stored index WITHOUT rebuild — the
@@ -285,6 +308,8 @@ object Bm25 {
   def deleteFromBm25Index(ids: DataFrame, path: String, nBuckets: Int = 64,
                           idCol: String = "doc_id"): Unit = {
     val spark = ids.sparkSession
+    // serial, unlike the rebuild: tombstones land last, because a rerun
+    // skips tombstoned ids and so could never redo a failed correction
     // already-tombstoned ids are excluded so a double delete cannot
     // subtract its df/stats corrections twice (idempotent erasure).
     // No cast on the id: tombstones keep the stored id type so the

@@ -148,6 +148,60 @@ class Bm25Spec extends SparkTestBase {
     assert(stored.nonEmpty)
   }
 
+  test("concurrent rebuild: index laws hold and the tree keeps its layout") {
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    val words = Seq("cat", "dog", "fish", "bird", "table", "spark", "join", "scan", "merge")
+    // 120 documents of 1-7 tokens, plus one without tokens (n counts it, tot does not)
+    val docs = (Seq.tabulate(120)(i => (i.toLong,
+      Seq.tabulate(1 + i % 7)(j => words((i * 3 + j * 5) % words.size)).mkString(" "))) :+
+      (1000L, "")).toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("bm25_idx_laws").resolve("idx")
+    Bm25.writeBm25Index(docs, root.toString, nBuckets = 16)
+    def table(t: String) = spark.read.parquet(s"$root/$t")
+    // dfreq = postings grouped by token; stats n = corpus rows, tot = Σ dl
+    val byToken = table("postings").groupBy("token", "pbucket", "batch_id")
+      .agg(count(lit(1)).as("df"))
+    val dfCols = Seq("token", "df", "pbucket", "batch_id").map(col)
+    assert(table("dfreq").select(dfCols: _*).collect().toSet ===
+      byToken.select(dfCols: _*).collect().toSet)
+    val stats = table("stats").collect()
+    assert(stats.length === 1)
+    assert(stats(0).getAs[Long]("n") === docs.count())
+    assert(table("doclen").count() === docs.count())
+    assert(stats(0).getAs[Long]("tot") ===
+      table("doclen").agg(sum("dl")).head().getLong(0))
+    // the layout: per table a _SUCCESS marker, batch_id=-1 (and the
+    // corpus tokens' pbucket dirs under it for postings and dfreq), part
+    // files only in leaves, each with a .crc sibling; modes 644/755
+    val buckets = docs.select(explode(graft.text.TextAnalysis.tokens(col("text"))).as("t"))
+      .select(pmod(hash(col("t")), lit(16))).distinct().collect().map(_.getInt(0))
+    val leaves = Seq("postings", "dfreq").flatMap(t =>
+      buckets.map(b => s"$t/batch_id=-1/pbucket=$b")) ++
+      Seq("doclen/batch_id=-1", "stats/batch_id=-1")
+    val entries = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_ != root).toSeq
+    def rel(p: java.nio.file.Path) = root.relativize(p).toString
+    val (dirs, files) = entries.partition(java.nio.file.Files.isDirectory(_))
+    val tables = Seq("postings", "dfreq", "doclen", "stats")
+    assert(dirs.map(rel).toSet === (tables ++ tables.map(t => s"$t/batch_id=-1") ++ leaves).toSet)
+    files.map(rel).groupBy(f => f.take(f.lastIndexOf('/'))).foreach { case (dir, fs) =>
+      val names = fs.map(f => f.drop(dir.length + 1))
+      if (tables.contains(dir)) assert(names.toSet === Set("_SUCCESS", "._SUCCESS.crc"))
+      else {
+        assert(leaves.contains(dir), s"files outside a leaf: $dir")
+        val parts = names.filter(_.startsWith("part-"))
+        assert(parts.nonEmpty && names.size === 2 * parts.size, names)
+        parts.foreach(f => assert(names.contains(s".$f.crc"), s"$dir/$f has no .crc"))
+      }
+    }
+    assert(leaves.forall(l => files.exists(f => rel(f).startsWith(s"$l/part-"))))
+    entries.foreach { p =>
+      val mode = java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0x1ff
+      assert(mode == (if (java.nio.file.Files.isDirectory(p)) 0x1ed else 0x1a4), rel(p))
+    }
+  }
+
   test("persistent index probe prunes postings partitions to the query-term buckets") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val tmp = java.nio.file.Files.createTempDirectory("bm25_idx_plan").resolve("idx").toString

@@ -277,6 +277,31 @@ class PipelineSpec extends SparkTestBase {
       Seq("code", "reference_date")) === Some(Seq("PETR4", "2024-01-03")))
   }
 
+  test("catalog: a path-escaped partition value reads back unchanged; a second sync adds 0") {
+    val dir = tmpDir()
+    val keys = Seq("code", "reference_date")
+    val odd = "A=B/C"
+    val refined = Transform.transformV1(rawV1Fixture)
+      .withColumn("code", when(col("code") === "PETR4", lit(odd)).otherwise(col("code")))
+    Transform.writePartitioned(spark, refined, dir, keys)
+    assert(new java.io.File(dir, "code=A%3DB%2FC").isDirectory) // the write escapes it
+
+    val wanted = Catalog.discoverPartitions(spark, dir, keys)
+    assert(wanted.contains(Seq(odd, "2024-01-03")))
+    val db = s"t_esc_${System.nanoTime()}"
+    val p = new Pipeline(spark, refinedDb = db)
+    assert(p.load(dir) === 20)
+    assert(Catalog.listPartitions(spark, db, "pregao_refined") === wanted)
+    assert(p.load(dir) === 0) // the registered set equals the discovered one
+    val table = spark.table(s"$db.pregao_refined")
+    assert(table.select("code").distinct().collect().map(_.getString(0)).toSet ===
+      Set(odd, "VALE3"))
+    assert(table.filter(col("code") === odd).count() === 10)
+    assert(Catalog.partitionFromPath(
+      s"$dir/code=A%3DB%2FC/reference_date=2024-01-03/part-0.parquet", keys) ===
+      Some(Seq(odd, "2024-01-03")))
+  }
+
   test("atomic sink: the write itself registers partitions — no sync step") {
     val rawDir = tmpDir(); val refinedDir = tmpDir()
     rawV1Fixture.write.partitionBy("date").mode("overwrite").parquet(rawDir)

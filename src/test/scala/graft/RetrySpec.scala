@@ -77,7 +77,8 @@ class RetrySpec extends AnyFunSuite {
     val sql = Catalog.addPartitionsSql("db", "t", Seq("code", "day"),
       Seq(Seq("A'B", "2024-01-01"), Seq("C", "2024-01-02")), "/base")
     assert(sql.startsWith("ALTER TABLE `db`.`t` ADD IF NOT EXISTS"))
-    assert(sql.contains("PARTITION (`code`='A''B', `day`='2024-01-01') LOCATION '/base/code=A''B/day=2024-01-01'"))
+    // the value is SQL-quoted; the directory is the write's path-escaped one
+    assert(sql.contains("PARTITION (`code`='A''B', `day`='2024-01-01') LOCATION '/base/code=A%27B/day=2024-01-01'"))
     assert(sql.contains("PARTITION (`code`='C', `day`='2024-01-02') LOCATION '/base/code=C/day=2024-01-02'"))
     // exactly one ALTER statement for the batch (the round-trip economy)
     assert("ALTER TABLE".r.findAllIn(sql).size === 1)
