@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.ops.Tables
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -112,7 +113,7 @@ object Bench {
       if (isolateTiers) { spark.stop(); spark = newSession() }
       def probe(i: Int): Double = {
         val t0 = System.nanoTime()
-        val schema = spark.read.parquet(s"$sfDir/region.parquet").schema
+        val schema = Tables.parquetSchema(spark, s"$sfDir/region.parquet")
         val q = spark.readStream.schema(schema)
           .option("basePath", sfDir).parquet(s"$sfDir/region.parquet*")
           .writeStream.outputMode("append").format("memory")

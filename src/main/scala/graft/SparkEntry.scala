@@ -2219,7 +2219,7 @@ object SparkEntry {
           docs, "doc_id", "text", bands = 4, rowsPerBand = 4, threshold = 0.9)
           .repartition(4))
         .mode("overwrite").parquet(pairsPath)
-      val sch = s.read.parquet(pairsPath).schema
+      val sch = Tables.parquetSchema(s, pairsPath)
       val pairStream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(pairsPath)
       val q = graft.streaming.ClusterIngest.start(
@@ -2783,7 +2783,7 @@ object SparkEntry {
       val ckpt = tmp.resolve("ckpt").toString
       NioLocalFileSystem.write(emb.filter(col("vec_id") % 2 === 0).repartition(4))
         .mode("overwrite").parquet(srcPath)
-      val sch = s.read.parquet(srcPath).schema
+      val sch = Tables.parquetSchema(s, srcPath)
       val vecStream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(srcPath)
       val q = graft.streaming.ClusterIngest.startFromVectors(
@@ -2838,7 +2838,7 @@ object SparkEntry {
       val ckpt = tmp.resolve("ckpt").toString
       NioLocalFileSystem.write(emb.filter(col("vec_id") % 2 === 0).repartition(4))
         .mode("overwrite").parquet(srcPath)
-      val sch = s.read.parquet(srcPath).schema
+      val sch = Tables.parquetSchema(s, srcPath)
       val vecStream = s.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(srcPath)
       val handle = steadyHandle(s, s"embed:$idxPath")(
@@ -6854,7 +6854,7 @@ object SparkEntry {
       graft.similarity.Pca.writeMomentSegments(
         emb.filter(col("vec_id") % 2 =!= 0), dim = 64, segB)
       graft.similarity.Pca.embeddingDrift(
-        s.read.parquet(segA), s.read.parquet(segB), dim = 64)
+        Tables.parquet(s, segA), Tables.parquet(s, segB), dim = 64)
         .orderBy("pos")
     },
     Some {
@@ -6895,7 +6895,7 @@ object SparkEntry {
       val segPath = scratchDir("graft_corr").resolve("seg").toString
       graft.similarity.Pca.writeMomentSegments(emb, dim = 64, segPath)
       graft.similarity.Pca.dimCorrelationFromMoments(
-        s.read.parquet(segPath), dim = 64)
+        Tables.parquet(s, segPath), dim = 64)
         .orderBy("i", "j")
     },
     Some("""WITH xq AS (
@@ -7847,7 +7847,7 @@ object SparkEntry {
         docs.filter(col("doc_id") >= 250 && col("doc_id") < 1000),
         "doc_id", "text", numHashes = 16, idxPath)
       graft.dedup.NearDup.minHashLshAgainstIndex(
-        docs.filter(col("doc_id") < 250), s.read.parquet(idxPath),
+        docs.filter(col("doc_id") < 250), Tables.parquet(s, idxPath),
         "doc_id", "text", bands = 4, rowsPerBand = 4, threshold = 0.9)
         .orderBy("new_id", "seen_id")
     },
@@ -10046,7 +10046,7 @@ object SparkEntry {
         bands = 4, rowsPerBand = 4, threshold = 0.9,
         outPath = outPath, checkpoint = ckpt)
       q.awaitTermination()
-      s.read.parquet(outPath)
+      Tables.parquet(s, outPath)
         .select(col("new_id"), col("seen_id"), col("jaccard"))
         .orderBy("new_id", "seen_id")
     },
@@ -10080,7 +10080,7 @@ object SparkEntry {
         s, newDocs, handle, "doc_id", "text", threshold = 0.9,
         outPath = outPath, checkpoint = ckpt)
       q.awaitTermination()
-      s.read.parquet(outPath)
+      Tables.parquet(s, outPath)
         .select(col("new_id"), col("seen_id"), col("jaccard"))
         .orderBy("new_id", "seen_id")
     },
@@ -10110,7 +10110,7 @@ object SparkEntry {
         idxPath, "doc_id", "text", threshold = 0.9,
         outPath = outPath, checkpoint = ckpt)
       q.awaitTermination()
-      s.read.parquet(outPath)
+      Tables.parquet(s, outPath)
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
     },
@@ -10142,7 +10142,7 @@ object SparkEntry {
       val q = graft.streaming.MediaIngest.start(
         s, stream, hashPath, pairsPath, ckpt, maxHamming = 2)
       q.awaitTermination()
-      s.read.parquet(pairsPath)
+      Tables.parquet(s, pairsPath)
         .select(col("id_a"), col("id_b"), col("hamming"))
         .orderBy("id_a", "id_b")
     },
@@ -10196,7 +10196,7 @@ object SparkEntry {
       val q = graft.streaming.MediaIngest.startSteady(
         s, stream, idxPath, pairsPath, ckpt, maxHamming = 2)
       q.awaitTermination()
-      s.read.parquet(pairsPath)
+      Tables.parquet(s, pairsPath)
         .select(col("id_a"), col("id_b"), col("hamming"))
         .orderBy("id_a", "id_b")
     },
@@ -10228,7 +10228,7 @@ object SparkEntry {
       val q = graft.streaming.MediaIngest.start(
         s, stream, hashPath, pairsPath, ckpt, maxHamming = 2, kind = "audio")
       q.awaitTermination()
-      s.read.parquet(pairsPath)
+      Tables.parquet(s, pairsPath)
         .select(col("id_a"), col("id_b"), col("hamming"))
         .orderBy("id_a", "id_b")
     },
@@ -10309,7 +10309,7 @@ object SparkEntry {
         s, stream, metaPath, keptPath, ckpt,
         minWidth = 6, minHeight = 5, minSampleRate = 8000)
       q.awaitTermination()
-      s.read.parquet(keptPath)
+      Tables.parquet(s, keptPath)
         .select(col("doc_id"), col("kind"), col("format"))
         .orderBy("doc_id")
     },
@@ -10342,7 +10342,7 @@ object SparkEntry {
       val q = graft.streaming.MediaIngest.startSteady(
         s, stream, idxPath, pairsPath, ckpt, maxHamming = 2, kind = "audio")
       q.awaitTermination()
-      s.read.parquet(pairsPath)
+      Tables.parquet(s, pairsPath)
         .select(col("id_a"), col("id_b"), col("hamming"))
         .orderBy("id_a", "id_b")
     },
@@ -10372,7 +10372,7 @@ object SparkEntry {
           .filter(col("vec_id") % 10 =!= 1),
         idxPath, tau = 0.3, outPath = outPath, checkpoint = ckpt)
       q.awaitTermination()
-      s.read.parquet(outPath)
+      Tables.parquet(s, outPath)
         .select(col("vec_id"), col("label"))
         .orderBy("vec_id")
     }, {
@@ -10750,7 +10750,7 @@ object SparkEntry {
             graft.text.Unigram.refineVocab(d, "doc_id", "text", v0, iters = 1))
           .parquet(p)
       }
-      graft.text.Unigram.encode(d, "doc_id", "text", s.read.parquet(vPath))
+      graft.text.Unigram.encode(d, "doc_id", "text", Tables.parquet(s, vPath))
         .orderBy("id")
     },
     Some(s"""WITH RECURSIVE ${unigramBaseCtes(minCount = 50L)},
@@ -11092,7 +11092,7 @@ object SparkEntry {
       val qa = epoch(col("vec_id") % 2 === 0, "ckptA", 0L)
       val qb = epoch(col("vec_id") % 2 =!= 0, "ckptB", offset)
       qa.awaitTermination(); qb.awaitTermination()
-      val all = s.read.parquet(seg)
+      val all = Tables.parquet(s, seg)
       graft.similarity.Pca.embeddingDrift(
         all.filter(col("batch_id") < offset),
         all.filter(col("batch_id") >= offset), dim = 64)

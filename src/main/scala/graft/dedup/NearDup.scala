@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.io.NioLocalFileSystem
 import graft.text.TextAnalysis
+import graft.ops.Tables
 
 /** Near-duplicate detection for document corpora: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash. All built from native Spark expressions (no
@@ -405,10 +406,10 @@ object NearDup {
     */
   def readNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Tables.parquet(spark, path)
     val t = new org.apache.hadoop.fs.Path(s"$path.tombstones")
     if (!t.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(t)) df
-    else df.join(broadcast(spark.read.parquet(s"$path.tombstones")),
+    else df.join(broadcast(Tables.parquet(spark, s"$path.tombstones")),
       Seq("id"), "left_anti")
   }
 
@@ -822,7 +823,7 @@ object NearDup {
                          geometry: Option[(Int, Int)] = None): Unit = {
     val spark = sims.sparkSession
     val (mh, parts) = geometry.getOrElse {
-      val meta = spark.read.parquet(s"$path/meta").collect().head
+      val meta = Tables.parquet(spark, s"$path/meta").collect().head
       (meta.getAs[Int]("maxhamming"), meta.getAs[Int]("parts"))
     }
     graft.ops.Segments.writer(
@@ -869,7 +870,7 @@ object NearDup {
       srcDirs.foreach(p => fs.delete(new HPath(p), true))
       return srcIds.size
     }
-    val folded = spark.read.option("basePath", post).parquet(srcDirs: _*)
+    val folded = Tables.parquetPaths(spark, srcDirs, Map("basePath" -> post))
       .drop("batch_id")
       // full-row dedupe: a crash between an earlier fold's write and its
       // source delete leaves overlapping segments; pairs stay correct
@@ -898,7 +899,7 @@ object NearDup {
                                   geometry: Option[(Int, Int)] = None): DataFrame = {
     val spark = newSims.sparkSession
     val (maxHamming, parts) = geometry.getOrElse {
-      val meta = spark.read.parquet(s"$path/meta").collect().head
+      val meta = Tables.parquet(spark, s"$path/meta").collect().head
       (meta.getAs[Int]("maxhamming"), meta.getAs[Int]("parts"))
     }
     // two consumers (pkey list + candidate join) and true stats
@@ -909,7 +910,7 @@ object NearDup {
     // pkey space is nKeys × parts (e.g. 4 × 64 = 256 at radius 3) — the
     // distinct list is always collectable
     val touched = l.select("pkey").distinct().collect().map(_.getLong(0))
-    val post = spark.read.parquet(s"$path/post")
+    val post = Tables.parquet(spark, s"$path/post")
     val sliced = beforeBatch.map(b => post.filter(col("batch_id") < b)).getOrElse(post)
     val pkeyLits: Seq[Any] =
       if (sliced.schema("pkey").dataType == org.apache.spark.sql.types.IntegerType)

@@ -103,7 +103,7 @@ object Compaction {
     if (toRewrite.isEmpty) return (before.length, before.length)
     val tmp = new HPath(hPath, s".compact_tmp_${java.util.UUID.randomUUID()}")
     toRewrite.foreach { binFiles =>
-      NioLocalFileSystem.write(spark.read.parquet(binFiles: _*).coalesce(1))
+      NioLocalFileSystem.write(Tables.parquetPaths(spark, binFiles).coalesce(1))
         .mode("append").parquet(tmp.toString)
     }
     val newFiles = fs.listStatus(tmp).toSeq
@@ -192,7 +192,7 @@ object Compaction {
       srcDirs.foreach(p => fs.delete(new HPath(p), true))
       return srcIds.size
     }
-    val df = spark.read.option("basePath", dir).parquet(srcDirs: _*)
+    val df = Tables.parquetPaths(spark, srcDirs, Map("basePath" -> dir))
       .drop("batch_id")
     innerCol match {
       case Some(c) =>

@@ -145,7 +145,7 @@ object Hll {
     */
   def estimateFromSegments(spark: SparkSession, path: String,
                            keyCols: Seq[String]): DataFrame =
-    estimate(mergeRegisters(spark.read.parquet(path), keyCols), keyCols)
+    estimate(mergeRegisters(Tables.parquet(spark, path), keyCols), keyCols)
 
   /** Pairwise distinct-set OVERLAP between every two keys, by
     * inclusion–exclusion over the register algebra: for each unordered

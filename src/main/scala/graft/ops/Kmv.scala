@@ -161,7 +161,7 @@ object Kmv {
   def estimateFromSegments(spark: SparkSession, path: String,
                            keyCols: Seq[String], k: Int): DataFrame =
     estimateFromBottomK(
-      mergeBottomK(spark.read.parquet(path), keyCols, k), keyCols, k)
+      mergeBottomK(Tables.parquet(spark, path), keyCols, k), keyCols, k)
 
   /** The merged SAMPLE itself from stored segments — the k smallest
     * distinct values per key with their ranks: the deterministic
@@ -169,5 +169,5 @@ object Kmv {
     */
   def sampleFromSegments(spark: SparkSession, path: String,
                          keyCols: Seq[String], k: Int): DataFrame =
-    mergeBottomK(spark.read.parquet(path), keyCols, k)
+    mergeBottomK(Tables.parquet(spark, path), keyCols, k)
 }

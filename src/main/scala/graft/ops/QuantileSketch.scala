@@ -138,6 +138,6 @@ object QuantileSketch {
   def quantilesFromSegments(spark: SparkSession, path: String,
                             keyCols: Seq[String], qsPerMille: Seq[Int],
                             lo: Long, hi: Long, nBins: Int): DataFrame =
-    quantiles(mergeBins(spark.read.parquet(path), keyCols),
+    quantiles(mergeBins(Tables.parquet(spark, path), keyCols),
       keyCols, qsPerMille, lo, hi, nBins)
 }

@@ -1,6 +1,12 @@
 package graft.ops
 
+import scala.util.control.{NoStackTrace, NonFatal}
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.spark.sql.types.StructType
 
 import graft.io.NioLocalFileSystem
 
@@ -14,16 +20,120 @@ import graft.io.NioLocalFileSystem
   * predicate pushdown, column pruning and (for partitioned layouts)
   * partition pruning for free — at 100 TB these three are what keep a scan
   * from reading the whole lake.
+  *
+  * [[parquet]] is the engine's one batch parquet read path: every program
+  * read without an explicit schema starts there, and takes its schema from
+  * one footer read on the driver instead of Spark's schema-inference job.
+  * [[readMerged]] stays on Spark's inference, because `mergeSchema` needs
+  * every footer. `WriterPathSpec` fails on a read that bypasses both.
   */
 object Tables {
 
+  /** `spark.read.options(options).parquet(path)` without the Spark job
+    * that infers its schema. The schema comes from the footer of the
+    * first visible data file under `path` in name order, converted by
+    * Spark's own per-file inference code ([[FooterSchema]]); Spark still
+    * lists the files and infers the partition columns from the directory
+    * names. When Spark would decide the schema some other way, this is
+    * plain `spark.read.parquet`, so Spark's own result or error comes
+    * back: no visible data file, a glob path, a `_metadata` or
+    * `_common_metadata` summary file, a streaming sink's
+    * `_spark_metadata` log, a data column named like a `k=` partition
+    * key, a first file Spark would not read (under a plain subdirectory
+    * of an unpartitioned path, or outside `basePath`), or a footer that
+    * cannot be read. When the files' schemas
+    * disagree, Spark's choice of file is arbitrary too; every table the
+    * program writes has one schema.
+    */
+  def parquet(spark: SparkSession, path: String,
+              options: Map[String, String] = Map.empty): DataFrame =
+    parquetPaths(spark, Seq(path), options)
+
+  /** [[parquet]] over several paths, as `spark.read.parquet(paths: _*)`. */
+  def parquetPaths(spark: SparkSession, paths: Seq[String],
+                   options: Map[String, String] = Map.empty): DataFrame = {
+    footerSchema(spark, paths, options) match {
+      case Some(schema) => spark.read.options(options).schema(schema).parquet(paths: _*)
+      case None => spark.read.options(options).parquet(paths: _*)
+    }
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, from [[parquet]]. */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    parquet(spark, path).schema
+
+  private val GlobChars = "{}[]*?\\".toSet
+
+  /** Thrown where Spark would decide the schema some other way. */
+  private object SparkDecides extends Exception with NoStackTrace
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String],
+                           options: Map[String, String]): Option[StructType] = {
+    def option(key: String) = options.collectFirst { case (k, v) if k.equalsIgnoreCase(key) => v }
+    val recursive = option("recursiveFileLookup").exists(_.trim.equalsIgnoreCase("true"))
+    try {
+      if (paths.isEmpty || paths.exists(_.exists(GlobChars))) throw SparkDecides
+      val conf = FooterSchema.hadoopConf(spark, options)
+      // (file, directory names between the partition base and the file)
+      val files = paths.flatMap { p =>
+        val root = new Path(p)
+        val fs = root.getFileSystem(conf)
+        val status = fs.getFileStatus(root)
+        val dirs = option("basePath").fold(Seq.empty[String])(b =>
+          dirsBetween(fs, new Path(b), if (status.isDirectory) root else root.getParent))
+        if (status.isDirectory) dataFiles(fs, root, dirs)
+        else if (unlisted(root.getName)) throw SparkDecides
+        else if (FooterSchema.hidden(root.getName)) Seq.empty
+        else Seq(status -> dirs)
+      }
+      val (first, dirs) = files.headOption.getOrElse(throw SparkDecides)
+      // without partition columns Spark reads only the files directly under each path
+      if (!recursive && !dirs.forall(isPartitionDir)) throw SparkDecides
+      val keys = if (recursive) Set.empty[String]
+        else dirs.map(d => unescapePathName(d.take(d.indexOf('='))).toLowerCase).toSet
+      FooterSchema.read(spark, conf, first, options)
+        .filterNot(_.fieldNames.exists(n => keys(n.toLowerCase)))
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** Visible data files under `dir` in sorted name order, each with the
+    * directory names between the partition base and the file.
+    */
+  private def dataFiles(fs: FileSystem, dir: Path,
+                        dirs: Seq[String]): Seq[(FileStatus, Seq[String])] = {
+    val entries = fs.listStatus(dir).toSeq.sortBy(_.getPath.getName)
+    if (entries.exists(e => unlisted(e.getPath.getName))) throw SparkDecides
+    entries.filterNot(e => FooterSchema.hidden(e.getPath.getName)).flatMap { e =>
+      if (e.isDirectory) dataFiles(fs, e.getPath, dirs :+ e.getPath.getName)
+      else Seq(e -> dirs)
+    }
+  }
+
+  /** Names that make Spark take the schema, or the file list, from
+    * somewhere other than the data files.
+    */
+  private def unlisted(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata") ||
+      name == "_spark_metadata"
+
+  private def isPartitionDir(name: String): Boolean = name.indexOf('=') > 0
+
+  /** Directory names from `base` down to `dir`. */
+  private def dirsBetween(fs: FileSystem, base: Path, dir: Path): Seq[String] = {
+    val b = fs.makeQualified(base).toUri.getPath.stripSuffix("/")
+    val d = fs.makeQualified(dir).toUri.getPath.stripSuffix("/")
+    if (d == b) Seq.empty
+    else if (d.startsWith(b + "/")) d.substring(b.length + 1).split('/').toSeq
+    else throw SparkDecides // Spark rejects the basePath itself
+  }
+
   /** S1: read one parquet file/prefix. */
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   /** S2: full recursive scan of a raw prefix (`transform.py:20-28`). */
   def readRecursive(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(dir)
+    parquet(spark, dir, Map("recursiveFileLookup" -> "true"))
 
   /** S3: catalog table scan (`transform_1.py:43-47`). Partition-aware:
     * filters on partition columns prune directories before any I/O.
@@ -89,7 +199,7 @@ object Tables {
 
   /** Streaming twin of [[readEvents]]: the same events table as a file-
     * source STREAM (a streaming source cannot infer — the schema comes
-    * from one batch footer read), with the identical nanos→micros `ts`
+    * from [[parquetSchema]], one footer read on the driver), with the identical nanos→micros `ts`
     * coercion so streaming operators see the same event time as batch
     * ones. At lake scale the file source is the right on-ramp: each
     * micro-batch lists only NEW files, and `Trigger.AvailableNow`
@@ -99,8 +209,7 @@ object Tables {
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.LongType
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = parquetSchema(spark, s"$dir/events.parquet")
     // the file stream source wants a directory basePath; the testdata
     // layout is one FILE per table, so glob the one file under the
     // scale-factor dir instead of handing it the file as a path
@@ -112,14 +221,13 @@ object Tables {
   }
 
   /** Generic streaming twin of [[read]]: any testdata table as a
-    * file-source stream (schema from one batch footer read, basePath
+    * file-source stream (schema from [[parquetSchema]], basePath
     * glob per the layout note in [[readEventsStream]]). Used by the
     * ingest-shaped streaming queries (near-dup at ingest) that stream
     * tables without event-time columns.
     */
   def readTableStream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = parquetSchema(spark, s"$dir/$name.parquet")
     spark.readStream.schema(schema)
       .option("basePath", dir).parquet(s"$dir/$name.parquet*")
   }

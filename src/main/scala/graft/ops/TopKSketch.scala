@@ -120,5 +120,5 @@ object TopKSketch {
   /** Heavy hitters over ALL history from the stored segments. */
   def topKFromSegments(spark: SparkSession, path: String,
                        keyCols: Seq[String], topN: Int): DataFrame =
-    mergedTopK(spark.read.parquet(path), keyCols, topN)
+    mergedTopK(Tables.parquet(spark, path), keyCols, topN)
 }

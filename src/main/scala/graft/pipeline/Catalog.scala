@@ -36,8 +36,13 @@ object Catalog {
       s"""CREATE TABLE IF NOT EXISTS `$db`.`$table` ($cols)
          |USING PARQUET
          |PARTITIONED BY ($parts)
-         |LOCATION '$location'""".stripMargin)
+         |LOCATION ${locationLiteral(location)}""".stripMargin)
   }
+
+  /** A LOCATION path as a SQL string literal: the path may itself hold
+    * a `'`, which the literal doubles.
+    */
+  private def locationLiteral(path: String): String = s"'${path.replace("'", "''")}'"
 
   /** M3: registered partitions as value-lists, e.g. Seq("2024-01-02") or
     * Seq("PETR4", "2024-01-02") (`extract.py:105-113`). `SHOW PARTITIONS`
@@ -99,10 +104,7 @@ object Catalog {
       // the directory is the one a partitioned write creates: escaped
       val dir = keys.zip(values)
         .map { case (k, v) => s"${escapePathName(k)}=${escapePathName(v)}" }.mkString("/")
-      // LOCATION is a string literal too — quote-escape the whole path,
-      // not just the PARTITION values
-      val loc = s"$location/$dir".replace("'", "''")
-      s"PARTITION ($spec) LOCATION '$loc'"
+      s"PARTITION ($spec) LOCATION ${locationLiteral(s"$location/$dir")}"
     }.mkString("\n")
     s"ALTER TABLE `$db`.`$table` ADD IF NOT EXISTS\n$parts"
   }

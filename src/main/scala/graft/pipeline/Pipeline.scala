@@ -67,8 +67,8 @@ class Pipeline(spark: SparkSession, rawDb: String = "b3_raw",
     */
   def run(rawLocation: String, refinedLocation: String, windowDays: Int = 7): Unit = {
     extract(rawLocation)
-    val raw = spark.read.option("basePath", rawLocation)
-      .option("recursiveFileLookup", "false").parquet(rawLocation)
+    val raw = Tables.parquet(spark, rawLocation,
+      Map("basePath" -> rawLocation, "recursiveFileLookup" -> "false"))
     val refined = transform(raw, windowDays)
     Transform.writePartitioned(spark, refined, refinedLocation, v1PartitionKeys)
     load(refinedLocation)
@@ -82,8 +82,8 @@ class Pipeline(spark: SparkSession, rawDb: String = "b3_raw",
   def runRegistered(rawLocation: String, refinedLocation: String,
                     windowDays: Int = 7): Unit = {
     extract(rawLocation)
-    val raw = spark.read.option("basePath", rawLocation)
-      .option("recursiveFileLookup", "false").parquet(rawLocation)
+    val raw = Tables.parquet(spark, rawLocation,
+      Map("basePath" -> rawLocation, "recursiveFileLookup" -> "false"))
     val refined = transform(raw, windowDays)
     Transform.writePartitionedToTable(spark, refined, refinedDb,
       "pregao_refined", refinedLocation, v1PartitionKeys)
@@ -94,7 +94,7 @@ class Pipeline(spark: SparkSession, rawDb: String = "b3_raw",
     * `etl/etl.py`).
     */
   def runIncremental(inputPath: String, refinedLocation: String): Unit = {
-    val raw = spark.read.parquet(inputPath)
+    val raw = Tables.parquet(spark, inputPath)
     val refined = Transform.transformV2(raw)
     Transform.writePartitioned(spark, refined, refinedLocation, v2PartitionKeys)
   }

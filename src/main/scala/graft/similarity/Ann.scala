@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
 import graft.io.NioLocalFileSystem
+import graft.ops.Tables
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -385,7 +386,7 @@ object Ann {
                               idCol: String = "vec_id",
                               vecCol: String = "embedding"): Unit = {
     val spark = newVecs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").collect().head
+    val meta = Tables.parquet(spark, s"$path/meta").collect().head
     val (bits, dim, seed) =
       (meta.getAs[Int]("nbits"), meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
     val planes = hyperplanes(bits, dim, seed)
@@ -415,7 +416,7 @@ object Ann {
                                    df: DataFrame, path: String): DataFrame = {
     val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     if (!t.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(t)) df
-    else df.join(broadcast(spark.read.parquet(s"$path/tombstones")
+    else df.join(broadcast(Tables.parquet(spark, s"$path/tombstones")
         .withColumnRenamed("id", "seen_id")),
       Seq("seen_id"), "left_anti")
   }
@@ -436,7 +437,7 @@ object Ann {
                                     idCol: String = "vec_id",
                                     vecCol: String = "embedding"): DataFrame = {
     val spark = newVecs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").collect().head
+    val meta = Tables.parquet(spark, s"$path/meta").collect().head
     val (bits, dim, seed) =
       (meta.getAs[Int]("nbits"), meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
     val planes = hyperplanes(bits, dim, seed)
@@ -454,7 +455,7 @@ object Ann {
     val bucketCounts = neu.groupBy("bucket").agg(count(lit(1)).as("__c"))
       .limit(1025).collect()
     val batchBuckets = bucketCounts.map(_.getLong(0))
-    val vecs = spark.read.parquet(s"$path/vecs")
+    val vecs = Tables.parquet(spark, s"$path/vecs")
     // literals in the PARTITION column's inferred type (small buckets
     // infer INT) — a cast wrapped around the attribute could block the
     // partition prune this read exists for
@@ -528,11 +529,11 @@ object Ann {
   def openEmbedNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String,
                             maxBucket: Int = 1000): EmbedIndexHandle = {
-    val meta = spark.read.parquet(s"$path/meta").collect().head
+    val meta = Tables.parquet(spark, s"$path/meta").collect().head
     val (bits, dim, seed) =
       (meta.getAs[Int]("nbits"), meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
     val staged = minusEmbedTombstones(spark,
-      spark.read.parquet(s"$path/vecs")
+      Tables.parquet(spark, s"$path/vecs")
         .select(col("bucket").cast("long").as("bucket"),
           col("id").as("seen_id"), col("vec").as("vec_seen"),
           col("nrm").as("n_seen")),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StringType
 
 import graft.functions.VectorOps
 import graft.io.NioLocalFileSystem
+import graft.ops.Tables
 
 /** IVF-style ANN: partition the corpus into `nLists` cells around sampled
   * centroids; queries scan only the `nProbe` nearest cells.
@@ -143,7 +144,7 @@ object Ivf {
     */
   def readCentroids(spark: org.apache.spark.sql.SparkSession,
                     path: String): Seq[(Long, Seq[Double])] =
-    spark.read.parquet(s"$path/centroids")
+    Tables.parquet(spark, s"$path/centroids")
       .orderBy("cell")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
@@ -189,7 +190,7 @@ object Ivf {
       df: DataFrame, path: String): DataFrame = {
     val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     if (!t.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(t)) df
-    else df.join(broadcast(spark.read.parquet(s"$path/tombstones")), Seq("cid"),
+    else df.join(broadcast(Tables.parquet(spark, s"$path/tombstones")), Seq("cid"),
       "left_anti")
   }
 
@@ -209,7 +210,7 @@ object Ivf {
       .localCheckpoint() // probe set reused: once for the cell list, once in the join
     val cells = q.select("cell").distinct().collect().map(_.getLong(0)).toSeq
     val lists = minusTombstones(spark,
-      spark.read.parquet(s"$path/lists")
+      Tables.parquet(spark, s"$path/lists")
         .filter(col("cell").isin(cells: _*)) // static partition pruning
         // partition-column type inference may narrow cell to int; restore
         // the written long so the probe join keys compare without casts

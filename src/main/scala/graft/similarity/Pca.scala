@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Tables
 
 /** Deterministic top-principal-component extraction over an embedding
   * corpus — the analysis primitive behind embedding-drift monitoring,
@@ -297,7 +298,7 @@ object Pca {
                               scaleBits: Int = 18,
                               iters: Int = 12): (Seq[Long], Seq[Long]) = {
     require(iters >= 1, s"iters=$iters must be >= 1")
-    val merged = spark.read.parquet(path)
+    val merged = Tables.parquet(spark, path)
       .groupBy("i", "j")
       .agg(sum(col("s")).as("s"))
       .collect()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
 import graft.io.NioLocalFileSystem
+import graft.ops.Tables
 
 /** Product quantization for embedding compression + asymmetric-distance
   * ANN (Jégou, Douze, Schmid 2011, "Product Quantization for Nearest
@@ -300,7 +301,7 @@ object Pq {
     */
   def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
                       path: String): Codebooks = {
-    val rows = spark.read.parquet(s"$path/codebooks").orderBy("s", "j").collect()
+    val rows = Tables.parquet(spark, s"$path/codebooks").orderBy("s", "j").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
     val m = rows.map(_._1).max + 1
     Codebooks(m, rows.head._3.length,
@@ -348,7 +349,7 @@ object Pq {
       .localCheckpoint() // reused: once for the cell list, once in the join
     val cells = qc.select("cell").distinct().collect().map(_.getLong(0)).toSeq
     val enc = Ivf.minusTombstones(spark,
-        spark.read.parquet(s"$path/codes")
+        Tables.parquet(spark, s"$path/codes")
           .filter(col("cell").isin(cells: _*)) // static partition pruning
           .withColumn("cell", col("cell").cast("long")),
         path)

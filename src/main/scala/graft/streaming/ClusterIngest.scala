@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.io.NioLocalFileSystem
+import graft.ops.Tables
 
 /** Streaming duplicate-CLUSTER maintenance: a continuous feed of
   * near-dup PAIR edges (the output of the incremental detectors —
@@ -53,7 +54,7 @@ object ClusterIngest {
     */
   def readLabels(spark: SparkSession, path: String,
                  beforeBatch: Option[Long] = None): DataFrame =
-    latestPerId(spark.read.parquet(path), beforeBatch)
+    latestPerId(Tables.parquet(spark, path), beforeBatch)
 
   private def latestPerId(seg: DataFrame, beforeBatch: Option[Long]): DataFrame = {
     val sliced = beforeBatch.map(b => seg.filter(col("batch_id") < b)).getOrElse(seg)
@@ -127,7 +128,7 @@ object ClusterIngest {
       srcDirs.foreach(p => fs.delete(new HPath(p), true))
       return srcIds.size
     }
-    val folded = spark.read.option("basePath", path).parquet(srcDirs: _*)
+    val folded = Tables.parquetPaths(spark, srcDirs, Map("basePath" -> path))
       .groupBy("id")
       .agg(max_by(col("cluster_id"), col("batch_id")).as("cluster_id"))
     NioLocalFileSystem.write(folded.coalesce(1)).mode("overwrite").parquet(target)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.io.NioLocalFileSystem
+import graft.ops.Tables
 
 /** Streaming IMAGE near-dup at ingest: every micro-batch of media
   * payloads is decoded + perceptually hashed ONCE, checked against the
@@ -61,7 +62,7 @@ object MediaIngest {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val seen =
       if (fs.exists(new org.apache.hadoop.fs.Path(hashPath)))
-        spark.read.parquet(hashPath)
+        Tables.parquet(spark, hashPath)
           .filter(col("batch_id") < batchId) // a retry must not see itself
           .select(col(idCol).as("id"), col(hashCol).as("simhash"))
       else spark.emptyDataFrame
@@ -125,7 +126,7 @@ object MediaIngest {
       if (!fs.exists(metaP)) throw new IllegalStateException(
         s"writeBatchSteady($indexPath): no index meta — pass geometry " +
           "explicitly or run startSteady first (it seeds meta before batch 0)")
-      val meta = spark.read.parquet(s"$indexPath/meta").collect().head
+      val meta = Tables.parquet(spark, s"$indexPath/meta").collect().head
       (meta.getAs[Int]("maxhamming"), meta.getAs[Int]("parts"))
     }
     val vsSeen =
@@ -181,7 +182,7 @@ object MediaIngest {
         (maxHamming, parts)
       } else {
         // a pre-seeded index wins: its stored geometry IS the blocking
-        val meta = spark.read.parquet(s"$indexPath/meta").collect().head
+        val meta = Tables.parquet(spark, s"$indexPath/meta").collect().head
         (meta.getAs[Int]("maxhamming"), meta.getAs[Int]("parts"))
       }
     newMedia.writeStream

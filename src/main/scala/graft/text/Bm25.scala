@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.NioLocalFileSystem
 import graft.ops.Segments
+import graft.ops.Tables
 
 /** Okapi BM25 lexical retrieval: for each query document, the top-k corpus
   * documents by BM25 score — the standard "pull training docs related to
@@ -318,7 +319,7 @@ object Bm25 {
     val del = minusTombstones(spark,
         ids.select(col(idCol).as("id")).distinct(), path)
       .localCheckpoint() // reused four times below
-    val deadPostings = spark.read.parquet(s"$path/postings")
+    val deadPostings = Tables.parquet(spark, s"$path/postings")
       .join(broadcast(del), "id")
     // corrections are ordinary NEGATIVE segments under batch_id=-2
     val dfCorrection = deadPostings.groupBy("token").agg((-count(lit(1))).as("df"))
@@ -327,7 +328,7 @@ object Bm25 {
       .repartition(col("pbucket")) // one file per bucket, not tasks × buckets
     NioLocalFileSystem.write(dfCorrection)
       .mode("append").partitionBy("batch_id", "pbucket").parquet(s"$path/dfreq")
-    val statsCorrection = spark.read.parquet(s"$path/doclen").join(broadcast(del), "id")
+    val statsCorrection = Tables.parquet(spark, s"$path/doclen").join(broadcast(del), "id")
       .agg((-count(lit(1))).as("n"), (-sum(col("dl"))).as("tot"))
       .withColumn("batch_id", lit(-2L))
     NioLocalFileSystem.write(statsCorrection.coalesce(1))
@@ -340,7 +341,7 @@ object Bm25 {
     val fs = new org.apache.hadoop.fs.Path(s"$path/tombstones")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones"))) df
-    else df.join(broadcast(spark.read.parquet(s"$path/tombstones")), Seq("id"),
+    else df.join(broadcast(Tables.parquet(spark, s"$path/tombstones")), Seq("id"),
       "left_anti")
   }
 
@@ -363,15 +364,15 @@ object Bm25 {
     val buckets = qterms.select(pbucket(col("token"), nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     def pruned(sub: String): DataFrame =
-      spark.read.parquet(s"$path/$sub")
+      Tables.parquet(spark, s"$path/$sub")
         .filter(col("pbucket").isin(buckets: _*)) // static partition pruning
         .drop("pbucket", "batch_id")
     val tf = minusTombstones(spark, pruned("postings"), path)
     val dfreq = pruned("dfreq").groupBy("token").agg(sum(col("df")).as("df"))
       .filter(col("df") > 0)
     val dl = minusTombstones(spark,
-      spark.read.parquet(s"$path/doclen").drop("batch_id"), path)
-    val stats = spark.read.parquet(s"$path/stats")
+      Tables.parquet(spark, s"$path/doclen").drop("batch_id"), path)
+    val stats = Tables.parquet(spark, s"$path/stats")
       .agg(sum(col("n")).as("__n"), sum(col("tot")).as("__tot"))
     val n = col("__n").cast("double")
     val idf = log(lit(1.0) + (n - col("df") + lit(0.5)) / (col("df") + lit(0.5)))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.NearDup
 import graft.io.NioLocalFileSystem
+import graft.ops.Tables
 
 /** Benchmark decontamination for training corpora: flag training documents
   * whose token n-grams overlap an evaluation/benchmark set (the exact-match
@@ -293,7 +294,7 @@ object Decontaminate {
   /** The stored banding config — read once per append/probe (3 ints). */
   private def readBenchMeta(spark: org.apache.spark.sql.SparkSession,
                             path: String): (Int, Int, Int) = {
-    val r = spark.read.parquet(s"$path/meta").collect().head
+    val r = Tables.parquet(spark, s"$path/meta").collect().head
     (r.getAs[Int]("bands"), r.getAs[Int]("rows_per_band"), r.getAs[Int]("n_buckets"))
   }
 
@@ -335,7 +336,7 @@ object Decontaminate {
     // benchmark id (deleteFromBenchIndex dedups against it before
     // appending), and benchmarks are model-sized by this module's
     // design contract
-    else df.join(broadcast(spark.read.parquet(s"$path/tombstones")),
+    else df.join(broadcast(Tables.parquet(spark, s"$path/tombstones")),
       Seq("id"), "left_anti")
   }
 
@@ -397,9 +398,9 @@ object Decontaminate {
       if (prune) {
         val buckets = newBand.select("bbucket").distinct()
           .collect().map(_.getInt(0)).toSeq
-        spark.read.parquet(s"$indexPath/bands")
+        Tables.parquet(spark, s"$indexPath/bands")
           .filter(col("bbucket").isin(buckets: _*)) // static partition pruning
-      } else spark.read.parquet(s"$indexPath/bands")
+      } else Tables.parquet(spark, s"$indexPath/bands")
     val seenBand = minusBenchTombstones(spark,
       seenBandRead.drop("bbucket", "batch_id"), indexPath)
     val okBuckets = seenBand.groupBy("band", "bh").count()
@@ -416,7 +417,7 @@ object Decontaminate {
         array_distinct(graft.text.TextAnalysis.tokens(col("text"))).as("toks_a")),
       bigNew)
     val seenToks = minusBenchTombstones(spark,
-        spark.read.parquet(s"$indexPath/sig"), indexPath)
+        Tables.parquet(spark, s"$indexPath/sig"), indexPath)
       .select(col("id").as("seen_id"), col("toks").as("toks_b"))
     candidates
       .join(newToks, "new_id").join(seenToks, "seen_id")
@@ -450,7 +451,7 @@ object Decontaminate {
                      maxBucket: Int = 1000): BenchIndexHandle = {
     val (bands, rowsPerBand, nBuckets) = readBenchMeta(spark, indexPath)
     val band0 = minusBenchTombstones(spark,
-      spark.read.parquet(s"$indexPath/bands").drop("batch_id"), indexPath)
+      Tables.parquet(spark, s"$indexPath/bands").drop("batch_id"), indexPath)
     val okBuckets = band0.groupBy("band", "bh").count()
       .filter(col("count") <= maxBucket).select("band", "bh")
     val seenBand = band0.join(okBuckets, Seq("band", "bh"))
@@ -458,7 +459,7 @@ object Decontaminate {
       // shuffles per micro-batch
       .repartition(col("band"), col("bh")).localCheckpoint()
     val seenToks = minusBenchTombstones(spark,
-        spark.read.parquet(s"$indexPath/sig"), indexPath)
+        Tables.parquet(spark, s"$indexPath/sig"), indexPath)
       .select(col("id").as("seen_id"), col("toks").as("toks_b"))
       .localCheckpoint()
     BenchIndexHandle(bands, rowsPerBand, nBuckets, maxBucket, seenBand, seenToks)

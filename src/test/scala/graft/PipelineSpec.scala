@@ -302,6 +302,21 @@ class PipelineSpec extends SparkTestBase {
       Some(Seq(odd, "2024-01-03")))
   }
 
+  test("catalog: Pipeline.run over roots whose paths hold a quote registers both tables") {
+    val base = s"${tmpDir()}/o'neil"
+    val rawDir = s"$base/raw"; val refinedDir = s"$base/refined"
+    rawV1Fixture.write.partitionBy("date").mode("overwrite").parquet(rawDir)
+    val tag = System.nanoTime()
+    val (rawDb, refinedDb) = (s"t_quote_raw_$tag", s"t_quote_ref_$tag")
+    new Pipeline(spark, rawDb, refinedDb).run(rawDir, refinedDir)
+    assert(Catalog.listPartitions(spark, rawDb, "pregao_raw").size === 10)
+    assert(spark.table(s"$rawDb.pregao_raw").count() === 22)
+    assert(Catalog.listPartitions(spark, refinedDb, "pregao_refined").size === 20)
+    val refined = spark.table(s"$refinedDb.pregao_refined")
+    assert(refined.count() === 20)
+    assert(refined.filter(col("code") === "PETR4").count() === 10)
+  }
+
   test("atomic sink: the write itself registers partitions — no sync step") {
     val rawDir = tmpDir(); val refinedDir = tmpDir()
     rawV1Fixture.write.partitionBy("date").mode("overwrite").parquet(rawDir)

@@ -11,6 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * bare `.write` would bring back one forked `/bin/chmod` per file, `.crc`
   * checksum and directory it creates.
   *
+  * Likewise every parquet read either names its schema (`.schema(` in the
+  * same statement) or starts at [[graft.ops.Tables.parquet]], the one
+  * read path, unless it is listed below with its reason. A bare
+  * `spark.read.parquet` would bring back one schema-inference Spark job
+  * per read.
+  *
   * The scan reads the sources with comments blanked. `graft.tools` is
   * skipped: those probes are slated for deletion.
   */
@@ -34,37 +40,72 @@ class WriterPathSpec extends AnyFunSuite {
     ("Bench.scala", "save") ->
       "the noop sink runs the plan and writes no file")
 
+  /** Parquet reads that leave the schema to Spark's inference:
+    * (file, enclosing def) -> why.
+    */
+  private val inferringReads = Map(
+    ("ops/Tables.scala", "parquetPaths") ->
+      "the read path itself: its fallback, where Spark decides the schema",
+    ("ops/Tables.scala", "readMerged") ->
+      "mergeSchema needs every footer, so Spark's distributed merge reads them")
+
   // `.write` as a property: not `out.write(b)`, `foreach(out.write)` or `.writeStream`
   private val WriterStart = """\.write\b(?!\s*[()])""".r
   private val Sink = """\.(parquet|json|orc|csv|text|save|saveAsTable|insertInto)\s*\(""".r
+  // `.read`/`.readStream` as a property: not `Tables.read(spark, ...)`
+  private val ReaderStart = """\.read(?:Stream)?\b(?!\s*[(])""".r
+  private val ReadSource = """\.(parquet|json|orc|csv|text|textFile|table|load)\s*\(""".r
+  private val Def = """\bdef\s+(\w+)""".r
   // block comments, and line comments not inside a `scheme://` literal
   private val Comment = """(?s)/\*.*?\*/|(?<![:"/])//[^\n]*""".r
 
   private def blankComments(src: String): String =
     Comment.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
 
-  /** (file, sink, line) of every writer outside `tools/`; the sink is the
-    * first sink call after the `.write`, or "-" when the statement
-    * returns the writer instead.
-    */
-  private def writers(): Seq[(String, String, Int)] = {
+  /** (file relative to `root`, source with comments blanked) outside `tools/`. */
+  private def sources(): Seq[(String, String)] = {
     assert(Files.isDirectory(root), s"run from the repository root: no $root")
     Files.walk(root).iterator().asScala.toSeq
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString.replace('\\', '/') -> p)
       .filterNot { case (rel, _) => rel.startsWith("tools/") }
       .sortBy(_._1)
-      .flatMap { case (rel, p: Path) =>
-        // ISO-8859-1: some sources carry raw bytes in string literals
-        val src = blankComments(new String(Files.readAllBytes(p), StandardCharsets.ISO_8859_1))
-        WriterStart.findAllMatchIn(src).map { m =>
-          val rest = src.substring(m.end)
-          val statementEnd = Option(rest.indexOf("\n\n")).filter(_ >= 0).getOrElse(rest.length)
-          val sink = Sink.findFirstMatchIn(rest.take(statementEnd)).map(_.group(1)).getOrElse("-")
-          (rel, sink, src.take(m.start).count(_ == '\n') + 1)
-        }
-      }
+      // ISO-8859-1: some sources carry raw bytes in string literals
+      .map { case (rel, p: Path) =>
+        rel -> blankComments(new String(Files.readAllBytes(p), StandardCharsets.ISO_8859_1)) }
   }
+
+  /** The text after `from` up to the next blank line. */
+  private def statement(src: String, from: Int): String = {
+    val rest = src.substring(from)
+    rest.take(Option(rest.indexOf("\n\n")).filter(_ >= 0).getOrElse(rest.length))
+  }
+
+  private def lineOf(src: String, at: Int): Int = src.take(at).count(_ == '\n') + 1
+
+  /** (file, sink, line) of every writer outside `tools/`; the sink is the
+    * first sink call after the `.write`, or "-" when the statement
+    * returns the writer instead.
+    */
+  private def writers(): Seq[(String, String, Int)] =
+    sources().flatMap { case (rel, src) =>
+      WriterStart.findAllMatchIn(src).map { m =>
+        val sink = Sink.findFirstMatchIn(statement(src, m.end)).map(_.group(1)).getOrElse("-")
+        (rel, sink, lineOf(src, m.start))
+      }
+    }
+
+  /** (enclosing def, line) of every `read…parquet(` chain in `src` with
+    * no `.schema(` before its source call.
+    */
+  private def inferringParquetReads(src: String): Seq[(String, Int)] =
+    ReaderStart.findAllMatchIn(src).toSeq.flatMap { m =>
+      val chain = statement(src, m.end)
+      ReadSource.findFirstMatchIn(chain)
+        .filter(s => s.group(1) == "parquet" && !chain.take(s.start).contains(".schema("))
+        .map(_ => (Def.findAllMatchIn(src.take(m.start)).map(_.group(1)).toSeq.lastOption
+          .getOrElse("-"), lineOf(src, m.start)))
+    }
 
   test("every DataFrameWriter starts at NioLocalFileSystem.write or is a listed exception") {
     val found = writers()
@@ -73,6 +114,34 @@ class WriterPathSpec extends AnyFunSuite {
       bypass.map { case (f, s, l) => s"  $f:$l ($s)" }.mkString("\n"))
     val stale = allowed.keySet -- found.map { case (f, s, _) => (f, s) }
     assert(stale.isEmpty, s"allowlist entries that match no writer: $stale")
+  }
+
+  test("every parquet read names its schema, starts at Tables.parquet or is a listed exception") {
+    val found = sources().flatMap { case (rel, src) =>
+      inferringParquetReads(src).map { case (d, line) => (rel, d, line) }
+    }
+    val bypass = found.filterNot { case (file, d, _) => inferringReads.contains((file, d)) }
+    assert(bypass.isEmpty, "parquet reads that infer their schema with a Spark job:\n" +
+      bypass.map { case (f, d, l) => s"  $f:$l (in $d)" }.mkString("\n"))
+    val stale = inferringReads.keySet -- found.map { case (f, d, _) => (f, d) }
+    assert(stale.isEmpty, s"allowlist entries that match no read: $stale")
+  }
+
+  test("the read scan sees chains across lines and ignores schemas, calls and comments") {
+    val src = blankComments(
+      """def a = spark.read
+        |  .option("basePath", b).parquet(p) // spark.read.parquet(q)
+        |
+        |def b = spark.read.schema(s).parquet(p)
+        |
+        |def c = Tables.read(spark, d, "t"); s.readStream.schema(t).parquet(p)
+        |
+        |def d = spark.read.json(p)
+        |
+        |def e = s.readStream.option("k", "v")
+        |  .parquet(p)
+        |""".stripMargin)
+    assert(inferringParquetReads(src) === Seq(("a", 1), ("e", 10)))
   }
 
   test("the scan sees writers across lines and ignores comments and stream writes") {
