@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -117,17 +119,20 @@ object Windows {
     * frame-row-count) for `valueCol` in one pass — all five aggregates share
     * one WindowSpec, hence one exchange + one sort (`transform_1.py:93-99`).
     * `prefix` mirrors the reference's `"{stat}_part_{n}_days"` naming.
+    * The six columns are added by one projection: each chained
+    * `withColumn` would analyze the whole plan so far again.
     */
   def withRollingStats(df: DataFrame, valueCol: String,
                        partitionCols: Seq[String], orderCols: Seq[Column],
                        n: Int, prefix: String): DataFrame = {
     val w = rolling(partitionCols.map(col), orderCols, n)
     val v = col(valueCol)
-    df.withColumn(s"mean_$prefix", rollingAvg(v, w))
-      .withColumn(s"median_$prefix", rollingMedianExact(v, w))
-      .withColumn(s"std_$prefix", rollingStddevExact(v, w))
-      .withColumn(s"max_$prefix", rollingMax(v, w))
-      .withColumn(s"min_$prefix", rollingMin(v, w))
-      .withColumn(s"nrows_$prefix", count(v).over(w))
+    df.withColumns(ListMap(
+      s"mean_$prefix" -> rollingAvg(v, w),
+      s"median_$prefix" -> rollingMedianExact(v, w),
+      s"std_$prefix" -> rollingStddevExact(v, w),
+      s"max_$prefix" -> rollingMax(v, w),
+      s"min_$prefix" -> rollingMin(v, w),
+      s"nrows_$prefix" -> count(v).over(w)))
   }
 }

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,11 +90,12 @@ object Transform {
       "input has no 'code' (or raw 'cod') column — the per-ticker key is " +
         s"mandatory. Columns present: ${renamed.columns.mkString(", ")}")
 
-    val sane = renamed
-      .withColumn("part", Cleansing.commaDecimalToDouble(col("part"))) // C3 :67
-      .withColumn("theoricalQty", Cleansing.formattedToLong(col("theoricalQty"))) // C4 :71
-      .withColumn("reference_date_date",
-        Cleansing.toDatePattern(col("reference_date"))) // C5 :74
+    // one projection: `part` and `theoricalQty` replaced in place,
+    // `reference_date_date` appended last
+    val sane = renamed.withColumns(ListMap(
+      "part" -> Cleansing.commaDecimalToDouble(col("part")), // C3 :67
+      "theoricalQty" -> Cleansing.formattedToLong(col("theoricalQty")), // C4 :71
+      "reference_date_date" -> Cleansing.toDatePattern(col("reference_date")))) // C5 :74
 
     val guarded = Cleansing.filterNotNull(sane, Seq("code", "reference_date_date")) // F1 :79
 

@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.pipeline.{Catalog, Pipeline, Schemas, Transform}
 
@@ -315,6 +320,103 @@ class PipelineSpec extends SparkTestBase {
     val refined = spark.table(s"$refinedDb.pregao_refined")
     assert(refined.count() === 20)
     assert(refined.filter(col("code") === "PETR4").count() === 10)
+  }
+
+  /** The refined rows of `rawV1Fixture` for `code`, written into `dir`. */
+  private def writeCode(dir: String, code: String): Unit =
+    Transform.writePartitioned(spark,
+      Transform.transformV1(rawV1Fixture).filter(col("code") === code),
+      dir, Seq("code", "reference_date"))
+
+  test("catalog: a load that adds partitions is visible through a cached table") {
+    val dir = tmpDir()
+    writeCode(dir, "PETR4")
+    val db = s"t_cache_${System.nanoTime()}"
+    val p = new Pipeline(spark, refinedDb = db)
+    assert(p.load(dir) === 10)
+    val t = s"$db.pregao_refined"
+    spark.sql(s"CACHE TABLE $t")
+    try {
+      writeCode(dir, "VALE3")
+      // the write recaches the table lazily: this scan fills the cache
+      // while only the first code's partitions are registered
+      assert(spark.table(t).count() === 10)
+      assert(p.load(dir) === 10)
+      // the cached data was rebuilt over the new partitions, not dropped
+      assert(spark.catalog.isCached(t))
+      assert(spark.table(t).count() === 20)
+    } finally spark.sql(s"UNCACHE TABLE IF EXISTS $t")
+  }
+
+  test("catalog: a load refreshes the file listings of a DataFrame read before it") {
+    val dir = tmpDir()
+    writeCode(dir, "PETR4")
+    val db = s"t_listing_${System.nanoTime()}"
+    val p = new Pipeline(spark, refinedDb = db)
+    assert(p.load(dir) === 10)
+    val before = spark.table(s"$db.pregao_refined")
+    assert(before.count() === 10) // lists, and caches, the partitions' files
+    writeCode(dir, "PETR4") // dynamic overwrite: new files replace the listed ones
+    writeCode(dir, "VALE3")
+    assert(p.load(dir) === 10)
+    assert(before.count() === 20)
+  }
+
+  test("catalog: a sync that adds partitions leaves the statistics ADD PARTITION leaves") {
+    val key = "spark.sql.statistics.size.autoUpdate.enabled"
+    val initial = spark.conf.getAll.get(key)
+    try Seq("false", "true").foreach { autoUpdate =>
+      spark.conf.set(key, autoUpdate)
+      val dir = tmpDir()
+      writeCode(dir, "PETR4")
+      val tag = System.nanoTime()
+      val (synced, twin) = (s"t_stats_$tag", s"t_stats_sql_$tag")
+      val tables = Seq(synced, twin).map { db =>
+        assert(new Pipeline(spark, refinedDb = db).load(dir) === 10)
+        spark.sql(s"ANALYZE TABLE $db.pregao_refined COMPUTE STATISTICS NOSCAN")
+        TableIdentifier("pregao_refined", Some(db))
+      }
+      val catalog = spark.sessionState.catalog
+      assert(catalog.getTableMetadata(tables.head).stats.isDefined)
+      writeCode(dir, "VALE3")
+      assert(new Pipeline(spark, refinedDb = synced).load(dir) === 10)
+      val added = (1 to 10).map(d => f"2024-01-$d%02d").map { day =>
+        s"PARTITION (code='VALE3', reference_date='$day') " +
+          s"LOCATION '$dir/code=VALE3/reference_date=$day'"
+      }
+      spark.sql(s"ALTER TABLE $twin.pregao_refined ADD IF NOT EXISTS ${added.mkString(" ")}")
+      val Seq(a, b) = tables.map(catalog.getTableMetadata(_).stats)
+      assert(a === b, s"autoUpdate=$autoUpdate")
+      // the same partitions as the statement's: spec, storage and parameters
+      val Seq(pa, pb) = tables.map(catalog.listPartitions(_)
+        .map(p => (p.spec, p.storage, p.parameters)).sortBy(_._1.toSeq.sorted.mkString("/")))
+      assert(pa.size === 20)
+      assert(pa === pb, s"autoUpdate=$autoUpdate")
+    } finally initial.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("catalog: a repeated extract and load over registered partitions runs no SQL") {
+    val rawDir = tmpDir(); val refinedDir = tmpDir()
+    rawV1Fixture.write.partitionBy("date").mode("overwrite").parquet(rawDir)
+    val tag = System.nanoTime()
+    val p = new Pipeline(spark, s"t_nosql_raw_$tag", s"t_nosql_ref_$tag")
+    p.run(rawDir, refinedDir)
+    val sc = spark.sparkContext
+    val executions = new AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      assert(p.extract(rawDir) === 0)
+      assert(p.load(refinedDir) === 0)
+      ListenerBusDrain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    assert(executions.get === 0, "SQL executions while re-syncing registered partitions")
   }
 
   test("atomic sink: the write itself registers partitions — no sync step") {

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.catalog.CatalogStorageFormat
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Catalog, Retry}
 
 /** Reference-parity spec for the remote-catalog write discipline
   * (`etl/extract.py:135-159`): capped exponential backoff, retryable-only
-  * retry, batch-of-100 DDL shape. Sleeps are injected — no wall-clock.
+  * retry, batches of 100 partitions per session-catalog
+  * `createPartitions` call. Sleeps are injected — no wall-clock.
   */
 class RetrySpec extends AnyFunSuite {
 
@@ -73,14 +75,21 @@ class RetrySpec extends AnyFunSuite {
     assert(sleeps.isEmpty)
   }
 
-  test("addPartitionsSql: one statement carries the whole batch, quoted") {
-    val sql = Catalog.addPartitionsSql("db", "t", Seq("code", "day"),
-      Seq(Seq("A'B", "2024-01-01"), Seq("C", "2024-01-02")), "/base")
-    assert(sql.startsWith("ALTER TABLE `db`.`t` ADD IF NOT EXISTS"))
-    // the value is SQL-quoted; the directory is the write's path-escaped one
-    assert(sql.contains("PARTITION (`code`='A''B', `day`='2024-01-01') LOCATION '/base/code=A%27B/day=2024-01-01'"))
-    assert(sql.contains("PARTITION (`code`='C', `day`='2024-01-02') LOCATION '/base/code=C/day=2024-01-02'"))
-    // exactly one ALTER statement for the batch (the round-trip economy)
-    assert("ALTER TABLE".r.findAllIn(sql).size === 1)
+  test("partitionBatches: one catalog call per batch, raw values, escaped paths") {
+    val keys = Seq("code", "day")
+    val values = Seq(Seq("A'B", "2024-01-01"), Seq("C", "2024-01-02")) ++
+      (1 to 248).map(i => Seq(s"T$i", "2024-01-03"))
+    val storage = CatalogStorageFormat.empty.copy(properties = Map("k" -> "v"))
+    val batches = Catalog.partitionBatches(storage, keys, values, "/base", batchSize = 100)
+    // each batch is the whole argument of one createPartitions call
+    assert(batches.map(_.size) === Seq(100, 100, 50))
+    assert(batches.flatten.map(p => keys.map(p.spec)) === values)
+    val Seq(quoted, plain) = batches.head.take(2)
+    // the value is stored raw; the directory is the write's path-escaped one
+    assert(quoted.spec === Map("code" -> "A'B", "day" -> "2024-01-01"))
+    assert(quoted.location.getPath === "/base/code=A%27B/day=2024-01-01")
+    assert(plain.location.getPath === "/base/code=C/day=2024-01-02")
+    // every partition inherits the table's storage format
+    assert(batches.flatten.forall(_.storage.properties == storage.properties))
   }
 }

@@ -17,6 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.read.parquet` would bring back one schema-inference Spark job
   * per read.
   *
+  * And `pipeline/Catalog.scala` builds no `SHOW PARTITIONS` or
+  * `ADD … PARTITION` SQL text: partitions are listed and registered
+  * through the session catalog API, one path.
+  *
   * The scan reads the sources with comments blanked. `graft.tools` is
   * skipped: those probes are slated for deletion.
   */
@@ -56,6 +60,10 @@ class WriterPathSpec extends AnyFunSuite {
   private val ReaderStart = """\.read(?:Stream)?\b(?!\s*[(])""".r
   private val ReadSource = """\.(parquet|json|orc|csv|text|textFile|table|load)\s*\(""".r
   private val Def = """\bdef\s+(\w+)""".r
+  // partition listing or registration as SQL text; not Spark's action
+  // name "ALTER TABLE ADD PARTITION", which no `(` or `IF` follows
+  private val PartitionSql =
+    """(?i)\bADD\s+(?:IF\s+NOT\s+EXISTS\b|PARTITION\s*\()|\bSHOW\s+PARTITIONS\b""".r
   // block comments, and line comments not inside a `scheme://` literal
   private val Comment = """(?s)/\*.*?\*/|(?<![:"/])//[^\n]*""".r
 
@@ -106,6 +114,30 @@ class WriterPathSpec extends AnyFunSuite {
         .map(_ => (Def.findAllMatchIn(src.take(m.start)).map(_.group(1)).toSeq.lastOption
           .getOrElse("-"), lineOf(src, m.start)))
     }
+
+  /** Lines of `src` that build partition SQL text. */
+  private def partitionSql(src: String): Seq[Int] =
+    PartitionSql.findAllMatchIn(src).map(m => lineOf(src, m.start)).toSeq
+
+  test("Catalog lists and registers partitions through the catalog API, not SQL text") {
+    val file = "pipeline/Catalog.scala"
+    val src = sources().collectFirst { case (`file`, s) => s }
+      .getOrElse(fail(s"no $file under $root"))
+    val lines = partitionSql(src)
+    assert(lines.isEmpty, "partition SQL text in the catalog code:\n" +
+      lines.map(l => s"  $file:$l").mkString("\n"))
+  }
+
+  test("the partition-SQL scan sees statements, not comments or the action name") {
+    val src = blankComments(
+      """// SHOW PARTITIONS, ADD IF NOT EXISTS
+        |DDLUtils.verifyPartitionProviderIsHive(spark, meta, "ALTER TABLE ADD PARTITION")
+        |spark.sql(s"SHOW PARTITIONS `$db`.`$table`")
+        |s"ALTER TABLE `$db`.`$table` ADD IF NOT EXISTS\n$parts"
+        |s"ALTER TABLE t add partition ($spec)"
+        |""".stripMargin)
+    assert(partitionSql(src) === Seq(3, 4, 5))
+  }
 
   test("every DataFrameWriter starts at NioLocalFileSystem.write or is a listed exception") {
     val found = writers()
