@@ -22,8 +22,28 @@ object SparkEntry {
   /** A query: the Spark implementation plus (optionally) the DuckDB oracle
     * SQL. `oracle=None` → driver records a weaker rows-only check (used for
     * ops whose semantics aren't SQL-expressible, e.g. LSH bucketing).
+    *
+    * `superseded`: kept green in the correctness gate but excluded from
+    * the bench's headline total and tier subtotals because a gate-checked
+    * faster form supersedes it: q_winnow's per-position md5 fingerprints
+    * cost 242.7 s at 100× where q_winnow_fast's two-lane mod-P polynomial
+    * — the same winnowing semantics, also oracle-checked — costs 4.7 s.
+    * Still measured every run (regressions stay visible) and reported
+    * under the bench's `superseded` JSON field; just no longer billed to
+    * the headline, so soak budgets track the actual scale path.
+    *
+    * The `*_indexed` rows are the round-14 split of the same idea: they
+    * deliberately REBUILD their index inside the measured query (gating
+    * the write path — fan-out hygiene, exactly-once layout), so their
+    * time is build + probe; the `*_steady` twins measure the probe
+    * against a session-memoized index — what a production user's loop
+    * pays — under the identical oracle. q_bm25_deleted (round 15)
+    * follows: its measured query rebuilds the full index before erasing,
+    * so q_bm25_deleted_steady (tombstone append + probe on the memoized
+    * index) carries the headline.
     */
-  private case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String])
+  private case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String],
+                       superseded: Boolean = false)
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.read(s, dir, name)
@@ -2619,7 +2639,7 @@ object SparkEntry {
     * .embeddingNearDupsAgainstIndex]]): the seen corpus staged ONCE as
     * bucket-partitioned (id, nrm, vec) rows + geometry meta; the probe
     * pays zero seen-side staging and partition-prunes to the batch's
-    * buckets. Rebuild-in-row (write + probe — `Bench.superseded`);
+    * buckets. Rebuild-in-row (write + probe — flagged superseded);
     * identical semantics to the from-raw incremental detector, whose
     * oracle is shared verbatim.
     */
@@ -2711,7 +2731,7 @@ object SparkEntry {
     * .flagSemanticContaminatedAgainstIndex]]) — the corpus-sized-benchmark
     * path: bucket-partitioned index of the bench side, partition-pruned
     * probe, top-evidence fold over the same-bucket pairs. Rebuild-in-row
-    * (`Bench.superseded`); the oracle replays planes → buckets → cap →
+    * (flagged superseded); the oracle replays planes → buckets → cap →
     * bucket join → argmax, so the LSH recall contract is explicit in the
     * checked result.
     */
@@ -11194,299 +11214,322 @@ object SparkEntry {
   // Registry
   // ---------------------------------------------------------------------
 
-  private val registry: Vector[(String, Q)] = Vector(
-    "q_s1_scan_filter" -> qS1,
-    "q_s2_scan_recursive" -> qS2,
-    "q_s3_scan_catalog" -> qS3,
-    "q_f1_notnull_filter" -> qF1,
-    "q_p1_project_rename" -> qP1,
-    "q_a1_nonnull_counts" -> qA1,
-    "q_p2_prune_allnull" -> qP2,
-    "q_c3_comma_decimal" -> qC3,
-    "q_c4_digit_strip" -> qC4,
-    "q_n1_fill_defaults" -> qN1,
-    "q_n2_sentinel_date" -> qN2,
-    "q_d1_distinct" -> qD1,
-    "q_d2_dedup_keep_first" -> qD2,
-    "q_w1_rolling_avg" -> qW1,
-    "q_w2_group_total_window" -> qW2,
-    "q_w3_rank_rownumber" -> qW3,
-    "q_w4_initial_date" -> qW4,
-    "q_w5_rolling_stats" -> qW5,
-    "q_agg_groupby" -> qAgg1,
-    "q_join_revenue_by_segment" -> qJoin1,
-    "q_topk_orders" -> qTopK,
-    "q_pipeline_refined" -> qPipeline,
-    "q_setops" -> qSetOps,
-    "q_rollup" -> qRollup,
-    "q_cube" -> qCube,
-    "q_lag_lead" -> qLagLead,
-    "q_range_frame" -> qRangeFrame,
-    "q_range_join" -> qRangeJoin,
-    "q_rank_features" -> qRankFeatures,
-    "q_pivot" -> qPivot,
-    "q_explode_pos" -> qExplode,
-    "q_sample_per_key" -> qSamplePerKey,
-    "q_sample_weighted" -> qSampleWeighted,
-    "q_sample_stratified" -> qSampleStratified,
-    "q_token_budget" -> qTokenBudget,
-    "q_text_stats" -> qTextStats,
-    "q_text_quality" -> qTextQuality,
-    "q_lang_id" -> qLangId,
-    "q_fingerprint" -> qFingerprint,
-    "q_dedup_exact" -> qDedupExact,
-    "q_trainset_build" -> qTrainset,
-    "q_decontaminate" -> qDecontaminate,
-    "q_decontam_fuzzy" -> qDecontamFuzzy,
-    "q_decontam_fuzzy_removed" -> qDecontamFuzzyRemoved,
-    "q_decontam_fuzzy_indexed" -> qDecontamFuzzyIndexed,
-    "q_decontam_fuzzy_steady" -> qDecontamFuzzySteady,
-    "q_decontam_chunked" -> qDecontamChunked,
-    "q_decontam_chunked_steady" -> qDecontamChunkedSteady,
-    "q_dedup_simhash_incremental" -> qSimHashIncremental,
-    "q_decontaminate_bloom" -> qDecontaminateBloom,
-    "q_decontaminate_removed" -> qDecontaminateRemoved,
-    "q_frame_sample" -> qFrameSample,
-    "q_repetition" -> qRepetition,
-    "q_repetition_gate" -> qRepetitionGate,
-    "q_normalize" -> qNormalize,
-    "q_token_histogram" -> qTokenHistogram,
-    "q_dedup_incremental" -> qDedupIncremental,
-    "q_vocabulary" -> qVocabulary,
-    "q_group_quantiles" -> qGroupQuantiles,
-    "q_pii_scrub" -> qPiiScrub,
-    "q_chunk_windows" -> qChunk,
-    "q_pack_bins" -> qPackBins,
-    "q_ngram_jaccard" -> qNgramJaccard,
-    "q_dedup_minhash_lsh" -> qMinHash,
-    "q_dup_clusters" -> qDupClusters,
-    "q_dup_clusters_incremental" -> qDupClustersIncremental,
-    "q_stream_dup_clusters" -> qStreamDupClusters,
-    "q_dup_clusters_star" -> qDupClustersStar,
-    "q_dedup_simhash" -> qSimHash,
-    "q_ann_bruteforce_topk" -> qAnnBrute,
-    "q_ann_lsh_topk" -> qAnnLsh,
-    "q_ann_retrieval_topk" -> qAnnRetrieval,
-    "q_ann_ivf_topk" -> qAnnIvf,
-    "q_ann_ivf_indexed" -> qAnnIvfIndexed,
-    "q_ann_ivf_steady" -> qAnnIvfSteady,
-    "q_embed_neardup" -> qEmbedNearDup,
-    "q_embed_neardup_incremental" -> qEmbedNearDupIncremental,
-    "q_embed_neardup_indexed" -> qEmbedNearDupIndexed,
-    "q_embed_neardup_steady" -> qEmbedNearDupSteady,
-    "q_decontam_semantic" -> qDecontamSemantic,
-    "q_decontam_semantic_removed" -> qDecontamSemanticRemoved,
-    "q_decontam_semantic_indexed" -> qDecontamSemanticIndexed,
-    "q_decontam_semantic_steady" -> qDecontamSemanticSteady,
-    "q_decontam_matrix" -> qDecontamMatrix,
-    "q_stream_embed_clusters" -> qStreamEmbedClusters,
-    "q_stream_embed_clusters_steady" -> qStreamEmbedClustersSteady,
-    "q_semantic_dedup" -> qSemanticDedup,
-    "q_pq_encode" -> qPqEncode,
-    "q_ann_pq" -> qAnnPq,
-    "q_multimodal_meta" -> qMultimodal,
-    "q_bmp_decode" -> qBmpDecode,
-    "q_bmp_resize" -> qBmpResize,
-    "q_image_ahash" -> qImageAHash,
-    "q_image_phash" -> qImagePHash,
-    "q_image_dual_hash" -> qImageDualHash,
-    "q_video_hashes" -> qVideoHashes,
-    "q_video_neardup" -> qVideoNearDup,
-    "q_video_phash" -> qVideoPHash,
-    "q_video_neardup_phash" -> qVideoNearDupPHash,
-    "q_video_mjpeg" -> qVideoMjpeg,
-    "q_video_dib" -> qVideoDib,
-    "q_video_mjpeg_neardup" -> qVideoMjpegNearDup,
-    "q_video_mp4" -> qVideoMp4,
-    "q_video_mixed_neardup" -> qVideoMixedNearDup,
-    "q_video_coverage" -> qVideoCoverage,
-    "q_media_meta" -> qMediaMeta,
-    "q_media_meta_containers" -> qMediaMetaContainers,
-    "q_media_meta_m4a" -> qMediaMetaM4a,
-    "q_media_meta_webp" -> qMediaMetaWebp,
-    "q_media_meta_apng" -> qMediaMetaApng,
-    "q_media_meta_images" -> qMediaMetaImages,
-    "q_media_meta_tiffpages" -> qMediaMetaTiffPages,
-    "q_video_apng" -> qVideoApng,
-    "q_image_ahash_jpeg" -> qImageAHashJpeg,
-    "q_image_ahash_tiff" -> qImageAHashTiff,
-    "q_image_ahash_tiff_j" -> qImageAHashTiffJ,
-    "q_image_ahash_tiff_c" -> qImageAHashTiffC,
-    "q_image_ahash_tiff_t" -> qImageAHashTiffT,
-    "q_image_ahash_ico" -> qImageAHashIco,
-    "q_image_ahash_bmp_x" -> qImageAHashBmpX,
-    "q_image_ahash_pnm" -> qImageAHashPnm,
-    "q_image_ahash_qoi" -> qImageAHashQoi,
-    "q_image_coverage" -> qImageCoverage,
-    "q_image_neardup" -> qImageNearDup,
-    "q_audio_fingerprint" -> qAudioFingerprint,
-    "q_audio_spectral" -> qAudioSpectral,
-    "q_audio_fingerprint_flac" -> qAudioFingerprintFlac,
-    "q_audio_fingerprint_mulaw" -> qAudioFingerprintMulaw,
-    "q_audio_fingerprint_alaw" -> qAudioFingerprintAlaw,
-    "q_audio_fingerprint_adpcm" -> qAudioFingerprintAdpcm,
-    "q_audio_fingerprint_pcm_widths" -> qAudioFingerprintPcmWidths,
-    "q_audio_fingerprint_float" -> qAudioFingerprintFloat,
-    "q_audio_fingerprint_oggflac" -> qAudioFingerprintOggFlac,
-    "q_audio_fingerprint_msadpcm" -> qAudioFingerprintMsAdpcm,
-    "q_audio_fingerprint_au" -> qAudioFingerprintAu,
-    "q_audio_fingerprint_aiff" -> qAudioFingerprintAiff,
-    "q_audio_coverage" -> qAudioCoverage,
-    "q_wav_decode" -> qWavDecode,
-    "q_wav_frames" -> qWavFrames,
-    "q_sessionize" -> qSessionize,
-    "q_json_extract" -> qJson,
-    "q_asof_join" -> qAsOf,
-    "q_resample_daily" -> qResample,
-    "q_median_exact" -> qMedianExact,
-    "q_median_window" -> qMedianWindow,
-    "q_range_join_keyed" -> qRangeJoinKeyed,
-    "q_split_assign" -> qSplitAssign,
-    "q_group_split" -> qGroupSplit,
-    "q_split_neardup_safe" -> qSplitNearDupSafe,
-    "q_dup_aware_weights" -> qDupAwareWeights,
-    "q_attribution" -> qAttribution,
-    "q_mix_temperature" -> qMixTemperature,
-    "q_dup_canonical" -> qDupCanonical,
-    "q_quantile_gate" -> qQuantileGate,
-    "q_tfidf_topterms" -> qTfidf,
-    "q_pmi_bigrams" -> qPmiBigrams,
-    "q_kmeans_step" -> qKmeansStep,
-    "q_pca_power" -> qPcaPower,
-    "q_pca_project" -> qPcaProject,
-    "q_pca_incremental" -> qPcaIncremental,
-    "q_embed_drift" -> qEmbedDrift,
-    "q_embed_corr" -> qEmbedCorr,
-    "q_hll_distinct" -> qHllDistinct,
-    "q_hll_incremental" -> qHllIncremental,
-    "q_kmv_distinct" -> qKmvDistinct,
-    "q_kmv_sample" -> qKmvSample,
-    "q_kmv_incremental" -> qKmvIncremental,
-    "q_hll_overlap" -> qHllOverlap,
-    "q_rolling_active" -> qRollingActive,
-    "q_chunk_dedup" -> qChunkDedup,
-    "q_substr_spans" -> qSubstrSpans,
-    "q_dataset_fingerprint" -> qDatasetFingerprint,
-    "q_snapshot_diff" -> qSnapshotDiff,
-    "q_compaction_plan" -> qCompactionPlan,
-    "q_zone_prune" -> qZonePrune,
-    "q_bpe_merges" -> qBpeMerges,
-    "q_winnow" -> qWinnow,
-    "q_winnow_fast" -> qWinnowFast,
-    "q_cdc_chunks" -> qCdcChunks,
-    "q_ann_ivf_trained" -> qAnnIvfTrained,
-    "q_bm25_topk" -> qBm25,
-    "q_bm25_indexed" -> qBm25Indexed,
-    "q_bm25_steady" -> qBm25Steady,
-    "q_bm25_deleted" -> qBm25Deleted,
-    "q_bm25_deleted_steady" -> qBm25DeletedSteady,
-    "q_hybrid_rrf" -> qHybridRrf,
-    "q_dedup_lsh_incremental" -> qDedupLshIncremental,
-    "q_merge_upsert" -> qMergeUpsert,
-    "q_scd2_apply" -> qScd2Apply,
-    "q_boilerplate" -> qBoilerplate,
-    "q_lm_score" -> qLmScore,
-    "q_lm_kneser_ney" -> qLmKneserNey,
-    "q_jsonl_roundtrip" -> qJsonlRoundtrip,
-    "q_csv_roundtrip" -> qCsvRoundtrip,
-    "q_orc_roundtrip" -> qOrcRoundtrip,
-    "q_quality_audit" -> qQualityAudit,
-    "q_epoch_order" -> qEpochOrder,
-    "q_funnel" -> qFunnel,
-    "q_anomaly" -> qAnomaly,
-    "q_token_entropy" -> qTokenEntropy,
-    "q_retention" -> qRetention,
-    "q_text_normalize" -> qTextNormalize,
-    "q_funnel_summary" -> qFunnelSummary,
-    "q_agg_upsert" -> qAggUpsert,
-    "q_neg_sample" -> qNegSample,
-    "q_zorder" -> qZOrder,
-    "q_correlation" -> qCorrelation,
-    "q_source_overlap" -> qSourceOverlap,
-    "q_url_canonical" -> qUrlCanonical,
-    "q_domain_cap" -> qDomainCap,
-    "q_url_dedup" -> qUrlDedup,
-    "q_para_dedup" -> qParaDedup,
-    "q_para_profile" -> qParaProfile,
-    "q_linear_train" -> qLinearTrain,
-    "q_linear_score" -> qLinearScore,
-    "q_logistic_train" -> qLogisticTrain,
-    "q_logistic_score" -> qLogisticScore,
-    "q_logistic_sweep" -> qLogisticSweep,
-    "q_nb_train" -> qNbTrain,
-    "q_nb_score" -> qNbScore,
-    "q_nb_score_holdout" -> qNbScoreHoldout,
-    "q_curation_disposition" -> qCurationDisposition,
-    "q_curation_bloom" -> qCurationBloom,
-    "q_curation_funnel" -> qCurationFunnel,
-    "q_fuzzy_link" -> qFuzzyLink,
-    "q_triangles" -> qTriangles,
-    "q_decayed_sum" -> qDecayedSum,
-    "q_mad" -> qMad,
-    "q_quantize_int8" -> qQuantizeInt8,
-    "q_clustering" -> qClustering,
-    "q_pagerank" -> qPageRank,
-    "q_stream_window_stats" -> qStreamWindowStats,
-    "q_cdc_latest" -> qCdcLatest,
-    "q_stream_sessionize" -> qStreamSessionize,
-    "q_stream_sessionize_tws" -> qStreamSessionizeTws,
-    "q_stream_attribution" -> qStreamAttribution,
-    "q_cms_topk" -> qCmsTopk,
-    "q_ann_ivfpq" -> qAnnIvfPq,
-    "q_ann_ivfpq_indexed" -> qAnnIvfPqIndexed,
-    "q_ann_ivfpq_steady" -> qAnnIvfPqSteady,
-    "q_ann_ivfpq_refined" -> qAnnIvfPqRefined,
-    "q_winsorize" -> qWinsorize,
-    "q_png_decode" -> qPngDecode,
-    "q_png_alpha" -> qPngAlpha,
-    "q_png_16bit" -> qPng16,
-    "q_png_interlaced" -> qPngInterlaced,
-    "q_dsir_weights" -> qDsirWeights,
-    "q_source_kl" -> qSourceKl,
-    "q_ann_recall" -> qAnnRecall,
-    "q_stream_dedup" -> qStreamDedup,
-    "q_setsim_join" -> qSetSimJoin,
-    "q_bpe_train" -> qBpeTrain,
-    "q_bpe_encode" -> qBpeEncode,
-    "q_wordpiece_vocab" -> qWordpieceVocab,
-    "q_wordpiece_encode" -> qWordpieceEncode,
-    "q_unigram_vocab" -> qUnigramVocab,
-    "q_unigram_encode" -> qUnigramEncode,
-    "q_unigram_em" -> qUnigramEm,
-    "q_unigram_encode_em" -> qUnigramEncodeEm,
-    "q_quantile_sketch" -> qQuantileSketch,
-    "q_quantile_sketch_seg" -> qQuantileSketchSeg,
-    "q_topk_sketch" -> qTopkSketch,
-    "q_topk_sketch_keyed" -> qTopkSketchKeyed,
-    "q_stream_quantile" -> qStreamQuantile,
-    "q_stream_pca" -> qStreamPca,
-    "q_stream_drift" -> qStreamDrift,
-    "q_stream_kmv" -> qStreamKmv,
-    "q_pack_render" -> qPackRender,
-    "q_gif_decode" -> qGifDecode,
-    "q_jpeg_decode" -> qJpegDecode,
-    "q_jpeg_progressive" -> qJpegProgressive,
-    "q_jpeg_12bit" -> qJpeg12bit,
-    "q_phrase_search" -> qPhraseSearch,
-    "q_bitext_mine" -> qBitextMine,
-    "q_dup_span_ranges" -> qDupSpanRanges,
-    "q_stream_neardup" -> qStreamNearDup,
-    "q_stream_neardup_steady" -> qStreamNearDupSteady,
-    "q_stream_decontam" -> qStreamDecontam,
-    "q_stream_decontam_semantic" -> qStreamDecontamSemantic,
-    "q_stream_image_dedup" -> qStreamImageDedup,
-    "q_stream_image_dedup_steady" -> qStreamImageDedupSteady,
-    "q_stream_audio_dedup" -> qStreamAudioDedup,
-    "q_stream_audio_dedup_steady" -> qStreamAudioDedupSteady,
-    "q_stream_media_meta" -> qStreamMediaMeta,
-    "q_stream_bm25_ingest" -> qStreamBm25Ingest,
-    "q_dup_spans_removed" -> qDupSpansRemoved,
-    "q_multi_phrase" -> qMultiPhrase,
-    "q_multi_phrase_sweep" -> qMultiPhraseSweep,
-    "q_dedup_lsh_indexed" -> qDedupLshIndexed,
-    "q_dedup_lsh_erased" -> qDedupLshErased,
-    "q_dedup_near_filter" -> qDedupNearFilter,
-  )
+  /** Every query, grouped by its bench tier (reporting only — no
+    * behavior): reference ETL parity, window functions, relational
+    * breadth, text/corpus, dedup + pair graphs, ANN/embeddings,
+    * sampling/mixture, event analytics, CDC/layout, streaming-path,
+    * multimodal. A query's tier and superseded flag are declared here
+    * and nowhere else.
+    */
+  private val tiers: Vector[(String, Vector[(String, Q)])] = Vector(
+    "etl" -> Vector(
+      "q_s1_scan_filter" -> qS1,
+      "q_s2_scan_recursive" -> qS2,
+      "q_s3_scan_catalog" -> qS3,
+      "q_f1_notnull_filter" -> qF1,
+      "q_p1_project_rename" -> qP1,
+      "q_a1_nonnull_counts" -> qA1,
+      "q_p2_prune_allnull" -> qP2,
+      "q_c3_comma_decimal" -> qC3,
+      "q_c4_digit_strip" -> qC4,
+      "q_n1_fill_defaults" -> qN1,
+      "q_n2_sentinel_date" -> qN2,
+      "q_d1_distinct" -> qD1,
+      "q_d2_dedup_keep_first" -> qD2,
+      "q_pipeline_refined" -> qPipeline,
+      "q_jsonl_roundtrip" -> qJsonlRoundtrip,
+      "q_csv_roundtrip" -> qCsvRoundtrip,
+      "q_orc_roundtrip" -> qOrcRoundtrip),
+    "windows" -> Vector(
+      "q_w1_rolling_avg" -> qW1,
+      "q_w2_group_total_window" -> qW2,
+      "q_w3_rank_rownumber" -> qW3,
+      "q_w4_initial_date" -> qW4,
+      "q_w5_rolling_stats" -> qW5,
+      "q_lag_lead" -> qLagLead,
+      "q_range_frame" -> qRangeFrame,
+      "q_median_window" -> qMedianWindow),
+    "relational" -> Vector(
+      "q_agg_groupby" -> qAgg1,
+      "q_join_revenue_by_segment" -> qJoin1,
+      "q_topk_orders" -> qTopK,
+      "q_setops" -> qSetOps,
+      "q_rollup" -> qRollup,
+      "q_cube" -> qCube,
+      "q_pivot" -> qPivot,
+      "q_explode_pos" -> qExplode,
+      "q_group_quantiles" -> qGroupQuantiles,
+      "q_json_extract" -> qJson,
+      "q_median_exact" -> qMedianExact,
+      "q_quantile_gate" -> qQuantileGate),
+    "text" -> Vector(
+      "q_text_stats" -> qTextStats,
+      "q_text_quality" -> qTextQuality,
+      "q_lang_id" -> qLangId,
+      "q_fingerprint" -> qFingerprint,
+      "q_decontaminate" -> qDecontaminate,
+      "q_decontam_fuzzy" -> qDecontamFuzzy,
+      "q_decontam_fuzzy_removed" -> qDecontamFuzzyRemoved,
+      "q_decontam_fuzzy_indexed" -> qDecontamFuzzyIndexed.copy(superseded = true),
+      "q_decontam_fuzzy_steady" -> qDecontamFuzzySteady,
+      "q_decontam_chunked" -> qDecontamChunked,
+      "q_decontam_chunked_steady" -> qDecontamChunkedSteady,
+      "q_decontaminate_bloom" -> qDecontaminateBloom,
+      "q_decontaminate_removed" -> qDecontaminateRemoved,
+      "q_repetition" -> qRepetition,
+      "q_repetition_gate" -> qRepetitionGate,
+      "q_token_histogram" -> qTokenHistogram,
+      "q_vocabulary" -> qVocabulary,
+      "q_pii_scrub" -> qPiiScrub,
+      "q_chunk_windows" -> qChunk,
+      "q_pack_bins" -> qPackBins,
+      "q_decontam_matrix" -> qDecontamMatrix,
+      "q_tfidf_topterms" -> qTfidf,
+      "q_pmi_bigrams" -> qPmiBigrams,
+      "q_chunk_dedup" -> qChunkDedup,
+      "q_bpe_merges" -> qBpeMerges,
+      "q_winnow" -> qWinnow.copy(superseded = true),
+      "q_winnow_fast" -> qWinnowFast,
+      "q_cdc_chunks" -> qCdcChunks,
+      "q_bm25_topk" -> qBm25,
+      "q_bm25_indexed" -> qBm25Indexed.copy(superseded = true),
+      "q_bm25_steady" -> qBm25Steady,
+      "q_bm25_deleted" -> qBm25Deleted.copy(superseded = true),
+      "q_bm25_deleted_steady" -> qBm25DeletedSteady,
+      "q_boilerplate" -> qBoilerplate,
+      "q_lm_score" -> qLmScore,
+      "q_lm_kneser_ney" -> qLmKneserNey,
+      "q_token_entropy" -> qTokenEntropy,
+      "q_text_normalize" -> qTextNormalize,
+      "q_source_overlap" -> qSourceOverlap,
+      "q_url_canonical" -> qUrlCanonical,
+      "q_domain_cap" -> qDomainCap,
+      "q_url_dedup" -> qUrlDedup,
+      "q_para_dedup" -> qParaDedup,
+      "q_para_profile" -> qParaProfile,
+      "q_linear_train" -> qLinearTrain,
+      "q_linear_score" -> qLinearScore,
+      "q_logistic_train" -> qLogisticTrain,
+      "q_logistic_score" -> qLogisticScore,
+      "q_logistic_sweep" -> qLogisticSweep,
+      "q_nb_train" -> qNbTrain,
+      "q_nb_score" -> qNbScore,
+      "q_nb_score_holdout" -> qNbScoreHoldout,
+      "q_curation_disposition" -> qCurationDisposition,
+      "q_curation_bloom" -> qCurationBloom,
+      "q_curation_funnel" -> qCurationFunnel,
+      "q_dsir_weights" -> qDsirWeights,
+      "q_source_kl" -> qSourceKl,
+      "q_bpe_train" -> qBpeTrain,
+      "q_bpe_encode" -> qBpeEncode,
+      "q_wordpiece_vocab" -> qWordpieceVocab,
+      "q_wordpiece_encode" -> qWordpieceEncode,
+      "q_unigram_vocab" -> qUnigramVocab,
+      "q_unigram_encode" -> qUnigramEncode,
+      "q_unigram_em" -> qUnigramEm,
+      "q_unigram_encode_em" -> qUnigramEncodeEm,
+      "q_pack_render" -> qPackRender,
+      "q_phrase_search" -> qPhraseSearch,
+      "q_multi_phrase" -> qMultiPhrase,
+      "q_multi_phrase_sweep" -> qMultiPhraseSweep),
+    "dedup_graph" -> Vector(
+      "q_dedup_exact" -> qDedupExact,
+      "q_dedup_simhash_incremental" -> qSimHashIncremental,
+      "q_dedup_incremental" -> qDedupIncremental,
+      "q_ngram_jaccard" -> qNgramJaccard,
+      "q_dedup_minhash_lsh" -> qMinHash,
+      "q_dup_clusters" -> qDupClusters,
+      "q_dup_clusters_incremental" -> qDupClustersIncremental,
+      "q_dup_clusters_star" -> qDupClustersStar,
+      "q_dedup_simhash" -> qSimHash,
+      "q_dup_aware_weights" -> qDupAwareWeights,
+      "q_dup_canonical" -> qDupCanonical,
+      "q_substr_spans" -> qSubstrSpans,
+      "q_dedup_lsh_incremental" -> qDedupLshIncremental,
+      "q_triangles" -> qTriangles,
+      "q_clustering" -> qClustering,
+      "q_pagerank" -> qPageRank,
+      "q_setsim_join" -> qSetSimJoin,
+      "q_dup_span_ranges" -> qDupSpanRanges,
+      "q_dup_spans_removed" -> qDupSpansRemoved,
+      "q_dedup_lsh_indexed" -> qDedupLshIndexed,
+      "q_dedup_lsh_erased" -> qDedupLshErased,
+      "q_dedup_near_filter" -> qDedupNearFilter),
+    "ann" -> Vector(
+      "q_ann_bruteforce_topk" -> qAnnBrute,
+      "q_ann_lsh_topk" -> qAnnLsh,
+      "q_ann_retrieval_topk" -> qAnnRetrieval,
+      "q_ann_ivf_topk" -> qAnnIvf,
+      "q_ann_ivf_indexed" -> qAnnIvfIndexed.copy(superseded = true),
+      "q_ann_ivf_steady" -> qAnnIvfSteady,
+      "q_embed_neardup" -> qEmbedNearDup,
+      "q_embed_neardup_incremental" -> qEmbedNearDupIncremental,
+      "q_embed_neardup_indexed" -> qEmbedNearDupIndexed.copy(superseded = true),
+      "q_embed_neardup_steady" -> qEmbedNearDupSteady,
+      "q_decontam_semantic" -> qDecontamSemantic,
+      "q_decontam_semantic_removed" -> qDecontamSemanticRemoved,
+      "q_decontam_semantic_indexed" -> qDecontamSemanticIndexed.copy(superseded = true),
+      "q_decontam_semantic_steady" -> qDecontamSemanticSteady,
+      "q_semantic_dedup" -> qSemanticDedup,
+      "q_pq_encode" -> qPqEncode,
+      "q_ann_pq" -> qAnnPq,
+      "q_kmeans_step" -> qKmeansStep,
+      "q_pca_power" -> qPcaPower,
+      "q_pca_project" -> qPcaProject,
+      "q_pca_incremental" -> qPcaIncremental,
+      "q_embed_drift" -> qEmbedDrift,
+      "q_embed_corr" -> qEmbedCorr,
+      "q_ann_ivf_trained" -> qAnnIvfTrained,
+      "q_hybrid_rrf" -> qHybridRrf,
+      "q_neg_sample" -> qNegSample,
+      "q_quantize_int8" -> qQuantizeInt8,
+      "q_ann_ivfpq" -> qAnnIvfPq,
+      "q_ann_ivfpq_indexed" -> qAnnIvfPqIndexed.copy(superseded = true),
+      "q_ann_ivfpq_steady" -> qAnnIvfPqSteady,
+      "q_ann_ivfpq_refined" -> qAnnIvfPqRefined,
+      "q_ann_recall" -> qAnnRecall,
+      "q_bitext_mine" -> qBitextMine),
+    "sampling" -> Vector(
+      "q_rank_features" -> qRankFeatures,
+      "q_sample_per_key" -> qSamplePerKey,
+      "q_sample_weighted" -> qSampleWeighted,
+      "q_sample_stratified" -> qSampleStratified,
+      "q_token_budget" -> qTokenBudget,
+      "q_trainset_build" -> qTrainset,
+      "q_split_assign" -> qSplitAssign,
+      "q_group_split" -> qGroupSplit,
+      "q_split_neardup_safe" -> qSplitNearDupSafe,
+      "q_mix_temperature" -> qMixTemperature,
+      "q_epoch_order" -> qEpochOrder),
+    "events" -> Vector(
+      "q_range_join" -> qRangeJoin,
+      "q_normalize" -> qNormalize,
+      "q_sessionize" -> qSessionize,
+      "q_asof_join" -> qAsOf,
+      "q_resample_daily" -> qResample,
+      "q_range_join_keyed" -> qRangeJoinKeyed,
+      "q_attribution" -> qAttribution,
+      "q_hll_distinct" -> qHllDistinct,
+      "q_hll_incremental" -> qHllIncremental,
+      "q_kmv_distinct" -> qKmvDistinct,
+      "q_kmv_sample" -> qKmvSample,
+      "q_kmv_incremental" -> qKmvIncremental,
+      "q_hll_overlap" -> qHllOverlap,
+      "q_rolling_active" -> qRollingActive,
+      "q_funnel" -> qFunnel,
+      "q_anomaly" -> qAnomaly,
+      "q_retention" -> qRetention,
+      "q_funnel_summary" -> qFunnelSummary,
+      "q_correlation" -> qCorrelation,
+      "q_fuzzy_link" -> qFuzzyLink,
+      "q_decayed_sum" -> qDecayedSum,
+      "q_mad" -> qMad,
+      "q_cms_topk" -> qCmsTopk,
+      "q_winsorize" -> qWinsorize,
+      "q_quantile_sketch" -> qQuantileSketch,
+      "q_quantile_sketch_seg" -> qQuantileSketchSeg,
+      "q_topk_sketch" -> qTopkSketch,
+      "q_topk_sketch_keyed" -> qTopkSketchKeyed),
+    "cdc_layout" -> Vector(
+      "q_dataset_fingerprint" -> qDatasetFingerprint,
+      "q_snapshot_diff" -> qSnapshotDiff,
+      "q_compaction_plan" -> qCompactionPlan,
+      "q_zone_prune" -> qZonePrune,
+      "q_merge_upsert" -> qMergeUpsert,
+      "q_scd2_apply" -> qScd2Apply,
+      "q_quality_audit" -> qQualityAudit,
+      "q_agg_upsert" -> qAggUpsert,
+      "q_zorder" -> qZOrder),
+    "streaming" -> Vector(
+      "q_stream_dup_clusters" -> qStreamDupClusters,
+      "q_stream_embed_clusters" -> qStreamEmbedClusters,
+      "q_stream_embed_clusters_steady" -> qStreamEmbedClustersSteady,
+      "q_stream_window_stats" -> qStreamWindowStats,
+      "q_cdc_latest" -> qCdcLatest,
+      "q_stream_sessionize" -> qStreamSessionize,
+      "q_stream_sessionize_tws" -> qStreamSessionizeTws,
+      "q_stream_attribution" -> qStreamAttribution,
+      "q_stream_dedup" -> qStreamDedup,
+      "q_stream_quantile" -> qStreamQuantile,
+      "q_stream_pca" -> qStreamPca,
+      "q_stream_drift" -> qStreamDrift,
+      "q_stream_kmv" -> qStreamKmv,
+      "q_stream_neardup" -> qStreamNearDup,
+      "q_stream_neardup_steady" -> qStreamNearDupSteady,
+      "q_stream_decontam" -> qStreamDecontam,
+      "q_stream_decontam_semantic" -> qStreamDecontamSemantic,
+      "q_stream_image_dedup" -> qStreamImageDedup,
+      "q_stream_image_dedup_steady" -> qStreamImageDedupSteady,
+      "q_stream_audio_dedup" -> qStreamAudioDedup,
+      "q_stream_audio_dedup_steady" -> qStreamAudioDedupSteady,
+      "q_stream_media_meta" -> qStreamMediaMeta,
+      "q_stream_bm25_ingest" -> qStreamBm25Ingest),
+    "multimodal" -> Vector(
+      "q_frame_sample" -> qFrameSample,
+      "q_multimodal_meta" -> qMultimodal,
+      "q_bmp_decode" -> qBmpDecode,
+      "q_bmp_resize" -> qBmpResize,
+      "q_image_ahash" -> qImageAHash,
+      "q_image_phash" -> qImagePHash,
+      "q_image_dual_hash" -> qImageDualHash,
+      "q_video_hashes" -> qVideoHashes,
+      "q_video_neardup" -> qVideoNearDup,
+      "q_video_phash" -> qVideoPHash,
+      "q_video_neardup_phash" -> qVideoNearDupPHash,
+      "q_video_mjpeg" -> qVideoMjpeg,
+      "q_video_dib" -> qVideoDib,
+      "q_video_mjpeg_neardup" -> qVideoMjpegNearDup,
+      "q_video_mp4" -> qVideoMp4,
+      "q_video_mixed_neardup" -> qVideoMixedNearDup,
+      "q_video_coverage" -> qVideoCoverage,
+      "q_media_meta" -> qMediaMeta,
+      "q_media_meta_containers" -> qMediaMetaContainers,
+      "q_media_meta_m4a" -> qMediaMetaM4a,
+      "q_media_meta_webp" -> qMediaMetaWebp,
+      "q_media_meta_apng" -> qMediaMetaApng,
+      "q_media_meta_images" -> qMediaMetaImages,
+      "q_media_meta_tiffpages" -> qMediaMetaTiffPages,
+      "q_video_apng" -> qVideoApng,
+      "q_image_ahash_jpeg" -> qImageAHashJpeg,
+      "q_image_ahash_tiff" -> qImageAHashTiff,
+      "q_image_ahash_tiff_j" -> qImageAHashTiffJ,
+      "q_image_ahash_tiff_c" -> qImageAHashTiffC,
+      "q_image_ahash_tiff_t" -> qImageAHashTiffT,
+      "q_image_ahash_ico" -> qImageAHashIco,
+      "q_image_ahash_bmp_x" -> qImageAHashBmpX,
+      "q_image_ahash_pnm" -> qImageAHashPnm,
+      "q_image_ahash_qoi" -> qImageAHashQoi,
+      "q_image_coverage" -> qImageCoverage,
+      "q_image_neardup" -> qImageNearDup,
+      "q_audio_fingerprint" -> qAudioFingerprint,
+      "q_audio_spectral" -> qAudioSpectral,
+      "q_audio_fingerprint_flac" -> qAudioFingerprintFlac,
+      "q_audio_fingerprint_mulaw" -> qAudioFingerprintMulaw,
+      "q_audio_fingerprint_alaw" -> qAudioFingerprintAlaw,
+      "q_audio_fingerprint_adpcm" -> qAudioFingerprintAdpcm,
+      "q_audio_fingerprint_pcm_widths" -> qAudioFingerprintPcmWidths,
+      "q_audio_fingerprint_float" -> qAudioFingerprintFloat,
+      "q_audio_fingerprint_oggflac" -> qAudioFingerprintOggFlac,
+      "q_audio_fingerprint_msadpcm" -> qAudioFingerprintMsAdpcm,
+      "q_audio_fingerprint_au" -> qAudioFingerprintAu,
+      "q_audio_fingerprint_aiff" -> qAudioFingerprintAiff,
+      "q_audio_coverage" -> qAudioCoverage,
+      "q_wav_decode" -> qWavDecode,
+      "q_wav_frames" -> qWavFrames,
+      "q_png_decode" -> qPngDecode,
+      "q_png_alpha" -> qPngAlpha,
+      "q_png_16bit" -> qPng16,
+      "q_png_interlaced" -> qPngInterlaced,
+      "q_gif_decode" -> qGifDecode,
+      "q_jpeg_decode" -> qJpegDecode,
+      "q_jpeg_progressive" -> qJpegProgressive,
+      "q_jpeg_12bit" -> qJpeg12bit))
+
+  private val registry: Vector[(String, Q)] = tiers.flatMap(_._2)
+  locally {
+    val dups = registry.groupBy(_._1).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the reference's full refined-pipeline chain.
@@ -11502,5 +11545,13 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
-    registry.collect { case (n, Q(_, Some(sql))) => n -> sql.stripMargin }.toMap
+    registry.collect { case (n, Q(_, Some(sql), _)) => n -> sql.stripMargin }.toMap
+
+  /** Query name → bench tier. */
+  private[graft] val tierOf: Map[String, String] =
+    tiers.flatMap { case (tier, qs) => qs.map { case (n, _) => n -> tier } }.toMap
+
+  /** The queries flagged superseded. */
+  private[graft] val superseded: Set[String] =
+    registry.collect { case (n, q) if q.superseded => n }.toSet
 }

@@ -138,26 +138,30 @@ object Catalog {
     val catalog = spark.sessionState.catalog
     val meta = catalog.getTableMetadata(TableIdentifier(table, Some(db)))
     val missing = (wanted -- registered(spark, meta)).toSeq.sortBy(_.mkString("/"))
-    if (missing.nonEmpty) {
+    var added = Seq.empty[CatalogTablePartition]
+    try if (missing.nonEmpty) {
       DDLUtils.verifyPartitionProviderIsHive(spark, meta, "ALTER TABLE ADD PARTITION")
-      var added = Seq.empty[CatalogTablePartition]
-      try partitionBatches(meta.storage, keys, missing, location, batchSize).foreach { batch =>
+      partitionBatches(meta.storage, keys, missing, location, batchSize).foreach { batch =>
         Retry.withRetry(maxAttempts = maxAttempts, sleep = sleep) {
           catalog.createPartitions(meta.identifier, batch, ignoreIfExists = true)
         }
         added ++= batch
-      } finally if (added.nonEmpty) afterAdd(spark, meta, added)
+      }
+    } finally {
+      // every sync, not only one that adds: the load follows a write that
+      // may have replaced the files of partitions already registered
+      refresh(spark, meta)
+      if (added.nonEmpty) updateStats(spark, meta, added)
     }
     missing.size
   }
 
   /** What `AlterTableAddPartitionCommand` does after its `createPartitions`,
     * without resolving the table relation again: drop the cached relation
-    * (refreshing its file listings first), recache cached data over the
-    * table when there is any, then update or drop the table statistics.
+    * (refreshing its file listings first), and recache cached data over
+    * the table when there is any.
     */
-  private def afterAdd(spark: SparkSession, table: CatalogTable,
-                       added: Seq[CatalogTablePartition]): Unit = {
+  private def refresh(spark: SparkSession, table: CatalogTable): Unit = {
     val catalog = spark.sessionState.catalog
     val ident = table.identifier
     if (spark.sharedState.cacheManager.isEmpty) {
@@ -165,6 +169,13 @@ object Catalog {
         .foreach(_.refresh())
       catalog.refreshTable(ident)
     } else spark.catalog.refreshTable(ident.quotedString)
+  }
+
+  /** Then, as that command does, update or drop the table statistics. */
+  private def updateStats(spark: SparkSession, table: CatalogTable,
+                          added: Seq[CatalogTablePartition]): Unit = {
+    val catalog = spark.sessionState.catalog
+    val ident = table.identifier
     if (table.stats.nonEmpty && spark.sessionState.conf.autoSizeUpdateEnabled) {
       val addedSize = CommandUtils.calculateMultipleLocationSizes(castToImpl(spark), ident,
         added.map(_.storage.locationUri)).sum

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Ann
@@ -27,15 +26,8 @@ object AnnBench {
     val nTables = args.drop(2).headOption.map(_.toInt).getOrElse(4)
     val k = args.drop(3).headOption.map(_.toInt).getOrElse(5)
     val sampleN = args.drop(4).headOption.map(_.toInt).getOrElse(500)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.GraftSession.local(cpus, cpus)
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -27,19 +27,11 @@ object BroadcastAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val split = args.drop(1).headOption.map(_.toLong).getOrElse(99000000004000L)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // the audit targets STATIC join selection (the decisions AQE can
-      // never revisit) — turn AQE off so the plan tree is walkable
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(8, 32)
     spark.sparkContext.setLogLevel("ERROR")
+    // the audit targets STATIC join selection (the decisions AQE can
+    // never revisit) — turn AQE off so the plan tree is walkable
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val train = docs.filter(col("doc_id") < split)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev scratch: execute a registry query and print its FINAL adaptive
   * plan — shows runtime stage reuse (ReusedExchange/ReusedShuffle) that
@@ -8,15 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DebugExec {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(8, 8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.01")
     val df = graft.SparkEntry.queries(args(0))(spark, dir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Receipt for the r17-s2 decode-envelope breadth: per FORMAT, one
@@ -25,14 +24,9 @@ object DecodeBreadthProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(20000)
     val parts = args.drop(1).headOption.map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64").toInt)
     import spark.implicits._
     import graft.multimodal.{Multimodal => M}
     // (class, tier, payload builder) — every decodable family of the

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.text.Decontaminate
@@ -28,17 +27,9 @@ object FuzzyDecontamProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val split = args.drop(1).headOption.map(_.toLong).getOrElse(450L)
     val threshold = args.drop(2).headOption.map(_.toDouble).getOrElse(0.9)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     // 4th arg "salt": suffix every bench token so the benchmark shares
     // no shingles with the corpus — the CLEAN-benchmark production case
     // (contamination is rare, so verification mass ≈ 0 and steady should

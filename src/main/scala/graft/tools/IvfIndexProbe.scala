@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Ivf
@@ -28,17 +27,9 @@ object IvfIndexProbe {
     val nProbe = args.drop(2).headOption.map(_.toInt).getOrElse(4)
     val k = args.drop(3).headOption.map(_.toInt).getOrElse(10)
     val nQ = args.drop(4).headOption.map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < nQ)
     val idxPath = java.nio.file.Files.createTempDirectory("ivf_probe")

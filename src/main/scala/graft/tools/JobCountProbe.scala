@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Receipt probe for ACTION-COUNT optimizations (guide §2.4): runs named
   * registry queries end-to-end (noop sink) and reports how many Spark
@@ -20,17 +19,10 @@ object JobCountProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Soak probe for the STORED simhash index ([[graft.dedup.NearDup
@@ -29,15 +28,9 @@ object MediaIndexProbe {
     val nHistory = args.headOption.map(_.toLong).getOrElse(2000000L)
     val nBatch = args.drop(1).headOption.map(_.toInt).getOrElse(200)
     val parts = args.drop(2).headOption.map(_.toInt).getOrElse(256)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     def timed(tag: String)(f: => Long): Unit = {
       System.gc()
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Receipt for the metadata-at-ingest design ([[graft.streaming
@@ -23,14 +22,9 @@ object MediaMetaProbe {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
     val parts = args.drop(1).headOption.map(_.toInt).getOrElse(64)
     val big = args.drop(2).headOption.contains("big")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64").toInt)
     import spark.implicits._
     def timed(tag: String)(f: => Long): Unit = {
       System.gc()

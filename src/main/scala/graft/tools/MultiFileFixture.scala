@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Rewrites a single-file-per-table testdata directory as a multi-file
   * layout (`nFiles` parquet parts per table), mimicking a real lake where
@@ -32,15 +31,9 @@ object MultiFileFixture {
     require(args.length >= 2, "usage: MultiFileFixture <srcSfDir> <outDir> [nFiles]")
     val (src, out) = (args(0), args(1))
     val nFiles = args.drop(2).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", nFiles)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
+      nFiles)
     tables.foreach { name =>
       spark.read.parquet(s"$src/$name.parquet")
         .repartition(nFiles) // round-robin: even file sizes, no key bias

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Soak probe for [[graft.dedup.PageRank]] where the GRAPH grows, not
@@ -22,17 +21,9 @@ object PageRankProbe {
     val dir = args(0)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val base = args.drop(2).headOption.map(_.toInt).getOrElse(500)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     val stride = 1000000000000L
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .filter(col("doc_id") % stride < base && col("doc_id") < stride * reps)

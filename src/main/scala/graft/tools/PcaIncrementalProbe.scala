@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Pca
@@ -32,17 +31,9 @@ object PcaIncrementalProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dim = args.drop(1).headOption.map(_.toInt).getOrElse(64)
     val slicePct = args.drop(2).headOption.map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val isNew = pmod(col("vec_id"), lit(100L)) < slicePct
     val segPath = java.nio.file.Files.createTempDirectory("pca_probe")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Replicates a scale-factor directory `factor`× into a multi-file layout
@@ -108,15 +108,9 @@ object ScaleFixture {
     val nFiles = args.drop(3).headOption.map(_.toInt).getOrElse(16)
     val textDupDepth = args.drop(4).headOption.map(_.toInt).getOrElse(0)
     val vocabSize = args.drop(5).headOption.map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", nFiles)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
+      nFiles)
     MultiFileFixture.tables.foreach { name =>
       val raw = spark.read.parquet(s"$src/$name.parquet")
       val dim =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew soak: measures [[graft.ops.Skew]]'s salted forms against their
@@ -22,21 +22,15 @@ import org.apache.spark.sql.functions._
   * ways, because hash-aggregate partials combine map-side before the
   * shuffle; recorded to pin that claim rather than assert it.
   *
-  * Usage: SBT_OPTS=-Xmx48g sbt "runMain graft.tools.SkewSoak [rows]"
+  * Usage: SPARK_DRIVER_MEM=48g sbt "runMain graft.tools.SkewSoak [rows]"
+  * (`runMain` forks the driver JVM with `-Xmx$SPARK_DRIVER_MEM`)
   */
 object SkewSoak {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 60000000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "48g")
-      // force the shuffle join: the dim must NOT broadcast
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32, 128)
+    // force the shuffle join: the dim must NOT broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import spark.implicits._
 
     def fact: DataFrame = spark.range(rows).select(

@@ -1,18 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** Dev scratch: logical size estimates of the LSH band/token tables at a
   * given fixture/split — why does the static planner broadcast them?
   */
 object StatsProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4, 8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args(0); val split = args(1).toLong
     val docs = spark.read.parquet(s"$dir/documents.parquet")

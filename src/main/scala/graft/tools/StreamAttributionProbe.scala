@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Tables
@@ -29,15 +28,9 @@ object StreamAttributionProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val settings = args.drop(1).headOption.map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(8, 4, 1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
+      settings.head) // `once` sets each setting in turn
 
     def once(nPart: Int, tag: String): Unit = {
       spark.conf.set("spark.sql.shuffle.partitions", nPart.toString)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase-attribution probe for [[graft.text.Unigram.encode]]: times the
@@ -8,19 +7,16 @@ import org.apache.spark.sql.functions._
   * rounds, and the final corpus reassembly action separately, on
   * whatever fixture `args(0)` points at. Diagnostic main, not part of
   * the gate.
+  *
+  * Usage: SPARK_DRIVER_MEM=48g sbt "runMain graft.tools.UnigramProbe [sfDir]"
+  * (`runMain` forks the driver JVM with `-Xmx$SPARK_DRIVER_MEM`; a
+  * `spark.driver.memory` setting cannot resize a driver already running)
   */
 object UnigramProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.driver.memory", "48g")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val d = spark.read.parquet(s"$dir/documents.parquet")

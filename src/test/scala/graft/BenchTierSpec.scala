@@ -2,16 +2,33 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's tier map must stay total over the registry: a new query
-  * landing in "other" means its regressions localize to a junk bucket.
-  * (No SparkSession needed — the registry keys are static.)
+/** Each query's bench tier and superseded flag are declared where the
+  * query is registered, in `SparkEntry`'s tier blocks; the bench reads
+  * them from there. A new query landing outside the named tiers would
+  * localize its regressions to a junk bucket. (No SparkSession needed —
+  * the registry keys are static.)
   */
 class BenchTierSpec extends AnyFunSuite {
 
+  private val tierNames = Set("etl", "windows", "relational", "text", "dedup_graph",
+    "ann", "sampling", "events", "cdc_layout", "streaming", "multimodal")
+
   test("every registry query maps to a named tier, never 'other'") {
-    val untiered = SparkEntry.queries.keys.filter(Bench.tierOf(_) == "other")
+    val untiered = SparkEntry.queries.keys.filterNot(n => tierNames(Bench.tierOf(n)))
     assert(untiered.isEmpty,
-      s"add these to Bench.tierOf: ${untiered.toSeq.sorted.mkString(", ")}")
+      s"queries outside the named tiers: ${untiered.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("the registry declares exactly the 11 bench tiers") {
+    assert(SparkEntry.tierOf.values.toSet === tierNames)
+  }
+
+  test("the superseded set is exactly the md5 winnow and the rebuild-in-row forms") {
+    val expected = Set("q_winnow", "q_ann_ivf_indexed", "q_ann_ivfpq_indexed",
+      "q_bm25_indexed", "q_bm25_deleted", "q_decontam_fuzzy_indexed",
+      "q_embed_neardup_indexed", "q_decontam_semantic_indexed")
+    assert(SparkEntry.superseded === expected)
+    assert(expected.subsetOf(SparkEntry.queries.keySet))
   }
 
   test("tier spot checks") {

@@ -362,6 +362,19 @@ class PipelineSpec extends SparkTestBase {
     assert(before.count() === 20)
   }
 
+  test("catalog: a load that adds no partition still refreshes a DataFrame read before it") {
+    val dir = tmpDir()
+    writeCode(dir, "PETR4")
+    val db = s"t_rewrite_${System.nanoTime()}"
+    val p = new Pipeline(spark, refinedDb = db)
+    assert(p.load(dir) === 10)
+    val before = spark.table(s"$db.pregao_refined")
+    assert(before.count() === 10)
+    writeCode(dir, "PETR4") // rewrites registered partitions only
+    assert(p.load(dir) === 0)
+    assert(before.count() === 10)
+  }
+
   test("catalog: a sync that adds partitions leaves the statistics ADD PARTITION leaves") {
     val key = "spark.sql.statistics.size.autoUpdate.enabled"
     val initial = spark.conf.getAll.get(key)

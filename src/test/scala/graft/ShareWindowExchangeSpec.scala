@@ -13,19 +13,12 @@ class ShareWindowExchangeSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = {
     // getOrCreate reuses a live default session and silently drops
-    // extensions — clear both handles so this builder really constructs a
+    // extensions — clear both handles so the factory really constructs a
     // session with GraftExtensions (the SparkContext itself is shared).
     val prevDefault = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val s = GraftSession.local(4, 4)
     prevDefault.foreach(SparkSession.setDefaultSession)
     s
   }

@@ -21,8 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `ADD … PARTITION` SQL text: partitions are listed and registered
   * through the session catalog API, one path.
   *
-  * The scan reads the sources with comments blanked. `graft.tools` is
-  * skipped: those probes are slated for deletion.
+  * And every session in `src/main/scala/graft`, `graft.tools` included,
+  * comes from [[graft.GraftSession.local]], unless its file is listed
+  * below with its reason.
+  *
+  * The scans read the sources with comments blanked. The writer and read
+  * scans skip `graft.tools`: those probes are slated for deletion.
   */
 class WriterPathSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -53,6 +57,11 @@ class WriterPathSpec extends AnyFunSuite {
     ("ops/Tables.scala", "readMerged") ->
       "mergeSchema needs every footer, so Spark's distributed merge reads them")
 
+  /** Files that build their own SparkSession: file -> why. */
+  private val ownSessions = Map(
+    "pipeline/Pipeline.scala" ->
+      "Pipeline.main is the deployed job: spark-submit supplies its master and settings")
+
   // `.write` as a property: not `out.write(b)`, `foreach(out.write)` or `.writeStream`
   private val WriterStart = """\.write\b(?!\s*[()])""".r
   private val Sink = """\.(parquet|json|orc|csv|text|save|saveAsTable|insertInto)\s*\(""".r
@@ -60,6 +69,7 @@ class WriterPathSpec extends AnyFunSuite {
   private val ReaderStart = """\.read(?:Stream)?\b(?!\s*[(])""".r
   private val ReadSource = """\.(parquet|json|orc|csv|text|textFile|table|load)\s*\(""".r
   private val Def = """\bdef\s+(\w+)""".r
+  private val Builder = """\bSparkSession\s*\.\s*builder\b""".r
   // partition listing or registration as SQL text; not Spark's action
   // name "ALTER TABLE ADD PARTITION", which no `(` or `IF` follows
   private val PartitionSql =
@@ -70,13 +80,15 @@ class WriterPathSpec extends AnyFunSuite {
   private def blankComments(src: String): String =
     Comment.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
 
-  /** (file relative to `root`, source with comments blanked) outside `tools/`. */
-  private def sources(): Seq[(String, String)] = {
+  /** (file relative to `root`, source with comments blanked), `tools/`
+    * only when `tools`.
+    */
+  private def sources(tools: Boolean = false): Seq[(String, String)] = {
     assert(Files.isDirectory(root), s"run from the repository root: no $root")
     Files.walk(root).iterator().asScala.toSeq
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString.replace('\\', '/') -> p)
-      .filterNot { case (rel, _) => rel.startsWith("tools/") }
+      .filter { case (rel, _) => tools || !rel.startsWith("tools/") }
       .sortBy(_._1)
       // ISO-8859-1: some sources carry raw bytes in string literals
       .map { case (rel, p: Path) =>
@@ -118,6 +130,21 @@ class WriterPathSpec extends AnyFunSuite {
   /** Lines of `src` that build partition SQL text. */
   private def partitionSql(src: String): Seq[Int] =
     PartitionSql.findAllMatchIn(src).map(m => lineOf(src, m.start)).toSeq
+
+  /** (file, line) of every `SparkSession.builder` call outside `GraftSession.scala`. */
+  private def builders(): Seq[(String, Int)] =
+    sources(tools = true).filterNot(_._1 == "GraftSession.scala").flatMap { case (rel, src) =>
+      Builder.findAllMatchIn(src).map(m => (rel, lineOf(src, m.start)))
+    }
+
+  test("every SparkSession comes from GraftSession.local or is a listed exception") {
+    val found = builders()
+    val bypass = found.filterNot { case (file, _) => ownSessions.contains(file) }
+    assert(bypass.isEmpty, "sessions built outside GraftSession:\n" +
+      bypass.map { case (f, l) => s"  $f:$l" }.mkString("\n"))
+    val stale = ownSessions.keySet -- found.map(_._1)
+    assert(stale.isEmpty, s"allowlist entries that match no SparkSession.builder call: $stale")
+  }
 
   test("Catalog lists and registers partitions through the catalog API, not SQL text") {
     val file = "pipeline/Catalog.scala"
