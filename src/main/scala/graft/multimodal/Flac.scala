@@ -80,8 +80,7 @@ object Flac {
       val h = bytes(off) & 0xff
       last = (h & 0x80) != 0
       val btype = h & 0x7f
-      val len = ((bytes(off + 1) & 0xff) << 16) | ((bytes(off + 2) & 0xff) << 8) |
-        (bytes(off + 3) & 0xff)
+      val len = Bytes.be24(bytes, off + 1)
       off += 4
       if (off + len > bytes.length) return None
       if (btype == 0) { // STREAMINFO
@@ -329,7 +328,7 @@ object Flac {
       s"fixture shape $nFrames frames @ $blockSize")
     def sample(flat: Long): Int = (((seed + flat * 13L) % 256) - 128).toInt
     val out = new java.io.ByteArrayOutputStream()
-    out.write('f'); out.write('L'); out.write('a'); out.write('C')
+    Bytes.ascii(out, "fLaC")
     // STREAMINFO, last metadata block
     val si = new BitsOut
     si.put(blockSize, 16); si.put(blockSize, 16) // min/max block size
@@ -338,7 +337,7 @@ object Flac {
     si.put(nFrames.toLong, 36)
     si.put(0, 128) // md5 (unset)
     val siBytes = si.bytes
-    out.write(0x80); out.write(0); out.write(0); out.write(siBytes.length)
+    Bytes.be32(out, 0x80000000 | siBytes.length) // last block, type 0, 24-bit length
     out.write(siBytes, 0, siBytes.length)
     val nBlocks = nFrames / blockSize
     var fIdx = 0

@@ -1,8 +1,10 @@
 package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{ascii => _, _}
 import org.apache.spark.sql.types._
+
+import graft.multimodal.Bytes._
 
 /** Multimodal columns: image/audio/video payloads as opaque `binary`
   * columns with typed metadata, plus the decode / feature-extract plumbing
@@ -63,13 +65,6 @@ object Multimodal {
   // as the documented deterministic fallback for formats OUTSIDE that
   // envelope (MP3/OGG-Vorbis/AAC, WebP/AVIF pixels and the other
   // table-data codecs).
-
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
-  private def le16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
 
   /** BMP: BITMAPFILEHEADER (14 bytes: "BM", file size, pixel-array
     * offset) then BITMAPINFOHEADER (40+ bytes: width, height — negative
@@ -236,16 +231,12 @@ object Multimodal {
     * (channels, sampleRate, dataOff, dataLen) for 16-bit PCM or None.
     */
   private def wavPcmHeader(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = {
-    def tag(off: Int): String =
-      if (off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    if (bytes.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
+    if (bytes.length < 44 || tag(bytes, 0) != "RIFF" || tag(bytes, 8) != "WAVE") return None
     var off = 12
     var channels = 0; var sampleRate = 0; var bits = 0; var fmtOk = false
     var dataOff = -1; var dataLen = 0
     while (off + 8 <= bytes.length && (dataOff < 0 || !fmtOk)) {
-      val id4 = tag(off)
+      val id4 = tag(bytes, off)
       val size = le32(bytes, off + 4)
       if (size < 0 || off + 8 + size > bytes.length) return None
       if (id4 == "fmt " && size >= 16) {
@@ -319,28 +310,30 @@ object Multimodal {
     require(nFrames > 0 && channels >= 1 && channels <= 8 && sampleRate > 0 &&
       nFrames <= (1 << 20), s"fixture shape $nFrames x $channels @ $sampleRate")
     val nSamples = nFrames * channels
-    val dataLen = nSamples * 2
-    val out = new Array[Byte](44 + dataLen)
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-        .copyToArray(out, off)
-    putTag(0, "RIFF"); putLe32(4, 36 + dataLen); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16); putLe16(20, 1); putLe16(22, channels)
-    putLe32(24, sampleRate); putLe32(28, sampleRate * channels * 2)
-    putLe16(32, channels * 2); putLe16(34, 16)
-    putTag(36, "data"); putLe32(40, dataLen)
+    val out = wavWithHeader(1, channels, sampleRate, sampleRate * channels * 2,
+      channels * 2, 16, nSamples * 2)
     var i = 0
     while (i < nSamples) {
-      putLe16(44 + 2 * i, (((seed + i * 13L) % 256) - 128).toInt & 0xffff)
+      putLe16(out, 44 + 2 * i, (((seed + i * 13L) % 256) - 128).toInt)
       i += 1
     }
+    out
+  }
+
+  /** The canonical 44-byte WAV header — RIFF/WAVE, one 16-byte fmt
+    * chunk, the data chunk header — at the front of a zeroed
+    * `44 + dataLen` array the caller fills from offset 44. Every WAV
+    * fixture writer starts here.
+    */
+  private def wavWithHeader(formatTag: Int, channels: Int, sampleRate: Int,
+                            byteRate: Int, blockAlign: Int, bits: Int,
+                            dataLen: Int): Array[Byte] = {
+    val out = new Array[Byte](44 + dataLen)
+    putTag(out, 0, "RIFF"); putLe32(out, 4, 36 + dataLen); putTag(out, 8, "WAVE")
+    putTag(out, 12, "fmt "); putLe32(out, 16, 16); putLe16(out, 20, formatTag)
+    putLe16(out, 22, channels); putLe32(out, 24, sampleRate); putLe32(out, 28, byteRate)
+    putLe16(out, 32, blockAlign); putLe16(out, 34, bits)
+    putTag(out, 36, "data"); putLe32(out, 40, dataLen)
     out
   }
 
@@ -358,21 +351,14 @@ object Multimodal {
     val out = new Array[Byte](wav.length + 24)
     System.arraycopy(wav, 0, out, 0, 36) // through the original fmt body
     System.arraycopy(wav, 36, out, 60, wav.length - 36) // data onward
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-      out(off + 2) = (v >> 16).toByte; out(off + 3) = (v >> 24).toByte
-    }
-    val origTag = le16(wav, 20)
-    val bits = le16(wav, 34)
-    putLe32(4, le32(wav, 4) + 24) // RIFF size
-    putLe32(16, 40) // fmt size
-    out(20) = 0xfe.toByte; out(21) = 0xff.toByte // WAVE_FORMAT_EXTENSIBLE
-    out(36) = 22; out(37) = 0 // cbSize
-    out(38) = bits.toByte; out(39) = (bits >> 8).toByte // valid bits
-    putLe32(40, 0) // channel mask: unspecified
+    putLe32(out, 4, le32(wav, 4) + 24) // RIFF size
+    putLe32(out, 16, 40) // fmt size
+    putLe16(out, 20, 0xfffe) // WAVE_FORMAT_EXTENSIBLE
+    putLe16(out, 36, 22) // cbSize
+    putLe16(out, 38, le16(wav, 34)) // valid bits
+    putLe32(out, 40, 0) // channel mask: unspecified
     // SubFormat GUID: legacy tag + the canonical Microsoft tail
-    out(44) = origTag.toByte; out(45) = (origTag >> 8).toByte
-    out(46) = 0; out(47) = 0
+    putLe32(out, 44, le16(wav, 20))
     val tail = Array(0x00, 0x00, 0x10, 0x00, 0x80, 0x00,
       0x00, 0xaa, 0x00, 0x38, 0x9b, 0x71)
     var i = 0
@@ -395,30 +381,16 @@ object Multimodal {
     require(bits == 32 || bits == 64, s"bits=$bits")
     val bps = bits / 8
     val nSamples = nFrames * channels
-    val dataLen = nSamples * bps
-    val out = new Array[Byte](44 + dataLen)
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII).copyToArray(out, off)
-    putTag(0, "RIFF"); putLe32(4, 36 + dataLen); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16); putLe16(20, 3); putLe16(22, channels)
-    putLe32(24, sampleRate); putLe32(28, sampleRate * channels * bps)
-    putLe16(32, channels * bps); putLe16(34, bits)
-    putTag(36, "data"); putLe32(40, dataLen)
+    val out = wavWithHeader(3, channels, sampleRate, sampleRate * channels * bps,
+      channels * bps, bits, nSamples * bps)
     var i = 0
     while (i < nSamples) {
       val s = (((seed + i * 13L) % 256) - 128).toDouble / 32768.0
-      if (bits == 32) putLe32(44 + 4 * i, java.lang.Float.floatToIntBits(s.toFloat))
+      if (bits == 32) putLe32(out, 44 + 4 * i, java.lang.Float.floatToIntBits(s.toFloat))
       else {
         val b = java.lang.Double.doubleToLongBits(s)
-        putLe32(44 + 8 * i, b.toInt)
-        putLe32(44 + 8 * i + 4, (b >>> 32).toInt)
+        putLe32(out, 44 + 8 * i, b.toInt)
+        putLe32(out, 44 + 8 * i + 4, (b >>> 32).toInt)
       }
       i += 1
     }
@@ -445,17 +417,13 @@ object Multimodal {
     * companded/ADPCM format tags so the decode dispatch can route them.
     */
   private def wavAnyHeader(bytes: Array[Byte]): Option[(Int, Int, Int, Int, Int, Int, Int)] = {
-    def tag(off: Int): String =
-      if (off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    if (bytes.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
+    if (bytes.length < 44 || tag(bytes, 0) != "RIFF" || tag(bytes, 8) != "WAVE") return None
     var off = 12
     var fmtTag = -1; var channels = 0; var sampleRate = 0; var bits = 0
     var blockAlign = 0
     var dataOff = -1; var dataLen = 0
     while (off + 8 <= bytes.length && (dataOff < 0 || fmtTag < 0)) {
-      val id4 = tag(off)
+      val id4 = tag(bytes, off)
       val size = le32(bytes, off + 4)
       if (size < 0 || off + 8 + size > bytes.length) return None
       if (id4 == "fmt " && size >= 16) {
@@ -648,9 +616,7 @@ object Multimodal {
   private def decodedAudioSamples(bytes: Array[Byte]): Option[(Int, Int => Long)] =
     wavAnyHeader(bytes) match {
       case Some((1, _, _, 16, _, dataOff, dataLen)) if dataLen % 2 == 0 =>
-        Some((dataLen / 2, i =>
-          ((bytes(dataOff + 2 * i) & 0xff) | (bytes(dataOff + 2 * i + 1) << 8))
-            .toShort.toLong))
+        Some((dataLen / 2, i => le16(bytes, dataOff + 2 * i).toShort.toLong))
       case Some((1, _, _, 8, _, dataOff, dataLen)) =>
         // 8-bit PCM is UNSIGNED per the RIFF spec; canonical widening is
         // (v − 128) << 8 so full scale lands on the 16-bit range
@@ -658,10 +624,7 @@ object Multimodal {
       case Some((1, _, _, 24, _, dataOff, dataLen)) if dataLen % 3 == 0 =>
         // 24-bit signed little-endian; samples stay exact 24-bit ints
         // (the fingerprint laws are width-agnostic functions of them)
-        Some((dataLen / 3, i =>
-          (((bytes(dataOff + 3 * i) & 0xff) |
-            ((bytes(dataOff + 3 * i + 1) & 0xff) << 8) |
-            (bytes(dataOff + 3 * i + 2) << 16))).toLong))
+        Some((dataLen / 3, i => ((le24(bytes, dataOff + 3 * i) << 8) >> 8).toLong))
       case Some((7, _, _, 8, _, dataOff, dataLen)) => // G.711 mu-law
         Some((dataLen, i => muLawToPcm(bytes(dataOff + i) & 0xff).toLong))
       case Some((6, _, _, 8, _, dataOff, dataLen)) => // G.711 A-law
@@ -681,8 +644,7 @@ object Multimodal {
       case Some((3, _, _, 64, _, dataOff, dataLen)) if dataLen % 8 == 0 =>
         Some((dataLen / 8, i => {
           val o = dataOff + 8 * i
-          val bits = (le32(bytes, o) & 0xffffffffL) | (le32(bytes, o + 4).toLong << 32)
-          val f = java.lang.Double.longBitsToDouble(bits)
+          val f = java.lang.Double.longBitsToDouble(le64(bytes, o))
           if (java.lang.Double.isNaN(f)) 0L
           else math.max(-32768L, math.min(32767L, (f * 32768.0).toLong))
         }))
@@ -710,6 +672,7 @@ object Multimodal {
     * backstop.
     */
   private def oggPackets(bytes: Array[Byte]): Option[Vector[Array[Byte]]] = {
+    // a Boolean test for the OggS capture pattern, not a 4-byte tag read
     def tag(off: Int): Boolean =
       off + 4 <= bytes.length && bytes(off) == 'O' && bytes(off + 1) == 'g' &&
         bytes(off + 2) == 'g' && bytes(off + 3) == 'S'
@@ -769,7 +732,7 @@ object Multimodal {
     val p0 = packets.head
     if (p0.length != 9 + 42 || (p0(0) & 0xff) != 0x7f || p0(1) != 'F' ||
         p0(2) != 'L' || p0(3) != 'A' || p0(4) != 'C') return None
-    val nHeaders = ((p0(7) & 0xff) << 8) | (p0(8) & 0xff)
+    val nHeaders = be16(p0, 7)
     if (packets.length <= 1 + nHeaders) return None // no audio packets
     val si = java.util.Arrays.copyOfRange(p0, 9, p0.length)
     if (!(si(0) == 'f' && si(1) == 'L' && si(2) == 'a' && si(3) == 'C'))
@@ -794,11 +757,10 @@ object Multimodal {
     if (bytes.length < 24) return None
     if (!(bytes(0) == '.'.toByte && bytes(1) == 's'.toByte &&
           bytes(2) == 'n'.toByte && bytes(3) == 'd'.toByte)) return None
-    def u32(off: Int): Long = be32(bytes, off) & 0xffffffffL
-    val dataOff = u32(4)
-    val dataSize = u32(8)
-    val enc = u32(12)
-    val channels = u32(20)
+    val dataOff = u32be(bytes, 4)
+    val dataSize = u32be(bytes, 8)
+    val enc = u32be(bytes, 12)
+    val channels = u32be(bytes, 20)
     if (dataOff < 24 || dataOff >= bytes.length || channels < 1) return None
     val avail = bytes.length - dataOff
     val dataLen =
@@ -814,8 +776,7 @@ object Multimodal {
         // canonical widening v << 8 keeps full scale on the 16-bit range
         Some((n, i => (bytes(off + i).toInt << 8).toLong))
       case 3L if n % 2 == 0 =>
-        Some((n / 2, i =>
-          ((bytes(off + 2 * i) << 8) | (bytes(off + 2 * i + 1) & 0xff)).toShort.toLong))
+        Some((n / 2, i => be16(bytes, off + 2 * i).toShort.toLong))
       case 6L if n % 4 == 0 => // IEEE float32, big-endian — the WAV
         // format-3 canonicalization law verbatim (r17 s2)
         Some((n / 4, i => {
@@ -825,9 +786,7 @@ object Multimodal {
         }))
       case 7L if n % 8 == 0 => // IEEE float64, big-endian
         Some((n / 8, i => {
-          val o = off + 8 * i
-          val hi = be32(bytes, o).toLong; val lo = be32(bytes, o + 4) & 0xffffffffL
-          val f = java.lang.Double.longBitsToDouble((hi << 32) | lo)
+          val f = java.lang.Double.longBitsToDouble(be64(bytes, off + 8 * i))
           if (java.lang.Double.isNaN(f)) 0L
           else math.max(-32768L, math.min(32767L, (f * 32768.0).toLong))
         }))
@@ -845,12 +804,8 @@ object Multimodal {
     */
   private def aiffSamples(bytes: Array[Byte]): Option[(Int, Int => Long)] = {
     if (bytes.length < 12) return None
-    def tag(off: Int): String =
-      if (off >= 0 && off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    val isAifc = tag(8) == "AIFC"
-    if (tag(0) != "FORM" || (tag(8) != "AIFF" && !isAifc)) return None
+    val isAifc = tag(bytes, 8) == "AIFC"
+    if (tag(bytes, 0) != "FORM" || (tag(bytes, 8) != "AIFF" && !isAifc)) return None
     val formEnd = math.min(bytes.length.toLong, 8L + be32(bytes, 4)).toInt
     var off = 12
     var channels = -1
@@ -865,16 +820,16 @@ object Multimodal {
     var little = false
     var comp = if (isAifc) "" else "NONE"
     while (off + 8 <= formEnd) {
-      val ck = tag(off)
+      val ck = tag(bytes, off)
       val size = be32(bytes, off + 4)
       if (size < 0 || off + 8 + size.toLong > formEnd) return None
       if (ck == "COMM" && size >= 18) {
-        channels = ((bytes(off + 8) & 0xff) << 8) | (bytes(off + 9) & 0xff)
-        nFrames = be32(bytes, off + 10) & 0xffffffffL
-        bits = ((bytes(off + 14) & 0xff) << 8) | (bytes(off + 15) & 0xff)
+        channels = be16(bytes, off + 8)
+        nFrames = u32be(bytes, off + 10)
+        bits = be16(bytes, off + 14)
         if (isAifc) {
           if (size < 22) return None // extended COMM is mandatory
-          comp = tag(off + 26)
+          comp = tag(bytes, off + 26)
         }
       } else if (ck == "SSND" && size >= 8) {
         val dOff = be32(bytes, off + 8) // offset into the sound data
@@ -893,12 +848,8 @@ object Multimodal {
     val nSamples = nFrames * channels
     if (nSamples * 2 > ssndLen || nSamples > (1 << 24)) return None
     val base = ssndOff
-    if (little)
-      Some((nSamples.toInt, i =>
-        ((bytes(base + 2 * i) & 0xff) | (bytes(base + 2 * i + 1) << 8)).toShort.toLong))
-    else
-      Some((nSamples.toInt, i =>
-        ((bytes(base + 2 * i) << 8) | (bytes(base + 2 * i + 1) & 0xff)).toShort.toLong))
+    if (little) Some((nSamples.toInt, i => le16(bytes, base + 2 * i).toShort.toLong))
+    else Some((nSamples.toInt, i => be16(bytes, base + 2 * i).toShort.toLong))
   }
 
   /** Fixture/test writer for Sun .au (r17): mu-law bytes follow
@@ -923,34 +874,25 @@ object Multimodal {
     }
     val dataLen = bps * nSamples
     val out = new Array[Byte](24 + dataLen)
-    def putBe32(off: Int, v: Int): Unit = {
-      out(off) = (v >> 24).toByte; out(off + 1) = (v >> 16).toByte
-      out(off + 2) = (v >> 8).toByte; out(off + 3) = v.toByte
-    }
-    out(0) = '.'.toByte; out(1) = 's'.toByte; out(2) = 'n'.toByte; out(3) = 'd'.toByte
-    putBe32(4, 24)                       // data offset
-    putBe32(8, dataLen)
-    putBe32(12, encoding)
-    putBe32(16, sampleRate)
-    putBe32(20, 1)                       // channels
+    putTag(out, 0, ".snd")
+    putBe32(out, 4, 24)                  // data offset
+    putBe32(out, 8, dataLen)
+    putBe32(out, 12, encoding)
+    putBe32(out, 16, sampleRate)
+    putBe32(out, 20, 1)                  // channels
     var i = 0
     while (i < nSamples) {
       encoding match {
         case 1 => out(24 + i) = ((seed + i * 11L) % 256).toByte
         case 2 => out(24 + i) = (((seed + i * 13L) % 256) - 128).toByte
-        case 3 =>
-          val v = (((seed + i * 13L) % 256) - 128).toInt
-          out(24 + 2 * i) = (v >> 8).toByte; out(24 + 2 * i + 1) = v.toByte
+        case 3 => putBe16(out, 24 + 2 * i, (((seed + i * 13L) % 256) - 128).toInt)
         case 6 =>
           val f = (((seed + i * 13L) % 256) - 128).toDouble / 32768.0
-          val b = java.lang.Float.floatToIntBits(f.toFloat)
-          out(24 + 4 * i) = (b >> 24).toByte; out(24 + 4 * i + 1) = (b >> 16).toByte
-          out(24 + 4 * i + 2) = (b >> 8).toByte; out(24 + 4 * i + 3) = b.toByte
+          putBe32(out, 24 + 4 * i, java.lang.Float.floatToIntBits(f.toFloat))
         case _ =>
           val f = (((seed + i * 13L) % 256) - 128).toDouble / 32768.0
           val b = java.lang.Double.doubleToLongBits(f)
-          var k = 0
-          while (k < 8) { out(24 + 8 * i + k) = (b >>> (56 - 8 * k)).toByte; k += 1 }
+          putBe32(out, 24 + 8 * i, (b >>> 32).toInt); putBe32(out, 24 + 8 * i + 4, b.toInt)
       }
       i += 1
     }
@@ -977,43 +919,28 @@ object Multimodal {
     val ssndSize = 8 + dataLen
     val formSize = 4 + (8 + commSize) + (8 + ssndSize) + (ssndSize & 1)
     val out = new Array[Byte](8 + formSize)
-    def putBe32(off: Int, v: Int): Unit = {
-      out(off) = (v >> 24).toByte; out(off + 1) = (v >> 16).toByte
-      out(off + 2) = (v >> 8).toByte; out(off + 3) = v.toByte
-    }
-    def putBe16(off: Int, v: Int): Unit = {
-      out(off) = (v >> 8).toByte; out(off + 1) = v.toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII).copyToArray(out, off)
-    putTag(0, "FORM"); putBe32(4, formSize)
-    putTag(8, if (isAifc) "AIFC" else "AIFF")
-    putTag(12, "COMM"); putBe32(16, commSize)
-    putBe16(20, channels)
-    putBe32(22, nFrames)
-    putBe16(26, 16) // bits
+    putTag(out, 0, "FORM"); putBe32(out, 4, formSize)
+    putTag(out, 8, if (isAifc) "AIFC" else "AIFF")
+    putTag(out, 12, "COMM"); putBe32(out, 16, commSize)
+    putBe16(out, 20, channels)
+    putBe32(out, 22, nFrames)
+    putBe16(out, 26, 16) // bits
     // 80-bit IEEE extended sample rate: sign 0, 15-bit exponent
     // 16383 + e, explicit-leading-1 64-bit mantissa — for an integer
     // rate r with highest set bit e, mantissa = r << (63 - e)
     val e = 63 - java.lang.Long.numberOfLeadingZeros(sampleRate.toLong)
-    putBe16(28, 16383 + e)
+    putBe16(out, 28, 16383 + e)
     val mant = sampleRate.toLong << (63 - e)
-    var b = 0
-    while (b < 8) { out(30 + b) = (mant >>> (56 - 8 * b)).toByte; b += 1 }
-    if (isAifc) putTag(38, aifc) // compression type; name stays empty
+    putBe32(out, 30, (mant >>> 32).toInt); putBe32(out, 34, mant.toInt)
+    if (isAifc) putTag(out, 38, aifc) // compression type; name stays empty
     val ssndAt = 20 + commSize
-    putTag(ssndAt, "SSND"); putBe32(ssndAt + 4, ssndSize)
-    putBe32(ssndAt + 8, 0) // offset
-    putBe32(ssndAt + 12, 0) // blockSize
+    putTag(out, ssndAt, "SSND"); putBe32(out, ssndAt + 4, ssndSize)
+    // offset and blockSize stay 0
     val dataAt = ssndAt + 16
     var i = 0
     while (i < nSamples) {
       val v = (((seed + i * 13L) % 256) - 128).toInt
-      if (little) {
-        out(dataAt + 2 * i) = v.toByte; out(dataAt + 2 * i + 1) = (v >> 8).toByte
-      } else {
-        out(dataAt + 2 * i) = (v >> 8).toByte; out(dataAt + 2 * i + 1) = v.toByte
-      }
+      if (little) putLe16(out, dataAt + 2 * i, v) else putBe16(out, dataAt + 2 * i, v)
       i += 1
     }
     out
@@ -1028,21 +955,7 @@ object Multimodal {
                   aLaw: Boolean): Array[Byte] = {
     require(nSamples > 0 && nSamples <= (1 << 20) && sampleRate > 0,
       s"fixture shape $nSamples @ $sampleRate")
-    val out = new Array[Byte](44 + nSamples)
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII).copyToArray(out, off)
-    putTag(0, "RIFF"); putLe32(4, 36 + nSamples); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16); putLe16(20, if (aLaw) 6 else 7)
-    putLe16(22, 1); putLe32(24, sampleRate); putLe32(28, sampleRate)
-    putLe16(32, 1); putLe16(34, 8)
-    putTag(36, "data"); putLe32(40, nSamples)
+    val out = wavWithHeader(if (aLaw) 6 else 7, 1, sampleRate, sampleRate, 1, 8, nSamples)
     var i = 0
     while (i < nSamples) {
       out(44 + i) = ((seed + i * 11L) % 256).toByte
@@ -1062,30 +975,14 @@ object Multimodal {
     require(nSamples > 0 && nSamples <= (1 << 20) && sampleRate > 0 &&
       (bits == 8 || bits == 24), s"fixture shape $nSamples @ $sampleRate x${bits}b")
     val bytesPer = bits / 8
-    val dataLen = nSamples * bytesPer
-    val out = new Array[Byte](44 + dataLen)
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII).copyToArray(out, off)
-    putTag(0, "RIFF"); putLe32(4, 36 + dataLen); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16); putLe16(20, 1)
-    putLe16(22, 1); putLe32(24, sampleRate); putLe32(28, sampleRate * bytesPer)
-    putLe16(32, bytesPer); putLe16(34, bits)
-    putTag(36, "data"); putLe32(40, dataLen)
+    val out = wavWithHeader(1, 1, sampleRate, sampleRate * bytesPer, bytesPer, bits,
+      nSamples * bytesPer)
     var i = 0
     while (i < nSamples) {
       if (bits == 8) out(44 + i) = ((seed + i * 11L) % 256).toByte
       else {
         val v = (((seed + i * 9901L) % 1000000) - 500000).toInt
-        out(44 + 3 * i) = (v & 0xff).toByte
-        out(44 + 3 * i + 1) = ((v >> 8) & 0xff).toByte
-        out(44 + 3 * i + 2) = ((v >> 16) & 0xff).toByte
+        putLe16(out, 44 + 3 * i, v); out(44 + 3 * i + 2) = (v >> 16).toByte
       }
       i += 1
     }
@@ -1105,26 +1002,12 @@ object Multimodal {
     require(nBlocks > 0 && nBlocks <= 4096 && blockAlign >= 8 &&
       blockAlign <= 4096 && sampleRate > 0,
       s"fixture shape $nBlocks x $blockAlign @ $sampleRate")
-    val dataLen = nBlocks * blockAlign
-    val out = new Array[Byte](44 + dataLen)
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII).copyToArray(out, off)
-    putTag(0, "RIFF"); putLe32(4, 36 + dataLen); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16); putLe16(20, 0x11)
-    putLe16(22, 1); putLe32(24, sampleRate); putLe32(28, sampleRate / 2)
-    putLe16(32, blockAlign); putLe16(34, 4)
-    putTag(36, "data"); putLe32(40, dataLen)
+    val out = wavWithHeader(0x11, 1, sampleRate, sampleRate / 2, blockAlign, 4,
+      nBlocks * blockAlign)
     var b = 0
     while (b < nBlocks) {
       val base = 44 + b * blockAlign
-      putLe16(base, (((seed + 97L * b) % 4096) - 2048).toInt & 0xffff)
+      putLe16(out, base, (((seed + 97L * b) % 4096) - 2048).toInt)
       out(base + 2) = ((seed + 13L * b) % 89).toByte
       out(base + 3) = 0
       var j = 4
@@ -1150,29 +1033,15 @@ object Multimodal {
     require(nBlocks > 0 && nBlocks <= 4096 && blockAlign >= 8 &&
       blockAlign <= 4096 && sampleRate > 0,
       s"fixture shape $nBlocks x $blockAlign @ $sampleRate")
-    val dataLen = nBlocks * blockAlign
-    val out = new Array[Byte](44 + dataLen)
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII).copyToArray(out, off)
-    putTag(0, "RIFF"); putLe32(4, 36 + dataLen); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16); putLe16(20, 2)
-    putLe16(22, 1); putLe32(24, sampleRate); putLe32(28, sampleRate / 2)
-    putLe16(32, blockAlign); putLe16(34, 4)
-    putTag(36, "data"); putLe32(40, dataLen)
+    val out = wavWithHeader(2, 1, sampleRate, sampleRate / 2, blockAlign, 4,
+      nBlocks * blockAlign)
     var b = 0
     while (b < nBlocks) {
       val base = 44 + b * blockAlign
       out(base) = ((seed + b) % 7).toByte
-      putLe16(base + 1, (40 + (seed * 7 + b * 11L) % 500).toInt)
-      putLe16(base + 3, (((seed + 131L * b) % 2000) - 1000).toInt & 0xffff)
-      putLe16(base + 5, (((seed + 77L * b) % 2000) - 1000).toInt & 0xffff)
+      putLe16(out, base + 1, (40 + (seed * 7 + b * 11L) % 500).toInt)
+      putLe16(out, base + 3, (((seed + 131L * b) % 2000) - 1000).toInt)
+      putLe16(out, base + 5, (((seed + 77L * b) % 2000) - 1000).toInt)
       var j = 7
       while (j < blockAlign) {
         out(base + j) = ((seed + 131L * b + 7L * j) % 256).toByte
@@ -1195,10 +1064,6 @@ object Multimodal {
   // with bpp = bytes/pixel, per spec). Interlaced (Adam7) images decode
   // for real too: seven reduced passes, each filtered independently,
   // scattered back onto the (xStart + i·xStep, yStart + j·yStep) grid.
-
-  private def be32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
 
   private[graft] val PngSig: Array[Byte] =
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
@@ -1316,7 +1181,7 @@ object Multimodal {
       if (off + 8 > bytes.length) return None
       val len = be32(bytes, off)
       if (len < 0 || off + 12L + len > bytes.length) return None
-      val ctype = new String(bytes, off + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
+      val ctype = tag(bytes, off + 4)
       ctype match {
         case "PLTE" =>
           if (len == 0 || len % 3 != 0 || len > 768) return None
@@ -1528,10 +1393,7 @@ object Multimodal {
     val zlib = storedZlib(raw)
     def chunk(ctype: String, data: Array[Byte]): Array[Byte] = pngChunk(ctype, data)
     val ihdr = new Array[Byte](13)
-    ihdr(0) = ((w >> 24) & 0xff).toByte; ihdr(1) = ((w >> 16) & 0xff).toByte
-    ihdr(2) = ((w >> 8) & 0xff).toByte; ihdr(3) = (w & 0xff).toByte
-    ihdr(4) = ((h >> 24) & 0xff).toByte; ihdr(5) = ((h >> 16) & 0xff).toByte
-    ihdr(6) = ((h >> 8) & 0xff).toByte; ihdr(7) = (h & 0xff).toByte
+    putBe32(ihdr, 0, w); putBe32(ihdr, 4, h)
     ihdr(8) = bitDepth.toByte; ihdr(9) = colorType.toByte // compression/filter stay 0
     ihdr(12) = (if (interlaced) 1 else 0).toByte // Adam7 flag
     // palette fixtures carry a full 256-entry PLTE (every index valid)
@@ -1551,19 +1413,12 @@ object Multimodal {
     */
   private[graft] def pngChunk(ctype: String, data: Array[Byte]): Array[Byte] = {
     val out = new Array[Byte](12 + data.length)
-    out(0) = ((data.length >> 24) & 0xff).toByte
-    out(1) = ((data.length >> 16) & 0xff).toByte
-    out(2) = ((data.length >> 8) & 0xff).toByte
-    out(3) = (data.length & 0xff).toByte
-    ctype.getBytes(java.nio.charset.StandardCharsets.US_ASCII).copyToArray(out, 4)
+    putBe32(out, 0, data.length)
+    putTag(out, 4, ctype)
     data.copyToArray(out, 8)
     val crc = new java.util.zip.CRC32()
     crc.update(out, 4, 4 + data.length)
-    val cv = crc.getValue
-    out(8 + data.length) = ((cv >> 24) & 0xff).toByte
-    out(9 + data.length) = ((cv >> 16) & 0xff).toByte
-    out(10 + data.length) = ((cv >> 8) & 0xff).toByte
-    out(11 + data.length) = (cv & 0xff).toByte
+    putBe32(out, 8 + data.length, crc.getValue.toInt)
     out
   }
 
@@ -1583,14 +1438,11 @@ object Multimodal {
       val len = math.min(65535, raw.length - src)
       val fin = src + len >= raw.length
       zlib(dst) = (if (fin) 1 else 0).toByte
-      zlib(dst + 1) = (len & 0xff).toByte; zlib(dst + 2) = ((len >> 8) & 0xff).toByte
-      zlib(dst + 3) = (~len & 0xff).toByte; zlib(dst + 4) = ((~len >> 8) & 0xff).toByte
+      putLe16(zlib, dst + 1, len); putLe16(zlib, dst + 3, ~len)
       System.arraycopy(raw, src, zlib, dst + 5, len)
       src += len; dst += 5 + len
     }
-    val ad = adler.getValue
-    zlib(dst) = ((ad >> 24) & 0xff).toByte; zlib(dst + 1) = ((ad >> 16) & 0xff).toByte
-    zlib(dst + 2) = ((ad >> 8) & 0xff).toByte; zlib(dst + 3) = (ad & 0xff).toByte
+    putBe32(zlib, dst, adler.getValue.toInt)
     zlib
   }
 
@@ -1693,7 +1545,7 @@ object Multimodal {
       if (off + 8 > bytes.length) return None
       val len = be32(bytes, off)
       if (len < 0 || off + 12L + len > bytes.length) return None
-      val ctype = new String(bytes, off + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
+      val ctype = tag(bytes, off + 4)
       ctype match {
         case "acTL" =>
           if (len != 8 || sawIdat || numFrames >= 0) return None
@@ -1813,12 +1665,12 @@ object Multimodal {
       if (off + 8 > bytes.length) return None
       val len = be32(bytes, off)
       if (len < 0 || off + 12L + len > bytes.length) return None
-      val ctype = new String(bytes, off + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
+      val ctype = tag(bytes, off + 4)
       ctype match {
         case "acTL" if len == 8 => numFrames = be32(bytes, off + 8)
         case "fcTL" if len == 26 =>
-          val num = ((bytes(off + 28) & 0xff) << 8) | (bytes(off + 29) & 0xff)
-          val den0 = ((bytes(off + 30) & 0xff) << 8) | (bytes(off + 31) & 0xff)
+          val num = be16(bytes, off + 28)
+          val den0 = be16(bytes, off + 30)
           val den = if (den0 == 0) 100 else den0
           durMs += 1000L * num / den
         case "IEND" => done = true
@@ -1854,27 +1706,24 @@ object Multimodal {
       }
       storedZlib(pngFilterRows(img, h, stride, channels))
     }
-    def u32(v: Int): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def u16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    val ihdr = u32(w) ++ u32(h) ++ Array[Byte](8, colorType.toByte, 0, 0, 0)
+    val ihdr = be32Bytes(w) ++ be32Bytes(h) ++ Array[Byte](8, colorType.toByte, 0, 0, 0)
     var seq = 0
     def fctl(f: Int): Array[Byte] = {
-      val c = pngChunk("fcTL", u32(seq) ++ u32(w) ++ u32(h) ++ u32(0) ++ u32(0) ++
-        u16(f % 3 + 1) ++ u16(100) ++ Array[Byte](0, 0))
+      val c = pngChunk("fcTL", be32Bytes(seq) ++ be32Bytes(w) ++ be32Bytes(h) ++
+        be32Bytes(0) ++ be32Bytes(0) ++ be16Bytes(f % 3 + 1) ++ be16Bytes(100) ++
+        Array[Byte](0, 0))
       seq += 1
       c
     }
     def fdat(z: Array[Byte]): Array[Byte] = {
-      val c = pngChunk("fdAT", u32(seq) ++ z)
+      val c = pngChunk("fdAT", be32Bytes(seq) ++ z)
       seq += 1
       c
     }
     val out = new java.io.ByteArrayOutputStream()
     out.write(PngSig.toArray)
     out.write(pngChunk("IHDR", ihdr))
-    out.write(pngChunk("acTL", u32(frames) ++ u32(0)))
+    out.write(pngChunk("acTL", be32Bytes(frames) ++ be32Bytes(0)))
     if (firstIsIdat) {
       out.write(fctl(0))
       out.write(pngChunk("IDAT", frameZlib(seed)))
@@ -2332,11 +2181,19 @@ object Multimodal {
         }
         stored
       }
-    val lzw = lzwEncode(idx, 8)
+    val out = gifFixtureScreen(w, h, seed)
+    gifFixtureImage(out, w, h, idx, if (interlaced) 0x40 else 0) // no LCT; interlace flag
+    out.write(0x3b) // trailer
+    out.toByteArray
+  }
+
+  /** A GIF fixture's header, screen descriptor and 256-entry global
+    * color table: entry i → `(seed+3i)%256, (seed+5i)%256, (seed+7i)%256`.
+    */
+  private def gifFixtureScreen(w: Int, h: Int, seed: Long): java.io.ByteArrayOutputStream = {
     val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    def le16out(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16out(w); le16out(h)
+    ascii(out, "GIF89a")
+    le16(out, w); le16(out, h)
     out.write(0xf7) // GCT present, 8 bits/channel, 256 entries
     out.write(0); out.write(0) // bg index, aspect
     var i = 0
@@ -2346,9 +2203,18 @@ object Multimodal {
       out.write(((seed + 7L * i) % 256).toInt)
       i += 1
     }
+    out
+  }
+
+  /** A full-canvas image descriptor with `flags`, then `idx` through the
+    * real LZW encoder as 255-byte data sub-blocks and a terminator.
+    */
+  private def gifFixtureImage(out: java.io.ByteArrayOutputStream, w: Int, h: Int,
+                              idx: Array[Byte], flags: Int): Unit = {
     out.write(0x2c) // image descriptor
-    le16out(0); le16out(0); le16out(w); le16out(h)
-    out.write(if (interlaced) 0x40 else 0) // no LCT; interlace flag
+    le16(out, 0); le16(out, 0); le16(out, w); le16(out, h)
+    out.write(flags)
+    val lzw = lzwEncode(idx, 8)
     out.write(8) // LZW min code size
     var src = 0
     while (src < lzw.length) {
@@ -2358,8 +2224,6 @@ object Multimodal {
       src += len
     }
     out.write(0) // block terminator
-    out.write(0x3b) // trailer
-    out.toByteArray
   }
 
   /** Fixture writer for ANIMATED GIF: `frames` full-canvas image
@@ -2375,40 +2239,17 @@ object Multimodal {
   def makeGifAnimated(w: Int, h: Int, seed: Long, frames: Int): Array[Byte] = {
     require(w > 0 && h > 0 && w <= 256 && h <= 256 && frames >= 1 && frames <= 64,
       s"fixture dims $w x $h x $frames")
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    def le16out(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16out(w); le16out(h)
-    out.write(0xf7); out.write(0); out.write(0) // GCT 256, bg 0, aspect
-    var i = 0
-    while (i < 256) {
-      out.write(((seed + 3L * i) % 256).toInt)
-      out.write(((seed + 5L * i) % 256).toInt)
-      out.write(((seed + 7L * i) % 256).toInt)
-      i += 1
-    }
+    val out = gifFixtureScreen(w, h, seed)
     var f = 0
     while (f < frames) {
       // GCE: disposal 1 (keep), no transparency, delay 4/100 s
       out.write(0x21); out.write(0xf9); out.write(4)
-      out.write(0x04); le16out(4); out.write(0); out.write(0)
-      out.write(0x2c) // image descriptor, full canvas
-      le16out(0); le16out(0); le16out(w); le16out(h)
-      out.write(0) // GCT, sequential
+      out.write(0x04); le16(out, 4); out.write(0); out.write(0)
       val idx = Array.tabulate(w * h) { p =>
         val y = p / w; val x = p % w
         ((seed + f * 17L + y * 31L + x * 7L) % 256).toByte
       }
-      val lzw = lzwEncode(idx, 8)
-      out.write(8)
-      var src = 0
-      while (src < lzw.length) {
-        val len = math.min(255, lzw.length - src)
-        out.write(len)
-        out.write(lzw, src, len)
-        src += len
-      }
-      out.write(0)
+      gifFixtureImage(out, w, h, idx, 0) // GCT, sequential
       f += 1
     }
     out.write(0x3b)
@@ -2476,35 +2317,30 @@ object Multimodal {
     * partial lie.
     */
   private[graft] def aviFrameGrids(bytes: Array[Byte]): Option[(Int, Int, Seq[Array[Int]])] = {
-    def tag(off: Int): String =
-      if (off >= 0 && off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    if (bytes.length < 24 || tag(0) != "RIFF" || tag(8) != "AVI ") return None
-    val riffEnd = math.min(bytes.length.toLong,
-      12L + (le32(bytes, 4) & 0xffffffffL) - 4L).toInt
+    if (bytes.length < 24 || tag(bytes, 0) != "RIFF" || tag(bytes, 8) != "AVI ") return None
+    val riffEnd = math.min(bytes.length.toLong, 12L + u32le(bytes, 4) - 4L).toInt
     var w = -1; var h = -1
     var codec = "" // "mjpg" | "dib" once a supported vids stream declares
     var dibTopDown = false
     val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
     var off = 12
     while (off + 8 <= riffEnd) {
-      val ck = tag(off)
+      val ck = tag(bytes, off)
       val size = le32(bytes, off + 4)
       if (size < 0 || off + 8 + size.toLong > riffEnd) return None
       if (ck == "LIST" && size >= 4) {
-        val listType = tag(off + 8)
+        val listType = tag(bytes, off + 8)
         val end = off + 8 + size
         if (listType == "hdrl") {
           var p = off + 12
           while (p + 8 <= end) {
-            val sck = tag(p)
+            val sck = tag(bytes, p)
             val ssz = le32(bytes, p + 4)
             if (ssz < 0 || p + 8 + ssz.toLong > end) return None
             if (sck == "avih" && ssz >= 40) {
               w = le32(bytes, p + 8 + 32) // dwWidth
               h = le32(bytes, p + 8 + 36) // dwHeight
-            } else if (sck == "LIST" && ssz >= 4 && tag(p + 8) == "strl") {
+            } else if (sck == "LIST" && ssz >= 4 && tag(bytes, p + 8) == "strl") {
               // sub-walk the strl list: strh declares the stream type +
               // handler, strf's BITMAPINFOHEADER pins the pixel layout
               // (needed for the uncompressed-DIB slot, r17)
@@ -2515,12 +2351,12 @@ object Multimodal {
               var handlerZero = false
               var biH = 0; var biBits = -1; var biComp = -1
               while (q + 8 <= sEnd) {
-                val t2 = tag(q)
+                val t2 = tag(bytes, q)
                 val z2 = le32(bytes, q + 4)
                 if (z2 < 0 || q + 8 + z2.toLong > sEnd) return None
                 if (t2 == "strh" && z2 >= 8) {
-                  vids = tag(q + 8) == "vids" // fccType
-                  handler = tag(q + 12)       // fccHandler
+                  vids = tag(bytes, q + 8) == "vids" // fccType
+                  handler = tag(bytes, q + 12)       // fccHandler
                   handlerZero = le32(bytes, q + 12) == 0
                 } else if (t2 == "strf" && z2 >= 20) {
                   biH = le32(bytes, q + 8 + 8)     // biHeight (signed)
@@ -2545,7 +2381,7 @@ object Multimodal {
         } else if (listType == "movi") {
           var p = off + 12
           while (p + 8 <= end) {
-            val sck = tag(p)
+            val sck = tag(bytes, p)
             val ssz = le32(bytes, p + 4)
             if (ssz < 0 || p + 8 + ssz.toLong > end) return None
             // stream-0 video data (MJPG frames arrive as 00dc; 00db is
@@ -2618,44 +2454,52 @@ object Multimodal {
     require(w > 0 && h > 0 && w <= 1024 && h <= 1024 && frames >= 1 && frames <= 64,
       s"fixture dims $w x $h x $frames")
     val frameData = (0 until frames).map(f => makeJpeg(w, h, seed + f * 17L, gray = gray))
+    aviContainer(w, h, frameData, handler = "MJPG", biCompression = "MJPG",
+      bufferSize = frameData.map(_.length).max, imageSize = 3 * w * h, chunk = "00dc")
+  }
+
+  /** The one AVI container writer: avih with the real dims and frame
+    * count, one vids strl (strh naming `handler`, a BITMAPINFOHEADER
+    * strf declaring `biCompression` — a fourcc, four NULs for BI_RGB —
+    * and `imageSize`), then a movi list with one `chunk` per frame,
+    * odd-sized frames followed by the spec's pad byte.
+    */
+  private def aviContainer(w: Int, h: Int, frameData: Seq[Array[Byte]], handler: String,
+                           biCompression: String, bufferSize: Int, imageSize: Int,
+                           chunk: String): Array[Byte] = {
+    val frames = frameData.length
     val out = new java.io.ByteArrayOutputStream()
-    def le32out(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    def tagOut(s: String): Unit =
-      out.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     val strlSize = 4 + (8 + 56) + (8 + 40)          // 'strl' + strh + strf
     val hdrlSize = 4 + (8 + 56) + (8 + strlSize)    // 'hdrl' + avih + LIST strl
     val moviSize = 4 + frameData.map(f => 8 + f.length + (f.length & 1)).sum
     val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize)
-    tagOut("RIFF"); le32out(riffSize); tagOut("AVI ")
-    tagOut("LIST"); le32out(hdrlSize); tagOut("hdrl")
-    tagOut("avih"); le32out(56)
-    le32out(100000)                                  // dwMicroSecPerFrame (10 fps)
-    le32out(0); le32out(0); le32out(0)               // maxBytesPerSec, padding, flags
-    le32out(frames)                                  // dwTotalFrames
-    le32out(0); le32out(1); le32out(0)               // initialFrames, streams, bufSize
-    le32out(w); le32out(h)                           // dwWidth, dwHeight
-    (0 until 4).foreach(_ => le32out(0))             // reserved
-    tagOut("LIST"); le32out(strlSize); tagOut("strl")
-    tagOut("strh"); le32out(56)
-    tagOut("vids"); tagOut("MJPG")
-    le32out(0); le32out(0); le32out(0)               // flags, prio+lang, initialFrames
-    le32out(1); le32out(10)                          // dwScale, dwRate (10 fps)
-    le32out(0); le32out(frames)                      // dwStart, dwLength
-    le32out(frameData.map(_.length).max)             // suggestedBufferSize
-    le32out(0); le32out(0)                           // quality, sampleSize
-    le32out(0); le32out(0)                           // rcFrame (4 shorts)
-    tagOut("strf"); le32out(40)
-    le32out(40); le32out(w); le32out(h)              // biSize, biWidth, biHeight
-    out.write(1); out.write(0); out.write(24); out.write(0) // planes, bitcount
-    tagOut("MJPG")                                   // biCompression fourcc
-    le32out(3 * w * h)                               // biSizeImage
-    (0 until 4).foreach(_ => le32out(0))             // resolution, clr fields
-    tagOut("LIST"); le32out(moviSize); tagOut("movi")
+    ascii(out, "RIFF"); le32(out, riffSize); ascii(out, "AVI ")
+    ascii(out, "LIST"); le32(out, hdrlSize); ascii(out, "hdrl")
+    ascii(out, "avih"); le32(out, 56)
+    le32(out, 100000)                                // dwMicroSecPerFrame (10 fps)
+    le32(out, 0); le32(out, 0); le32(out, 0)         // maxBytesPerSec, padding, flags
+    le32(out, frames)                                // dwTotalFrames
+    le32(out, 0); le32(out, 1); le32(out, 0)         // initialFrames, streams, bufSize
+    le32(out, w); le32(out, h)                       // dwWidth, dwHeight
+    (0 until 4).foreach(_ => le32(out, 0))           // reserved
+    ascii(out, "LIST"); le32(out, strlSize); ascii(out, "strl")
+    ascii(out, "strh"); le32(out, 56)
+    ascii(out, "vids"); ascii(out, handler)
+    le32(out, 0); le32(out, 0); le32(out, 0)         // flags, prio+lang, initialFrames
+    le32(out, 1); le32(out, 10)                      // dwScale, dwRate (10 fps)
+    le32(out, 0); le32(out, frames)                  // dwStart, dwLength
+    le32(out, bufferSize)                            // suggestedBufferSize
+    le32(out, 0); le32(out, 0)                       // quality, sampleSize
+    le32(out, 0); le32(out, 0)                       // rcFrame (4 shorts)
+    ascii(out, "strf"); le32(out, 40)
+    le32(out, 40); le32(out, w); le32(out, h)        // biSize, biWidth, biHeight
+    le16(out, 1); le16(out, 24)                      // planes, bitcount
+    ascii(out, biCompression)
+    le32(out, imageSize)                             // biSizeImage
+    (0 until 4).foreach(_ => le32(out, 0))           // resolution, clr fields
+    ascii(out, "LIST"); le32(out, moviSize); ascii(out, "movi")
     frameData.foreach { f =>
-      tagOut("00dc"); le32out(f.length); out.write(f)
+      ascii(out, chunk); le32(out, f.length); out.write(f)
       if ((f.length & 1) == 1) out.write(0)          // even alignment pad
     }
     out.toByteArray
@@ -2687,46 +2531,9 @@ object Multimodal {
       }
       fb
     }
-    val out = new java.io.ByteArrayOutputStream()
-    def le32out(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    def tagOut(s: String): Unit =
-      out.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    val strlSize = 4 + (8 + 56) + (8 + 40)          // 'strl' + strh + strf
-    val hdrlSize = 4 + (8 + 56) + (8 + strlSize)    // 'hdrl' + avih + LIST strl
-    val moviSize = 4 + frameData.map(f => 8 + f.length).sum // stride*h is even
-    val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize)
-    tagOut("RIFF"); le32out(riffSize); tagOut("AVI ")
-    tagOut("LIST"); le32out(hdrlSize); tagOut("hdrl")
-    tagOut("avih"); le32out(56)
-    le32out(100000)                                  // dwMicroSecPerFrame (10 fps)
-    le32out(0); le32out(0); le32out(0)               // maxBytesPerSec, padding, flags
-    le32out(frames)                                  // dwTotalFrames
-    le32out(0); le32out(1); le32out(0)               // initialFrames, streams, bufSize
-    le32out(w); le32out(h)                           // dwWidth, dwHeight
-    (0 until 4).foreach(_ => le32out(0))             // reserved
-    tagOut("LIST"); le32out(strlSize); tagOut("strl")
-    tagOut("strh"); le32out(56)
-    tagOut("vids"); tagOut("DIB ")
-    le32out(0); le32out(0); le32out(0)               // flags, prio+lang, initialFrames
-    le32out(1); le32out(10)                          // dwScale, dwRate (10 fps)
-    le32out(0); le32out(frames)                      // dwStart, dwLength
-    le32out(stride * h)                              // suggestedBufferSize
-    le32out(0); le32out(0)                           // quality, sampleSize
-    le32out(0); le32out(0)                           // rcFrame (4 shorts)
-    tagOut("strf"); le32out(40)
-    le32out(40); le32out(w); le32out(h)              // biSize, biWidth, biHeight
-    out.write(1); out.write(0); out.write(24); out.write(0) // planes, bitcount
-    le32out(0)                                       // biCompression = BI_RGB
-    le32out(stride * h)                              // biSizeImage
-    (0 until 4).foreach(_ => le32out(0))             // resolution, clr fields
-    tagOut("LIST"); le32out(moviSize); tagOut("movi")
-    frameData.foreach { f =>
-      tagOut("00db"); le32out(f.length); out.write(f)
-    }
-    out.toByteArray
+    // stride * h is even, so no frame takes a pad byte
+    aviContainer(w, h, frameData, handler = "DIB ", biCompression = "\u0000" * 4,
+      bufferSize = stride * h, imageSize = stride * h, chunk = "00db")
   }
 
   /** The first video track's normative sample tables, parsed but NOT
@@ -2741,82 +2548,24 @@ object Multimodal {
       durationMs: Option[Long])
 
   private def mp4VideoTrack(bytes: Array[Byte]): Option[Mp4Track] = {
-    def tag(off: Int): String =
-      if (off >= 0 && off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    def u16(off: Int): Int = ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-    def u32(off: Int): Long =
-      ((bytes(off) & 0xffL) << 24) | ((bytes(off + 1) & 0xffL) << 16) |
-        ((bytes(off + 2) & 0xffL) << 8) | (bytes(off + 3) & 0xffL)
-    def u64(off: Int): Long = (u32(off) << 32) | u32(off + 4)
-    if (bytes.length < 16 || tag(4) != "ftyp") return None
-    // boxes in [start, end) — they must tile the span exactly
-    def boxes(start: Int, end: Int): Option[Seq[(String, Int, Int)]] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-      var off = start
-      while (off < end) {
-        if (off + 8 > end || out.length >= 4096) return None
-        val sz = u32(off)
-        var hdr = 8
-        val size: Long =
-          if (sz == 1L) { if (off + 16 > end) return None; hdr = 16; u64(off + 8) }
-          else if (sz == 0L) (end - off).toLong // spec: box runs to end of file
-          else sz
-        if (size < hdr || off + size > end) return None
-        out += ((tag(off + 4), off + hdr, (off + size).toInt))
-        off = (off + size).toInt
-      }
-      Some(out.toSeq)
-    }
-    def child(bs: Seq[(String, Int, Int)], t: String): Option[(Int, Int)] =
-      bs.collectFirst { case (`t`, s, e) => (s, e) }
-    val top = boxes(0, bytes.length).getOrElse(return None)
-    val (moovS, moovE) = child(top, "moov").getOrElse(return None)
-    val moov = boxes(moovS, moovE).getOrElse(return None)
-    // mvhd: movie duration in timescale units (v0 u32 / v1 u64 fields)
-    val durationMs: Option[Long] = child(moov, "mvhd").flatMap { case (ms, me) =>
-      if (me - ms < 20) None
-      else if ((bytes(ms) & 0xff) == 0) {
-        val ts = u32(ms + 12); val d = u32(ms + 16)
-        if (ts > 0 && d > 0) Some(d * 1000 / ts) else None
-      } else if (me - ms >= 32) {
-        val ts = u32(ms + 20); val d = u64(ms + 24)
-        if (ts > 0 && d > 0) Some(d * 1000 / ts) else None
-      } else None
-    }
+    val (moov, durationMs) = isoMoov(bytes).getOrElse(return None)
     // first trak whose mdia/hdlr declares the 'vide' handler
-    val stblOpt = moov.collectFirst(Function.unlift {
-      case ("trak", ts, te) =>
-        (for {
-          trak <- boxes(ts, te)
-          (ms, me) <- child(trak, "mdia")
-          mdia <- boxes(ms, me)
-          (hs, he) <- child(mdia, "hdlr")
-          if he - hs >= 12 && tag(hs + 8) == "vide"
-          (ns, ne) <- child(mdia, "minf")
-          minf <- boxes(ns, ne)
-          (bs, be) <- child(minf, "stbl")
-          stbl <- boxes(bs, be)
-        } yield stbl)
-      case _ => None
-    })
-    val stbl = stblOpt.getOrElse(return None)
+    val stbl = isoTrack(bytes, moov, "vide")(Some(_)).getOrElse(return None)
     // stsd: exactly one sample description; coding judged by the caller
-    val (sdS, sdE) = child(stbl, "stsd").getOrElse(return None)
-    if (sdE - sdS < 16 || u32(sdS + 4) != 1L) return None
+    val (sdS, sdE) = isoChild(stbl, "stsd").getOrElse(return None)
+    if (sdE - sdS < 16 || u32be(bytes, sdS + 4) != 1L) return None
     val entry = sdS + 8
-    val entrySize = u32(entry)
+    val entrySize = u32be(bytes, entry)
     if (entrySize < 86 || entry + entrySize > sdE) return None
-    val coding = tag(entry + 4)
-    val w = u16(entry + 32)
-    val h = u16(entry + 34)
+    val coding = tag(bytes, entry + 4)
+    val w = be16(bytes, entry + 32)
+    val h = be16(bytes, entry + 34)
     if (w <= 0 || h <= 0 || w > (1 << 14) || h > (1 << 14)) return None
     // stsz: per-sample sizes (fixed-size form honored)
-    val (szS, szE) = child(stbl, "stsz").getOrElse(return None)
+    val (szS, szE) = isoChild(stbl, "stsz").getOrElse(return None)
     if (szE - szS < 12) return None
-    val fixedSize = u32(szS + 4)
-    val nSamples = u32(szS + 8)
+    val fixedSize = u32be(bytes, szS + 4)
+    val nSamples = u32be(bytes, szS + 8)
     if (nSamples <= 0 || nSamples > 4096) return None // runaway backstop
     val n = nSamples.toInt
     val sizes = new Array[Long](n)
@@ -2824,35 +2573,103 @@ object Multimodal {
     else {
       if (szE - szS < 12 + 4L * n) return None
       var i = 0
-      while (i < n) { sizes(i) = u32(szS + 12 + 4 * i); i += 1 }
+      while (i < n) { sizes(i) = u32be(bytes, szS + 12 + 4 * i); i += 1 }
     }
     // stsc: sample→chunk runs
-    val (scS, scE) = child(stbl, "stsc").getOrElse(return None)
+    val (scS, scE) = isoChild(stbl, "stsc").getOrElse(return None)
     if (scE - scS < 8) return None
-    val nRuns = u32(scS + 4)
+    val nRuns = u32be(bytes, scS + 4)
     if (nRuns <= 0 || nRuns > 4096 || scE - scS < 8 + 12L * nRuns) return None
     val runs = (0 until nRuns.toInt).map { i =>
-      (u32(scS + 8 + 12 * i), u32(scS + 8 + 12 * i + 4)) // (first_chunk, samples_per_chunk)
+      // (first_chunk, samples_per_chunk)
+      (u32be(bytes, scS + 8 + 12 * i), u32be(bytes, scS + 8 + 12 * i + 4))
     }
     if (runs.head._1 != 1L ||
         runs.sliding(2).exists(p => p.length == 2 && p(1)._1 <= p(0)._1) ||
         runs.exists(_._2 <= 0L)) return None
     // stco / co64: absolute chunk offsets
-    val chunkOffs: Array[Long] = child(stbl, "stco") match {
+    val chunkOffs: Array[Long] = isoChild(stbl, "stco") match {
       case Some((cS, cE)) =>
         if (cE - cS < 8) return None
-        val nc = u32(cS + 4)
+        val nc = u32be(bytes, cS + 4)
         if (nc <= 0 || nc > 4096 || cE - cS < 8 + 4L * nc) return None
-        Array.tabulate(nc.toInt)(i => u32(cS + 8 + 4 * i))
+        Array.tabulate(nc.toInt)(i => u32be(bytes, cS + 8 + 4 * i))
       case None =>
-        val (cS, cE) = child(stbl, "co64").getOrElse(return None)
+        val (cS, cE) = isoChild(stbl, "co64").getOrElse(return None)
         if (cE - cS < 8) return None
-        val nc = u32(cS + 4)
+        val nc = u32be(bytes, cS + 4)
         if (nc <= 0 || nc > 4096 || cE - cS < 8 + 8L * nc) return None
-        Array.tabulate(nc.toInt)(i => u64(cS + 8 + 8 * i))
+        Array.tabulate(nc.toInt)(i => be64(bytes, cS + 8 + 8 * i))
     }
     Some(Mp4Track(coding, w, h, sizes, chunkOffs, runs, durationMs))
   }
+
+  /** ISO-BMFF boxes in [start, end) as (type, contentStart, contentEnd)
+    * — they must tile the span exactly (64-bit `largesize` and size-0
+    * run-to-end honored); None otherwise. 4096-box backstop.
+    */
+  private def isoBoxes(bytes: Array[Byte], start: Int, end: Int): Option[Seq[(String, Int, Int)]] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
+    var off = start
+    while (off < end) {
+      if (off + 8 > end || out.length >= 4096) return None
+      val sz = u32be(bytes, off)
+      var hdr = 8
+      val size: Long =
+        if (sz == 1L) { if (off + 16 > end) return None; hdr = 16; be64(bytes, off + 8) }
+        else if (sz == 0L) (end - off).toLong // spec: box runs to end of file
+        else sz
+      if (size < hdr || off + size > end) return None
+      out += ((tag(bytes, off + 4), off + hdr, (off + size).toInt))
+      off = (off + size).toInt
+    }
+    Some(out.toSeq)
+  }
+
+  private def isoChild(bs: Seq[(String, Int, Int)], t: String): Option[(Int, Int)] =
+    bs.collectFirst { case (`t`, s, e) => (s, e) }
+
+  /** An ISO-BMFF file's moov children and its mvhd movie duration. */
+  private def isoMoov(bytes: Array[Byte]): Option[(Seq[(String, Int, Int)], Option[Long])] = {
+    if (bytes.length < 16 || tag(bytes, 4) != "ftyp") return None
+    val top = isoBoxes(bytes, 0, bytes.length).getOrElse(return None)
+    val (moovS, moovE) = isoChild(top, "moov").getOrElse(return None)
+    val moov = isoBoxes(bytes, moovS, moovE).getOrElse(return None)
+    // mvhd: movie duration in timescale units (v0 u32 / v1 u64 fields)
+    val durationMs: Option[Long] = isoChild(moov, "mvhd").flatMap { case (ms, me) =>
+      if (me - ms < 20) None
+      else if ((bytes(ms) & 0xff) == 0) {
+        val ts = u32be(bytes, ms + 12); val d = u32be(bytes, ms + 16)
+        if (ts > 0 && d > 0) Some(d * 1000 / ts) else None
+      } else if (me - ms >= 32) {
+        val ts = u32be(bytes, ms + 20); val d = be64(bytes, ms + 24)
+        if (ts > 0 && d > 0) Some(d * 1000 / ts) else None
+      } else None
+    }
+    Some((moov, durationMs))
+  }
+
+  /** `pick` over the stbl children of the first trak in `moov` whose
+    * mdia/hdlr declares `handler` and for which `pick` answers.
+    */
+  private def isoTrack[A](bytes: Array[Byte], moov: Seq[(String, Int, Int)], handler: String)(
+      pick: Seq[(String, Int, Int)] => Option[A]): Option[A] =
+    moov.collectFirst(Function.unlift {
+      case ("trak", ts, te) =>
+        for {
+          trak <- isoBoxes(bytes, ts, te)
+          (ms, me) <- isoChild(trak, "mdia")
+          mdia <- isoBoxes(bytes, ms, me)
+          (hs, he) <- isoChild(mdia, "hdlr")
+          if he - hs >= 12 && tag(bytes, hs + 8) == handler
+          (ns, ne) <- isoChild(mdia, "minf")
+          minf <- isoBoxes(bytes, ns, ne)
+          (bs, be) <- isoChild(minf, "stbl")
+          stbl <- isoBoxes(bytes, bs, be)
+          picked <- pick(stbl)
+        } yield picked
+      case _ => None
+    })
 
   /** ISO-BMFF (MP4 / QuickTime MOV) through the decoded-video gate
     * (r17): the [[gifFrameGrids]] contract for the ISO base-media
@@ -2921,70 +2738,14 @@ object Multimodal {
     * video.
     */
   private def mp4AudioMeta(bytes: Array[Byte]): Option[(Int, Int, Option[Long])] = {
-    def tag(off: Int): String =
-      if (off >= 0 && off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    def u16(off: Int): Int = ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-    def u32(off: Int): Long =
-      ((bytes(off) & 0xffL) << 24) | ((bytes(off + 1) & 0xffL) << 16) |
-        ((bytes(off + 2) & 0xffL) << 8) | (bytes(off + 3) & 0xffL)
-    def u64(off: Int): Long = (u32(off) << 32) | u32(off + 4)
-    if (bytes.length < 16 || tag(4) != "ftyp") return None
-    def boxes(start: Int, end: Int): Option[Seq[(String, Int, Int)]] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-      var off = start
-      while (off < end) {
-        if (off + 8 > end || out.length >= 4096) return None
-        val sz = u32(off)
-        var hdr = 8
-        val size: Long =
-          if (sz == 1L) { if (off + 16 > end) return None; hdr = 16; u64(off + 8) }
-          else if (sz == 0L) (end - off).toLong
-          else sz
-        if (size < hdr || off + size > end) return None
-        out += ((tag(off + 4), off + hdr, (off + size).toInt))
-        off = (off + size).toInt
-      }
-      Some(out.toSeq)
-    }
-    def child(bs: Seq[(String, Int, Int)], t: String): Option[(Int, Int)] =
-      bs.collectFirst { case (`t`, s, e) => (s, e) }
-    val top = boxes(0, bytes.length).getOrElse(return None)
-    val (moovS, moovE) = child(top, "moov").getOrElse(return None)
-    val moov = boxes(moovS, moovE).getOrElse(return None)
-    val durationMs: Option[Long] = child(moov, "mvhd").flatMap { case (ms, me) =>
-      if (me - ms < 20) None
-      else if ((bytes(ms) & 0xff) == 0) {
-        val ts = u32(ms + 12); val d = u32(ms + 16)
-        if (ts > 0 && d > 0) Some(d * 1000 / ts) else None
-      } else if (me - ms >= 32) {
-        val ts = u32(ms + 20); val d = u64(ms + 24)
-        if (ts > 0 && d > 0) Some(d * 1000 / ts) else None
-      } else None
-    }
-    val entryOpt = moov.collectFirst(Function.unlift {
-      case ("trak", ts, te) =>
-        (for {
-          trak <- boxes(ts, te)
-          (ms, me) <- child(trak, "mdia")
-          mdia <- boxes(ms, me)
-          (hs, he) <- child(mdia, "hdlr")
-          if he - hs >= 12 && tag(hs + 8) == "soun"
-          (ns, ne) <- child(mdia, "minf")
-          minf <- boxes(ns, ne)
-          (bs, be) <- child(minf, "stbl")
-          stbl <- boxes(bs, be)
-          (sdS, sdE) <- child(stbl, "stsd")
-          if sdE - sdS >= 16 && u32(sdS + 4) >= 1L
-        } yield sdS + 8)
-      case _ => None
-    })
-    val entry = entryOpt.getOrElse(return None)
-    val entrySize = u32(entry)
+    val (moov, durationMs) = isoMoov(bytes).getOrElse(return None)
+    val entry = isoTrack(bytes, moov, "soun")(stbl => isoChild(stbl, "stsd").collect {
+      case (sdS, sdE) if sdE - sdS >= 16 && u32be(bytes, sdS + 4) >= 1L => sdS + 8
+    }).getOrElse(return None)
+    val entrySize = u32be(bytes, entry)
     if (entrySize < 36 || entry + entrySize > bytes.length) return None
-    val ch = u16(entry + 24)
-    val rate = u16(entry + 32) // 16.16 fixed point, integer part
+    val ch = be16(bytes, entry + 24)
+    val rate = be16(bytes, entry + 32) // 16.16 fixed point, integer part
     if (ch < 1 || ch > 8 || rate <= 0) None
     else Some((rate, ch, durationMs))
   }
@@ -2997,49 +2758,56 @@ object Multimodal {
   def makeM4aHeader(rate: Int, channels: Int, durationMs: Int): Array[Byte] = {
     require(rate > 0 && rate < 65536 && channels >= 1 && channels <= 8 &&
       durationMs >= 0)
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def asc(t: String): Array[Byte] =
-      t.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    def box(t: String, content: Array[Byte]*): Array[Byte] = {
-      val body = content.flatten.toArray
-      be32(8L + body.length) ++ asc(t) ++ body
-    }
-    val ftyp = box("ftyp", asc("M4A "), be32(0), asc("M4A "))
-    val matrix = be32(0x00010000L) ++ be32(0) ++ be32(0) ++
-      be32(0) ++ be32(0x00010000L) ++ be32(0) ++
-      be32(0) ++ be32(0) ++ be32(0x40000000L)
-    val mvhd = box("mvhd", be32(0), be32(0), be32(0), be32(1000),
-      be32(durationMs.toLong), be32(0x00010000L), be16(0x0100), be16(0),
-      be32(0), be32(0), matrix, Array.fill(24)(0.toByte), be32(2))
-    val mdhd = box("mdhd", be32(0), be32(0), be32(0), be32(rate.toLong),
-      be32(0), be16(0x55c4), be16(0))
-    val hdlr = box("hdlr", be32(0), be32(0), asc("soun"),
-      Array.fill(12)(0.toByte), Array(0.toByte))
-    val smhd = box("smhd", be32(0), be16(0), be16(0))
-    val dinf = box("dinf", box("dref", be32(0), be32(1),
-      box("url ", be32(1))))
+    val ftyp = box("ftyp", asciiBytes("M4A "), be32Bytes(0), asciiBytes("M4A "))
+    val mdhd = box("mdhd", be32Bytes(0), be32Bytes(0), be32Bytes(0), be32Bytes(rate.toLong),
+      be32Bytes(0), be16Bytes(0x55c4), be16Bytes(0))
+    val smhd = box("smhd", be32Bytes(0), be16Bytes(0), be16Bytes(0))
     // AudioSampleEntry (mp4a): 8 hdr + 6 reserved + 2 dri + 8 reserved
     // + channelcount(2) + samplesize(2) + pre_defined(2) + reserved(2)
     // + samplerate 16.16 (4) = 36
-    val sampleEntry = be32(36) ++ asc("mp4a") ++ Array.fill(6)(0.toByte) ++
-      be16(1) ++ be32(0) ++ be32(0) ++
-      be16(channels) ++ be16(16) ++ be16(0) ++ be16(0) ++
-      be32(rate.toLong << 16)
-    val stsd = box("stsd", be32(0), be32(1), sampleEntry)
-    val stts = box("stts", be32(0), be32(0))
-    val stsc = box("stsc", be32(0), be32(0))
-    val stsz = box("stsz", be32(0), be32(0), be32(0))
-    val stco = box("stco", be32(0), be32(0))
+    val sampleEntry = be32Bytes(36) ++ asciiBytes("mp4a") ++ Array.fill(6)(0.toByte) ++
+      be16Bytes(1) ++ be32Bytes(0) ++ be32Bytes(0) ++
+      be16Bytes(channels) ++ be16Bytes(16) ++ be16Bytes(0) ++ be16Bytes(0) ++
+      be32Bytes(rate.toLong << 16)
+    val stsd = box("stsd", be32Bytes(0), be32Bytes(1), sampleEntry)
+    val stts = box("stts", be32Bytes(0), be32Bytes(0))
+    val stsc = box("stsc", be32Bytes(0), be32Bytes(0))
+    val stsz = box("stsz", be32Bytes(0), be32Bytes(0), be32Bytes(0))
+    val stco = box("stco", be32Bytes(0), be32Bytes(0))
     val stbl = box("stbl", stsd, stts, stsc, stsz, stco)
-    val minf = box("minf", smhd, dinf, stbl)
-    val mdia = box("mdia", mdhd, hdlr, minf)
+    val minf = box("minf", smhd, isoDinf, stbl)
+    val mdia = box("mdia", mdhd, hdlrBox("soun"), minf)
     val trak = box("trak", mdia)
-    val moov = box("moov", mvhd, trak)
+    val moov = box("moov", mvhdBox(durationMs.toLong), trak)
     ftyp ++ moov
   }
+
+  /** One ISO-BMFF box — 32-bit size, type, then `content` in order —
+    * the writer behind every ISO-BMFF fixture (M4A, MP4/MOV, HEIF).
+    */
+  private def box(t: String, content: Array[Byte]*): Array[Byte] = {
+    val body = content.flatten.toArray
+    be32Bytes(8L + body.length) ++ asciiBytes(t) ++ body
+  }
+
+  /** The identity 3x3 matrix in 16.16 / 2.30 fixed point. */
+  private def isoMatrix: Array[Byte] =
+    Seq(0x00010000L, 0L, 0L, 0L, 0x00010000L, 0L, 0L, 0L, 0x40000000L)
+      .toArray.flatMap(be32Bytes)
+
+  /** mvhd (version 0) at timescale 1000, so its duration is in ms. */
+  private def mvhdBox(durationMs: Long): Array[Byte] =
+    box("mvhd", be32Bytes(0), be32Bytes(0), be32Bytes(0), be32Bytes(1000),
+      be32Bytes(durationMs), be32Bytes(0x00010000L), be16Bytes(0x0100), be16Bytes(0),
+      be32Bytes(0), be32Bytes(0), isoMatrix, Array.fill(24)(0.toByte), be32Bytes(2))
+
+  private def hdlrBox(handler: String): Array[Byte] =
+    box("hdlr", be32Bytes(0), be32Bytes(0), asciiBytes(handler),
+      Array.fill(12)(0.toByte), Array(0.toByte))
+
+  /** dinf holding one self-contained `url ` data reference. */
+  private def isoDinf: Array[Byte] =
+    box("dinf", box("dref", be32Bytes(0), be32Bytes(1), box("url ", be32Bytes(1))))
 
   /** Fixture/test writer for ISO-BMFF Motion-JPEG: `frames` video
     * samples, frame f a [[makeJpeg]] fixture with seed `seed + f·17`
@@ -3059,17 +2827,7 @@ object Multimodal {
     require(w > 0 && h > 0 && w <= 1024 && h <= 1024 && frames >= 1 && frames <= 64,
       s"fixture dims $w x $h x $frames")
     val frameData = (0 until frames).map(f => makeJpeg(w, h, seed + f * 17L, gray = gray))
-    def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be64(v: Long): Array[Byte] = be32(v >> 32) ++ be32(v & 0xffffffffL)
-    def asc(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    def box(t: String, content: Array[Byte]*): Array[Byte] = {
-      val body = content.flatten.toArray
-      be32(8L + body.length) ++ asc(t) ++ body
-    }
-    val ftyp = box("ftyp", asc(brand), be32(0), asc(brand))
+    val ftyp = box("ftyp", asciiBytes(brand), be32Bytes(0), asciiBytes(brand))
     val mdat = box("mdat", frameData.flatten.toArray)
     // absolute sample offsets: mdat content starts after ftyp + 8
     val base = ftyp.length + 8L
@@ -3083,44 +2841,36 @@ object Multimodal {
       if (frames == 1) Seq((1, 1))
       else if (frames % 2 == 0) Seq((1, 2))
       else Seq((1, 2), (fullChunks + 1, 1))
-    val matrix = // identity 3x3 in 16.16 / 2.30 fixed point
-      be32(0x00010000L) ++ be32(0) ++ be32(0) ++
-      be32(0) ++ be32(0x00010000L) ++ be32(0) ++
-      be32(0) ++ be32(0) ++ be32(0x40000000L)
-    val mvhd = box("mvhd", be32(0), be32(0), be32(0), be32(1000),
-      be32(frames * 100L), be32(0x00010000L), be16(0x0100), be16(0),
-      be32(0), be32(0), matrix, Array.fill(24)(0.toByte), be32(2))
-    val tkhd = box("tkhd", be32(7) /* version 0, flags: enabled+in-movie+in-preview */,
-      be32(0), be32(0), be32(1), be32(0), be32(frames * 100L),
-      be32(0), be32(0), be16(0), be16(0), be16(0), be16(0), matrix,
-      be32(w.toLong << 16), be32(h.toLong << 16))
-    val mdhd = box("mdhd", be32(0), be32(0), be32(0), be32(1000),
-      be32(frames * 100L), be16(0x55c4) /* 'und' */, be16(0))
-    val hdlr = box("hdlr", be32(0), be32(0), asc("vide"),
-      Array.fill(12)(0.toByte), Array(0.toByte))
-    val vmhd = box("vmhd", be32(1), be16(0), be16(0), be16(0), be16(0))
-    val dinf = box("dinf", box("dref", be32(0), be32(1),
-      box("url ", be32(1) /* self-contained */)))
-    val sampleEntry = be32(86) ++ asc("jpeg") ++ Array.fill(6)(0.toByte) ++
-      be16(1) ++ be16(0) ++ be16(0) ++ Array.fill(12)(0.toByte) ++
-      be16(w) ++ be16(h) ++ be32(0x00480000L) ++ be32(0x00480000L) ++
-      be32(0) ++ be16(1) ++ Array.fill(32)(0.toByte) ++ be16(24) ++ be16(0xffff)
-    val stsd = box("stsd", be32(0), be32(1), sampleEntry)
-    val stts = box("stts", be32(0), be32(1), be32(frames.toLong), be32(100))
-    val stsc = box("stsc", be32(0), be32(stscRuns.length.toLong),
-      stscRuns.flatMap { case (fc, spc) => be32(fc.toLong) ++ be32(spc.toLong) ++ be32(1) }.toArray)
-    val stsz = box("stsz", be32(0), be32(0),
-      be32(frames.toLong), frameData.flatMap(f => be32(f.length.toLong)).toArray)
+    val tkhd = box("tkhd", be32Bytes(7) /* version 0, flags: enabled+in-movie+in-preview */,
+      be32Bytes(0), be32Bytes(0), be32Bytes(1), be32Bytes(0), be32Bytes(frames * 100L),
+      be32Bytes(0), be32Bytes(0), be16Bytes(0), be16Bytes(0), be16Bytes(0), be16Bytes(0),
+      isoMatrix, be32Bytes(w.toLong << 16), be32Bytes(h.toLong << 16))
+    val mdhd = box("mdhd", be32Bytes(0), be32Bytes(0), be32Bytes(0), be32Bytes(1000),
+      be32Bytes(frames * 100L), be16Bytes(0x55c4) /* 'und' */, be16Bytes(0))
+    val vmhd = box("vmhd", be32Bytes(1), be16Bytes(0), be16Bytes(0), be16Bytes(0), be16Bytes(0))
+    val sampleEntry = be32Bytes(86) ++ asciiBytes("jpeg") ++ Array.fill(6)(0.toByte) ++
+      be16Bytes(1) ++ be16Bytes(0) ++ be16Bytes(0) ++ Array.fill(12)(0.toByte) ++
+      be16Bytes(w) ++ be16Bytes(h) ++ be32Bytes(0x00480000L) ++ be32Bytes(0x00480000L) ++
+      be32Bytes(0) ++ be16Bytes(1) ++ Array.fill(32)(0.toByte) ++ be16Bytes(24) ++
+      be16Bytes(0xffff)
+    val stsd = box("stsd", be32Bytes(0), be32Bytes(1), sampleEntry)
+    val stts = box("stts", be32Bytes(0), be32Bytes(1), be32Bytes(frames.toLong), be32Bytes(100))
+    val stsc = box("stsc", be32Bytes(0), be32Bytes(stscRuns.length.toLong),
+      stscRuns.flatMap { case (fc, spc) =>
+        be32Bytes(fc.toLong) ++ be32Bytes(spc.toLong) ++ be32Bytes(1)
+      }.toArray)
+    val stsz = box("stsz", be32Bytes(0), be32Bytes(0),
+      be32Bytes(frames.toLong), frameData.flatMap(f => be32Bytes(f.length.toLong)).toArray)
     val stcoBox =
-      if (co64) box("co64", be32(0), be32(chunkOffs.length.toLong),
-        chunkOffs.flatMap(be64).toArray)
-      else box("stco", be32(0), be32(chunkOffs.length.toLong),
-        chunkOffs.flatMap(be32).toArray)
+      if (co64) box("co64", be32Bytes(0), be32Bytes(chunkOffs.length.toLong),
+        chunkOffs.flatMap(be64Bytes).toArray)
+      else box("stco", be32Bytes(0), be32Bytes(chunkOffs.length.toLong),
+        chunkOffs.flatMap(be32Bytes).toArray)
     val stbl = box("stbl", stsd, stts, stsc, stsz, stcoBox)
-    val minf = box("minf", vmhd, dinf, stbl)
-    val mdia = box("mdia", mdhd, hdlr, minf)
+    val minf = box("minf", vmhd, isoDinf, stbl)
+    val mdia = box("mdia", mdhd, hdlrBox("vide"), minf)
     val trak = box("trak", tkhd, mdia)
-    val moov = box("moov", mvhd, trak)
+    val moov = box("moov", mvhdBox(frames * 100L), trak)
     ftyp ++ mdat ++ moov
   }
 
@@ -3485,7 +3235,7 @@ object Multimodal {
         return None // EOI before any image data
       }
       if (off + 2 > bytes.length) return None
-      val len = ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
+      val len = be16(bytes, off)
       if (len < 2 || off + len > bytes.length) return None
       val segEnd = off + len
       var nextOff = segEnd
@@ -3500,7 +3250,7 @@ object Multimodal {
             var i = 0
             if (pq == 0) while (i < 64) { t(i) = bytes(p + 1 + i) & 0xff; i += 1 }
             else while (i < 64) {
-              t(i) = ((bytes(p + 1 + 2 * i) & 0xff) << 8) | (bytes(p + 2 + 2 * i) & 0xff)
+              t(i) = be16(bytes, p + 1 + 2 * i)
               i += 1
             }
             quant(tq) = t
@@ -3513,8 +3263,8 @@ object Multimodal {
           // (SOF1); SOF0 is 8-bit by T.81, progressive-12 stays outside
           // the envelope (COVERAGE.md boundary row)
           if (precision != 8 && !(marker == 0xc1 && precision == 12)) return None
-          h = ((bytes(p + 1) & 0xff) << 8) | (bytes(p + 2) & 0xff)
-          w = ((bytes(p + 3) & 0xff) << 8) | (bytes(p + 4) & 0xff)
+          h = be16(bytes, p + 1)
+          w = be16(bytes, p + 3)
           val n = bytes(p + 5) & 0xff
           if (w <= 0 || h <= 0 || w > (1 << 14) || h > (1 << 14) ||
               w.toLong * h > (64 << 20) || (n != 1 && n != 3)) return None
@@ -3551,7 +3301,7 @@ object Multimodal {
             p += 17 + total
           }
         case 0xdd => // DRI
-          restartInterval = ((bytes(p) & 0xff) << 8) | (bytes(p + 1) & 0xff)
+          restartInterval = be16(bytes, p)
         case 0xda => // SOS
           if (comps == null) return None
           val n = bytes(p) & 0xff
@@ -3788,79 +3538,18 @@ object Multimodal {
   def makeJpeg(w: Int, h: Int, seed: Long, gray: Boolean = false,
                subsample: Boolean = false,
                flatChroma: Boolean = false): Array[Byte] = {
-    val unit = if (subsample) 16 else 8
-    require(w > 0 && h > 0 && w <= 256 && h <= 256 && w % unit == 0 && h % unit == 0,
-      s"fixture dims $w x $h (must be multiples of $unit)")
-    require(!(gray && subsample), "subsampling applies to the color form")
     val out = new java.io.ByteArrayOutputStream()
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    // DQT: table 0, all ones
-    out.write(0xff); out.write(0xdb); be16(2 + 65); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    // SOF0
-    val nComp = if (gray) 1 else 3
-    out.write(0xff); out.write(0xc0); be16(8 + 3 * nComp)
-    out.write(8); be16(h); be16(w); out.write(nComp)
-    (0 until nComp).foreach { c =>
-      out.write(c + 1)
-      val samp = if (subsample && c == 0) 0x22 else 0x11
-      out.write(samp); out.write(0)
-    }
-    // DHT: DC table 0 — 12 symbols (categories 0..11) at 4 bits each
-    out.write(0xff); out.write(0xc4); be16(2 + 17 + 12); out.write(0x00)
-    (1 to 16).foreach(l => out.write(if (l == 4) 12 else 0))
-    (0 to 11).foreach(out.write)
-    // DHT: AC table 0 — single EOB symbol at 1 bit
-    out.write(0xff); out.write(0xc4); be16(2 + 17 + 1); out.write(0x10)
-    (1 to 16).foreach(l => out.write(if (l == 1) 1 else 0))
-    out.write(0x00)
-    // SOS
-    out.write(0xff); out.write(0xda); be16(6 + 2 * nComp); out.write(nComp)
-    (0 until nComp).foreach { c => out.write(c + 1); out.write(0x00) }
-    out.write(0); out.write(63); out.write(0)
+    val nComp = jpegFixtureHeader(out, 0xc0, 8, w, h, gray, subsample, Seq(0x00))
     // entropy data: per MCU, per component, per block — DC diff + EOB
     val bits = new StringBuilder
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bits.append((v >> i) & 1); i -= 1 }
-    }
-    def category(d: Int): Int = {
-      var s = 0; var m = math.abs(d)
-      while (m > 0) { s += 1; m >>= 1 }
-      s
-    }
-    def blockVal(c: Int, bx: Int, by: Int): Int =
-      if (flatChroma && c > 0) 128
-      else (((seed + bx * 31L + by * 7L + c * 53L) % 200) + 28).toInt
     val pred = new Array[Int](nComp)
-    val mcusX = w / unit
-    val mcusY = h / unit
-    for (my <- 0 until mcusY; mx <- 0 until mcusX; c <- 0 until nComp) {
-      val (bh, bv) = if (subsample && c == 0) (2, 2) else (1, 1)
-      for (by <- 0 until bv; bx <- 0 until bh) {
-        // block coords in the component plane
-        val (cbx, cby) =
-          if (subsample && c == 0) (mx * 2 + bx, my * 2 + by) else (mx, my)
-        val dc = 8 * (blockVal(c, cbx, cby) - 128)
-        val diff = dc - pred(c)
-        pred(c) = dc
-        val s = category(diff)
-        putBits(s, 4) // DC Huffman: category code == category (4-bit canonical)
-        if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-        putBits(0, 1) // AC Huffman: EOB is the single 1-bit code 0
-      }
+    jpegFixtureBlocks(w, h, nComp, subsample) { (c, bx, by) =>
+      val dc = 8 * ((if (flatChroma && c > 0) 128 else jpegFixtureValue(seed, c, bx, by)) - 128)
+      putDcDiff(bits, dc - pred(c), 4)
+      pred(c) = dc
+      putBits(bits, 0, 1) // AC Huffman: EOB is the single 1-bit code 0
     }
-    while (bits.length % 8 != 0) bits.append('1') // pad with 1s per spec
-    var i = 0
-    while (i < bits.length) {
-      var b = 0
-      var j = 0
-      while (j < 8) { b = (b << 1) | (bits.charAt(i + j) - '0'); j += 1 }
-      out.write(b)
-      if (b == 0xff) out.write(0x00) // byte stuffing
-      i += 8
-    }
+    jpegScan(out, 0 until nComp, 0, 63, 0, bits)
     out.write(0xff); out.write(0xd9) // EOI
     out.toByteArray
   }
@@ -3877,77 +3566,17 @@ object Multimodal {
     */
   def makeJpeg12(w: Int, h: Int, seed: Long, gray: Boolean = false,
                  subsample: Boolean = false): Array[Byte] = {
-    val unit = if (subsample) 16 else 8
-    require(w > 0 && h > 0 && w <= 256 && h <= 256 && w % unit == 0 && h % unit == 0,
-      s"fixture dims $w x $h (must be multiples of $unit)")
-    require(!(gray && subsample), "subsampling applies to the color form")
     val out = new java.io.ByteArrayOutputStream()
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    // DQT: table 0, all ones, SIXTEEN-bit entries (pq=1)
-    out.write(0xff); out.write(0xdb); be16(2 + 1 + 128); out.write(0x10)
-    (0 until 64).foreach { _ => out.write(0); out.write(1) }
-    // SOF1 (extended sequential), precision 12
-    val nComp = if (gray) 1 else 3
-    out.write(0xff); out.write(0xc1); be16(8 + 3 * nComp)
-    out.write(12); be16(h); be16(w); out.write(nComp)
-    (0 until nComp).foreach { c =>
-      out.write(c + 1)
-      val samp = if (subsample && c == 0) 0x22 else 0x11
-      out.write(samp); out.write(0)
-    }
-    // DHT: DC table 0 — 16 symbols (categories 0..15) at 5 bits each
-    out.write(0xff); out.write(0xc4); be16(2 + 17 + 16); out.write(0x00)
-    (1 to 16).foreach(l => out.write(if (l == 5) 16 else 0))
-    (0 to 15).foreach(out.write)
-    // DHT: AC table 0 — single EOB symbol at 1 bit
-    out.write(0xff); out.write(0xc4); be16(2 + 17 + 1); out.write(0x10)
-    (1 to 16).foreach(l => out.write(if (l == 1) 1 else 0))
-    out.write(0x00)
-    // SOS
-    out.write(0xff); out.write(0xda); be16(6 + 2 * nComp); out.write(nComp)
-    (0 until nComp).foreach { c => out.write(c + 1); out.write(0x00) }
-    out.write(0); out.write(63); out.write(0)
-    // entropy data: per MCU, per component, per block — DC diff + EOB
+    val nComp = jpegFixtureHeader(out, 0xc1, 12, w, h, gray, subsample, Seq(0x00))
     val bits = new StringBuilder
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bits.append((v >> i) & 1); i -= 1 }
-    }
-    def category(d: Int): Int = {
-      var s = 0; var m = math.abs(d)
-      while (m > 0) { s += 1; m >>= 1 }
-      s
-    }
-    def blockVal(c: Int, bx: Int, by: Int): Int =
-      16 * (((seed + bx * 31L + by * 7L + c * 53L) % 200) + 28).toInt
     val pred = new Array[Int](nComp)
-    val mcusX = w / unit
-    val mcusY = h / unit
-    for (my <- 0 until mcusY; mx <- 0 until mcusX; c <- 0 until nComp) {
-      val (bh, bv) = if (subsample && c == 0) (2, 2) else (1, 1)
-      for (by <- 0 until bv; bx <- 0 until bh) {
-        val (cbx, cby) =
-          if (subsample && c == 0) (mx * 2 + bx, my * 2 + by) else (mx, my)
-        val dc = 8 * (blockVal(c, cbx, cby) - 2048) // 12-bit level shift
-        val diff = dc - pred(c)
-        pred(c) = dc
-        val s = category(diff)
-        putBits(s, 5) // DC Huffman: category code == category (5-bit canonical)
-        if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-        putBits(0, 1) // AC Huffman: EOB is the single 1-bit code 0
-      }
+    jpegFixtureBlocks(w, h, nComp, subsample) { (c, bx, by) =>
+      val dc = 8 * (16 * jpegFixtureValue(seed, c, bx, by) - 2048) // 12-bit level shift
+      putDcDiff(bits, dc - pred(c), 5)
+      pred(c) = dc
+      putBits(bits, 0, 1) // AC Huffman: EOB is the single 1-bit code 0
     }
-    while (bits.length % 8 != 0) bits.append('1') // pad with 1s per spec
-    var i = 0
-    while (i < bits.length) {
-      var b = 0
-      var j = 0
-      while (j < 8) { b = (b << 1) | (bits.charAt(i + j) - '0'); j += 1 }
-      out.write(b)
-      if (b == 0xff) out.write(0x00) // byte stuffing
-      i += 8
-    }
+    jpegScan(out, 0 until nComp, 0, 63, 0, bits)
     out.write(0xff); out.write(0xd9) // EOI
     out.toByteArray
   }
@@ -3966,89 +3595,25 @@ object Multimodal {
     */
   def makeJpegProgressive(w: Int, h: Int, seed: Long, gray: Boolean = false,
                           subsample: Boolean = false): Array[Byte] = {
-    val unit = if (subsample) 16 else 8
-    require(w > 0 && h > 0 && w <= 256 && h <= 256 && w % unit == 0 && h % unit == 0,
-      s"fixture dims $w x $h (must be multiples of $unit)")
-    require(!(gray && subsample), "subsampling applies to the color form")
     val out = new java.io.ByteArrayOutputStream()
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb); be16(2 + 65); out.write(0x00) // DQT, all ones
-    (0 until 64).foreach(_ => out.write(1))
-    val nComp = if (gray) 1 else 3
-    out.write(0xff); out.write(0xc2); be16(8 + 3 * nComp) // SOF2
-    out.write(8); be16(h); be16(w); out.write(nComp)
-    (0 until nComp).foreach { c =>
-      out.write(c + 1)
-      out.write(if (subsample && c == 0) 0x22 else 0x11); out.write(0)
-    }
-    // DHT DC 0: categories 0..11 at 4 bits (as makeJpeg)
-    out.write(0xff); out.write(0xc4); be16(2 + 17 + 12); out.write(0x00)
-    (1 to 16).foreach(l => out.write(if (l == 4) 12 else 0))
-    (0 to 11).foreach(out.write)
-    // DHT AC 0: EOB0 (0x00) and EOB1 (0x10), both at 2 bits
-    out.write(0xff); out.write(0xc4); be16(2 + 17 + 2); out.write(0x10)
-    (1 to 16).foreach(l => out.write(if (l == 2) 2 else 0))
-    out.write(0x00); out.write(0x10)
-
-    def blockVal(c: Int, bx: Int, by: Int): Int =
-      (((seed + bx * 31L + by * 7L + c * 53L) % 200) + 28).toInt
-    def category(d: Int): Int = {
-      var s = 0; var m = math.abs(d)
-      while (m > 0) { s += 1; m >>= 1 }
-      s
-    }
-    def emitScan(comps: Seq[Int], ss: Int, se: Int, ahal: Int,
-                 bits: StringBuilder): Unit = {
-      out.write(0xff); out.write(0xda); be16(6 + 2 * comps.length)
-      out.write(comps.length)
-      comps.foreach { c => out.write(c + 1); out.write(0x00) }
-      out.write(ss); out.write(se); out.write(ahal)
-      while (bits.length % 8 != 0) bits.append('1')
-      var i = 0
-      while (i < bits.length) {
-        var b = 0
-        var j = 0
-        while (j < 8) { b = (b << 1) | (bits.charAt(i + j) - '0'); j += 1 }
-        out.write(b)
-        if (b == 0xff) out.write(0x00)
-        i += 8
-      }
-    }
-    def putBits(bits: StringBuilder, v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bits.append((v >> i) & 1); i -= 1 }
-    }
-    val mcusX = w / unit
-    val mcusY = h / unit
-    def forEachBlock(f: (Int, Int, Int) => Unit): Unit =
-      for (my <- 0 until mcusY; mx <- 0 until mcusX; c <- 0 until nComp) {
-        val (bh, bv) = if (subsample && c == 0) (2, 2) else (1, 1)
-        for (by <- 0 until bv; bx <- 0 until bh) {
-          val (cbx, cby) =
-            if (subsample && c == 0) (mx * 2 + bx, my * 2 + by) else (mx, my)
-          f(c, cbx, cby)
-        }
-      }
+    // AC table: EOB0 (0x00) and EOB1 (0x10), both at 2 bits
+    val nComp = jpegFixtureHeader(out, 0xc2, 8, w, h, gray, subsample, Seq(0x00, 0x10))
     // scan 1: DC first, Al=1 — diffs of dc>>1 in interleaved MCU order
     locally {
       val bits = new StringBuilder
       val pred = new Array[Int](nComp)
-      forEachBlock { (c, cbx, cby) =>
-        val approx = (8 * (blockVal(c, cbx, cby) - 128)) >> 1
-        val diff = approx - pred(c)
+      jpegFixtureBlocks(w, h, nComp, subsample) { (c, bx, by) =>
+        val approx = (8 * (jpegFixtureValue(seed, c, bx, by) - 128)) >> 1
+        putDcDiff(bits, approx - pred(c), 4)
         pred(c) = approx
-        val s = category(diff)
-        putBits(bits, s, 4)
-        if (s > 0) putBits(bits, if (diff >= 0) diff else diff + (1 << s) - 1, s)
       }
-      emitScan(0 until nComp, 0, 0, 0x01, bits)
+      jpegScan(out, 0 until nComp, 0, 0, 0x01, bits)
     }
     // scan 2: DC refinement, Ah=1 Al=0 — bit 0 of every dc (always 0)
     locally {
       val bits = new StringBuilder
-      forEachBlock { (_, _, _) => bits.append('0') }
-      emitScan(0 until nComp, 0, 0, 0x10, bits)
+      jpegFixtureBlocks(w, h, nComp, subsample) { (_, _, _) => bits.append('0') }
+      jpegScan(out, 0 until nComp, 0, 0, 0x10, bits)
     }
     // per-component AC-first scans: every AC zero, so pure EOB-runs —
     // one EOB1(appended bit 1) covering 3 blocks when possible, then
@@ -4063,10 +3628,102 @@ object Multimodal {
       var b = 0
       if (nb >= 3) { putBits(bits, 1, 2); bits.append('1'); b = 3 } // EOB1, run 3
       while (b < nb) { putBits(bits, 0, 2); b += 1 } // EOB0 per block
-      emitScan(Seq(c), 1, 63, 0x00, bits)
+      jpegScan(out, Seq(c), 1, 63, 0x00, bits)
     }
     out.write(0xff); out.write(0xd9) // EOI
     out.toByteArray
+  }
+
+  /** The JPEG fixture law: block (bx, by) of component c is flat at
+    * `((seed + bx·31 + by·7 + c·53) mod 200) + 28`.
+    */
+  private def jpegFixtureValue(seed: Long, c: Int, bx: Int, by: Int): Int =
+    (((seed + bx * 31L + by * 7L + c * 53L) % 200) + 28).toInt
+
+  /** SOI, then the tables and frame every DC-only JPEG fixture shares:
+    * one all-ones DQT (16-bit entries at precision 12), the `sof` frame
+    * (YCbCr 4:2:0 when `subsample`, else 1×1 sampling), a DC table whose
+    * code for category k is k itself at 4 bits (5 bits and 16
+    * categories at precision 12), and an AC table holding `acSymbols`,
+    * all at `acSymbols.length` bits. Returns the component count.
+    */
+  private def jpegFixtureHeader(out: java.io.ByteArrayOutputStream, sof: Int, precision: Int,
+                                w: Int, h: Int, gray: Boolean, subsample: Boolean,
+                                acSymbols: Seq[Int]): Int = {
+    val unit = if (subsample) 16 else 8
+    require(w > 0 && h > 0 && w <= 256 && h <= 256 && w % unit == 0 && h % unit == 0,
+      s"fixture dims $w x $h (must be multiples of $unit)")
+    require(!(gray && subsample), "subsampling applies to the color form")
+    val wide = precision == 12
+    out.write(0xff); out.write(0xd8) // SOI
+    // DQT: table 0, all ones (pq=1: sixteen-bit entries)
+    out.write(0xff); out.write(0xdb)
+    if (wide) { be16(out, 2 + 1 + 128); out.write(0x10) } else { be16(out, 2 + 65); out.write(0x00) }
+    (0 until 64).foreach(_ => if (wide) be16(out, 1) else out.write(1))
+    val nComp = if (gray) 1 else 3
+    out.write(0xff); out.write(sof); be16(out, 8 + 3 * nComp)
+    out.write(precision); be16(out, h); be16(out, w); out.write(nComp)
+    (0 until nComp).foreach { c =>
+      out.write(c + 1)
+      out.write(if (subsample && c == 0) 0x22 else 0x11); out.write(0)
+    }
+    val (dcBits, nDc) = if (wide) (5, 16) else (4, 12)
+    out.write(0xff); out.write(0xc4); be16(out, 2 + 17 + nDc); out.write(0x00)
+    (1 to 16).foreach(l => out.write(if (l == dcBits) nDc else 0))
+    (0 until nDc).foreach(out.write)
+    out.write(0xff); out.write(0xc4); be16(out, 2 + 17 + acSymbols.length); out.write(0x10)
+    (1 to 16).foreach(l => out.write(if (l == acSymbols.length) acSymbols.length else 0))
+    acSymbols.foreach(out.write)
+    nComp
+  }
+
+  /** `f(c, bx, by)` over a fixture's blocks in interleaved MCU order —
+    * Y as 2×2 blocks per MCU when `subsample`, every other component
+    * one block per MCU.
+    */
+  private def jpegFixtureBlocks(w: Int, h: Int, nComp: Int, subsample: Boolean)(
+      f: (Int, Int, Int) => Unit): Unit = {
+    val unit = if (subsample) 16 else 8
+    for (my <- 0 until h / unit; mx <- 0 until w / unit; c <- 0 until nComp) {
+      val n = if (subsample && c == 0) 2 else 1
+      for (by <- 0 until n; bx <- 0 until n) f(c, mx * n + bx, my * n + by)
+    }
+  }
+
+  private def putBits(bits: StringBuilder, v: Int, n: Int): Unit = {
+    var i = n - 1
+    while (i >= 0) { bits.append((v >> i) & 1); i -= 1 }
+  }
+
+  /** A DC difference: its category at `codeBits` (the fixture tables'
+    * code for category k is k), then the category's extra bits.
+    */
+  private def putDcDiff(bits: StringBuilder, diff: Int, codeBits: Int): Unit = {
+    var s = 0; var m = math.abs(diff)
+    while (m > 0) { s += 1; m >>= 1 }
+    putBits(bits, s, codeBits)
+    if (s > 0) putBits(bits, if (diff >= 0) diff else diff + (1 << s) - 1, s)
+  }
+
+  /** An SOS over `comps` (table selectors 0), then `bits` padded with
+    * 1s to a byte boundary and byte-stuffed.
+    */
+  private def jpegScan(out: java.io.ByteArrayOutputStream, comps: Seq[Int], ss: Int, se: Int,
+                       ahal: Int, bits: StringBuilder): Unit = {
+    out.write(0xff); out.write(0xda); be16(out, 6 + 2 * comps.length)
+    out.write(comps.length)
+    comps.foreach { c => out.write(c + 1); out.write(0x00) }
+    out.write(ss); out.write(se); out.write(ahal)
+    while (bits.length % 8 != 0) bits.append('1')
+    var i = 0
+    while (i < bits.length) {
+      var b = 0
+      var j = 0
+      while (j < 8) { b = (b << 1) | (bits.charAt(i + j) - '0'); j += 1 }
+      out.write(b)
+      if (b == 0xff) out.write(0x00) // byte stuffing
+      i += 8
+    }
   }
 
   // ---- real decoder: TIFF (baseline subset, public spec) ---------------
@@ -4346,20 +4003,25 @@ object Multimodal {
     * plane) — each crossing freely with every codec above. None
     * outside the subset.
     */
+  /** Reads in a TIFF structure's byte order (`little` for "II", big-
+    * endian for "MM"). Out of range they answer -1 rather than throw:
+    * every IFD walk tests its offsets against that answer.
+    */
+  private final class TiffOrder(b: Array[Byte], little: Boolean) {
+    def u16(off: Int): Int =
+      if (off < 0 || off > b.length - 2) -1 else if (little) le16(b, off) else be16(b, off)
+    def u32(off: Int): Long =
+      if (off < 0 || off > b.length - 4) -1L else if (little) u32le(b, off) else u32be(b, off)
+  }
+
   private def tiffDecode(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
     if (bytes.length < 8) return None
     val little =
       if (bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte) true
       else if (bytes(0) == 'M'.toByte && bytes(1) == 'M'.toByte) false
       else return None
-    def u16(off: Int): Int =
-      if (off < 0 || off + 2 > bytes.length) -1
-      else if (little) le16(bytes, off)
-      else ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-    def u32(off: Int): Long =
-      if (off < 0 || off + 4 > bytes.length) -1L
-      else if (little) le32(bytes, off) & 0xffffffffL
-      else be32(bytes, off) & 0xffffffffL
+    val order = new TiffOrder(bytes, little)
+    import order.{u16, u32}
     if (u16(2) != 42) return None
     val ifdOff = u32(4)
     if (ifdOff < 8 || ifdOff + 2 > bytes.length) return None
@@ -4483,15 +4145,10 @@ object Multimodal {
             buf(base + i) = (buf(base + i) + buf(base + i - sppU)).toByte
           else {
             val o = base + i * 2; val p = o - sppU * 2
-            val prev =
-              if (little) (buf(p) & 0xff) | ((buf(p + 1) & 0xff) << 8)
-              else ((buf(p) & 0xff) << 8) | (buf(p + 1) & 0xff)
-            val cur =
-              if (little) (buf(o) & 0xff) | ((buf(o + 1) & 0xff) << 8)
-              else ((buf(o) & 0xff) << 8) | (buf(o + 1) & 0xff)
-            val v = (cur + prev) & 0xffff
-            if (little) { buf(o) = v.toByte; buf(o + 1) = (v >> 8).toByte }
-            else { buf(o) = (v >> 8).toByte; buf(o + 1) = v.toByte }
+            val prev = if (little) le16(buf, p) else be16(buf, p)
+            val cur = if (little) le16(buf, o) else be16(buf, o)
+            val v = cur + prev
+            if (little) putLe16(buf, o, v) else putBe16(buf, o, v)
           }
           i += 1
         }
@@ -4690,14 +4347,8 @@ object Multimodal {
       if (bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte) true
       else if (bytes(0) == 'M'.toByte && bytes(1) == 'M'.toByte) false
       else return None
-    def u16(off: Int): Int =
-      if (off < 0 || off + 2 > bytes.length) -1
-      else if (little) le16(bytes, off)
-      else ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-    def u32(off: Int): Long =
-      if (off < 0 || off + 4 > bytes.length) -1L
-      else if (little) le32(bytes, off) & 0xffffffffL
-      else be32(bytes, off) & 0xffffffffL
+    val order = new TiffOrder(bytes, little)
+    import order.{u16, u32}
     if (u16(2) != 42) return None
     var off = u32(4)
     var pages = 0
@@ -4724,16 +4375,9 @@ object Multimodal {
     val dataLen = w * h
     val perPage = dataLen + 2 + 9 * 12 + 4 // strip + IFD
     val out = new Array[Byte](8 + pages * perPage)
-    def putU16(off: Int, v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-    }
-    def putU32(off: Int, v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-      out(off + 2) = (v >> 16).toByte; out(off + 3) = (v >> 24).toByte
-    }
-    out(0) = 'I'; out(1) = 'I'
-    putU16(2, 42)
-    putU32(4, 8 + dataLen) // first IFD, after page 0's strip
+    putTag(out, 0, "II")
+    putLe16(out, 2, 42)
+    putLe32(out, 4, 8 + dataLen) // first IFD, after page 0's strip
     var p = 0
     while (p < pages) {
       val base = 8 + p * perPage
@@ -4747,12 +4391,12 @@ object Multimodal {
         r += 1
       }
       val ifd = base + dataLen
-      putU16(ifd, 9)
+      putLe16(out, ifd, 9)
       var e = 0
       def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
         val off = ifd + 2 + e * 12
-        putU16(off, tag); putU16(off + 2, typ); putU32(off + 4, count)
-        if (typ == 3) putU16(off + 8, value) else putU32(off + 8, value)
+        putLe16(out, off, tag); putLe16(out, off + 2, typ); putLe32(out, off + 4, count)
+        if (typ == 3) putLe16(out, off + 8, value) else putLe32(out, off + 8, value)
         e += 1
       }
       entry(256, 3, 1, w)
@@ -4765,7 +4409,7 @@ object Multimodal {
       entry(278, 3, 1, h)
       entry(279, 4, 1, dataLen)
       // next-IFD pointer: the following page's IFD, 0 on the last
-      putU32(ifd + 2 + 9 * 12,
+      putLe32(out, ifd + 2 + 9 * 12,
         if (p + 1 < pages) 8 + (p + 1) * perPage + dataLen else 0)
       p += 1
     }
@@ -4833,8 +4477,8 @@ object Multimodal {
           val v = seg(r)(i)
           val o = (r * rowSamples + i) * bps
           if (bps == 1) raw(o) = v.toByte
-          else if (bigEndian) { raw(o) = (v >> 8).toByte; raw(o + 1) = v.toByte }
-          else { raw(o) = v.toByte; raw(o + 1) = (v >> 8).toByte }
+          else if (bigEndian) putBe16(raw, o, v)
+          else putLe16(raw, o, v)
           i += 1
         }
         r += 1
@@ -4874,7 +4518,6 @@ object Multimodal {
           serialize(seg, w)
         }).toArray
       }
-    val dataLen = segments.map(_.length).sum
     val segOffs = segments.scanLeft(8)(_ + _.length).init
     // IFD entries in ascending-tag order (spec): (tag, type, values)
     val ents = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Array[Int])]
@@ -4895,51 +4538,60 @@ object Multimodal {
       ents += ((324, 4, segOffs))
       ents += ((325, 4, segments.map(_.length)))
     }
-    val ifdOff = 8 + dataLen
+    tiffFile(segments.toSeq, ents.toSeq, bigEndian)
+  }
+
+  /** One single-IFD TIFF file (fixture side): the 8-byte header, the
+    * segments back to back from offset 8, then IFD0 holding `ents` —
+    * (tag, type, values) in ascending-tag order, type 3 SHORT, 4 LONG
+    * or 7 UNDEFINED (one byte per value) — with every value array that
+    * does not fit the entry's 4-byte field stored after the IFD. The
+    * next-IFD pointer stays 0.
+    */
+  private def tiffFile(segments: Seq[Array[Byte]], ents: Seq[(Int, Int, Array[Int])],
+                       bigEndian: Boolean): Array[Byte] = {
+    def valueSize(typ: Int): Int = typ match { case 3 => 2; case 7 => 1; case _ => 4 }
+    val ifdOff = 8 + segments.map(_.length).sum
     val extraOff = ifdOff + 2 + ents.length * 12 + 4
-    def entSize(e: (Int, Int, Array[Int])): Int =
-      e._3.length * (if (e._2 == 3) 2 else 4)
-    val extraLen = ents.map(e => if (entSize(e) > 4) entSize(e) else 0).sum
+    val extraLen = ents.map { case (_, typ, vals) =>
+      val n = vals.length * valueSize(typ)
+      if (n > 4) n else 0
+    }.sum
     val out = new Array[Byte](extraOff + extraLen)
-    def putU16(off: Int, v: Int): Unit =
-      if (bigEndian) { out(off) = (v >> 8).toByte; out(off + 1) = v.toByte }
-      else { out(off) = v.toByte; out(off + 1) = (v >> 8).toByte }
-    def putU32(off: Int, v: Int): Unit =
-      if (bigEndian) {
-        out(off) = (v >> 24).toByte; out(off + 1) = (v >> 16).toByte
-        out(off + 2) = (v >> 8).toByte; out(off + 3) = v.toByte
-      } else {
-        out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-        out(off + 2) = (v >> 16).toByte; out(off + 3) = (v >> 24).toByte
-      }
-    out(0) = (if (bigEndian) 'M' else 'I').toByte
-    out(1) = out(0)
-    putU16(2, 42)
-    putU32(4, ifdOff)
+    def putShort(off: Int, v: Int): Unit =
+      if (bigEndian) putBe16(out, off, v) else putLe16(out, off, v)
+    def putLong(off: Int, v: Int): Unit =
+      if (bigEndian) putBe32(out, off, v) else putLe32(out, off, v)
+    putTag(out, 0, if (bigEndian) "MM" else "II")
+    putShort(2, 42)
+    putLong(4, ifdOff)
     var dataOff = 8
-    segments.foreach { s =>
-      System.arraycopy(s, 0, out, dataOff, s.length)
-      dataOff += s.length
+    segments.foreach { seg =>
+      System.arraycopy(seg, 0, out, dataOff, seg.length)
+      dataOff += seg.length
     }
-    putU16(ifdOff, ents.length)
+    putShort(ifdOff, ents.length)
     var extra = extraOff
     var e = 0
     while (e < ents.length) {
       val (tag, typ, vals) = ents(e)
       val off = ifdOff + 2 + e * 12
-      putU16(off, tag); putU16(off + 2, typ); putU32(off + 4, vals.length)
-      val vsz = if (typ == 3) 2 else 4
+      putShort(off, tag); putShort(off + 2, typ); putLong(off + 4, vals.length)
+      val vsz = valueSize(typ)
       val base =
         if (vals.length * vsz <= 4) off + 8
-        else { putU32(off + 8, extra); val b = extra; extra += vals.length * vsz; b }
+        else { putLong(off + 8, extra); val b = extra; extra += vals.length * vsz; b }
       var i = 0
       while (i < vals.length) {
-        if (typ == 3) putU16(base + 2 * i, vals(i)) else putU32(base + 4 * i, vals(i))
+        typ match {
+          case 3 => putShort(base + 2 * i, vals(i))
+          case 7 => out(base + i) = vals(i).toByte // raw bytes, order-free
+          case _ => putLong(base + 4 * i, vals(i))
+        }
         i += 1
       }
       e += 1
     }
-    // next-IFD pointer stays 0 (array is zero-initialized)
     out
   }
 
@@ -4965,7 +4617,7 @@ object Multimodal {
         rest.write(jpeg, off, jpeg.length - off)
         done = true
       } else {
-        val len = ((jpeg(off + 2) & 0xff) << 8) | (jpeg(off + 3) & 0xff)
+        val len = be16(jpeg, off + 2)
         val sink = if (m == 0xdb || m == 0xc4) tables else rest
         sink.write(jpeg, off, 2 + len)
         off += 2 + len
@@ -5004,7 +4656,6 @@ object Multimodal {
         (split(0)._1, split.map(_._2))
       }
     val spp = if (color) 3 else 1
-    val dataLen = strips.map(_.length).sum
     val segOffs = strips.scanLeft(8)(_ + _.length).init
     // IFD entries in ascending-tag order: (tag, type, values) — type 7
     // (UNDEFINED) carries the raw JPEGTables bytes
@@ -5019,55 +4670,7 @@ object Multimodal {
     ents += ((278, 3, Array(rps)))
     ents += ((279, 4, strips.map(_.length)))
     if (sharedTables) ents += ((347, 7, jpegTables.map(_.toInt & 0xff)))
-    val ifdOff = 8 + dataLen
-    val extraOff = ifdOff + 2 + ents.length * 12 + 4
-    def entSize(e: (Int, Int, Array[Int])): Int =
-      e._3.length * (e._2 match { case 3 => 2; case 7 => 1; case _ => 4 })
-    val extraLen = ents.map(e => if (entSize(e) > 4) entSize(e) else 0).sum
-    val out = new Array[Byte](extraOff + extraLen)
-    def putU16(off: Int, v: Int): Unit =
-      if (bigEndian) { out(off) = (v >> 8).toByte; out(off + 1) = v.toByte }
-      else { out(off) = v.toByte; out(off + 1) = (v >> 8).toByte }
-    def putU32(off: Int, v: Int): Unit =
-      if (bigEndian) {
-        out(off) = (v >> 24).toByte; out(off + 1) = (v >> 16).toByte
-        out(off + 2) = (v >> 8).toByte; out(off + 3) = v.toByte
-      } else {
-        out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-        out(off + 2) = (v >> 16).toByte; out(off + 3) = (v >> 24).toByte
-      }
-    out(0) = (if (bigEndian) 'M' else 'I').toByte
-    out(1) = out(0)
-    putU16(2, 42)
-    putU32(4, ifdOff)
-    var dataOff = 8
-    strips.foreach { st =>
-      System.arraycopy(st, 0, out, dataOff, st.length)
-      dataOff += st.length
-    }
-    putU16(ifdOff, ents.length)
-    var extra = extraOff
-    var e = 0
-    while (e < ents.length) {
-      val (tag, typ, vals) = ents(e)
-      val off = ifdOff + 2 + e * 12
-      putU16(off, tag); putU16(off + 2, typ); putU32(off + 4, vals.length)
-      val vsz = typ match { case 3 => 2; case 7 => 1; case _ => 4 }
-      val base =
-        if (vals.length * vsz <= 4) off + 8
-        else { putU32(off + 8, extra); val b = extra; extra += vals.length * vsz; b }
-      var i = 0
-      while (i < vals.length) {
-        typ match {
-          case 3 => putU16(base + 2 * i, vals(i))
-          case 7 => out(base + i) = vals(i).toByte // raw bytes, order-free
-          case _ => putU32(base + 4 * i, vals(i))
-        }
-        i += 1
-      }
-      e += 1
-    }
-    out
+    tiffFile(strips.toSeq, ents.toSeq, bigEndian)
   }
 
   /** Decode dispatch: real parse for the formats a pure-JVM reader can
@@ -5170,15 +4773,11 @@ object Multimodal {
   }
 
   private def writeBmpHeader(out: Array[Byte], w: Int, h: Int, stride: Int): Unit = {
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    out(0) = 'B'.toByte; out(1) = 'M'.toByte
-    putLe32(2, 54 + stride * h); putLe32(10, 54)
-    putLe32(14, 40); putLe32(18, w); putLe32(22, h)
+    putTag(out, 0, "BM")
+    putLe32(out, 2, 54 + stride * h); putLe32(out, 10, 54)
+    putLe32(out, 14, 40); putLe32(out, 18, w); putLe32(out, 22, h)
     out(26) = 1; out(28) = 24
-    putLe32(34, stride * h)
+    putLe32(out, 34, stride * h)
   }
 
   /** Fixture/test writer for the one de-stubbed format: a 24-bpp
@@ -5298,18 +4897,14 @@ object Multimodal {
     val palLen = 4 * nColors
     val pixelOff = 54 + palLen
     val out = new Array[Byte](pixelOff + pixelData.length)
-    def putLe32(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-      out(off + 2) = ((v >> 16) & 0xff).toByte; out(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    out(0) = 'B'.toByte; out(1) = 'M'.toByte
-    putLe32(2, out.length); putLe32(10, pixelOff)
-    putLe32(14, 40); putLe32(18, w)
-    putLe32(22, if (topDown) -h else h)
+    putTag(out, 0, "BM")
+    putLe32(out, 2, out.length); putLe32(out, 10, pixelOff)
+    putLe32(out, 14, 40); putLe32(out, 18, w)
+    putLe32(out, 22, if (topDown) -h else h)
     out(26) = 1; out(28) = bpp.toByte
-    putLe32(30, if (rle) 1 else 0)
-    putLe32(34, pixelData.length)
-    if (nColors > 0) putLe32(46, 0) // biClrUsed 0 → 256
+    putLe32(out, 30, if (rle) 1 else 0)
+    putLe32(out, 34, pixelData.length)
+    // biClrUsed stays 0: 256 colors
     var j = 0
     while (j < nColors) { // BGRA quads, the makeIco palette law
       out(54 + 4 * j) = ((seed + j * 11L) % 256).toByte
@@ -5542,11 +5137,7 @@ object Multimodal {
       val xorStride = ((mw * mbpp + 31) / 32) * 4
       val andStride = ((mw + 31) / 32) * 4
       val out = new Array[Byte](40 + nColors * 4 + mh * (xorStride + andStride))
-      def putLe32(off: Int, v: Int): Unit = {
-        out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-        out(off + 2) = (v >> 16).toByte; out(off + 3) = (v >> 24).toByte
-      }
-      putLe32(0, 40); putLe32(4, mw); putLe32(8, 2 * mh)
+      putLe32(out, 0, 40); putLe32(out, 4, mw); putLe32(out, 8, 2 * mh)
       out(12) = 1 // planes
       out(14) = mbpp.toByte
       // compression, sizes, biClrUsed stay 0 (0 colors → 2^bpp)
@@ -5603,15 +5194,10 @@ object Multimodal {
       val base = 6 + 16 * e
       out(base) = (mw % 256).toByte // 256 encodes as 0
       out(base + 1) = (mh % 256).toByte
-      out(base + 2) = (if (mbpp == 8) 0 else 0).toByte
       out(base + 4) = 1 // planes
       out(base + 6) = mbpp.toByte
-      out(base + 8) = data.length.toByte
-      out(base + 9) = (data.length >> 8).toByte
-      out(base + 10) = (data.length >> 16).toByte
-      out(base + 12) = off.toByte
-      out(base + 13) = (off >> 8).toByte
-      out(base + 14) = (off >> 16).toByte
+      putLe32(out, base + 8, data.length)
+      putLe32(out, base + 12, off)
       System.arraycopy(data, 0, out, off, data.length)
       off += data.length
       e += 1
@@ -5783,17 +5369,14 @@ object Multimodal {
       case (true, true) => "P3"; case (false, true) => "P2"
     }
     val sb = new java.io.ByteArrayOutputStream()
-    sb.write(magic.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    sb.write('\n')
-    sb.write("# graft fixture\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    sb.write(s"$w $h\n255\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    ascii(sb, s"$magic\n# graft fixture\n$w $h\n255\n")
     var r = 0
     while (r < h) {
       var k = 0
       while (k < w * spp) {
         val v = ((seed + r * 31L + k * 7L) % 256).toInt
         if (asciiForm) {
-          sb.write(v.toString.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+          ascii(sb, v.toString)
           sb.write(if (k == w * spp - 1) '\n' else ' ')
         } else sb.write(v)
         k += 1
@@ -5937,12 +5520,8 @@ object Multimodal {
   def makeQoi(w: Int, h: Int, seed: Long): Array[Byte] = {
     require(w > 0 && h > 0 && w <= 512 && h <= 512, s"fixture dims $w x $h")
     val out = new java.io.ByteArrayOutputStream()
-    out.write('q'); out.write('o'); out.write('i'); out.write('f')
-    def be(v: Int): Unit = {
-      out.write((v >> 24) & 0xff); out.write((v >> 16) & 0xff)
-      out.write((v >> 8) & 0xff); out.write(v & 0xff)
-    }
-    be(w); be(h)
+    ascii(out, "qoif")
+    be32(out, w); be32(out, h)
     out.write(3); out.write(0) // RGB, sRGB
     val index = new Array[Int](64)
     var pr = 0; var pg = 0; var pb = 0
@@ -6692,16 +6271,20 @@ object Multimodal {
       .toDF(idCol, "afp")
   }
 
+  /** The `n` ASCII chars at `off`, or "" when they do not fit — the
+    * sniffers' magic read.
+    */
+  private def asciiAt(bytes: Array[Byte], off: Int, n: Int): String =
+    if (off + n <= bytes.length)
+      new String(bytes, off, n, java.nio.charset.StandardCharsets.US_ASCII)
+    else ""
+
   /** Container-level audio format sniff — classification only, no
     * decode: WAV format tags, the fLaC/ID3/MP3-sync/OggS/ADTS magics.
     * The measurement key for [[audioCoverage]]: which formats a corpus
     * actually carries, independent of whether we can decode them.
     */
   private[graft] def audioFormatOf(bytes: Array[Byte]): String = {
-    def ascii(off: Int, n: Int): String =
-      if (off + n <= bytes.length)
-        new String(bytes, off, n, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
     wavAnyHeader(bytes) match {
       case Some((1, _, _, 16, _, _, _)) => "wav_pcm16"
       case Some((1, _, _, 8, _, _, _)) => "wav_pcm8"
@@ -6714,12 +6297,12 @@ object Multimodal {
       case Some((3, _, _, 64, _, _, _)) => "wav_float64" // r17 s2
       case Some(_) => "wav_other"
       case None =>
-        if (ascii(0, 4) == "fLaC") "flac"
-        else if (ascii(0, 4) == ".snd") "au"                        // r17
-        else if (ascii(0, 4) == "FORM" && ascii(8, 4) == "AIFF") "aiff" // r17
-        else if (ascii(0, 4) == "FORM" && ascii(8, 4) == "AIFC") "aifc" // compressed: boundary
-        else if (ascii(0, 4) == "OggS") "ogg"
-        else if (ascii(0, 3) == "ID3") "mp3"
+        if (asciiAt(bytes, 0, 4) == "fLaC") "flac"
+        else if (asciiAt(bytes, 0, 4) == ".snd") "au"                        // r17
+        else if (asciiAt(bytes, 0, 4) == "FORM" && asciiAt(bytes, 8, 4) == "AIFF") "aiff" // r17
+        else if (asciiAt(bytes, 0, 4) == "FORM" && asciiAt(bytes, 8, 4) == "AIFC") "aifc" // compressed: boundary
+        else if (asciiAt(bytes, 0, 4) == "OggS") "ogg"
+        else if (asciiAt(bytes, 0, 3) == "ID3") "mp3"
         else if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff &&
                  (bytes(1) & 0xf6) == 0xf0) "aac_adts" // layer 00
         // bare MPEG frame sync: layer bits 01 = Layer III, i.e. a raw
@@ -6764,24 +6347,18 @@ object Multimodal {
     * exactly the boundary the measurement exists to expose.
     */
   private[graft] def imageFormatOf(bytes: Array[Byte]): String = {
-    def ascii(off: Int, n: Int): String =
-      if (off + n <= bytes.length)
-        new String(bytes, off, n, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
     if (bytes.length >= 2 && bytes(0) == 'B'.toByte && bytes(1) == 'M'.toByte) "bmp"
-    else if (bytes.length >= 4 && (bytes(0) & 0xff) == 0x89 && ascii(1, 3) == "PNG") "png"
-    else if (ascii(0, 6) == "GIF87a" || ascii(0, 6) == "GIF89a") "gif"
+    else if (bytes.length >= 4 && (bytes(0) & 0xff) == 0x89 && asciiAt(bytes, 1, 3) == "PNG") "png"
+    else if (asciiAt(bytes, 0, 6) == "GIF87a" || asciiAt(bytes, 0, 6) == "GIF89a") "gif"
     else if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xff &&
              (bytes(1) & 0xff) == 0xd8 && (bytes(2) & 0xff) == 0xff) "jpeg"
-    else if (ascii(0, 4) == "RIFF" && ascii(8, 4) == "WEBP") "webp"
-    else if (bytes.length >= 4 && (ascii(0, 2) == "II" || ascii(0, 2) == "MM") && {
-      val magic =
-        if (bytes(0) == 'I'.toByte) le16(bytes, 2)
-        else ((bytes(2) & 0xff) << 8) | (bytes(3) & 0xff)
+    else if (asciiAt(bytes, 0, 4) == "RIFF" && asciiAt(bytes, 8, 4) == "WEBP") "webp"
+    else if (bytes.length >= 4 && (asciiAt(bytes, 0, 2) == "II" || asciiAt(bytes, 0, 2) == "MM") && {
+      val magic = if (bytes(0) == 'I'.toByte) le16(bytes, 2) else be16(bytes, 2)
       magic == 42
     }) "tiff"
-    else if (ascii(4, 4) == "ftyp") {
-      val brand = ascii(8, 4)
+    else if (asciiAt(bytes, 4, 4) == "ftyp") {
+      val brand = asciiAt(bytes, 8, 4)
       if (brand.startsWith("avif")) "avif"
       else if (brand.startsWith("hei")) "heic"
       else "isobmff"
@@ -6797,7 +6374,7 @@ object Multimodal {
              bytes(1) >= '1'.toByte && bytes(1) <= '6'.toByte &&
              (bytes(2) == ' ' || bytes(2) == '\t' || bytes(2) == '\r' ||
               bytes(2) == '\n' || bytes(2) == '#')) "pnm"
-    else if (ascii(0, 4) == "qoif") "qoi"
+    else if (asciiAt(bytes, 0, 4) == "qoif") "qoi"
     else "unknown"
   }
 
@@ -6813,7 +6390,7 @@ object Multimodal {
     while (off + 8 <= bytes.length) {
       val len = be32(bytes, off)
       if (len < 0) return false
-      val ctype = new String(bytes, off + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
+      val ctype = tag(bytes, off + 4)
       if (ctype == "acTL") return true
       if (ctype == "IDAT" || ctype == "IEND") return false
       off += 12 + len
@@ -6833,15 +6410,11 @@ object Multimodal {
     * and stays 'unknown' here.
     */
   private[graft] def videoFormatOf(bytes: Array[Byte]): String = {
-    def ascii(off: Int, n: Int): String =
-      if (off + n <= bytes.length)
-        new String(bytes, off, n, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    if (ascii(0, 6) == "GIF87a" || ascii(0, 6) == "GIF89a") "gif"
+    if (asciiAt(bytes, 0, 6) == "GIF87a" || asciiAt(bytes, 0, 6) == "GIF89a") "gif"
     else if (pngHasAcTl(bytes)) "apng"
-    else if (ascii(0, 4) == "RIFF" && ascii(8, 4) == "AVI ") "avi"
-    else if (ascii(4, 4) == "ftyp") {
-      val brand = ascii(8, 4)
+    else if (asciiAt(bytes, 0, 4) == "RIFF" && asciiAt(bytes, 8, 4) == "AVI ") "avi"
+    else if (asciiAt(bytes, 4, 4) == "ftyp") {
+      val brand = asciiAt(bytes, 8, 4)
       if (brand == "qt  ") "mov" else if (brand.nonEmpty) "mp4" else "isobmff"
     }
     else if (bytes.length >= 4 && (bytes(0) & 0xff) == 0x1a &&
@@ -6911,8 +6484,7 @@ object Multimodal {
 
   private def pngDims(bytes: Array[Byte]): Option[(Int, Int)] = {
     if (bytes.length < 24 || !bytes.startsWith(PngSig)) return None
-    if (new String(bytes, 12, 4, java.nio.charset.StandardCharsets.US_ASCII) != "IHDR")
-      return None
+    if (tag(bytes, 12) != "IHDR") return None
     val w = be32(bytes, 16); val h = be32(bytes, 20)
     if (w <= 0 || h <= 0) None else Some((w, h))
   }
@@ -6933,13 +6505,13 @@ object Multimodal {
       if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { off += 2 }
       else if (m == 0xda || m == 0xd9) return None // scan/EOI before any SOF
       else {
-        val segLen = ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
+        val segLen = be16(bytes, off + 2)
         if (segLen < 2) return None
         val sof = (m >= 0xc0 && m <= 0xcf) && m != 0xc4 && m != 0xc8 && m != 0xcc
         if (sof) {
           if (off + 9 > bytes.length) return None
-          val h = ((bytes(off + 5) & 0xff) << 8) | (bytes(off + 6) & 0xff)
-          val w = ((bytes(off + 7) & 0xff) << 8) | (bytes(off + 8) & 0xff)
+          val h = be16(bytes, off + 5)
+          val w = be16(bytes, off + 7)
           return if (w <= 0 || h <= 0) None else Some((w, h))
         }
         off += 2 + segLen
@@ -6953,10 +6525,8 @@ object Multimodal {
     val le = bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte
     val be = bytes(0) == 'M'.toByte && bytes(1) == 'M'.toByte
     if (!le && !be) return None
-    def u16(off: Int): Int =
-      if (le) le16(bytes, off) else ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-    def u32(off: Int): Long =
-      if (le) le32(bytes, off) & 0xffffffffL else be32(bytes, off) & 0xffffffffL
+    val order = new TiffOrder(bytes, le)
+    import order.{u16, u32}
     if (u16(2) != 42) return None
     val ifd = u32(4)
     if (ifd < 8 || ifd + 2 > bytes.length) return None
@@ -6975,7 +6545,7 @@ object Multimodal {
   }
 
   /** EXIF orientation (tag 274, values 1..8) from a JPEG's APP1
-    * segment — "Exif  " then a TIFF structure whose IFD0
+    * segment — "Exif\0\0" then a TIFF structure whose IFD0
     * holds the tag. The one header fact that changes what a correct
     * display (and hence a display-orientation-aware perceptual hash)
     * does with the pixels, surfaced so a pipeline can normalize BEFORE
@@ -6992,7 +6562,7 @@ object Multimodal {
       if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { off += 2 }
       else if (m == 0xda || m == 0xd9) return None // entropy data: headers over
       else {
-        val segLen = ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
+        val segLen = be16(bytes, off + 2)
         if (segLen < 2) return None
         if (m == 0xe1 && segLen >= 16 && off + 2 + segLen <= bytes.length &&
             bytes(off + 4) == 'E' && bytes(off + 5) == 'x' &&
@@ -7004,11 +6574,8 @@ object Multimodal {
           val le = bytes(base) == 'I'.toByte && bytes(base + 1) == 'I'.toByte
           val be = bytes(base) == 'M'.toByte && bytes(base + 1) == 'M'.toByte
           if (!le && !be) return None
-          def u16(o: Int): Int =
-            if (le) le16(bytes, o)
-            else ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-          def u32(o: Int): Long =
-            if (le) le32(bytes, o) & 0xffffffffL else be32(bytes, o) & 0xffffffffL
+          val order = new TiffOrder(bytes, le)
+          import order.{u16, u32}
           if (u16(base + 2) != 42) return None
           val ifd = base + u32(base + 4).toInt
           if (ifd + 2 > end) return None
@@ -7036,23 +6603,18 @@ object Multimodal {
     require(orientation >= 1 && orientation <= 8, s"orientation $orientation")
     require(jpeg.length >= 2 && (jpeg(0) & 0xff) == 0xff && (jpeg(1) & 0xff) == 0xd8)
     val tiff = new Array[Byte](26)
-    def p16(o: Int, v: Int): Unit =
-      if (bigEndian) { tiff(o) = (v >> 8).toByte; tiff(o + 1) = v.toByte }
-      else { tiff(o) = v.toByte; tiff(o + 1) = (v >> 8).toByte }
-    def p32(o: Int, v: Int): Unit =
-      if (bigEndian) { tiff(o) = 0; tiff(o + 1) = 0; tiff(o + 2) = (v >> 8).toByte; tiff(o + 3) = v.toByte }
-      else { tiff(o) = v.toByte; tiff(o + 1) = (v >> 8).toByte; tiff(o + 2) = 0; tiff(o + 3) = 0 }
-    tiff(0) = (if (bigEndian) 'M' else 'I').toByte
-    tiff(1) = tiff(0)
+    def p16(o: Int, v: Int): Unit = if (bigEndian) putBe16(tiff, o, v) else putLe16(tiff, o, v)
+    // a LONG field holding a value below 2^16: its high half stays 0
+    def p32(o: Int, v: Int): Unit = p16(if (bigEndian) o + 2 else o, v)
+    putTag(tiff, 0, if (bigEndian) "MM" else "II")
     p16(2, 42); p32(4, 8)
     p16(8, 1) // one IFD entry
+    // orientation is a SHORT, so it sits left-justified in the value field
     p16(10, 274); p16(12, 3); p32(14, 1); p16(18, orientation)
     p32(22, 0) // next IFD
     val segLen = 2 + 6 + tiff.length
-    val app1 = Array(0xff.toByte, 0xe1.toByte,
-      ((segLen >> 8) & 0xff).toByte, (segLen & 0xff).toByte) ++
-      "Exif".getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++
-      Array(0.toByte, 0.toByte) ++ tiff
+    val app1 = Array(0xff.toByte, 0xe1.toByte) ++ be16Bytes(segLen) ++
+      asciiBytes("Exif") ++ Array(0.toByte, 0.toByte) ++ tiff
     jpeg.take(2) ++ app1 ++ jpeg.drop(2)
   }
 
@@ -7067,16 +6629,10 @@ object Multimodal {
     * None for stills.
     */
   private def webpMeta(bytes: Array[Byte]): Option[(Int, Int, Option[Long], Option[Long])] = {
-    def tag(off: Int): String =
-      if (off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    if (bytes.length < 25 || tag(0) != "RIFF" || tag(8) != "WEBP") return None
-    def u24(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8) |
-      ((bytes(off + 2) & 0xff) << 16)
-    tag(12) match {
+    if (bytes.length < 25 || tag(bytes, 0) != "RIFF" || tag(bytes, 8) != "WEBP") return None
+    tag(bytes, 12) match {
       case "VP8X" if bytes.length >= 30 =>
-        val w = 1 + u24(24); val h = 1 + u24(27)
+        val w = 1 + le24(bytes, 24); val h = 1 + le24(bytes, 27)
         if ((bytes(20) & 0x02) == 0) Some((w, h, None, None))
         else {
           // animation: length-walk the chunks counting ANMF frames
@@ -7087,9 +6643,9 @@ object Multimodal {
           while (off + 8 <= riffEnd && frames < 4096) {
             val sz = le32(bytes, off + 4)
             if (sz < 0 || off + 8 + sz.toLong > riffEnd) return None
-            if (tag(off) == "ANMF" && sz >= 16) {
+            if (tag(bytes, off) == "ANMF" && sz >= 16) {
               frames += 1
-              durMs += u24(off + 8 + 12)
+              durMs += le24(bytes, off + 8 + 12)
             }
             off += 8 + sz + (sz & 1)
           }
@@ -7117,14 +6673,8 @@ object Multimodal {
     payload(3) = (((h - 1) >> 2) & 0xff).toByte
     payload(4) = (((h - 1) >> 10) & 0x0f).toByte // alpha 0, version 0
     val out = new java.io.ByteArrayOutputStream()
-    def le32out(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    def tagOut(t: String): Unit =
-      out.write(t.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    tagOut("RIFF"); le32out(4 + 8 + payload.length)
-    tagOut("WEBP"); tagOut("VP8L"); le32out(payload.length)
+    ascii(out, "RIFF"); le32(out, 4 + 8 + payload.length)
+    ascii(out, "WEBP"); ascii(out, "VP8L"); le32(out, payload.length)
     out.write(payload)
     out.toByteArray
   }
@@ -7139,29 +6689,20 @@ object Multimodal {
     require(w > 0 && h > 0 && w <= (1 << 14) && h <= (1 << 14) &&
       frames >= 1 && frames <= 64 && frameDurMs >= 0 && frameDurMs < (1 << 24))
     val out = new java.io.ByteArrayOutputStream()
-    def le32out(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    def le24out(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff); out.write((v >> 16) & 0xff)
-    }
-    def tagOut(t: String): Unit =
-      out.write(t.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     val anmfSize = 16 + 8 // header + junk payload (even)
     val riffSize = 4 + (8 + 10) + (8 + 6) + frames * (8 + anmfSize)
-    tagOut("RIFF"); le32out(riffSize); tagOut("WEBP")
-    tagOut("VP8X"); le32out(10)
-    out.write(0x02); out.write(0); out.write(0); out.write(0) // ANIMATION
-    le24out(w - 1); le24out(h - 1)
-    tagOut("ANIM"); le32out(6)
-    le32out(0) // background color
-    out.write(0); out.write(0) // loop count
+    ascii(out, "RIFF"); le32(out, riffSize); ascii(out, "WEBP")
+    ascii(out, "VP8X"); le32(out, 10)
+    le32(out, 0x02) // flags: ANIMATION
+    le24(out, w - 1); le24(out, h - 1)
+    ascii(out, "ANIM"); le32(out, 6)
+    le32(out, 0) // background color
+    le16(out, 0) // loop count
     for (f <- 0 until frames) {
-      tagOut("ANMF"); le32out(anmfSize)
-      le24out(0); le24out(0)           // frame x, y
-      le24out(w - 1); le24out(h - 1)   // frame dims
-      le24out(frameDurMs)
+      ascii(out, "ANMF"); le32(out, anmfSize)
+      le24(out, 0); le24(out, 0)           // frame x, y
+      le24(out, w - 1); le24(out, h - 1)   // frame dims
+      le24(out, frameDurMs)
       out.write(0)                     // flags
       for (i <- 0 until 8) out.write((f * 31 + i) & 0xff)
     }
@@ -7177,24 +6718,16 @@ object Multimodal {
     * the AV1/HEVC payload stays outside the decode envelope.
     */
   private def heifDims(bytes: Array[Byte]): Option[(Int, Int)] = {
-    def tag(off: Int): String =
-      if (off >= 0 && off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    def u16(off: Int): Int = ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-    def u32(off: Int): Long =
-      ((bytes(off) & 0xffL) << 24) | ((bytes(off + 1) & 0xffL) << 16) |
-        ((bytes(off + 2) & 0xffL) << 8) | (bytes(off + 3) & 0xffL)
-    if (bytes.length < 16 || tag(4) != "ftyp") return None
+    if (bytes.length < 16 || tag(bytes, 4) != "ftyp") return None
     def boxes(start: Int, end: Int): Option[Seq[(String, Int, Int)]] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
       var off = start
       while (off < end) {
         if (off + 8 > end || out.length >= 4096) return None
-        val sz = u32(off)
+        val sz = u32be(bytes, off)
         val size: Long = if (sz == 0L) (end - off).toLong else sz
         if (size < 8 || off + size > end) return None
-        out += ((tag(off + 4), off + 8, (off + size).toInt))
+        out += ((tag(bytes, off + 4), off + 8, (off + size).toInt))
         off = (off + size).toInt
       }
       Some(out.toSeq)
@@ -7207,8 +6740,8 @@ object Multimodal {
     val primary: Option[Long] = kids.collectFirst { case ("pitm", s0, e0) => (s0, e0) }
       .flatMap { case (s0, e0) =>
         if (e0 - s0 < 6) None
-        else if ((bytes(s0) & 0xff) == 0) Some(u16(s0 + 4).toLong)
-        else if (e0 - s0 >= 8) Some(u32(s0 + 4))
+        else if ((bytes(s0) & 0xff) == 0) Some(be16(bytes, s0 + 4).toLong)
+        else if (e0 - s0 >= 8) Some(u32be(bytes, s0 + 4))
         else None
       }
     val (iprpS, iprpE) = kids.collectFirst { case ("iprp", s0, e0) => (s0, e0) }
@@ -7221,7 +6754,7 @@ object Multimodal {
       if (idx < 1 || idx > props.length) None
       else props(idx - 1) match {
         case ("ispe", s0, e0) if e0 - s0 >= 12 =>
-          val w = u32(s0 + 4); val h = u32(s0 + 8)
+          val w = u32be(bytes, s0 + 4); val h = u32be(bytes, s0 + 8)
           if (w > 0 && h > 0 && w <= (1 << 20) && h <= (1 << 20))
             Some((w.toInt, h.toInt))
           else None
@@ -7235,21 +6768,21 @@ object Multimodal {
       dims <- {
         val version = bytes(maS) & 0xff
         val wideIdx = (bytes(maS + 3) & 1) != 0
-        val n = u32(maS + 4)
+        val n = u32be(bytes, maS + 4)
         var off = maS + 8
         var found: Option[(Int, Int)] = None
         var i = 0L
         while (i < n && found.isEmpty && off < maE) {
           val itemId =
-            if (version < 1) { val v = u16(off).toLong; off += 2; v }
-            else { val v = u32(off); off += 4; v }
+            if (version < 1) { val v = be16(bytes, off).toLong; off += 2; v }
+            else { val v = u32be(bytes, off); off += 4; v }
           if (off >= maE) return None
           val cnt = bytes(off) & 0xff
           off += 1
           var a = 0
           while (a < cnt && off < maE) {
             val idx =
-              if (wideIdx) { val v = u16(off) & 0x7fff; off += 2; v }
+              if (wideIdx) { val v = be16(bytes, off) & 0x7fff; off += 2; v }
               else { val v = bytes(off) & 0x7f; off += 1; v }
             if (itemId == pid && found.isEmpty) found = ispeAt(idx)
             a += 1
@@ -7314,23 +6847,18 @@ object Multimodal {
   /** AVI header facts from hdrl alone — avih canvas + dwTotalFrames;
     * the movi list is never touched. */
   private def aviMeta(bytes: Array[Byte]): Option[(Int, Int, Long, Option[Long])] = {
-    def tag(off: Int): String =
-      if (off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    if (bytes.length < 24 || tag(0) != "RIFF" || tag(8) != "AVI ") return None
-    val riffEnd = math.min(bytes.length.toLong,
-      12L + (le32(bytes, 4) & 0xffffffffL) - 4L).toInt
+    if (bytes.length < 24 || tag(bytes, 0) != "RIFF" || tag(bytes, 8) != "AVI ") return None
+    val riffEnd = math.min(bytes.length.toLong, 12L + u32le(bytes, 4) - 4L).toInt
     var off = 12
     while (off + 8 <= riffEnd) {
-      val ck = tag(off)
+      val ck = tag(bytes, off)
       val size = le32(bytes, off + 4)
       if (size < 0 || off + 8 + size.toLong > riffEnd) return None
-      if (ck == "LIST" && size >= 4 && tag(off + 8) == "hdrl") {
+      if (ck == "LIST" && size >= 4 && tag(bytes, off + 8) == "hdrl") {
         val end = off + 8 + size
         var p = off + 12
         while (p + 8 <= end) {
-          val sck = tag(p)
+          val sck = tag(bytes, p)
           val ssz = le32(bytes, p + 4)
           if (ssz < 0 || p + 8 + ssz.toLong > end) return None
           if (sck == "avih" && ssz >= 40) {
@@ -7360,7 +6888,7 @@ object Multimodal {
     val rate = ((bytes(18) & 0xff) << 12) | ((bytes(19) & 0xff) << 4) |
       ((bytes(20) & 0xff) >>> 4)
     val ch = ((bytes(20) >>> 1) & 7) + 1
-    val total = ((bytes(21) & 0x0fL) << 32) | (be32(bytes, 22) & 0xffffffffL)
+    val total = ((bytes(21) & 0x0fL) << 32) | u32be(bytes, 22)
     if (rate <= 0) None else Some((rate, ch, total))
   }
 
@@ -7368,9 +6896,8 @@ object Multimodal {
     * None for encodings whose unit size the header doesn't fix). */
   private def auMeta(bytes: Array[Byte]): Option[(Int, Int, Option[Long])] = {
     if (bytes.length < 24) return None
-    def u32(off: Int): Long = be32(bytes, off) & 0xffffffffL
-    val dataOff = u32(4); val dataSize = u32(8)
-    val enc = u32(12); val rate = u32(16); val ch = u32(20)
+    val dataOff = u32be(bytes, 4); val dataSize = u32be(bytes, 8)
+    val enc = u32be(bytes, 12); val rate = u32be(bytes, 16); val ch = u32be(bytes, 20)
     if (dataOff < 24 || rate <= 0 || ch < 1) return None
     val avail = math.max(0L, bytes.length - dataOff)
     val dataLen =
@@ -7390,26 +6917,21 @@ object Multimodal {
     * compressed form's header facts are real even though its samples
     * stay outside the decode envelope. */
   private def aiffMeta(bytes: Array[Byte]): Option[(Int, Int, Long)] = {
-    def tag(off: Int): String =
-      if (off + 4 <= bytes.length)
-        new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      else ""
-    if (bytes.length < 12 || tag(0) != "FORM") return None
-    val form = tag(8)
+    if (bytes.length < 12 || tag(bytes, 0) != "FORM") return None
+    val form = tag(bytes, 8)
     if (form != "AIFF" && form != "AIFC") return None
     val formEnd = math.min(bytes.length.toLong, 8L + be32(bytes, 4)).toInt
     var off = 12
     while (off + 8 <= formEnd) {
-      val ck = tag(off)
+      val ck = tag(bytes, off)
       val size = be32(bytes, off + 4)
       if (size < 0 || off + 8 + size.toLong > formEnd) return None
       if (ck == "COMM" && size >= 18) {
-        val ch = ((bytes(off + 8) & 0xff) << 8) | (bytes(off + 9) & 0xff)
-        val nFrames = be32(bytes, off + 10) & 0xffffffffL
+        val ch = be16(bytes, off + 8)
+        val nFrames = u32be(bytes, off + 10)
         // 80-bit IEEE extended at +16: 15-bit exponent, 64-bit mantissa
-        val e = (((bytes(off + 16) & 0x7f) << 8) | (bytes(off + 17) & 0xff)) - 16383
-        var mant = 0L
-        for (i <- 0 until 8) mant = (mant << 8) | (bytes(off + 18 + i) & 0xffL)
+        val e = (be16(bytes, off + 16) & 0x7fff) - 16383
+        val mant = be64(bytes, off + 18)
         val shift = 63 - e
         if (ch < 1 || shift < 0 || shift > 63) return None
         val rate = (mant >>> shift).toInt
@@ -7641,6 +7163,7 @@ object Multimodal {
     */
   private def oggMeta(bytes: Array[Byte]): Option[(String, Int, Int, Option[Long])] = {
     val n = bytes.length
+    // matches a magic of any length (OggS, vorbis, OpusHead), not a 4-byte read
     def tag(off: Int, s: String): Boolean =
       off + s.length <= n && s.indices.forall(i => bytes(off + i) == s.charAt(i).toByte)
     if (!tag(0, "OggS")) return None
@@ -7650,8 +7173,7 @@ object Multimodal {
     var pages = 0
     while (tag(off, "OggS") && pages < (1 << 20)) {
       if (off + 27 > n) return None
-      var granule = 0L
-      for (i <- 0 until 8) granule |= (bytes(off + 6 + i) & 0xffL) << (8 * i)
+      val granule = le64(bytes, off + 6)
       val nsegs = bytes(off + 26) & 0xff
       if (off + 27 + nsegs > n) return None
       var bodyLen = 0
@@ -7954,32 +7476,23 @@ object Multimodal {
       val szBytes = Array((0x40 | (content.length >> 8)).toByte, content.length.toByte)
       idBytes ++ szBytes ++ content
     }
-    def uint16(v: Int): Array[Byte] = Array((v >> 8).toByte, v.toByte)
-    val ebmlHeader = el(0x1a45dfa3L,
-      el(0x4282L, docType.getBytes(java.nio.charset.StandardCharsets.US_ASCII)))
+    val ebmlHeader = el(0x1a45dfa3L, el(0x4282L, asciiBytes(docType)))
     val videoEntry = el(0xaeL,
       el(0x83L, Array(1.toByte)) ++
-      el(0xe0L, el(0xb0L, uint16(w)) ++ el(0xbaL, uint16(h))))
+      el(0xe0L, el(0xb0L, be16Bytes(w)) ++ el(0xbaL, be16Bytes(h))))
     val audioEntry =
       if (audioRate <= 0) Array.empty[Byte]
       else el(0xaeL,
         el(0x83L, Array(2.toByte)) ++
-        el(0xe1L, el(0xb5L, {
-          val bits = java.lang.Float.floatToIntBits(audioRate.toFloat)
-          Array((bits >> 24).toByte, (bits >> 16).toByte,
-            (bits >> 8).toByte, bits.toByte)
-        }) ++ el(0x9fL, Array(audioCh.toByte))))
+        el(0xe1L, el(0xb5L, be32Bytes(java.lang.Float.floatToIntBits(audioRate.toFloat))) ++
+          el(0x9fL, Array(audioCh.toByte))))
     val tracks = el(0x1654ae6bL, videoEntry ++ audioEntry)
     val info =
       if (durationMs <= 0) Array.empty[Byte]
       else el(0x1549a966L,
         // TimecodeScale 1e6 ns => 1 timecode unit = 1 ms
         el(0x2ad7b1L, Array(0x0f.toByte, 0x42.toByte, 0x40.toByte)) ++
-        el(0x4489L, {
-          val bits = java.lang.Float.floatToIntBits(durationMs.toFloat)
-          Array((bits >> 24).toByte, (bits >> 16).toByte,
-            (bits >> 8).toByte, bits.toByte)
-        }))
+        el(0x4489L, be32Bytes(java.lang.Float.floatToIntBits(durationMs.toFloat))))
     val body = info ++ tracks
     val segment =
       if (unknownSegmentSize) {
@@ -7998,45 +7511,50 @@ object Multimodal {
   def makeOgg(nSamples: Long, rate: Int, channels: Int, opus: Boolean,
               seed: Long): Array[Byte] = {
     require(nSamples >= 0 && rate > 0 && channels >= 1 && channels <= 8)
-    def page(granule: Long, seq: Int, flags: Int, body: Array[Byte]): Array[Byte] = {
-      require(body.length <= 255 * 255)
-      val nsegs = body.length / 255 + 1
-      val out = new java.io.ByteArrayOutputStream()
-      out.write("OggS".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      out.write(0); out.write(flags)
-      for (i <- 0 until 8) out.write(((granule >> (8 * i)) & 0xff).toInt)
-      for (i <- 0 until 4) out.write((0x42 >> (8 * i)) & 0xff) // serial
-      for (i <- 0 until 4) out.write((seq >> (8 * i)) & 0xff)
-      for (_ <- 0 until 4) out.write(0) // crc unverified by the walk
-      out.write(nsegs)
-      var rem = body.length
-      for (_ <- 0 until nsegs - 1) { out.write(255); rem -= 255 }
-      out.write(rem)
-      out.write(body)
-      out.toByteArray
-    }
     val idPacket: Array[Byte] =
       if (opus) {
         val b = new java.io.ByteArrayOutputStream()
-        b.write("OpusHead".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+        ascii(b, "OpusHead")
         b.write(1); b.write(channels)
-        b.write(0); b.write(0) // pre-skip
-        for (i <- 0 until 4) b.write((rate >> (8 * i)) & 0xff) // input rate (informative)
+        le16(b, 0) // pre-skip
+        le32(b, rate) // input rate (informative)
         b.write(0); b.write(0); b.write(0) // gain + mapping family
         b.toByteArray
       } else {
         val b = new java.io.ByteArrayOutputStream()
-        b.write(1); b.write("vorbis".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        for (_ <- 0 until 4) b.write(0) // version
+        b.write(1); ascii(b, "vorbis")
+        le32(b, 0) // version
         b.write(channels)
-        for (i <- 0 until 4) b.write((rate >> (8 * i)) & 0xff)
+        le32(b, rate)
         for (_ <- 0 until 12) b.write(0) // bitrate triple
         b.write(0xb8) // blocksizes + framing
         b.write(1)
         b.toByteArray
       }
     val junk = Array.tabulate(40)(i => ((seed + i) % 251).toByte)
-    page(0L, 0, 2, idPacket) ++ page(nSamples, 1, 4, junk)
+    oggPage(0x42, 0L, 0, 2, idPacket) ++ oggPage(0x42, nSamples, 1, 4, junk)
+  }
+
+  /** One Ogg page (fixture side) carrying `body` as a single packet:
+    * version 0, little-endian granule, serial and sequence number, a
+    * zero CRC (no walk here verifies it), then the lacing table.
+    */
+  private def oggPage(serial: Int, granule: Long, seq: Int, flags: Int,
+                      body: Array[Byte]): Array[Byte] = {
+    require(body.length <= 255 * 255)
+    val nsegs = body.length / 255 + 1
+    val out = new java.io.ByteArrayOutputStream()
+    ascii(out, "OggS")
+    out.write(0); out.write(flags)
+    le32(out, granule.toInt); le32(out, (granule >>> 32).toInt)
+    le32(out, serial); le32(out, seq)
+    le32(out, 0) // crc
+    out.write(nsegs)
+    var rem = body.length
+    for (_ <- 0 until nsegs - 1) { out.write(255); rem -= 255 }
+    out.write(rem)
+    out.write(body)
+    out.toByteArray
   }
 
   /** Fixture/test writer for Ogg-FLAC (r17 s2): wraps [[Flac.make]]'s
@@ -8056,27 +7574,10 @@ object Multimodal {
     val nHeaders = if (withComment) 1 else 0
     if (withComment) si(4) = (si(4) & 0x7f).toByte // more headers follow
     val p0 = Array[Byte](0x7f.toByte, 'F'.toByte, 'L'.toByte, 'A'.toByte,
-      'C'.toByte, 1, 0, (nHeaders >> 8).toByte, nHeaders.toByte) ++ si
-    def page(granule: Long, seq: Int, flags: Int, body: Array[Byte]): Array[Byte] = {
-      require(body.length <= 255 * 255)
-      val nsegs = body.length / 255 + 1
-      val out = new java.io.ByteArrayOutputStream()
-      out.write("OggS".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      out.write(0); out.write(flags)
-      for (i <- 0 until 8) out.write(((granule >> (8 * i)) & 0xff).toInt)
-      for (i <- 0 until 4) out.write((0x46 >> (8 * i)) & 0xff) // serial
-      for (i <- 0 until 4) out.write((seq >> (8 * i)) & 0xff)
-      for (_ <- 0 until 4) out.write(0) // crc unverified by the walk
-      out.write(nsegs)
-      var rem = body.length
-      for (_ <- 0 until nsegs - 1) { out.write(255); rem -= 255 }
-      out.write(rem)
-      out.write(body)
-      out.toByteArray
-    }
+      'C'.toByte, 1, 0) ++ be16Bytes(nHeaders) ++ si
     // vorbis-comment metadata block (type 4): tiny vendor string
     val comment: Array[Byte] = {
-      val vendor = "graft".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+      val vendor = asciiBytes("graft")
       val body = Array[Byte](vendor.length.toByte, 0, 0, 0) ++ vendor ++
         Array[Byte](0, 0, 0, 0)
       Array[Byte](4, 0, 0, body.length.toByte) ++ body
@@ -8084,9 +7585,9 @@ object Multimodal {
     var seq = 0
     def nextSeq(): Int = { val s = seq; seq += 1; s }
     val out = new java.io.ByteArrayOutputStream()
-    out.write(page(0L, nextSeq(), 2, p0))
-    if (withComment) out.write(page(0L, nextSeq(), 0, comment))
-    out.write(page(nFrames.toLong, nextSeq(), 4, frames))
+    out.write(oggPage(0x46, 0L, nextSeq(), 2, p0))
+    if (withComment) out.write(oggPage(0x46, 0L, nextSeq(), 0, comment))
+    out.write(oggPage(0x46, nFrames.toLong, nextSeq(), 4, frames))
     out.toByteArray
   }
 
@@ -8101,19 +7602,9 @@ object Multimodal {
   def makeHeifHeader(w: Int, h: Int, brand: String = "avif",
                      thumbW: Int = 0, thumbH: Int = 0): Array[Byte] = {
     require(w > 0 && h > 0 && w < (1 << 20) && h < (1 << 20))
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def asc(t: String): Array[Byte] =
-      t.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    def box(t: String, content: Array[Byte]*): Array[Byte] = {
-      val body = content.flatten.toArray
-      be32(8L + body.length) ++ asc(t) ++ body
-    }
-    val ftyp = box("ftyp", asc(brand), be32(0), asc(brand))
+    val ftyp = box("ftyp", asciiBytes(brand), be32Bytes(0), asciiBytes(brand))
     def ispe(iw: Int, ih: Int): Array[Byte] =
-      box("ispe", be32(0), be32(iw.toLong), be32(ih.toLong))
+      box("ispe", be32Bytes(0), be32Bytes(iw.toLong), be32Bytes(ih.toLong))
     val withThumb = thumbW > 0 && thumbH > 0
     val ipco =
       if (withThumb) box("ipco", ispe(thumbW, thumbH), ispe(w, h))
@@ -8121,15 +7612,13 @@ object Multimodal {
     val primaryIdx = if (withThumb) 2 else 1
     val ipmaEntries = // item 1 -> primary ispe; thumb item 2 -> ispe 1
       if (withThumb)
-        be32(2) ++ be16(1) ++ Array(1.toByte, primaryIdx.toByte) ++
-          be16(2) ++ Array(1.toByte, 1.toByte)
-      else be32(1) ++ be16(1) ++ Array(1.toByte, primaryIdx.toByte)
-    val ipma = box("ipma", be32(0), ipmaEntries)
+        be32Bytes(2) ++ be16Bytes(1) ++ Array(1.toByte, primaryIdx.toByte) ++
+          be16Bytes(2) ++ Array(1.toByte, 1.toByte)
+      else be32Bytes(1) ++ be16Bytes(1) ++ Array(1.toByte, primaryIdx.toByte)
+    val ipma = box("ipma", be32Bytes(0), ipmaEntries)
     val iprp = box("iprp", ipco, ipma)
-    val pitm = box("pitm", be32(0), be16(1))
-    val hdlr = box("hdlr", be32(0), be32(0), asc("pict"),
-      Array.fill(12)(0.toByte), Array(0.toByte))
-    val meta = box("meta", be32(0), hdlr, pitm, iprp)
+    val pitm = box("pitm", be32Bytes(0), be16Bytes(1))
+    val meta = box("meta", be32Bytes(0), hdlrBox("pict"), pitm, iprp)
     ftyp ++ meta
   }
 

@@ -177,10 +177,6 @@ object Tables {
       .option("multiLine", "true")
       .csv(path)
 
-  /** JSON-lines source with explicit schema (same inference rule). */
-  def readJson(spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
   /** events.parquet stores `ts` as parquet TIMESTAMP(NANOS), which Spark 4
     * rejects natively; sessions set `spark.sql.legacy.parquet.nanosAsLong`
     * and this reader converts to a microsecond TimestampType by flooring —

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Receipt probe for ACTION-COUNT optimizations (guide §2.4): runs named
@@ -36,14 +37,12 @@ object JobCountProbe {
       // posture as the bench so walls are comparable
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       System.gc()
+      ListenerBusDrain(spark.sparkContext) // the warm-up's events land before the reset
       jobs.set(0)
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async (the public API has no drain hook) —
-      // a generous settle pause before reading the counter; job-start
-      // events are tiny and the bus clears in well under this
-      Thread.sleep(1500)
+      ListenerBusDrain(spark.sparkContext)
       println(f"[jobcount] $n%-36s jobs=${jobs.get()}%4d wall=$wall%7.2fs")
     }
     spark.stop()

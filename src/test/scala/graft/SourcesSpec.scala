@@ -26,7 +26,7 @@ class SourcesSpec extends SparkTestBase {
   test("json round trip with explicit schema") {
     val dir = tmp()
     ref.write.mode("overwrite").json(dir)
-    val back = Tables.readJson(spark, dir, ref.schema)
+    val back = Tables.readJsonl(spark, dir, ref.schema)
     assert(back.schema === ref.schema)
     assert(back.exceptAll(ref).count() === 0)
   }

@@ -25,7 +25,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * comes from [[graft.GraftSession.local]], unless its file is listed
   * below with its reason.
   *
-  * The scans read the sources with comments blanked. The writer and read
+  * And no `.scala` file under `src/` carries a control byte other than
+  * tab, newline or carriage return: grep and ripgrep treat such a file
+  * as binary, so a search of the source silently skips it.
+  *
+  * The scans read the sources with comments blanked, except the
+  * control-byte scan, which reads raw bytes. The writer and read
   * scans skip `graft.tools`: those probes are slated for deletion.
   */
 class WriterPathSpec extends AnyFunSuite {
@@ -80,20 +85,42 @@ class WriterPathSpec extends AnyFunSuite {
   private def blankComments(src: String): String =
     Comment.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
 
+  /** (file relative to `dir`, path) of every `.scala` file under `dir`,
+    * `tools/` only when `tools`.
+    */
+  private def scalaFiles(dir: Path, tools: Boolean): Seq[(String, Path)] = {
+    assert(Files.isDirectory(dir), s"run from the repository root: no $dir")
+    Files.walk(dir).iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => dir.relativize(p).toString.replace('\\', '/') -> p)
+      .filter { case (rel, _) => tools || !rel.startsWith("tools/") }
+      .sortBy(_._1)
+  }
+
   /** (file relative to `root`, source with comments blanked), `tools/`
     * only when `tools`.
     */
-  private def sources(tools: Boolean = false): Seq[(String, String)] = {
-    assert(Files.isDirectory(root), s"run from the repository root: no $root")
-    Files.walk(root).iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala"))
-      .map(p => root.relativize(p).toString.replace('\\', '/') -> p)
-      .filter { case (rel, _) => tools || !rel.startsWith("tools/") }
-      .sortBy(_._1)
+  private def sources(tools: Boolean = false): Seq[(String, String)] =
+    scalaFiles(root, tools).map { case (rel, p) =>
       // ISO-8859-1: some sources carry raw bytes in string literals
-      .map { case (rel, p: Path) =>
-        rel -> blankComments(new String(Files.readAllBytes(p), StandardCharsets.ISO_8859_1)) }
-  }
+      rel -> blankComments(new String(Files.readAllBytes(p), StandardCharsets.ISO_8859_1))
+    }
+
+  /** A control byte other than tab, newline or carriage return. */
+  private def isStrayControl(b: Byte): Boolean =
+    (b >= 0 && b < 0x20 && b != '\t' && b != '\n' && b != '\r') || b == 0x7f
+
+  /** (file under `src/`, line, byte) of the first stray control byte of
+    * every source that has one.
+    */
+  private def controlBytes(): Seq[(String, Int, Int)] =
+    scalaFiles(Paths.get("src"), tools = true).flatMap { case (rel, p) =>
+      val bytes = Files.readAllBytes(p)
+      bytes.indexWhere(isStrayControl) match {
+        case -1 => None
+        case at => Some((rel, bytes.take(at).count(_ == '\n') + 1, bytes(at) & 0xff))
+      }
+    }
 
   /** The text after `from` up to the next blank line. */
   private def statement(src: String, from: Int): String = {
@@ -136,6 +163,12 @@ class WriterPathSpec extends AnyFunSuite {
     sources(tools = true).filterNot(_._1 == "GraftSession.scala").flatMap { case (rel, src) =>
       Builder.findAllMatchIn(src).map(m => (rel, lineOf(src, m.start)))
     }
+
+  test("no source under src/ carries a control byte other than tab, newline or return") {
+    val found = controlBytes()
+    assert(found.isEmpty, "control bytes make grep and ripgrep treat a source as binary:\n" +
+      found.map { case (f, l, b) => f"  src/$f:$l: byte 0x$b%02x" }.mkString("\n"))
+  }
 
   test("every SparkSession comes from GraftSession.local or is a listed exception") {
     val found = builders()
