@@ -2839,7 +2839,7 @@ object SparkEntry {
     })
 
   /** STEADY-STATE fused loop ([[graft.streaming.ClusterIngest
-    * .startFromIndex]]): the same streamed detector+maintenance
+    * .startFromHandle]]): the same streamed detector+maintenance
     * pipeline, but the seen side comes off the stored bucket-partitioned
     * embed index ([[steadyIndex]] memoizes the build) — zero seen-side
     * staging per micro-batch, partition-pruned probes. Indexed ≡
@@ -10016,7 +10016,7 @@ object SparkEntry {
   /** Streaming near-dup at INGEST run through the driver gate
     * ([[graft.streaming.NearDupIngest]]): the documents table streamed
     * as the new-docs feed (doc_id < 250), LSH-checked per micro-batch
-    * against the static 250..1000 corpus via `foreachBatch` +
+    * against the static 250..1000 corpus via [[graft.streaming.Ingest.drain]] +
     * [[graft.dedup.NearDup.minHashLshAgainstCorpus]], results appended
     * to parquet and read back after the AvailableNow drain. Pairs
     * depend only on (new doc, static corpus), so the result set is
@@ -10028,7 +10028,7 @@ object SparkEntry {
     * ([[graft.streaming.IndexIngest.startBm25]]): the index is
     * initialized with the even-id half of the documents table, the odd
     * half arrives as a STREAM and is appended per micro-batch
-    * (`foreachBatch` + [[graft.text.Bm25.appendBm25Index]] — per-
+    * ([[graft.streaming.Ingest.drain]] + [[graft.text.Bm25.appendBm25Index]] — per-
     * segment df/stats rows, batch-split invariant by the sum contract),
     * and the probe then runs against the stored index covering the FULL
     * corpus — so [[qBm25]]'s whole-corpus oracle replays verbatim on
@@ -10073,7 +10073,7 @@ object SparkEntry {
     qDedupLshIncremental.oracle)
 
   /** STEADY-STATE streaming near-dup ([[graft.streaming.NearDupIngest
-    * .startFromIndex]]): the seen side comes off the STORED near-dup
+    * .startFromHandle]]): the seen side comes off the STORED near-dup
     * index ([[steadyIndex]] memoizes the build), resolved ONCE at
     * stream start into a pinned handle — per micro-batch only the
     * batch's own signature pass and batch-sized joins remain, where the

@@ -111,7 +111,9 @@ object Multimodal {
       else { val c = le32(bytes, 46); if (c == 0) 256 else c } // biClrUsed
     if (nColors < 0 || nColors > 256) return None
     val palOff = 14 + dibSize
-    if (bpp == 8 && palOff + 4 * nColors > pixelOff) return None
+    // Long: a lying dibSize must not wrap the palette end below either bound
+    val palEnd = 14L + dibSize + 4L * nColors
+    if (bpp == 8 && (palEnd > pixelOff || palEnd > bytes.length)) return None
     val out = new Array[Byte](w * h * 3)
     def putPal(display: Int, x: Int, idx: Int): Boolean = {
       if (idx >= nColors) return false
@@ -2423,7 +2425,8 @@ object Multimodal {
   private def dibGrayGrid(fb: Array[Byte], w: Int, h: Int,
                           topDown: Boolean): Option[Array[Int]] = {
     val stride = ((3 * w + 3) / 4) * 4
-    if (fb.length != stride * h) return None
+    // Long: a lying avih height must not wrap stride * h onto fb.length
+    if (fb.length.toLong != stride.toLong * h) return None
     val gray = new Array[Int](w * h)
     var row = 0
     while (row < h) {
@@ -6772,15 +6775,18 @@ object Multimodal {
         var off = maS + 8
         var found: Option[(Int, Int)] = None
         var i = 0L
+        val idSize = if (version < 1) 2 else 4
+        val idxSize = if (wideIdx) 2 else 1
         while (i < n && found.isEmpty && off < maE) {
+          // the item id and the association count must both fit the box
+          if (off + idSize >= maE) return None
           val itemId =
             if (version < 1) { val v = be16(bytes, off).toLong; off += 2; v }
             else { val v = u32be(bytes, off); off += 4; v }
-          if (off >= maE) return None
           val cnt = bytes(off) & 0xff
           off += 1
           var a = 0
-          while (a < cnt && off < maE) {
+          while (a < cnt && off + idxSize <= maE) {
             val idx =
               if (wideIdx) { val v = be16(bytes, off) & 0x7fff; off += 2; v }
               else { val v = bytes(off) & 0x7f; off += 1; v }

@@ -141,6 +141,14 @@ object Compaction {
     }.foldLeft((0, 0)) { case ((b, a), (pb, pa)) => (b + pb, a + pa) }
   }
 
+  /** The one fold cadence of the streaming ingest loops: fold after
+    * every `every`-th batch (never batch 0, nothing committed below it
+    * yet); `every <= 0` disables. Folds are read-invisible, so the
+    * cadence moves file counts, never answers.
+    */
+  def foldDue(batchId: Long, every: Int): Boolean =
+    every > 0 && batchId > 0 && batchId % every == 0
+
   /** Fold CLOSED streaming batch segments of a [[graft.ops.Segments]]-
     * keyed table into one consolidated segment — the maintenance pass
     * that keeps a continuously-ingesting index's file count bounded by
@@ -159,6 +167,11 @@ object Compaction {
     * `innerCol`: the inner partition level to preserve (`pbucket`,
     * `cell`), or None for flat segment tables (doclen, stats).
     *
+    * `fold`: the body applied to the source rows (their `batch_id`
+    * column included) to form the target's rows. The default MOVES the
+    * rows; a store whose reads rank rows by batch passes a semantic fold
+    * instead ([[graft.streaming.ClusterIngest.compactLabels]]).
+    *
     * Same crash-atomicity caveat as [[compactParquetDir]]: a failure
     * between "target written" and "sources deleted" leaves duplicate
     * rows until the fold is re-run to completion; staging + pointer
@@ -166,7 +179,8 @@ object Compaction {
     * folded (0 = nothing to do).
     */
   def foldStreamSegments(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         upTo: Long, innerCol: Option[String]): Int = {
+                         upTo: Long, innerCol: Option[String],
+                         fold: DataFrame => DataFrame = _.drop("batch_id")): Int = {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.spark.sql.functions.col
     val hPath = new HPath(dir)
@@ -192,8 +206,7 @@ object Compaction {
       srcDirs.foreach(p => fs.delete(new HPath(p), true))
       return srcIds.size
     }
-    val df = Tables.parquetPaths(spark, srcDirs, Map("basePath" -> dir))
-      .drop("batch_id")
+    val df = fold(Tables.parquetPaths(spark, srcDirs, Map("basePath" -> dir)))
     innerCol match {
       case Some(c) =>
         NioLocalFileSystem.write(df.repartition(col(c)))

@@ -36,7 +36,8 @@ object Segments {
     * and PCA sketch segments and the streaming ingest stores. The
     * streaming loops' checkpoint logs still fork: Spark writes them
     * through a checkpoint manager the session selects, which the
-    * helper's writer options cannot reach.
+    * helper's writer options cannot reach. [[graft.streaming.Ingest.drain]]
+    * is the one place where that manager is chosen for every loop.
     */
   def writer(df: DataFrame, mode: String,
              batchId: Option[Long]): DataFrameWriter[Row] = {

@@ -506,7 +506,7 @@ object Ann {
     * steady loop's contract: the index does not move while the stream
     * runs, so meta collects, index-file listings, bucket-cap
     * aggregations and corpus counts belong at stream START, not in the
-    * foreachBatch hot loop (the r15 steady row paid all four per
+    * per-batch hot loop (the r15 steady row paid all four per
     * micro-batch and ran 1.8× SLOWER than its from-raw twin).
     */
   final case class EmbedIndexHandle private[similarity] (
@@ -556,7 +556,7 @@ object Ann {
     * broadcast-safety count) is a pure function of the static corpus, so
     * it belongs at stream START, not inside every micro-batch:
     * per-batch [[embeddingNearDupsAgainstCorpus]] re-paid two full
-    * passes over the seen corpus plus a count in EVERY foreachBatch
+    * passes over the seen corpus plus a count in EVERY micro-batch
     * (guide §2.4 — remove the repeated work outright; the r16
     * handle-hoist class fix, extended to the from-raw loop). Identical
     * pairs by construction: same planes, same caps (per-bucket totals of

@@ -156,8 +156,8 @@ object Ivf {
     * warrants), append under the batch's segment partition. Incremental
     * cost is one narrow pass over the batch.
     *
-    * Exactly-once: with `batchId` set (the streaming `foreachBatch`
-    * id), the segment is written with DYNAMIC partition overwrite into
+    * Exactly-once: with `batchId` set (the streaming
+    * [[graft.streaming.Ingest.drain]] batch id), the segment is written with DYNAMIC partition overwrite into
     * `batch_id=<id>/cell=*` — a retried micro-batch replaces its own
     * partitions instead of double-appending vectors.
     */

@@ -311,8 +311,8 @@ object Pq {
   /** Append an ingest batch: assign against the STORED centroids,
     * encode with the STORED codebooks, append codes. One narrow pass
     * over the batch; the index's semantics for existing rows are
-    * untouched by construction. With `batchId` set (streaming
-    * `foreachBatch`), the segment is dynamically overwritten under
+    * untouched by construction. With `batchId` set (a streaming
+    * [[graft.streaming.Ingest.drain]] batch), the segment is dynamically overwritten under
     * `batch_id=<id>` so a retried micro-batch cannot double-append.
     */
   def appendIvfPqIndex(newVecs: DataFrame, path: String,

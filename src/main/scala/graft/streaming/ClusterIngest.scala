@@ -2,11 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.io.NioLocalFileSystem
-import graft.ops.Tables
+import graft.ops.{Compaction, Tables}
 
 /** Streaming duplicate-CLUSTER maintenance: a continuous feed of
   * near-dup PAIR edges (the output of the incremental detectors —
@@ -92,52 +91,24 @@ object ClusterIngest {
 
   /** Fold committed label segments into ONE latest-per-id segment — the
     * maintenance verb that keeps the store's file count bounded by fold
-    * cadence instead of one segment per micro-batch. Unlike the generic
-    * [[graft.ops.Compaction.foldStreamSegments]] (which MOVES rows and
-    * would collapse the per-id batch order `readLabels` ranks by), this
-    * fold is SEMANTIC: latest-per-id is computed across the source
-    * segments at fold time, so the folded segment carries exactly one
-    * row per id. Target naming and crash posture mirror
-    * foldStreamSegments: segments `0 ≤ batch_id < upTo` plus any prior
-    * fold (≤ −10) land in `batch_id = −(10 + maxFoldedBatch)` —
-    * deterministic, so a re-run overwrites its own target; the fold
-    * segment is numerically BELOW every live batch id, which is the
-    * correct rank (everything in it predates any surviving batch), and
-    * at most one fold segment exists at a time (each fold consumes its
-    * predecessors). A `_SUCCESS`-marked target means the previous
-    * identical fold finished writing — remaining sources are duplicates
-    * to delete, never inputs to re-fold. Returns segments folded.
+    * cadence instead of one segment per micro-batch. It runs the generic
+    * [[graft.ops.Compaction.foldStreamSegments]] skeleton (target
+    * naming, `_SUCCESS`-gated crash recovery, source deletes) with a
+    * SEMANTIC fold body: the default body MOVES rows and would collapse
+    * the per-id batch order `readLabels` ranks by, so here latest-per-id
+    * is computed across the source segments at fold time and the folded
+    * segment carries exactly one row per id. The fold segment
+    * (`batch_id = −(10 + maxFoldedBatch)`) is numerically BELOW every
+    * live batch id, which is the correct rank (everything in it predates
+    * any surviving batch), and at most one fold segment exists at a time
+    * (each fold consumes its predecessors). Returns segments folded.
     */
-  def compactLabels(spark: SparkSession, path: String, upTo: Long): Int = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val hPath = new HPath(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return 0
-    val segIds = fs.listStatus(hPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(_.getPath.getName.stripPrefix("batch_id=").toLong)
-    val foldable = segIds.filter(n => (n >= 0 && n < upTo) || n <= -10L).sorted
-    if (foldable.size < 2) return 0
-    val maxBatch = foldable.filter(_ >= 0).maxOption
-      .getOrElse(foldable.map(n => -10L - n).max)
-    val targetId = -10L - maxBatch
-    val target = s"$path/batch_id=$targetId"
-    val srcIds = foldable.filterNot(_ == targetId)
-    val srcDirs = srcIds.map(n => s"$path/batch_id=$n")
-    if (fs.exists(new HPath(s"$target/_SUCCESS"))) {
-      srcDirs.foreach(p => fs.delete(new HPath(p), true))
-      return srcIds.size
-    }
-    val folded = Tables.parquetPaths(spark, srcDirs, Map("basePath" -> path))
-      .groupBy("id")
-      .agg(max_by(col("cluster_id"), col("batch_id")).as("cluster_id"))
-    NioLocalFileSystem.write(folded.coalesce(1)).mode("overwrite").parquet(target)
-    srcDirs.foreach(p => fs.delete(new HPath(p), true))
-    srcIds.size
-  }
+  def compactLabels(spark: SparkSession, path: String, upTo: Long): Int =
+    Compaction.foldStreamSegments(spark, path, upTo, None,
+      fold = latestPerId(_, beforeBatch = None))
 
-  /** Post-write maintenance hook shared by every loop below: every
-    * `compactEvery` committed batches, fold the label segments so
+  /** Post-write maintenance hook shared by every loop below: on the
+    * [[graft.ops.Compaction.foldDue]] cadence, fold the label segments so
     * [[readLabels]]' per-batch segment list stays bounded by the cadence
     * instead of growing one segment per micro-batch forever (without
     * this, per-batch read cost grows linearly in stream age ⇒ quadratic
@@ -147,7 +118,7 @@ object ClusterIngest {
     */
   private def maybeCompact(spark: SparkSession, path: String,
                            batchId: Long, compactEvery: Int): Unit =
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
+    if (Compaction.foldDue(batchId, compactEvery)) {
       compactLabels(spark, path, upTo = batchId)
       () // segments-folded count is a maintenance detail here
     }
@@ -156,14 +127,10 @@ object ClusterIngest {
             checkpoint: String,
             aCol: String = "id_a", bCol: String = "id_b",
             compactEvery: Int = 16): StreamingQuery =
-    pairStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, path, aCol, bCol)
-        maybeCompact(spark, path, batchId, compactEvery)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(pairStream, checkpoint) { (batch, batchId) =>
+      writeBatch(batch, batchId, path, aCol, bCol)
+      maybeCompact(spark, path, batchId, compactEvery)
+    }
 
   /** The fused ingest loop — detector AND cluster maintenance in one
     * streaming pipeline: each micro-batch of NEW embedding vectors is
@@ -189,7 +156,7 @@ object ClusterIngest {
     // is invariant across micro-batches: resolve it ONCE at stream start
     // into the same pinned handle shape the stored-index loop uses,
     // instead of re-paying two full passes over history plus a count
-    // inside EVERY foreachBatch (the r16 handle-hoist class fix, now
+    // inside EVERY micro-batch (the r16 handle-hoist class fix, now
     // applied to the from-raw loop as well — guide §2.4). Identical
     // pairs by [[graft.similarity.Ann.openEmbedNearDupCorpus]]'s
     // contract; the gate row's oracle pins it.
@@ -199,34 +166,21 @@ object ClusterIngest {
         idCol = idCol, vecCol = vecCol),
       threshold, path, checkpoint, idCol, vecCol, compactEvery)
 
-  /** [[startFromVectors]] probing the STORED embed index
-    * ([[graft.similarity.Ann.writeEmbedNearDupIndex]]) instead of raw
-    * seen vectors — the steady-state fused loop. The index is IMMUTABLE
-    * for the life of the stream, so everything index-shaped is resolved
-    * exactly once here, before the stream starts
+  /** [[startFromVectors]] probing a STORED embed index
+    * ([[graft.similarity.Ann.writeEmbedNearDupIndex]]) through a
+    * caller-resolved handle — the steady-state fused loop. The index is
+    * IMMUTABLE for the life of the stream, so everything index-shaped is
+    * resolved exactly once before the stream starts
     * ([[graft.similarity.Ann.openEmbedNearDupIndex]]: meta collect,
     * index-file read, tombstone anti-join, bucket-cap aggregation, one
-    * materialize + count) and the foreachBatch closes over the handle —
-    * per micro-batch only batch-sized work remains. (The r15 shape
-    * re-paid all of that inside every micro-batch and measured 1.8×
-    * SLOWER than its from-raw twin; hoisting is the fix the steady
-    * split's claim was always about.) Identical labels by the indexed ≡
-    * from-raw contract (shares the gate oracle verbatim).
-    */
-  def startFromIndex(spark: SparkSession, vecStream: DataFrame,
-                     indexPath: String, threshold: Double, path: String,
-                     checkpoint: String, maxBucket: Int = 1000,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding",
-                     compactEvery: Int = 16): StreamingQuery =
-    startFromHandle(spark, vecStream,
-      graft.similarity.Ann.openEmbedNearDupIndex(spark, indexPath, maxBucket = maxBucket),
-      threshold, path, checkpoint, idCol, vecCol, compactEvery)
-
-  /** [[startFromIndex]] with a caller-resolved handle — for callers that
-    * run several streams (or several gate passes) over the SAME
-    * immutable index and want to pay [[graft.similarity.Ann
-    * .openEmbedNearDupIndex]] exactly once across all of them.
+    * materialize + count), possibly once across several streams (or
+    * several gate passes) over the same index, and each micro-batch
+    * closes over the handle — per micro-batch only batch-sized work
+    * remains. (The r15 shape re-paid all of that inside every
+    * micro-batch and measured 1.8× SLOWER than its from-raw twin;
+    * hoisting is the fix the steady split's claim was always about.)
+    * Identical labels by the indexed ≡ from-raw contract (shares the
+    * gate oracle verbatim).
     */
   def startFromHandle(spark: SparkSession, vecStream: DataFrame,
                       handle: graft.similarity.Ann.EmbedIndexHandle,
@@ -235,15 +189,11 @@ object ClusterIngest {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding",
                       compactEvery: Int = 16): StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(
-          graft.similarity.Ann.embeddingNearDupsAgainstHandle(
-            batch, handle, threshold, idCol = idCol, vecCol = vecCol),
-          batchId, path, aCol = "new_id", bCol = "seen_id")
-        maybeCompact(spark, path, batchId, compactEvery)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(vecStream, checkpoint) { (batch, batchId) =>
+      writeBatch(
+        graft.similarity.Ann.embeddingNearDupsAgainstHandle(
+          batch, handle, threshold, idCol = idCol, vecCol = vecCol),
+        batchId, path, aCol = "new_id", bCol = "seen_id")
+      maybeCompact(spark, path, batchId, compactEvery)
+    }
 }

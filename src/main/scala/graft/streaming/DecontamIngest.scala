@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming decontamination at INGEST: every micro-batch of candidate
   * training documents is fuzzy-checked against the STORED benchmark
@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * after the fact means rewriting the 100 TB table; decontaminating the
   * feed means each batch pays one signature pass).
   *
-  * Mechanism: `foreachBatch` applies the BATCH operator
+  * Mechanism: [[Ingest.drain]] applies the BATCH operator
   * ([[graft.text.Decontaminate.removeNearContaminatedAgainstIndex]]) to
   * each micro-batch — the benchmark side's signatures/token sets come
   * off the index built once by [[graft.text.Decontaminate
@@ -45,29 +45,23 @@ object DecontamIngest {
     * The admitted table is the stream's rows minus docs near-matching
     * any live benchmark item at token-Jaccard ≥ `threshold`, with the
     * input schema preserved (plus the `batch_id` partition column).
-    */
-  /** Drain `newDocs` through the decontamination gate into `outPath`.
     * The benchmark index is IMMUTABLE for the stream's life, so it is
     * resolved ONCE here ([[graft.text.Decontaminate.openBenchIndex]]:
     * meta, tombstones, bucket caps, both bench tables pinned) and every
     * micro-batch gates against the cached handle — the same hoist as
-    * [[ClusterIngest.startFromIndex]] / [[startSemantic]].
+    * [[ClusterIngest.startFromHandle]] / [[startSemantic]].
     */
   def start(spark: SparkSession, newDocs: DataFrame, indexPath: String,
             idCol: String, textCol: String, threshold: Double,
             outPath: String, checkpoint: String): StreamingQuery = {
     val handle = graft.text.Decontaminate.openBenchIndex(spark, indexPath)
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Segments.writer(
-            graft.text.Decontaminate.removeNearContaminatedAgainstHandle(
-              batch, handle, idCol, textCol, threshold = threshold),
-            "append", Some(batchId))
-          .partitionBy("batch_id").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(newDocs, checkpoint) { (batch, batchId) =>
+      graft.ops.Segments.writer(
+          graft.text.Decontaminate.removeNearContaminatedAgainstHandle(
+            batch, handle, idCol, textCol, threshold = threshold),
+          "append", Some(batchId))
+        .partitionBy("batch_id").parquet(outPath)
+    }
   }
 
   /** The SEMANTIC twin — one embedding-vector micro-batch gated against
@@ -94,7 +88,7 @@ object DecontamIngest {
     * index is IMMUTABLE for the stream's life, so it is resolved ONCE
     * here ([[graft.similarity.Ann.openEmbedNearDupIndex]]) and every
     * micro-batch gates against the cached handle — the same hoist as
-    * [[ClusterIngest.startFromIndex]]; the r15 shape re-paid the meta
+    * [[ClusterIngest.startFromHandle]]; the r15 shape re-paid the meta
     * collect, cap aggregation and index read per batch.
     */
   def startSemantic(spark: SparkSession, newVecs: DataFrame, indexPath: String,
@@ -102,16 +96,12 @@ object DecontamIngest {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): StreamingQuery = {
     val handle = graft.similarity.Ann.openEmbedNearDupIndex(spark, indexPath)
-    newVecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Segments.writer(
-            graft.similarity.SemanticDecontam.removeSemanticContaminatedAgainstHandle(
-              batch, handle, tau, idCol, vecCol),
-            "append", Some(batchId))
-          .partitionBy("batch_id").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(newVecs, checkpoint) { (batch, batchId) =>
+      graft.ops.Segments.writer(
+          graft.similarity.SemanticDecontam.removeSemanticContaminatedAgainstHandle(
+            batch, handle, tau, idCol, vecCol),
+          "append", Some(batchId))
+        .partitionBy("batch_id").parquet(outPath)
+    }
   }
 }

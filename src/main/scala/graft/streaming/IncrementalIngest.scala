@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.io.NioLocalFileSystem
@@ -10,7 +9,7 @@ import graft.pipeline.Transform
 /** EP1's event-driven shape (S3 ObjectCreated → per-file job run,
   * `lambda/handler_last_date.py:24-42`) as Structured Streaming: a parquet
   * file source discovers new files, `Trigger.AvailableNow` drains whatever
-  * arrived and stops, and `foreachBatch` applies the same batch transform
+  * arrived and stops, and [[Ingest.drain]] applies the same batch transform
   * + dynamic-partition upsert the reference's Glue job performs.
   *
   * The checkpoint replaces the reference's Glue job-bookmark (O4): files
@@ -29,23 +28,19 @@ object IncrementalIngest {
       .schema(schema)
       .option("maxFilesPerTrigger", "1000") // bound a batch at scale
       .parquet(rawDir)
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // APPEND, not dynamic overwrite: one AvailableNow drain spans many
-        // micro-batches, and a partition whose rows land in two batches
-        // would have the first batch's rows silently replaced by the
-        // second. The checkpoint makes file intake exactly-once; replace-
-        // the-partition upsert semantics belong to the per-run batch entry
-        // (`Pipeline.runIncremental`), where one invocation = one file set.
-        NioLocalFileSystem.write(transform(batch))
-          .partitionBy(partitionKeys: _*)
-          .mode(org.apache.spark.sql.SaveMode.Append)
-          .option("compression", "snappy")
-          .parquet(refinedLocation)
-      }
-      .start()
+    val query = Ingest.drain(stream, checkpoint) { (batch, _) =>
+      // APPEND, not dynamic overwrite: one AvailableNow drain spans many
+      // micro-batches, and a partition whose rows land in two batches
+      // would have the first batch's rows silently replaced by the
+      // second. The checkpoint makes file intake exactly-once; replace-
+      // the-partition upsert semantics belong to the per-run batch entry
+      // (`Pipeline.runIncremental`), where one invocation = one file set.
+      NioLocalFileSystem.write(transform(batch))
+        .partitionBy(partitionKeys: _*)
+        .mode(org.apache.spark.sql.SaveMode.Append)
+        .option("compression", "snappy")
+        .parquet(refinedLocation)
+    }
     query.awaitTermination()
   }
 }

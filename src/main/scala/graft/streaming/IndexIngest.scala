@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Compaction
 
@@ -10,7 +10,7 @@ import graft.ops.Compaction
   * production loop where a continuous feed keeps a search index warm
   * without ever rebuilding it from the 100 TB corpus.
   *
-  * Mechanism: `foreachBatch` applies the batch APPEND operator per
+  * Mechanism: [[Ingest.drain]] applies the batch APPEND operator per
   * micro-batch. All the appended indexes here are append-only by
   * construction (BM25 stores per-segment df/stats rows summed at read,
   * [[graft.text.Bm25]]; IVF/IVF-PQ assign against the STORED centroids
@@ -27,9 +27,10 @@ import graft.ops.Compaction
   * double-appending postings/stats and silently inflating df/N
   * (spec-pinned by replaying a batch twice).
   *
-  * Compaction: with `compactEvery` > 0, every N-th batch folds the
-  * committed batch segments below the current one into a consolidated
-  * segment ([[graft.ops.Compaction.foldStreamSegments]]) — file count
+  * Compaction: with `compactEvery` > 0, every N-th batch
+  * ([[graft.ops.Compaction.foldDue]]) folds the committed batch
+  * segments below the current one into a consolidated segment
+  * ([[graft.ops.Compaction.foldStreamSegments]]) — file count
   * stays bounded by the cadence instead of growing per micro-batch.
   * Only batches BELOW the in-flight one fold (the current batch may
   * still retry into its own partition), so compaction and retry
@@ -47,7 +48,7 @@ object IndexIngest {
     if (!batch.isEmpty)
       graft.text.Bm25.appendBm25Index(batch, indexPath, nBuckets, idCol, textCol,
         batchId = Some(batchId))
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
+    if (Compaction.foldDue(batchId, compactEvery)) {
       val spark = batch.sparkSession
       Compaction.foldStreamSegments(spark, s"$indexPath/postings", batchId, Some("pbucket"))
       Compaction.foldStreamSegments(spark, s"$indexPath/dfreq", batchId, Some("pbucket"))
@@ -63,14 +64,9 @@ object IndexIngest {
                 nBuckets: Int = 64,
                 idCol: String = "doc_id", textCol: String = "text",
                 compactEvery: Int = 0): StreamingQuery =
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBm25Batch(batch, batchId, indexPath, nBuckets, idCol, textCol,
-          compactEvery)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(newDocs, checkpoint) { (batch, batchId) =>
+      appendBm25Batch(batch, batchId, indexPath, nBuckets, idCol, textCol, compactEvery)
+    }
 
   /** One IVF micro-batch append — the [[appendBm25Batch]] twin. */
   def appendIvfBatch(batch: DataFrame, batchId: Long, indexPath: String,
@@ -79,7 +75,7 @@ object IndexIngest {
     if (!batch.isEmpty)
       graft.similarity.Ivf.appendIvfIndex(batch, indexPath, idCol, vecCol,
         batchId = Some(batchId))
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+    if (Compaction.foldDue(batchId, compactEvery))
       Compaction.foldStreamSegments(batch.sparkSession, s"$indexPath/lists",
         batchId, Some("cell"))
   }
@@ -91,11 +87,7 @@ object IndexIngest {
   def startIvf(newVecs: DataFrame, indexPath: String, checkpoint: String,
                idCol: String = "vec_id", vecCol: String = "embedding",
                compactEvery: Int = 0): StreamingQuery =
-    newVecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendIvfBatch(batch, batchId, indexPath, idCol, vecCol, compactEvery)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(newVecs, checkpoint) { (batch, batchId) =>
+      appendIvfBatch(batch, batchId, indexPath, idCol, vecCol, compactEvery)
+    }
 }

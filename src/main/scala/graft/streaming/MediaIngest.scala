@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.io.NioLocalFileSystem
-import graft.ops.Tables
+import graft.ops.{Compaction, Tables}
 
 /** Streaming IMAGE near-dup at ingest: every micro-batch of media
   * payloads is decoded + perceptually hashed ONCE, checked against the
@@ -87,14 +87,9 @@ object MediaIngest {
             idCol: String = "doc_id",
             payloadCol: String = "payload",
             kind: String = "image"): StreamingQuery =
-    newMedia.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, hashPath, pairsPath, maxHamming, idCol,
-          payloadCol, kind)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(newMedia, checkpoint) { (batch, batchId) =>
+      writeBatch(batch, batchId, hashPath, pairsPath, maxHamming, idCol, payloadCol, kind)
+    }
 
   /** One steady micro-batch against the INDEXED history — public so a
     * retry can be simulated. Identical pair semantics to [[writeBatch]]
@@ -159,12 +154,13 @@ object MediaIngest {
     * starts, with the blocking radius); every batch probes
     * `batch_id < current` and appends its own postings exactly-once —
     * identical pair stream to [[start]] (shares its oracle verbatim).
-    */
-  /** `compactEvery`: every that many committed batches, fold the
-    * accumulated per-batch posting segments ([[graft.dedup.NearDup
-    * .compactSimHashIndex]]) so the per-batch probe's listing +
-    * small-file-open constant stays bounded by the cadence instead of
-    * growing one segment set per micro-batch forever. <= 0 disables.
+    *
+    * `compactEvery`: every that many committed batches
+    * ([[graft.ops.Compaction.foldDue]]), fold the accumulated per-batch
+    * posting segments ([[graft.dedup.NearDup.compactSimHashIndex]]) so
+    * the per-batch probe's listing + small-file-open constant stays
+    * bounded by the cadence instead of growing one segment set per
+    * micro-batch forever. <= 0 disables.
     */
   def startSteady(spark: SparkSession, newMedia: DataFrame,
                   indexPath: String, pairsPath: String, checkpoint: String,
@@ -185,19 +181,15 @@ object MediaIngest {
         val meta = Tables.parquet(spark, s"$indexPath/meta").collect().head
         (meta.getAs[Int]("maxhamming"), meta.getAs[Int]("parts"))
       }
-    newMedia.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchSteady(batch, batchId, indexPath, pairsPath, idCol,
-          payloadCol, kind, geometry = Some(geo))
-        // maintenance AFTER the admit: folds only batches < this one, so
-        // a replayed batch reads the identical index either way
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-          graft.dedup.NearDup.compactSimHashIndex(spark, indexPath, upTo = batchId)
-          ()
-        }
+    Ingest.drain(newMedia, checkpoint) { (batch, batchId) =>
+      writeBatchSteady(batch, batchId, indexPath, pairsPath, idCol,
+        payloadCol, kind, geometry = Some(geo))
+      // maintenance AFTER the admit: folds only batches < this one, so
+      // a replayed batch reads the identical index either way
+      if (Compaction.foldDue(batchId, compactEvery)) {
+        graft.dedup.NearDup.compactSimHashIndex(spark, indexPath, upTo = batchId)
+        ()
       }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 }

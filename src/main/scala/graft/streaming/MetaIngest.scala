@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming media METADATA at ingest: every micro-batch of payloads
   * gets one header peek ([[graft.multimodal.Multimodal.mediaMeta]] —
@@ -56,12 +56,8 @@ object MetaIngest {
             minWidth: Int = 1, minHeight: Int = 1, minSampleRate: Int = 1,
             idCol: String = "doc_id",
             payloadCol: String = "payload"): StreamingQuery =
-    newMedia.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, batchId, metaPath, keptPath,
-          minWidth, minHeight, minSampleRate, idCol, payloadCol)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(newMedia, checkpoint) { (batch, batchId) =>
+      writeBatch(batch, batchId, metaPath, keptPath,
+        minWidth, minHeight, minSampleRate, idCol, payloadCol)
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming near-duplicate detection at ingest: every micro-batch of
   * NEW documents is LSH-checked against a STATIC seen-corpus — the
@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * of the historical 100 TB, and must never re-pair history against
   * itself.
   *
-  * Mechanism: `foreachBatch` applies the BATCH operator
+  * Mechanism: [[Ingest.drain]] applies the BATCH operator
   * ([[graft.dedup.NearDup.minHashLshAgainstCorpus]]) to each
   * micro-batch — the stream side pays one signature pass per batch and
   * joins sized by the batch, while the seen side acts as the
@@ -51,7 +51,7 @@ object NearDupIngest {
     // pass, band rows, bucket caps and verification token sets are
     // invariant across micro-batches: resolve them ONCE at stream start
     // ([[graft.dedup.NearDup.openNearDupCorpus]]) instead of re-paying
-    // the whole seen corpus's signature pass inside EVERY foreachBatch
+    // the whole seen corpus's signature pass inside EVERY micro-batch
     // (the r16 handle-hoist class fix, extended to the from-raw loop —
     // guide §2.4). Identical pairs by the opener's contract; the gate
     // row's oracle replays the per-batch law verbatim.
@@ -60,44 +60,27 @@ object NearDupIngest {
         seenDocs, idCol, textCol, bands, rowsPerBand),
       idCol, textCol, threshold, outPath, checkpoint)
 
-  /** [[start]] probing the STORED near-dup index ([[graft.dedup.NearDup
-    * .writeNearDupIndex]]) — the steady-state split: the from-raw form
-    * re-pays the seen corpus's signature pass inside EVERY micro-batch,
-    * while here the index is resolved ONCE at stream start
-    * ([[graft.dedup.NearDup.openNearDupIndex]]: tombstones, band
-    * derivation, bucket caps, all three seen tables pinned and the band
-    * side pre-partitioned on the join key) and the foreachBatch closes
-    * over the handle — per micro-batch only batch-sized work remains.
-    * Identical pairs by the indexed ≡ from-raw contract (shares the
-    * from-raw gate oracle verbatim).
-    */
-  def startFromIndex(spark: SparkSession, newDocs: DataFrame,
-                     indexPath: String,
-                     idCol: String, textCol: String,
-                     bands: Int, rowsPerBand: Int, threshold: Double,
-                     outPath: String, checkpoint: String): StreamingQuery =
-    startFromHandle(spark, newDocs,
-      graft.dedup.NearDup.openNearDupIndex(spark, indexPath, bands, rowsPerBand),
-      idCol, textCol, threshold, outPath, checkpoint)
-
-  /** [[startFromIndex]] with a caller-resolved handle — pay
-    * [[graft.dedup.NearDup.openNearDupIndex]] once across several
-    * streams over the same immutable index.
+  /** [[start]] probing a STORED near-dup index ([[graft.dedup.NearDup
+    * .writeNearDupIndex]]) through a caller-resolved handle — the
+    * steady-state split: the from-raw form re-pays the seen corpus's
+    * signature pass inside EVERY micro-batch, while here the index is
+    * resolved ONCE ([[graft.dedup.NearDup.openNearDupIndex]]:
+    * tombstones, band derivation, bucket caps, all three seen tables
+    * pinned and the band side pre-partitioned on the join key), possibly
+    * once across several streams over the same immutable index, and
+    * each micro-batch closes over the handle — only batch-sized work
+    * remains. Identical pairs by the indexed ≡ from-raw contract (shares
+    * the from-raw gate oracle verbatim).
     */
   def startFromHandle(spark: SparkSession, newDocs: DataFrame,
                       handle: graft.dedup.NearDup.SeenIndexHandle,
                       idCol: String, textCol: String, threshold: Double,
-                      outPath: String, checkpoint: String): StreamingQuery = {
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Segments.writer(
-            graft.dedup.NearDup.minHashLshAgainstHandle(
-              batch, handle, idCol, textCol, threshold),
-            "append", Some(batchId))
-          .partitionBy("batch_id").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                      outPath: String, checkpoint: String): StreamingQuery =
+    Ingest.drain(newDocs, checkpoint) { (batch, batchId) =>
+      graft.ops.Segments.writer(
+          graft.dedup.NearDup.minHashLshAgainstHandle(
+            batch, handle, idCol, textCol, threshold),
+          "append", Some(batchId))
+        .partitionBy("batch_id").parquet(outPath)
+    }
 }

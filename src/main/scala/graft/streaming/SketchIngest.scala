@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.{Compaction, Hll, Kmv, QuantileSketch, TopKSketch}
 
@@ -43,7 +43,7 @@ object SketchIngest {
     if (!batch.isEmpty)
       QuantileSketch.writeSegments(batch, keyCols, valCol, lo, hi, nBins,
         path, batchId = Some(batchId))
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+    if (Compaction.foldDue(batchId, compactEvery))
       Compaction.foldStreamSegments(batch.sparkSession, path, batchId, None)
   }
 
@@ -52,14 +52,10 @@ object SketchIngest {
                     keyCols: Seq[String], valCol: String,
                     lo: Long, hi: Long, nBins: Int,
                     compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendQuantileBatch(batch, batchId, keyCols, valCol, lo, hi, nBins,
-          path, compactEvery)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(stream, checkpoint) { (batch, batchId) =>
+      appendQuantileBatch(batch, batchId, keyCols, valCol, lo, hi, nBins,
+        path, compactEvery)
+    }
 
   /** One HLL-register micro-batch append — `compactEvery` folds as in
     * [[appendQuantileBatch]], equally lossless (register merge is max).
@@ -69,7 +65,7 @@ object SketchIngest {
                      compactEvery: Int = 0): Unit = {
     if (!batch.isEmpty)
       Hll.writeSegments(batch, keyCols, valCol, path, batchId = Some(batchId))
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+    if (Compaction.foldDue(batchId, compactEvery))
       Compaction.foldStreamSegments(batch.sparkSession, path, batchId, None)
   }
 
@@ -77,13 +73,9 @@ object SketchIngest {
   def startHll(stream: DataFrame, path: String, checkpoint: String,
                keyCols: Seq[String], valCol: String,
                compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendHllBatch(batch, batchId, keyCols, valCol, path, compactEvery)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(stream, checkpoint) { (batch, batchId) =>
+      appendHllBatch(batch, batchId, keyCols, valCol, path, compactEvery)
+    }
 
   /** One KMV bottom-k micro-batch append — `compactEvery` folds as in
     * [[appendQuantileBatch]], lossless here too (bottom-k merge is a
@@ -94,7 +86,7 @@ object SketchIngest {
                      compactEvery: Int = 0): Unit = {
     if (!batch.isEmpty)
       Kmv.writeSegments(batch, keyCols, valCol, k, path, batchId = Some(batchId))
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+    if (Compaction.foldDue(batchId, compactEvery))
       Compaction.foldStreamSegments(batch.sparkSession, path, batchId, None)
   }
 
@@ -107,13 +99,9 @@ object SketchIngest {
   def startKmv(stream: DataFrame, path: String, checkpoint: String,
                keyCols: Seq[String], valCol: String, k: Int,
                compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendKmvBatch(batch, batchId, keyCols, valCol, k, path, compactEvery)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(stream, checkpoint) { (batch, batchId) =>
+      appendKmvBatch(batch, batchId, keyCols, valCol, k, path, compactEvery)
+    }
 
   /** One raw-moment micro-batch append ([[graft.similarity.Pca
     * .writeMomentSegments]]) — `compactEvery` folds as in
@@ -125,7 +113,7 @@ object SketchIngest {
     if (!batch.isEmpty)
       graft.similarity.Pca.writeMomentSegments(batch, dim, path,
         vecCol = vecCol, batchId = Some(batchId))
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+    if (Compaction.foldDue(batchId, compactEvery))
       Compaction.foldStreamSegments(batch.sparkSession, path, batchId, None)
   }
 
@@ -152,14 +140,10 @@ object SketchIngest {
   def startMoments(stream: DataFrame, path: String, checkpoint: String,
                    dim: Int, vecCol: String = "embedding",
                    compactEvery: Int = 0, batchIdOffset: Long = 0L): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendMomentBatch(batch, batchId + batchIdOffset, dim, vecCol, path,
-          compactEvery)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(stream, checkpoint) { (batch, batchId) =>
+      appendMomentBatch(batch, batchId + batchIdOffset, dim, vecCol, path,
+        compactEvery)
+    }
 
   /** One top-k-summary micro-batch append. NO compaction hook here, on
     * purpose: top-k reads recover each batch's truncation bound from the
@@ -177,11 +161,7 @@ object SketchIngest {
   /** Stream rows into top-k heavy-hitter segments. */
   def startTopK(stream: DataFrame, path: String, checkpoint: String,
                 keyCols: Seq[String], itemCol: String, k: Int): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendTopKBatch(batch, batchId, keyCols, itemCol, k, path)
-      }
-      .option("checkpointLocation", checkpoint) // stock fs: checkpoint manager is session-wide
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Ingest.drain(stream, checkpoint) { (batch, batchId) =>
+      appendTopKBatch(batch, batchId, keyCols, itemCol, k, path)
+    }
 }

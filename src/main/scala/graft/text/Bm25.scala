@@ -144,7 +144,7 @@ object Bm25 {
     writeSegment(corpus, path, nBuckets, idCol, textCol, "overwrite", None)
 
   /** Append an ingest batch of NEW documents. Pass `batchId` from a
-    * streaming `foreachBatch` to make the append idempotent under
+    * streaming [[graft.streaming.Ingest.drain]] batch to make the append idempotent under
     * retries (the segment is keyed on the id and dynamically
     * overwritten); batchless appends stack under the base segment.
     */

@@ -300,7 +300,7 @@ object Decontaminate {
 
   /** Append new benchmark items (a refreshed eval set): banding/buckets
     * come off the stored meta so appended rows land in the same bucket
-    * space. Pass `batchId` from a streaming `foreachBatch` for
+    * space. Pass `batchId` from a streaming [[graft.streaming.Ingest.drain]] batch for
     * exactly-once retries.
     */
   def appendBenchIndex(bench: DataFrame, idCol: String, textCol: String,

@@ -46,7 +46,7 @@ object EmbedIndexProbe {
     (1 to 3).foreach(i => timed(s"small-batch from-raw $i")(probeRaw()))
     // the r16 stream shape: resolve the index ONCE (open pays the
     // staging), then every probe is batch-sized work against the cached
-    // handle — what each micro-batch of ClusterIngest.startFromIndex pays
+    // handle — what each micro-batch of ClusterIngest.startFromHandle pays
     var handle: graft.similarity.Ann.EmbedIndexHandle = null
     timed("open handle (once per stream)") {
       handle = graft.similarity.Ann.openEmbedNearDupIndex(spark, idx)

@@ -2686,4 +2686,24 @@ class MultimodalSpec extends SparkTestBase {
     assert(cov === Seq(("avif", 1L, 0L), ("bmp", 1L, 1L),
       ("tiff", 2L, 1L), ("webp", 1L, 0L)))
   }
+
+  test("bmpBgrPixels: an RLE8 palette past the payload's end is None, not a throw") {
+    // the palette fits before pixelOff but the payload stops at the headers
+    val cut = Multimodal.makeBmpX(13, 6, 6, bpp = 8, rle = true).take(54)
+    assert(Multimodal.imageAHash(cut) === None)
+    assert(Multimodal.imagePHash(cut) === None)
+  }
+
+  test("dibGrayGrid: a lying avih height that wraps stride * h is None, not a throw") {
+    val avi = Multimodal.makeAviDib(5, 3, 4, 3)
+    avi(71) = (avi(71) ^ 0x80).toByte // dwHeight's sign bit
+    assert(Multimodal.videoFrameGrids(avi) === None)
+  }
+
+  test("heifDims: an ipma entry running past the payload is None, not a throw") {
+    val heic = Multimodal.makeHeifHeader(4000, 3000, "heic", 320, 240)
+    heic(143) = (heic(143) ^ 0x80).toByte // ipma version: 4-byte item ids
+    val m = Multimodal.metaOf(1L, heic)
+    assert((m.format, m.width, m.height) === (("heic", None, None)))
+  }
 }

@@ -25,13 +25,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * comes from [[graft.GraftSession.local]], unless its file is listed
   * below with its reason.
   *
+  * And every micro-batch sink starts at [[graft.streaming.Ingest.drain]]:
+  * no other file calls `.foreachBatch`, so the checkpoint, the trigger
+  * and any per-batch hook live in one place.
+  *
   * And no `.scala` file under `src/` carries a control byte other than
   * tab, newline or carriage return: grep and ripgrep treat such a file
   * as binary, so a search of the source silently skips it.
   *
   * The scans read the sources with comments blanked, except the
-  * control-byte scan, which reads raw bytes. The writer and read
-  * scans skip `graft.tools`: those probes are slated for deletion.
+  * control-byte scan, which reads raw bytes. The writer, read and
+  * micro-batch scans skip `graft.tools`: those probes are slated for
+  * deletion.
   */
 class WriterPathSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -79,6 +84,9 @@ class WriterPathSpec extends AnyFunSuite {
   // name "ALTER TABLE ADD PARTITION", which no `(` or `IF` follows
   private val PartitionSql =
     """(?i)\bADD\s+(?:IF\s+NOT\s+EXISTS\b|PARTITION\s*\()|\bSHOW\s+PARTITIONS\b""".r
+  // a micro-batch sink: `.foreachBatch` as a call, not a name
+  private val ForeachBatch = """\.\s*foreachBatch\b""".r
+  private val DrainFile = "streaming/Ingest.scala"
   // block comments, and line comments not inside a `scheme://` literal
   private val Comment = """(?s)/\*.*?\*/|(?<![:"/])//[^\n]*""".r
 
@@ -158,6 +166,10 @@ class WriterPathSpec extends AnyFunSuite {
   private def partitionSql(src: String): Seq[Int] =
     PartitionSql.findAllMatchIn(src).map(m => lineOf(src, m.start)).toSeq
 
+  /** Lines of `src` that call `.foreachBatch`. */
+  private def foreachBatchCalls(src: String): Seq[Int] =
+    ForeachBatch.findAllMatchIn(src).map(m => lineOf(src, m.start)).toSeq
+
   /** (file, line) of every `SparkSession.builder` call outside `GraftSession.scala`. */
   private def builders(): Seq[(String, Int)] =
     sources(tools = true).filterNot(_._1 == "GraftSession.scala").flatMap { case (rel, src) =>
@@ -197,6 +209,24 @@ class WriterPathSpec extends AnyFunSuite {
         |s"ALTER TABLE t add partition ($spec)"
         |""".stripMargin)
     assert(partitionSql(src) === Seq(3, 4, 5))
+  }
+
+  test("every micro-batch sink starts at Ingest.drain") {
+    val found = sources().flatMap { case (rel, src) => foreachBatchCalls(src).map(rel -> _) }
+    val bypass = found.filterNot(_._1 == DrainFile)
+    assert(bypass.isEmpty, "foreachBatch chains outside Ingest.drain:\n" +
+      bypass.map { case (f, l) => s"  $f:$l" }.mkString("\n"))
+    assert(found.exists(_._1 == DrainFile), s"no foreachBatch call in $DrainFile")
+  }
+
+  test("the foreachBatch scan sees calls across lines and ignores comments and names") {
+    val src = blankComments(
+      """// df.writeStream.foreachBatch(f)
+        |/** wraps `.foreachBatch` */ val a = df.writeStream
+        |  .foreachBatch { (b: DataFrame, id: Long) => f(b, id) }
+        |val foreachBatch = g; s.writeStream.foreachBatch(foreachBatch)
+        |""".stripMargin)
+    assert(foreachBatchCalls(src) === Seq(3, 4))
   }
 
   test("every DataFrameWriter starts at NioLocalFileSystem.write or is a listed exception") {
