@@ -34,7 +34,8 @@ object Bench {
     // has to actually move.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
     val warmups = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUPS", "1").toInt
-    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Double, Profile.Layers) = {
       // noop sink: materializes every row/column of the result (unlike
       // count(), which lets the optimizer delete sorts and projections).
       // A failed query must NOT read as a near-zero "speedup": record -1
@@ -70,13 +71,15 @@ object Bench {
             (name.endsWith("_steady") || name == "q_unigram_encode_em")) 1
         else warmups
       (1 to effWarmups).foreach(_ => run())
-      val times = (1 to repeats).map(_ => run()).sorted
+      // each timed run is profiled; the median run's layers go with its time
+      val runs = (1 to repeats).map(_ => Profile.during(spark)(run())).sortBy(_._1)
       // upper median for even n: the conservative (pessimistic) pick
-      if (failed) -1.0 else times(times.length / 2)
+      val (median, layers) = runs(runs.length / 2)
+      (if (failed) -1.0 else median, layers)
     }
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val results: Map[String, Double] =
+    val measured: Map[String, (Double, Profile.Layers)] =
       if (!isolateTiers) selected.map { case (n, fn) => n -> measure(n, fn) }
       else selected.groupBy { case (n, _) => tierOf(n) }.toSeq.sortBy(_._1)
         .flatMap { case (_, qs) =>
@@ -84,6 +87,7 @@ object Bench {
           spark = newSession()
           qs.map { case (n, fn) => n -> measure(n, fn) }
         }.toMap
+    val results: Map[String, Double] = measured.map { case (n, (t, _)) => n -> t }
     // Streaming-engine fixed-cost probe: the q_stream_* rows each carry
     // ~1-2 s of micro-batch machinery (query start, offset/commit log,
     // state-store provider init) that is NOT plan cost and does not grow
@@ -137,6 +141,11 @@ object Bench {
     val isoTag = if (isolateTiers) "tier" else "none"
     val json = s"""{"metric":"total","value":$total,"unit":"sec","repeats":$repeats,"warmups":$warmups,"policy":"median","isolate":"$isoTag","stream_noop":$streamNoop,"superseded":$sup,"queries":$qs,"tiers":$tiers,"sf":"$sfDir"}"""
     println(json)
+    // Each row's layers (Profile.Layers) go to the persisted files only:
+    // the stdout line keeps its fields for the tail parse that reads it.
+    val layers = measured.map { case (n, (_, l)) => s"\"" + n + "\":" + l.json }
+      .mkString("{", ",", "}")
+    val persisted = json.dropRight(1) + s""","layers":$layers}"""
     // The driver captures only the TAIL of stdout (BENCH_r10 kept 55 of
     // 143 per-query entries); persist the full line so per-query history
     // survives log truncation. SPARK_GRAFT_BENCH_OUT overrides the
@@ -159,7 +168,7 @@ object Bench {
       try {
         val out = java.nio.file.Paths.get(p)
         if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
-        java.nio.file.Files.write(out, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        java.nio.file.Files.write(out, persisted.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] could not write $p: ${e.getMessage}")
       }

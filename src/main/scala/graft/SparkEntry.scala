@@ -120,10 +120,12 @@ object SparkEntry {
     * every micro-batch pays a commit per instance regardless of row
     * count — inheriting the batch default (sized for table scans)
     * multiplies that fixed cost. Measured on q_stream_attribution
-    * (tools.StreamAttributionProbe, BASELINE.md round 12): 5.5 s wall /
-    * 36 s summed state-store commit time at 32 partitions vs 1.8 s /
-    * 0.5 s at 4, identical results. Production streaming jobs size
-    * state partitions to stream volume for exactly this reason; the
+    * (BASELINE.md "Round 12: q_stream_attribution cost attribution"):
+    * 5.5 s wall / 36 s summed state-store commit time at 32 partitions
+    * vs 1.8 s / 0.5 s at 4, identical results. `SPARK_GRAFT_ONLY=
+    * q_stream_attribution sbt "runMain graft.Bench"` reports the row's
+    * batches and their phases under `layers`. Production streaming jobs
+    * size state partitions to stream volume for exactly this reason; the
     * gate streams are small, so 4 keeps the state machinery honestly
     * multi-partition without billing 128 commits per micro-batch. The
     * state-partition count is fixed at checkpoint creation, so the pin
@@ -8120,7 +8122,9 @@ object SparkEntry {
     * [[qMultiPhrase]], but this row gates the slot lookup as DATA
     * (broadcast join) rather than as an expression tree — the form
     * whose plan stays constant-size at a 500-prompt decontamination
-    * sweep (tools.MultiPhraseProbe, BASELINE.md round 12).
+    * sweep (BASELINE.md "Round 12: multi-phrase sweep at realistic phrase
+    * counts"; `SPARK_GRAFT_SF_DIR=<ScaleFixture dir> SPARK_GRAFT_ONLY=
+    * q_multi_phrase_sweep sbt "runMain graft.Bench"` reruns the row).
     */
   private val sweepPhrases: Seq[Seq[String]] = Seq(
     Seq("table", "hash"), Seq("table", "table", "merge"), Seq("a", "a"),

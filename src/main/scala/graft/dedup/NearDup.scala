@@ -47,7 +47,9 @@ object NearDup {
     * bit-identical to the composite
     * `conv(substring(md5(to_binary(c,'utf-8')),1,15),16,10)` it replaced
     * but without the per-row hex-string/substring/re-parse allocations —
-    * profiled 3.8× cheaper per pass on the 100× corpus (DsirProbe).
+    * profiled 3.8× cheaper per pass on the 100× corpus (NOTES.md round 9;
+    * `SPARK_GRAFT_SF_DIR=<ScaleFixture 100× dir> SPARK_GRAFT_ONLY=
+    * q_dsir_weights sbt "runMain graft.Bench"` reruns the q_dsir_weights row).
     */
   def md5Long(c: Column): Column = graft.functions.Md5Long.md5Long60(c)
 

@@ -21,7 +21,9 @@ import org.apache.spark.sql.types._
   * three avoidable allocations PER ROW on that hot path — a 32-char hex
   * string from `Md5`, a 15-char substring copy, and `Conv`'s base-16
   * re-parse of chars back to the number the digest already was. Profiled
-  * on the 100× corpus (DsirProbe): an explode+hash+groupBy pass costs
+  * on the 100× corpus (NOTES.md round 9; `SPARK_GRAFT_SF_DIR=<ScaleFixture
+  * 100× dir> SPARK_GRAFT_ONLY=q_dsir_weights sbt "runMain graft.Bench"`
+  * reruns the q_dsir_weights row): an explode+hash+groupBy pass costs
   * 102.8 s with the composite vs 27.2 s for the same pass without the
   * hash — the hex detour is ~3× the cost of scanning the data. This
   * expression digests straight from the UTF-8 bytes into a long (one

@@ -207,8 +207,11 @@ object Ann {
       }: _*)).as("tb"))
       .select(col("cid"), col("tb.tbl"), col("tb.bucket"))
     // bucket cap as ONE window over (tbl, bucket) — the r17-deferred A/B
-    // (tools/LshTopKAbProbe, 100× fixture, AutoBits geometry, warm
-    // median-of-3): window 172.2 s vs groupBy-count + join-back 223.4 s.
+    // (OPTIMIZATION_r18.md "VERDICT r17 #4", 100× fixture, AutoBits
+    // geometry, warm median-of-3): window 172.2 s vs groupBy-count +
+    // join-back 223.4 s. `SPARK_GRAFT_SF_DIR=<ScaleFixture dir>
+    // SPARK_GRAFT_ONLY=q_ann_retrieval_topk sbt "runMain graft.Bench"`
+    // reruns the adopted form.
     // The agg+join form EVALUATES cPost twice, and each evaluation
     // re-pays nTables × nBits 64-dim dot products per corpus vector —
     // at scale that arithmetic dwarfs one extra hash exchange of the

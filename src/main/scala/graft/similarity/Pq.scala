@@ -127,11 +127,14 @@ object Pq {
     // The exploded code table is PINNED before the broadcast join: fusing
     // scan + encode kernel + generate + BHJ into one codegen stage
     // measured 12x slower than the pinned split at 100x (74 s vs 7 s,
-    // IvfPqProbe — the stage compiles, so this is not the janino
-    // fallback; the fused consume loop just defeats the kernel's
-    // per-row pipelining). The pinned table is exactly the narrow
-    // (cid, s, code) layout the persistent index stores — the from-raw
-    // form now materializes what writeIvfPqIndex would persist.
+    // BASELINE.md "PQ fused-stage pathology"; `SPARK_GRAFT_SF_DIR=
+    // <ScaleFixture dir> SPARK_GRAFT_ONLY=q_ann_ivfpq,q_ann_ivfpq_refined
+    // sbt "runMain graft.Bench"` reruns both rows). The stage compiles,
+    // so this is not the janino fallback; the fused consume loop just
+    // defeats the kernel's per-row pipelining. The pinned table is
+    // exactly the narrow (cid, s, code) layout the persistent index
+    // stores — the from-raw form now materializes what writeIvfPqIndex
+    // would persist.
     val enc = encode(corpus, cb, idCol, vecCol)
       .select(col("cid"), posexplode(col("codes")).as(Seq("s", "code")))
       .localCheckpoint()

@@ -37,7 +37,8 @@ import graft.dedup.NearDup
   * table broadcasts at any corpus size (B rows). The apply pass hashes
   * per occurrence — constant work per token, no vocab-sized driver
   * state — via the fused codegen [[graft.functions.Md5Long]] (the
-  * hex-string composite was 3x the cost of the scan itself; DsirProbe).
+  * hex-string composite was 3x the cost of the scan itself; NOTES.md
+  * round 9, rerun by `SPARK_GRAFT_ONLY=q_dsir_weights` Bench).
   * No all-pairs anything.
   */
 object Dsir {

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Tables
 import graft.similarity.Ann
 
 /** Parameter-sweep bench for corpus-vs-corpus LSH retrieval
@@ -29,7 +30,7 @@ object AnnBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = graft.GraftSession.local(cpus, cpus)
 
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.parquet(spark, s"$dir/embeddings.parquet")
     val n = emb.count()
 
     val t0 = System.nanoTime()

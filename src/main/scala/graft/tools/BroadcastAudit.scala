@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 
+import graft.ops.Tables
+
 /** Static-plan audit for the round-15 broadcast-misestimate hazard:
   * compressed-text parquet scans + explodes make corpus-sized join
   * inputs ESTIMATE below the 10 MB broadcast threshold, and a
@@ -32,8 +34,8 @@ object BroadcastAudit {
     // the audit targets STATIC join selection (the decisions AQE can
     // never revisit) — turn AQE off so the plan tree is walkable
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val docs = Tables.parquet(spark, s"$dir/documents.parquet")
+    val emb = Tables.parquet(spark, s"$dir/embeddings.parquet")
     val train = docs.filter(col("doc_id") < split)
     val bench = docs.filter(col("doc_id") >= split)
 

@@ -2,6 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.io.NioLocalFileSystem
+import graft.ops.Tables
+
 /** Receipt for the r17-s2 decode-envelope breadth: per FORMAT, one
   * scan-stage decode+hash pass over a single-class corpus — seconds,
   * docs/s, and the output row count, which must equal the corpus size
@@ -69,9 +72,9 @@ object DecodeBreadthProbe {
     val paths = classes.zipWithIndex.map { case ((name, tier, mk), ci) =>
       val p = tmp.resolve(name).toString
       val base = ci * 10000000L
-      spark.range(n.toLong).repartition(parts).as[Long]
+      val docs = spark.range(n.toLong).repartition(parts).as[Long]
         .map(id => (base + id, mk(id))).toDF("doc_id", "payload")
-        .write.mode("overwrite").parquet(p)
+      NioLocalFileSystem.write(docs).mode("overwrite").parquet(p)
       (name, tier, p)
     }
     def hashPass(tier: String, df: org.apache.spark.sql.DataFrame): Long = tier match {
@@ -82,10 +85,10 @@ object DecodeBreadthProbe {
     }
     // warmup each tier once (JIT + parquet footer cache)
     paths.take(1).foreach { case (_, t, p) =>
-      hashPass(t, spark.read.parquet(p).limit(1000))
+      hashPass(t, Tables.parquet(spark, p).limit(1000))
     }
     paths.foreach { case (name, tier, p) =>
-      val docs = spark.read.parquet(p)
+      val docs = Tables.parquet(spark, p)
       hashPass(tier, docs.limit(500)) // per-class JIT warmup
       timed(name, n.toLong)(hashPass(tier, docs))
     }
@@ -95,7 +98,7 @@ object DecodeBreadthProbe {
     // backwards-compatibility design) and a clip, and a single-frame
     // GIF is both an image and a one-frame clip — each counts in two
     // tiers, by contract.
-    val mixed = paths.map(p => spark.read.parquet(p._3)).reduce(_ unionAll _)
+    val mixed = paths.map(p => Tables.parquet(spark, p._3)).reduce(_ unionAll _)
     timed("mixed_all_tiers", (classes.length.toLong + 3) * n) {
       val img = M.imageAHashes(spark, mixed).select(col("doc_id"))
       val aud = M.audioFingerprints(spark, mixed).select(col("doc_id"))

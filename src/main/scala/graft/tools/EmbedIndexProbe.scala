@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Tables
+
 /** Soak probe for the stored embedding near-dup index: the bench gate
   * rows probe with a bucket-SATURATING parity batch (every bucket hit,
   * prune inert by design), so this probe measures the PRODUCTION shape
@@ -21,7 +23,7 @@ object EmbedIndexProbe {
       val t0 = System.nanoTime(); f
       println(f"[probe] $tag%-34s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
     }
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.parquet(spark, s"$dir/embeddings.parquet")
     val seen = emb.filter(col("vec_id") % 2 === 1)
     val smallBatch = emb.filter(col("vec_id") % 2 === 0 && col("vec_id") < 1000)
       .localCheckpoint()

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Tables
+
 /** Soak probe for [[graft.dedup.DupClusters.mergeComponents]] — the
   * incremental-maintenance claim is "per-batch cost scales with the
   * BATCH (quotient graph ≤ 2·|batch edges| nodes), plus one
@@ -33,7 +35,7 @@ object IncCcProbe {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     val stride = 1000000000000L
-    val ids = spark.read.parquet(s"$dir/documents.parquet")
+    val ids = Tables.parquet(spark, s"$dir/documents.parquet")
       .select(col("doc_id").as("id")).localCheckpoint()
     val maxReplica = ids.agg(max(floor(col("id") / stride))).collect()(0).getLong(0)
     val groupEdges = ids.filter(pmod(col("id"), lit(10)) =!= 0)

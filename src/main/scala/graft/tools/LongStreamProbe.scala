@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Tables
+
 /** Long-stream receipt for the label-store compaction cadence
   * ([[graft.streaming.ClusterIngest]] `compactEvery`): without folds,
   * every micro-batch's [[graft.streaming.ClusterIngest.readLabels]]
@@ -64,8 +66,8 @@ object LongStreamProbe {
     val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
     require(diff == 0, s"labelings must match, $diff rows differ")
     println(s"[probe] labels identical (${a.count()} ids); " +
-      s"segments: off=${spark.read.parquet(s0).select("batch_id").distinct().count()} " +
-      s"cadence8=${spark.read.parquet(s8).select("batch_id").distinct().count()}")
+      s"segments: off=${Tables.parquet(spark, s0).select("batch_id").distinct().count()} " +
+      s"cadence8=${Tables.parquet(spark, s8).select("batch_id").distinct().count()}")
 
     // the mechanism, isolated: readLabels wall as a function of segment
     // count — this is the term that grows one segment per batch without
@@ -74,7 +76,7 @@ object LongStreamProbe {
     // segments, constant after a fold)
     for (segStore <- Seq(s0, s8); pass <- 1 to 2) {
       System.gc()
-      val nSegs = spark.read.parquet(segStore).select("batch_id").distinct().count()
+      val nSegs = Tables.parquet(spark, segStore).select("batch_id").distinct().count()
       val t0 = System.nanoTime()
       graft.streaming.ClusterIngest.readLabels(spark, segStore)
         .write.format("noop").mode("overwrite").save()

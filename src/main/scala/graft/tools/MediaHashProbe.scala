@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
+import graft.ops.Tables
 
 /** Soak probe for the perceptual-hash family at 100× doc count
   * (500 k payloads): media decode + hash is a SCAN-STAGE map — no
@@ -31,7 +32,7 @@ object MediaHashProbe {
       val s = (System.nanoTime() - t0) / 1e9
       println(f"[probe] $tag%-26s ${s}%7.2fs rows=$rows docs/s=${(n / s).toLong}")
     }
-    val ids = spark.read.parquet(s"$dir/documents.parquet").select("doc_id")
+    val ids = Tables.parquet(spark, s"$dir/documents.parquet").select("doc_id")
     val n = ids.count()
     println(s"[probe] docs=$n")
 

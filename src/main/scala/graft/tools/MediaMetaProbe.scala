@@ -2,6 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.io.NioLocalFileSystem
+import graft.ops.Tables
+
 /** Receipt for the metadata-at-ingest design ([[graft.streaming
   * .MetaIngest]]): on the same mixed-media corpus, time ONE header
   * peek per payload ([[graft.multimodal.Multimodal.mediaMeta]])
@@ -35,7 +38,7 @@ object MediaMetaProbe {
     val tmp = java.nio.file.Files.createTempDirectory("media_meta_probe")
     val src = tmp.resolve("docs").toString
     // mixed corpus: JPEG / PNG / WAV / Motion-JPEG MP4, one build ever
-    spark.range(n.toLong).repartition(parts).as[Long]
+    val corpus = spark.range(n.toLong).repartition(parts).as[Long]
       .map { id =>
         val bytes =
           if (big) (id % 4) match {
@@ -53,8 +56,8 @@ object MediaMetaProbe {
         (id, bytes)
       }
       .toDF("doc_id", "payload")
-      .write.mode("overwrite").parquet(src)
-    val docs = spark.read.parquet(src)
+    NioLocalFileSystem.write(corpus).mode("overwrite").parquet(src)
+    val docs = Tables.parquet(spark, src)
     // warmup both paths once (JIT + footer cache)
     graft.multimodal.Multimodal.mediaMeta(spark, docs.limit(2000)).count()
     graft.multimodal.Multimodal.imageAHashes(spark, docs.limit(2000)).count()

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.io.NioLocalFileSystem
+import graft.ops.Tables
 
 /** Rewrites a single-file-per-table testdata directory as a multi-file
   * layout (`nFiles` parquet parts per table), mimicking a real lake where
@@ -35,9 +37,9 @@ object MultiFileFixture {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
       nFiles)
     tables.foreach { name =>
-      spark.read.parquet(s"$src/$name.parquet")
-        .repartition(nFiles) // round-robin: even file sizes, no key bias
-        .write.mode("overwrite").parquet(s"$out/$name.parquet")
+      // round-robin: even file sizes, no key bias
+      NioLocalFileSystem.write(Tables.parquet(spark, s"$src/$name.parquet").repartition(nFiles))
+        .mode("overwrite").parquet(s"$out/$name.parquet")
     }
     spark.stop()
   }

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Tables
+
 /** Soak probe for [[graft.dedup.PageRank]] where the GRAPH grows, not
   * just the scan under it: the shipped q_pagerank pins doc_id < 1000,
   * which on the replica-strided ScaleFixture selects a constant graph
@@ -25,7 +27,7 @@ object PageRankProbe {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     val stride = 1000000000000L
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(spark, s"$dir/documents.parquet")
       .filter(col("doc_id") % stride < base && col("doc_id") < stride * reps)
     val t0 = System.nanoTime()
     val sims = graft.dedup.NearDup.simHash(docs, "doc_id", "text")

@@ -3,6 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.NioLocalFileSystem
+import graft.ops.Tables
+
 /** Replicates a scale-factor directory `factor`× into a multi-file layout
   * for soak benchmarks (e.g. sf0.1 → an sf1-equivalent).
   *
@@ -112,7 +115,7 @@ object ScaleFixture {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
       nFiles)
     MultiFileFixture.tables.foreach { name =>
-      val raw = spark.read.parquet(s"$src/$name.parquet")
+      val raw = Tables.parquet(spark, s"$src/$name.parquet")
       val dim =
         if (raw.columns.contains("embedding")) raw.select(size(col("embedding"))).head().getInt(0)
         else 0
@@ -125,8 +128,8 @@ object ScaleFixture {
       // nFiles balanced input slices → nFiles balanced output files,
       // zero post-multiplication shuffle.
       val base = raw.repartition(nFiles)
-      scaled(base, factor, dim, textDupDepth, vocabSize)
-        .write.mode("overwrite").parquet(s"$out/$name.parquet")
+      NioLocalFileSystem.write(scaled(base, factor, dim, textDupDepth, vocabSize))
+        .mode("overwrite").parquet(s"$out/$name.parquet")
     }
     spark.stop()
   }

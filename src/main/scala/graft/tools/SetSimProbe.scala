@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Tables
+
 /** Soak probe for [[graft.dedup.SetSimJoin]] where the PAIR GRAPH grows,
   * not just the scan: the shipped q_setsim_join pins doc_id < 500, which
   * on the replica-strided ScaleFixture selects a constant 500 docs under
@@ -25,7 +27,7 @@ object SetSimProbe {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     val stride = 1000000000000L
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.parquet(spark, s"$dir/documents.parquet")
       .filter(col("doc_id") % stride < 500 && col("doc_id") < stride * reps)
     val t0 = System.nanoTime()
     val n = graft.dedup.SetSimJoin

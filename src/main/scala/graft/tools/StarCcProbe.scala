@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Tables
+
 /** Soak probe for [[graft.dedup.DupClusters.connectedComponentsStar]]
   * where BOTH the node count and the component diameter grow with the
   * fixture — the O(log n)-rounds claim needs a receipt on a graph the
@@ -29,7 +31,7 @@ object StarCcProbe {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128").toInt)
     val stride = 1000000000000L
-    val ids = spark.read.parquet(s"$dir/documents.parquet")
+    val ids = Tables.parquet(spark, s"$dir/documents.parquet")
       .select(col("doc_id").as("id")).localCheckpoint()
     val nNodes = ids.count()
     val groupEdges = ids.filter(pmod(col("id"), lit(10)) =!= 0)

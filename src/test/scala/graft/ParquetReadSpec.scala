@@ -1,15 +1,12 @@
 package graft
 
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
@@ -29,20 +26,10 @@ class ParquetReadSpec extends SparkTestBase {
 
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
-  /** Spark jobs started while `f` runs, counted after the bus drains. */
+  /** Spark jobs started while `f` runs. */
   private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      ListenerBusDrain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (out, layers) = Profile.during(spark)(f)
+    (out, layers.jobs.toInt)
   }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq

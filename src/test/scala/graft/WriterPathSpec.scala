@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every `DataFrameWriter` in `src/main/scala/graft` starts at
   * [[graft.io.NioLocalFileSystem.write]], the engine's one local write
-  * path, unless it is listed below with its reason. A writer begun with a
-  * bare `.write` would bring back one forked `/bin/chmod` per file, `.crc`
-  * checksum and directory it creates.
+  * path, unless it writes to the noop sink (which runs the plan and
+  * writes no file) or is listed below with its reason. A writer begun
+  * with a bare `.write` would bring back one forked `/bin/chmod` per
+  * file, `.crc` checksum and directory it creates.
   *
   * Likewise every parquet read either names its schema (`.schema(` in the
   * same statement) or starts at [[graft.ops.Tables.parquet]], the one
@@ -21,9 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `ADD … PARTITION` SQL text: partitions are listed and registered
   * through the session catalog API, one path.
   *
-  * And every session in `src/main/scala/graft`, `graft.tools` included,
-  * comes from [[graft.GraftSession.local]], unless its file is listed
-  * below with its reason.
+  * And every session in `src/main/scala/graft` comes from
+  * [[graft.GraftSession.local]], unless its file is listed below with its
+  * reason.
   *
   * And every micro-batch sink starts at [[graft.streaming.Ingest.drain]]:
   * no other file calls `.foreachBatch`, so the checkpoint, the trigger
@@ -34,9 +35,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * as binary, so a search of the source silently skips it.
   *
   * The scans read the sources with comments blanked, except the
-  * control-byte scan, which reads raw bytes. The writer, read and
-  * micro-batch scans skip `graft.tools`: those probes are slated for
-  * deletion.
+  * control-byte scan, which reads raw bytes. One set of rules holds for
+  * all of `src/main/scala/graft`, the `graft.tools` mains included.
   */
 class WriterPathSpec extends AnyFunSuite {
   import scala.jdk.CollectionConverters._
@@ -54,9 +54,7 @@ class WriterPathSpec extends AnyFunSuite {
     ("pipeline/Bucketing.scala", "saveAsTable") ->
       "table sink: the table would persist the writer options",
     ("SparkEntry.scala", "saveAsTable") ->
-      "table sink: the table would persist the writer options",
-    ("Bench.scala", "save") ->
-      "the noop sink runs the plan and writes no file")
+      "table sink: the table would persist the writer options")
 
   /** Parquet reads that leave the schema to Spark's inference:
     * (file, enclosing def) -> why.
@@ -75,6 +73,8 @@ class WriterPathSpec extends AnyFunSuite {
   // `.write` as a property: not `out.write(b)`, `foreach(out.write)` or `.writeStream`
   private val WriterStart = """\.write\b(?!\s*[()])""".r
   private val Sink = """\.(parquet|json|orc|csv|text|save|saveAsTable|insertInto)\s*\(""".r
+  // the noop sink runs the plan and writes no file, so no filesystem applies
+  private val NoopFormat = """\.format\s*\(\s*"noop"\s*\)""".r
   // `.read`/`.readStream` as a property: not `Tables.read(spark, ...)`
   private val ReaderStart = """\.read(?:Stream)?\b(?!\s*[(])""".r
   private val ReadSource = """\.(parquet|json|orc|csv|text|textFile|table|load)\s*\(""".r
@@ -93,23 +93,18 @@ class WriterPathSpec extends AnyFunSuite {
   private def blankComments(src: String): String =
     Comment.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
 
-  /** (file relative to `dir`, path) of every `.scala` file under `dir`,
-    * `tools/` only when `tools`.
-    */
-  private def scalaFiles(dir: Path, tools: Boolean): Seq[(String, Path)] = {
+  /** (file relative to `dir`, path) of every `.scala` file under `dir`. */
+  private def scalaFiles(dir: Path): Seq[(String, Path)] = {
     assert(Files.isDirectory(dir), s"run from the repository root: no $dir")
     Files.walk(dir).iterator().asScala.toSeq
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => dir.relativize(p).toString.replace('\\', '/') -> p)
-      .filter { case (rel, _) => tools || !rel.startsWith("tools/") }
       .sortBy(_._1)
   }
 
-  /** (file relative to `root`, source with comments blanked), `tools/`
-    * only when `tools`.
-    */
-  private def sources(tools: Boolean = false): Seq[(String, String)] =
-    scalaFiles(root, tools).map { case (rel, p) =>
+  /** (file relative to `root`, source with comments blanked). */
+  private def sources(): Seq[(String, String)] =
+    scalaFiles(root).map { case (rel, p) =>
       // ISO-8859-1: some sources carry raw bytes in string literals
       rel -> blankComments(new String(Files.readAllBytes(p), StandardCharsets.ISO_8859_1))
     }
@@ -122,7 +117,7 @@ class WriterPathSpec extends AnyFunSuite {
     * every source that has one.
     */
   private def controlBytes(): Seq[(String, Int, Int)] =
-    scalaFiles(Paths.get("src"), tools = true).flatMap { case (rel, p) =>
+    scalaFiles(Paths.get("src")).flatMap { case (rel, p) =>
       val bytes = Files.readAllBytes(p)
       bytes.indexWhere(isStrayControl) match {
         case -1 => None
@@ -138,15 +133,22 @@ class WriterPathSpec extends AnyFunSuite {
 
   private def lineOf(src: String, at: Int): Int = src.take(at).count(_ == '\n') + 1
 
-  /** (file, sink, line) of every writer outside `tools/`; the sink is the
-    * first sink call after the `.write`, or "-" when the statement
-    * returns the writer instead.
+  /** The first sink call of a writer's `chain`: "noop" when the chain
+    * picks the noop format before it, "-" when it returns the writer
+    * instead.
+    */
+  private def sinkOf(chain: String): String =
+    Sink.findFirstMatchIn(chain).map { s =>
+      if (NoopFormat.findFirstIn(chain.take(s.start)).isDefined) "noop" else s.group(1)
+    }.getOrElse("-")
+
+  /** (file, sink, line) of every writer; the sink is [[sinkOf]] the
+    * statement after the `.write`.
     */
   private def writers(): Seq[(String, String, Int)] =
     sources().flatMap { case (rel, src) =>
       WriterStart.findAllMatchIn(src).map { m =>
-        val sink = Sink.findFirstMatchIn(statement(src, m.end)).map(_.group(1)).getOrElse("-")
-        (rel, sink, lineOf(src, m.start))
+        (rel, sinkOf(statement(src, m.end)), lineOf(src, m.start))
       }
     }
 
@@ -172,7 +174,7 @@ class WriterPathSpec extends AnyFunSuite {
 
   /** (file, line) of every `SparkSession.builder` call outside `GraftSession.scala`. */
   private def builders(): Seq[(String, Int)] =
-    sources(tools = true).filterNot(_._1 == "GraftSession.scala").flatMap { case (rel, src) =>
+    sources().filterNot(_._1 == "GraftSession.scala").flatMap { case (rel, src) =>
       Builder.findAllMatchIn(src).map(m => (rel, lineOf(src, m.start)))
     }
 
@@ -231,7 +233,9 @@ class WriterPathSpec extends AnyFunSuite {
 
   test("every DataFrameWriter starts at NioLocalFileSystem.write or is a listed exception") {
     val found = writers()
-    val bypass = found.filterNot { case (file, sink, _) => allowed.contains((file, sink)) }
+    val bypass = found.filterNot { case (file, sink, _) =>
+      sink == "noop" || allowed.contains((file, sink))
+    }
     assert(bypass.isEmpty, "writers that bypass NioLocalFileSystem.write:\n" +
       bypass.map { case (f, s, l) => s"  $f:$l ($s)" }.mkString("\n"))
     val stale = allowed.keySet -- found.map { case (f, s, _) => (f, s) }
@@ -272,9 +276,9 @@ class WriterPathSpec extends AnyFunSuite {
         |  .write.mode("append").parquet(p) // df.write.json(q)
         |/** df.write.orc(r) */ out.write(b); xs.foreach(out.write)
         |s.writeStream.start(); val u = "file:///x"; df.write.csv(u)
+        |df.write.format("noop").mode("overwrite").save(); df.write.format("parquet").save(p)
         |""".stripMargin)
-    val sinks = WriterStart.findAllMatchIn(src)
-      .map(m => Sink.findFirstMatchIn(src.substring(m.end)).map(_.group(1))).toSeq
-    assert(sinks === Seq(Some("parquet"), Some("csv")))
+    val sinks = WriterStart.findAllMatchIn(src).map(m => sinkOf(src.substring(m.end))).toSeq
+    assert(sinks === Seq("parquet", "csv", "noop", "save"))
   }
 }
