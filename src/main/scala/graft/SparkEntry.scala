@@ -1190,6 +1190,93 @@ object SparkEntry {
   private def md5LongSql(inner: String): String =
     s"('0x' || substring(md5($inner), 1, 15))::BIGINT"
 
+  /** DuckDB wrap of a HUGEINT bit sum `s` in [0, 2^64) to the signed
+    * BIGINT a Spark Long holds (two's complement). `indent` is the
+    * second line's indentation.
+    */
+  private def signedBigintSql(s: String, indent: Int = 24): String =
+    s"CAST(CASE WHEN $s >= 9223372036854775808\n${" " * indent}" +
+      s"THEN $s - 18446744073709551616 ELSE $s END AS BIGINT)"
+
+  /** The closing SELECT of a 64-bit media hash oracle: `hs`(doc_id, s),
+    * or `hs`(doc_id, f, s) when `perFrame`, to the signed hash `out`.
+    */
+  private def hashSelectSql(out: String, perFrame: Boolean = false): String =
+    if (perFrame)
+      s"""SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
+                   ${signedBigintSql("s")} AS $out
+            FROM hs ORDER BY doc_id, frame_idx"""
+    else
+      s"""SELECT doc_id,
+                   ${signedBigintSql("s")} AS $out
+            FROM hs ORDER BY doc_id"""
+
+  /** The aHash bit law ([[graft.multimodal.Multimodal.imageAHashes]]) over
+    * prior CTEs `blk`(doc_id, bi, bj, …) and `tot`(doc_id, total): `bits`
+    * sets bit (bi, bj) where `test` holds, and `hs` sums it at position
+    * bi·8 + bj into a HUGEINT `s`, or into the UBIGINT `u` a Hamming join
+    * reads when `unsigned`. `perFrame` keys both on (doc_id, f) instead.
+    */
+  private def aHashCtes(test: String, groupBy: String = "doc_id", perFrame: Boolean = false,
+                        unsigned: Boolean = false): String = {
+    val (bkey, using, key, by) =
+      if (perFrame) ("b.doc_id, b.f", "doc_id, f", "doc_id, f", "1, 2")
+      else ("b.doc_id", "doc_id", "doc_id", groupBy)
+    val (open, close) = if (unsigned) ("CAST(SUM", "AS UBIGINT) AS u") else ("SUM", "AS s")
+    s"""bits AS (SELECT $bkey, bi, bj,
+                            CASE WHEN $test THEN 1 ELSE 0 END AS bit
+                     FROM blk b JOIN tot t USING ($using)),
+            hs AS (SELECT $key,
+                          $open(CASE WHEN bit = 1
+                              THEN (1::HUGEINT << (bi*8 + bj))
+                              ELSE 0::HUGEINT END) $close
+                   FROM bits GROUP BY $by)"""
+  }
+
+  /** [[aHashCtes]] over a 16×16 `px`(doc_id, r, x, gray) grid: 2×2-pixel
+    * blocks, bit set where the block mean reaches the grid mean.
+    */
+  private def grayGridAHashCtes(unsigned: Boolean = false): String =
+    s"""tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
+            blk AS (SELECT doc_id, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
+                    FROM px GROUP BY 1, 2, 3),
+            ${aHashCtes("b.bsum * 256 >= t.total * 4", unsigned = unsigned)}"""
+
+  /** The 65-frame energy-delta fingerprint ([[graft.multimodal.Multimodal
+    * .audioFingerprints]]) over prior CTEs `base`(doc_id, …) and
+    * `samples`(doc_id, `at`, v): frame f of a doc's `n` samples is
+    * [f·n/65, (f+1)·n/65), bit f−1 is set where frame f's energy exceeds
+    * frame f−1's, and `hs` sums the bits into a HUGEINT `s`, or into the
+    * UBIGINT `u` a Hamming join reads when `unsigned`.
+    */
+  private def energyDeltaCtes(base: String, n: String, samples: String = "sm",
+                              at: String = "i", unsigned: Boolean = false): String = {
+    val (open, close) = if (unsigned) ("CAST(SUM", "AS UBIGINT) AS u") else ("SUM", "AS s")
+    s"""fr AS (SELECT $base.doc_id, f.f AS f,
+                          (f.f * $n) // 65 AS lo, ((f.f + 1) * $n) // 65 AS hi
+                   FROM $base JOIN generate_series(0, 64) f(f) ON TRUE),
+            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM($samples.v * $samples.v) AS BIGINT) AS e
+                   FROM fr JOIN $samples ON $samples.doc_id = fr.doc_id
+                     AND $samples.$at >= fr.lo AND $samples.$at < fr.hi
+                   GROUP BY 1, 2),
+            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
+                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
+                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
+                     WHERE a.f >= 1),
+            hs AS (SELECT doc_id,
+                          $open(CASE WHEN bit = 1
+                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) $close
+                   FROM bits GROUP BY doc_id)"""
+  }
+
+  /** Every doc pair of `hs`(doc_id, u) within `maxHamming` bits. */
+  private def hammingPairsSql(maxHamming: Int): String =
+    s"""SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   CAST(bit_count(xor(a.u, b.u)) AS INT) AS hamming
+            FROM hs a JOIN hs b
+              ON a.doc_id < b.doc_id AND bit_count(xor(a.u, b.u)) <= $maxHamming
+            ORDER BY id_a, id_b"""
+
   /** DuckDB replay of [[graft.text.Bpe]]'s leftmost-greedy merge apply:
     * fold the piped symbol string `s` left to right with a string
     * accumulator (`list_reduce`), merging exactly when the accumulator's
@@ -3883,7 +3970,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (
+    Some(s"""WITH dims AS (
               SELECT doc_id,
                      (CAST(50 + doc_id % 50 AS INT) * CAST(1 + doc_id % 2 AS INT)) AS n
               FROM documents),
@@ -3891,25 +3978,8 @@ object SparkEntry {
             sm AS (SELECT doc_id, n, i.i AS i,
                           ((doc_id + i.i * 13) % 256 - 128) AS v
                    FROM d2 JOIN generate_series(0, 197) i(i) ON i.i < n),
-            fr AS (SELECT d2.doc_id, f.f AS f,
-                          (f.f * d2.n) // 65 AS lo, ((f.f + 1) * d2.n) // 65 AS hi
-                   FROM d2 JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.i >= fr.lo AND sm.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("d2", "d2.n")}
+            ${hashSelectSql("afp")}"""))
 
   /** IEEE-FLOAT WAV through the fingerprint gate (format tag 3 —
     * r17 session 2): float32 (even ids) and float64 (odd ids) files
@@ -3937,7 +4007,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (
+    Some(s"""WITH dims AS (
               SELECT doc_id,
                      (CAST(50 + doc_id % 50 AS INT) * CAST(1 + doc_id % 2 AS INT)) AS n
               FROM documents),
@@ -3945,25 +4015,8 @@ object SparkEntry {
             sm AS (SELECT doc_id, n, i.i AS i,
                           ((doc_id + i.i * 13) % 256 - 128) AS v
                    FROM d2 JOIN generate_series(0, 197) i(i) ON i.i < n),
-            fr AS (SELECT d2.doc_id, f.f AS f,
-                          (f.f * d2.n) // 65 AS lo, ((f.f + 1) * d2.n) // 65 AS hi
-                   FROM d2 JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.i >= fr.lo AND sm.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("d2", "d2.n")}
+            ${hashSelectSql("afp")}"""))
 
   /** SPECTRAL-envelope audio fingerprint ([[graft.multimodal.Multimodal
     * .audioSpectralFingerprints]]): 16 time frames × 4 modulation
@@ -4018,10 +4071,7 @@ object SparkEntry {
                               THEN (1::HUGEINT << (f * 4 + b - 1))
                               ELSE 0::HUGEINT END) AS s
                    FROM resp GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS asfp
-            FROM hs ORDER BY doc_id""")
+            ${hashSelectSql("asfp")}""")
     })
 
   /** Audio fingerprinting over FLAC payloads ([[graft.multimodal.Flac
@@ -4045,7 +4095,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (
+    Some(s"""WITH dims AS (
               SELECT doc_id,
                      (CAST(192 * (1 + doc_id % 4) AS INT)
                       * CAST(1 + doc_id % 2 AS INT)) AS n
@@ -4053,25 +4103,8 @@ object SparkEntry {
             sm AS (SELECT doc_id, n, i.i AS i,
                           ((doc_id + i.i * 13) % 256 - 128) AS v
                    FROM dims JOIN generate_series(0, 1535) i(i) ON i.i < n),
-            fr AS (SELECT dims.doc_id, f.f AS f,
-                          (f.f * dims.n) // 65 AS lo, ((f.f + 1) * dims.n) // 65 AS hi
-                   FROM dims JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.i >= fr.lo AND sm.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("dims", "dims.n")}
+            ${hashSelectSql("afp")}"""))
 
   /** Ogg-WRAPPED FLAC through the fingerprint gate (r17 session 2):
     * the mapping's first packet carries a verbatim STREAMINFO shell,
@@ -4096,7 +4129,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (
+    Some(s"""WITH dims AS (
               SELECT doc_id,
                      (CAST(192 * (1 + doc_id % 4) AS INT)
                       * CAST(1 + doc_id % 2 AS INT)) AS n
@@ -4104,25 +4137,8 @@ object SparkEntry {
             sm AS (SELECT doc_id, n, i.i AS i,
                           ((doc_id + i.i * 13) % 256 - 128) AS v
                    FROM dims JOIN generate_series(0, 1535) i(i) ON i.i < n),
-            fr AS (SELECT dims.doc_id, f.f AS f,
-                          (f.f * dims.n) // 65 AS lo, ((f.f + 1) * dims.n) // 65 AS hi
-                   FROM dims JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.i >= fr.lo AND sm.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("dims", "dims.n")}
+            ${hashSelectSql("afp")}"""))
 
   /** LOSSY audio through the real G.711 mu-law decode ([[graft
     * .multimodal.Multimodal.muLawToPcm]] — the ITU expansion law, exact
@@ -4143,7 +4159,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (SELECT doc_id, CAST(600 + (doc_id % 3) * 37 AS INT) AS n
+    Some(s"""WITH dims AS (SELECT doc_id, CAST(600 + (doc_id % 3) * 37 AS INT) AS n
                    FROM documents WHERE doc_id < 50),
             sm AS (SELECT doc_id, n, i.i AS i,
                           255 - ((doc_id + i.i * 11) % 256) AS u1
@@ -4154,25 +4170,8 @@ object SparkEntry {
                                 ELSE (((u1 % 16) * 8 + 132) << ((u1 // 16) % 8)) - 132
                            END AS v
                     FROM sm),
-            fr AS (SELECT dims.doc_id, f.f AS f,
-                          (f.f * dims.n) // 65 AS lo, ((f.f + 1) * dims.n) // 65 AS hi
-                   FROM dims JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(dec.v * dec.v) AS BIGINT) AS e
-                   FROM fr JOIN dec ON dec.doc_id = fr.doc_id
-                     AND dec.i >= fr.lo AND dec.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("dims", "dims.n", samples = "dec")}
+            ${hashSelectSql("afp")}"""))
 
   /** G.711 A-law twin of [[qAudioFingerprintMulaw]] — XOR 0x55, segment
     * mantissa rebuild (seg 0: +8; seg 1: +0x108; else shifted), sign bit
@@ -4189,7 +4188,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (SELECT doc_id, CAST(600 + (doc_id % 3) * 37 AS INT) AS n
+    Some(s"""WITH dims AS (SELECT doc_id, CAST(600 + (doc_id % 3) * 37 AS INT) AS n
                    FROM documents WHERE doc_id < 50),
             sm AS (SELECT doc_id, n, i.i AS i,
                           xor((doc_id + i.i * 11) % 256, 85) AS a
@@ -4204,25 +4203,8 @@ object SparkEntry {
             dec AS (SELECT doc_id, n, i,
                            CASE WHEN a >= 128 THEN t ELSE -t END AS v
                     FROM mag),
-            fr AS (SELECT dims.doc_id, f.f AS f,
-                          (f.f * dims.n) // 65 AS lo, ((f.f + 1) * dims.n) // 65 AS hi
-                   FROM dims JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(dec.v * dec.v) AS BIGINT) AS e
-                   FROM fr JOIN dec ON dec.doc_id = fr.doc_id
-                     AND dec.i >= fr.lo AND dec.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("dims", "dims.n", samples = "dec")}
+            ${hashSelectSql("afp")}"""))
 
   /** LOSSY audio through the real IMA/DVI ADPCM decode ([[graft
     * .multimodal.Multimodal.imaAdpcmDecode]] — the canonical 4-bit
@@ -4275,25 +4257,8 @@ object SparkEntry {
                            END AS nib
                     FROM rec WHERE i < 255) n0) n1) n2),
             sm AS (SELECT doc_id, b * 257 + i + 1 AS s, pred AS v FROM rec),
-            fr AS (SELECT ids.doc_id, f.f AS f,
-                          (f.f * 514) // 65 AS lo, ((f.f + 1) * 514) // 65 AS hi
-                   FROM ids JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.s >= fr.lo AND sm.s < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id""")
+            ${energyDeltaCtes("ids", "514", at = "s")}
+            ${hashSelectSql("afp")}""")
     })
 
   /** PCM width envelope ([[graft.multimodal.Multimodal
@@ -4314,32 +4279,15 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 50),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 50),
             sm AS (SELECT doc_id, i.i AS i,
                           CASE WHEN doc_id % 2 = 0
                                THEN ((doc_id + i.i * 11) % 256 - 128) * 256
                                ELSE (doc_id + i.i * 9901) % 1000000 - 500000
                           END AS v
                    FROM ids JOIN generate_series(0, 599) i(i) ON TRUE),
-            fr AS (SELECT ids.doc_id, f.f AS f,
-                          (f.f * 600) // 65 AS lo, ((f.f + 1) * 600) // 65 AS hi
-                   FROM ids JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.i >= fr.lo AND sm.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("ids", "600")}
+            ${hashSelectSql("afp")}"""))
 
   /** LOSSY audio through the real MS-ADPCM decode ([[graft.multimodal
     * .Multimodal.msAdpcmDecode]] — the canonical 7-coefficient
@@ -4398,25 +4346,8 @@ object SparkEntry {
                    UNION ALL
                    SELECT doc_id, b * 252 + 2 + i AS s, s1 AS v
                    FROM rec WHERE i >= 0),
-            fr AS (SELECT ids.doc_id, f.f AS f,
-                          (f.f * 504) // 65 AS lo, ((f.f + 1) * 504) // 65 AS hi
-                   FROM ids JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.s >= fr.lo AND sm.s < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id""")
+            ${energyDeltaCtes("ids", "504", at = "s")}
+            ${hashSelectSql("afp")}""")
     })
 
   /** Sun .au through the fingerprint gate ([[graft.multimodal
@@ -4448,7 +4379,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (SELECT doc_id, CAST(600 + (doc_id % 3) * 37 AS INT) AS n
+    Some(s"""WITH dims AS (SELECT doc_id, CAST(600 + (doc_id % 3) * 37 AS INT) AS n
                    FROM documents WHERE doc_id < 50),
             sm0 AS (SELECT doc_id, n, i.i AS i,
                            255 - ((doc_id + i.i * 11) % 256) AS u1
@@ -4461,25 +4392,8 @@ object SparkEntry {
                             END
                           ELSE (doc_id + i * 13) % 256 - 128 END AS v
                    FROM sm0),
-            fr AS (SELECT dims.doc_id, f.f AS f,
-                          (f.f * dims.n) // 65 AS lo, ((f.f + 1) * dims.n) // 65 AS hi
-                   FROM dims JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.i >= fr.lo AND sm.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("dims", "dims.n")}
+            ${hashSelectSql("afp")}"""))
 
   /** AIFF through the fingerprint gate ([[graft.multimodal.Multimodal
     * .makeAiff]] — r17): FORM/COMM/SSND walked big-endian (the WAV
@@ -4505,7 +4419,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (
+    Some(s"""WITH dims AS (
               SELECT doc_id,
                      (CAST(300 + (doc_id % 5) * 23 AS INT)
                       * CAST(1 + doc_id % 2 AS INT)) AS n
@@ -4513,25 +4427,8 @@ object SparkEntry {
             sm AS (SELECT doc_id, n, i.i AS i,
                           ((doc_id + i.i * 13) % 256 - 128) AS v
                    FROM dims JOIN generate_series(0, 783) i(i) ON i.i < n),
-            fr AS (SELECT dims.doc_id, f.f AS f,
-                          (f.f * dims.n) // 65 AS lo, ((f.f + 1) * dims.n) // 65 AS hi
-                   FROM dims JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.i >= fr.lo AND sm.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS afp
-            FROM hs ORDER BY doc_id"""))
+            ${energyDeltaCtes("dims", "dims.n")}
+            ${hashSelectSql("afp")}"""))
 
   /** The MEASURED audio-decode boundary ([[graft.multimodal.Multimodal
     * .audioCoverage]]): a mixed corpus across every sniffable container
@@ -4619,7 +4516,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.imageAHashes(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
               SELECT d.doc_id, r.r AS r, x.x AS x,
                      (d.doc_id + (15 - r.r) * 31 + (3*x.x + 0) * 7) % 256
                    + (d.doc_id + (15 - r.r) * 31 + (3*x.x + 1) * 7) % 256
@@ -4627,21 +4524,8 @@ object SparkEntry {
               FROM documents d
               JOIN generate_series(0, 15) r(r) ON TRUE
               JOIN generate_series(0, 15) x(x) ON TRUE),
-            tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
-            blk AS (SELECT doc_id, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
-                    FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${grayGridAHashCtes()}
+            ${hashSelectSql("ahash")}"""))
 
   /** WebP through the metadata pass (r17): stills in all three header
     * forms report canvas dims; animated VP8X files count ANMF frames
@@ -4829,7 +4713,7 @@ object SparkEntry {
         }.toDF("doc_id", "payload")
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
             blk AS (SELECT doc_id, br.bi AS bi, bc.bj AS bj,
                            ((doc_id + (br.bi // 2) * 23 + (br.bi % 2) * 7
                              + bc.bj * 31) % 200) + 28 AS v
@@ -4837,18 +4721,8 @@ object SparkEntry {
                     JOIN generate_series(0, 7) br(bi) ON TRUE
                     JOIN generate_series(0, 7) bc(bj) ON TRUE),
             tot AS (SELECT doc_id, SUM(v) AS total FROM blk GROUP BY 1),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.v * 64 >= t.total THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY 1)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${aHashCtes("b.v * 64 >= t.total", groupBy = "1")}
+            ${hashSelectSql("ahash")}"""))
 
   /** TIFF through the perceptual-hash gate ([[graft.multimodal
     * .Multimodal.tiffGrayGrid]] via `imageAHashes` — VERDICT r16 #3):
@@ -4880,7 +4754,7 @@ object SparkEntry {
         }.toDF("doc_id", "payload")
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
               SELECT d.doc_id, r.r AS r, x.x AS x,
                      CASE WHEN d.doc_id % 4 IN (0, 3)
                           THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
@@ -4891,21 +4765,8 @@ object SparkEntry {
               FROM documents d
               JOIN generate_series(0, 15) r(r) ON TRUE
               JOIN generate_series(0, 15) x(x) ON TRUE),
-            tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
-            blk AS (SELECT doc_id, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
-                    FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${grayGridAHashCtes()}
+            ${hashSelectSql("ahash")}"""))
 
   /** COMPRESSED TIFF through the same gate ([[graft.multimodal
     * .Multimodal.tiffLzwDecode]]/[[graft.multimodal.Multimodal
@@ -4941,7 +4802,7 @@ object SparkEntry {
         }.toDF("doc_id", "payload")
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
               SELECT d.doc_id, r.r AS r, x.x AS x,
                      CASE WHEN d.doc_id % 6 IN (0, 3, 4)
                           THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
@@ -4952,21 +4813,8 @@ object SparkEntry {
               FROM documents d
               JOIN generate_series(0, 15) r(r) ON TRUE
               JOIN generate_series(0, 15) x(x) ON TRUE),
-            tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
-            blk AS (SELECT doc_id, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
-                    FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${grayGridAHashCtes()}
+            ${hashSelectSql("ahash")}"""))
 
   /** TIFF LAYOUT axes through the same gate (r17 session 2 — the three
     * storage dimensions the strip/codec rows don't touch): 16-bit
@@ -5002,7 +4850,7 @@ object SparkEntry {
         }.toDF("doc_id", "payload")
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
               SELECT d.doc_id, r.r AS r, x.x AS x,
                      CASE WHEN d.doc_id % 6 IN (0, 3)
                           THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
@@ -5016,18 +4864,8 @@ object SparkEntry {
             tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
             blk AS (SELECT doc_id, r // 3 AS bi, x // 3 AS bj, SUM(gray) AS bsum
                     FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * 64 >= t.total THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${aHashCtes("b.bsum * 64 >= t.total")}
+            ${hashSelectSql("ahash")}"""))
 
   /** ICO (favicon container) through the perceptual-hash gate ([[graft
     * .multimodal.Multimodal.icoDecode]] — r17 session 2): the decode
@@ -5057,7 +4895,7 @@ object SparkEntry {
         }.toDF("doc_id", "payload")
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
               SELECT d.doc_id, r.r AS r, x.x AS x,
                      CASE d.doc_id % 4
                        WHEN 2 THEN
@@ -5074,21 +4912,8 @@ object SparkEntry {
               FROM documents d
               JOIN generate_series(0, 15) r(r) ON TRUE
               JOIN generate_series(0, 15) x(x) ON TRUE),
-            tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
-            blk AS (SELECT doc_id, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
-                    FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${grayGridAHashCtes()}
+            ${hashSelectSql("ahash")}"""))
 
   /** The widened BMP envelope through the perceptual-hash gate
     * ([[graft.multimodal.Multimodal.bmpBgrPixels]] — r17 session 2):
@@ -5116,7 +4941,7 @@ object SparkEntry {
         }.toDF("doc_id", "payload")
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
               SELECT d.doc_id, r.r AS r, x.x AS x,
                      CASE
                        WHEN d.doc_id % 4 IN (1, 2) THEN
@@ -5134,21 +4959,8 @@ object SparkEntry {
               FROM documents d
               JOIN generate_series(0, 15) r(r) ON TRUE
               JOIN generate_series(0, 15) x(x) ON TRUE),
-            tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
-            blk AS (SELECT doc_id, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
-                    FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${grayGridAHashCtes()}
+            ${hashSelectSql("ahash")}"""))
 
   /** netpbm through the perceptual-hash gate ([[graft.multimodal
     * .Multimodal.pnmDecode]] — r17 session 2): all four decodable
@@ -5174,7 +4986,7 @@ object SparkEntry {
         }.toDF("doc_id", "payload")
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
               SELECT d.doc_id, r.r AS r, x.x AS x,
                      CASE WHEN d.doc_id % 4 IN (2, 3)
                           THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
@@ -5185,21 +4997,8 @@ object SparkEntry {
               FROM documents d
               JOIN generate_series(0, 15) r(r) ON TRUE
               JOIN generate_series(0, 15) x(x) ON TRUE),
-            tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
-            blk AS (SELECT doc_id, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
-                    FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${grayGridAHashCtes()}
+            ${hashSelectSql("ahash")}"""))
 
   /** QOI through the perceptual-hash gate ([[graft.multimodal
     * .Multimodal.qoiDecode]] — r17 session 2): fixtures written by the
@@ -5226,7 +5025,7 @@ object SparkEntry {
         }.toDF("doc_id", "payload")
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some("""WITH d AS (SELECT doc_id,
+    Some(s"""WITH d AS (SELECT doc_id,
                        CASE doc_id % 3 WHEN 0 THEN 16 WHEN 1 THEN 24 ELSE 512 END AS w,
                        CASE doc_id % 3 WHEN 0 THEN 16 ELSE 8 END AS h
                 FROM documents WHERE doc_id < 300),
@@ -5242,20 +5041,10 @@ object SparkEntry {
             blk AS (SELECT doc_id, (r * 8) // h AS bi, (x * 8) // w AS bj,
                            SUM(gray) AS bsum, COUNT(*) AS nb
                     FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * (SELECT w * h FROM d d2
+            ${aHashCtes("""b.bsum * (SELECT w * h FROM d d2
                                                 WHERE d2.doc_id = b.doc_id)
-                                 >= t.total * b.nb THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+                                 >= t.total * b.nb""")}
+            ${hashSelectSql("ahash")}"""))
 
   /** The MEASURED image-decode boundary ([[graft.multimodal.Multimodal
     * .imageCoverage]] — VERDICT r16 #2, q_audio_coverage's image twin):
@@ -5391,7 +5180,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 200),
             fr AS (SELECT doc_id, f.f AS f FROM ids
                    JOIN generate_series(0, 3) f(f) ON f.f < 2 + doc_id % 3),
             g AS (SELECT doc_id, f, r.r AS r, x.x AS x,
@@ -5404,18 +5193,8 @@ object SparkEntry {
             tot AS (SELECT doc_id, f, SUM(gray) AS total FROM g GROUP BY 1, 2),
             blk AS (SELECT doc_id, f, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
                     FROM g GROUP BY 1, 2, 3, 4),
-            bits AS (SELECT b.doc_id, b.f, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id, f)),
-            hs AS (SELECT doc_id, f,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY 1, 2)
-            SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS fhash
-            FROM hs ORDER BY doc_id, frame_idx"""))
+            ${aHashCtes("b.bsum * 256 >= t.total * 4", perFrame = true)}
+            ${hashSelectSql("fhash", perFrame = true)}"""))
 
   /** Clip-level near-dup ([[graft.multimodal.Multimodal
     * .videoNearDups]]): doc_id < 100 clips built with seed = id mod 50,
@@ -5439,7 +5218,7 @@ object SparkEntry {
           maxHamming = 2, minPairs = 2)
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 100),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 100),
             fr AS (SELECT doc_id, doc_id % 50 AS seed, f.f AS f FROM ids
                    JOIN generate_series(0, 2) f(f) ON TRUE),
             g AS (SELECT doc_id, f, r.r AS r, x.x AS x,
@@ -5452,14 +5231,7 @@ object SparkEntry {
             tot AS (SELECT doc_id, f, SUM(gray) AS total FROM g GROUP BY 1, 2),
             blk AS (SELECT doc_id, f, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
                     FROM g GROUP BY 1, 2, 3, 4),
-            bits AS (SELECT b.doc_id, b.f, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id, f)),
-            hs AS (SELECT doc_id, f,
-                          CAST(SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS UBIGINT) AS u
-                   FROM bits GROUP BY 1, 2),
+            ${aHashCtes("b.bsum * 256 >= t.total * 4", perFrame = true, unsigned = true)},
             p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
                   FROM hs a JOIN hs b
                     ON a.doc_id < b.doc_id
@@ -5616,7 +5388,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
             fr AS (SELECT doc_id, f.f AS f FROM ids
                    JOIN generate_series(0, 3) f(f) ON f.f < 2 + doc_id % 3),
             blk AS (SELECT doc_id, f, br.bi AS bi, bc.bj AS bj,
@@ -5625,18 +5397,8 @@ object SparkEntry {
                     JOIN generate_series(0, 7) br(bi) ON TRUE
                     JOIN generate_series(0, 7) bc(bj) ON TRUE),
             tot AS (SELECT doc_id, f, SUM(v) AS total FROM blk GROUP BY 1, 2),
-            bits AS (SELECT b.doc_id, b.f, bi, bj,
-                            CASE WHEN b.v * 64 >= t.total THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id, f)),
-            hs AS (SELECT doc_id, f,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY 1, 2)
-            SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS fhash
-            FROM hs ORDER BY doc_id, frame_idx"""))
+            ${aHashCtes("b.v * 64 >= t.total", perFrame = true)}
+            ${hashSelectSql("fhash", perFrame = true)}"""))
 
   /** Clip-level near-dup over MJPEG AVI ([[graft.multimodal.Multimodal
     * .videoNearDups]] — the q_video_neardup semantics on the RIFF
@@ -5660,7 +5422,7 @@ object SparkEntry {
           maxHamming = 2, minPairs = 2)
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 100),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 100),
             fr AS (SELECT doc_id, doc_id % 50 AS seed, f.f AS f FROM ids
                    JOIN generate_series(0, 2) f(f) ON TRUE),
             blk AS (SELECT doc_id, f, br.bi AS bi, bc.bj AS bj,
@@ -5669,14 +5431,7 @@ object SparkEntry {
                     JOIN generate_series(0, 7) br(bi) ON TRUE
                     JOIN generate_series(0, 7) bc(bj) ON TRUE),
             tot AS (SELECT doc_id, f, SUM(v) AS total FROM blk GROUP BY 1, 2),
-            bits AS (SELECT b.doc_id, b.f, bi, bj,
-                            CASE WHEN b.v * 64 >= t.total THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id, f)),
-            hs AS (SELECT doc_id, f,
-                          CAST(SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS UBIGINT) AS u
-                   FROM bits GROUP BY 1, 2),
+            ${aHashCtes("b.v * 64 >= t.total", perFrame = true, unsigned = true)},
             p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
                   FROM hs a JOIN hs b
                     ON a.doc_id < b.doc_id
@@ -5708,7 +5463,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
             fr AS (SELECT doc_id, f.f AS f FROM ids
                    JOIN generate_series(0, 3) f(f) ON f.f < 2 + doc_id % 3),
             px AS (SELECT fr.doc_id, fr.f, r.r AS r, x.x AS x,
@@ -5721,18 +5476,8 @@ object SparkEntry {
             tot AS (SELECT doc_id, f, SUM(gray) AS total FROM px GROUP BY 1, 2),
             blk AS (SELECT doc_id, f, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
                     FROM px GROUP BY 1, 2, 3, 4),
-            bits AS (SELECT b.doc_id, b.f, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id, f)),
-            hs AS (SELECT doc_id, f,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY 1, 2)
-            SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS fhash
-            FROM hs ORDER BY doc_id, frame_idx"""))
+            ${aHashCtes("b.bsum * 256 >= t.total * 4", perFrame = true)}
+            ${hashSelectSql("fhash", perFrame = true)}"""))
 
   /** Decoded-VIDEO frame hashing over the ISO-BMFF container (r17 —
     * [[graft.multimodal.Multimodal.mp4FrameGrids]] via
@@ -5758,7 +5503,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
             fr AS (SELECT doc_id, f.f AS f FROM ids
                    JOIN generate_series(0, 3) f(f) ON f.f < 2 + doc_id % 3),
             blk AS (SELECT doc_id, f, br.bi AS bi, bc.bj AS bj,
@@ -5767,18 +5512,8 @@ object SparkEntry {
                     JOIN generate_series(0, 7) br(bi) ON TRUE
                     JOIN generate_series(0, 7) bc(bj) ON TRUE),
             tot AS (SELECT doc_id, f, SUM(v) AS total FROM blk GROUP BY 1, 2),
-            bits AS (SELECT b.doc_id, b.f, bi, bj,
-                            CASE WHEN b.v * 64 >= t.total THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id, f)),
-            hs AS (SELECT doc_id, f,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY 1, 2)
-            SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS fhash
-            FROM hs ORDER BY doc_id, frame_idx"""))
+            ${aHashCtes("b.v * 64 >= t.total", perFrame = true)}
+            ${hashSelectSql("fhash", perFrame = true)}"""))
 
   /** Decoded-VIDEO frame hashing over APNG ([[graft.multimodal
     * .Multimodal.apngFrameGrids]] via `videoFrameHashes` — r17
@@ -5803,7 +5538,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
             fr AS (SELECT doc_id, f.f AS f FROM ids
                    JOIN generate_series(0, 3) f(f) ON f.f < 2 + doc_id % 3),
             px AS (SELECT doc_id, f, r.r AS r, x.x AS x,
@@ -5817,18 +5552,8 @@ object SparkEntry {
             blk AS (SELECT doc_id, f, r // 2 AS bi, x // 2 AS bj,
                            SUM(gray) AS bsum
                     FROM px GROUP BY 1, 2, 3, 4),
-            bits AS (SELECT b.doc_id, b.f, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id, f)),
-            hs AS (SELECT doc_id, f,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY 1, 2)
-            SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS fhash
-            FROM hs ORDER BY doc_id, frame_idx"""))
+            ${aHashCtes("b.bsum * 256 >= t.total * 4", perFrame = true)}
+            ${hashSelectSql("fhash", perFrame = true)}"""))
 
   /** APNG through the metadata pass (r17 session 2): frame count from
     * acTL, duration from the fcTL delay walk (frame f delays
@@ -5898,7 +5623,7 @@ object SparkEntry {
           maxHamming = 2, minPairs = 2)
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 100),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 100),
             fr AS (SELECT doc_id, doc_id % 50 AS seed, f.f AS f FROM ids
                    JOIN generate_series(0, 2) f(f) ON TRUE),
             blk AS (SELECT doc_id, f, br.bi AS bi, bc.bj AS bj,
@@ -5907,14 +5632,7 @@ object SparkEntry {
                     JOIN generate_series(0, 7) br(bi) ON TRUE
                     JOIN generate_series(0, 7) bc(bj) ON TRUE),
             tot AS (SELECT doc_id, f, SUM(v) AS total FROM blk GROUP BY 1, 2),
-            bits AS (SELECT b.doc_id, b.f, bi, bj,
-                            CASE WHEN b.v * 64 >= t.total THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id, f)),
-            hs AS (SELECT doc_id, f,
-                          CAST(SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS UBIGINT) AS u
-                   FROM bits GROUP BY 1, 2),
+            ${aHashCtes("b.v * 64 >= t.total", perFrame = true, unsigned = true)},
             p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
                   FROM hs a JOIN hs b
                     ON a.doc_id < b.doc_id
@@ -6183,25 +5901,15 @@ object SparkEntry {
       graft.multimodal.Multimodal.imageAHashes(s, bins)
         .orderBy("doc_id")
     },
-    Some("""WITH blk AS (
+    Some(s"""WITH blk AS (
               SELECT d.doc_id, br.bi AS bi, bc.bj AS bj,
                      ((d.doc_id + bc.bj * 31 + br.bi * 7) % 200) + 28 AS v
               FROM documents d
               JOIN generate_series(0, 7) br(bi) ON TRUE
               JOIN generate_series(0, 7) bc(bj) ON TRUE),
             tot AS (SELECT doc_id, SUM(v) AS total FROM blk GROUP BY doc_id),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.v * 64 >= t.total THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS s
-                   FROM bits GROUP BY doc_id)
-            SELECT doc_id,
-                   CAST(CASE WHEN s >= 9223372036854775808
-                        THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
-            FROM hs ORDER BY doc_id"""))
+            ${aHashCtes("b.v * 64 >= t.total")}
+            ${hashSelectSql("ahash")}"""))
 
   /** Both perceptual keys in ONE decode pass ([[graft.multimodal
     * .Multimodal.imageDualHashes]]): the measured division of labor
@@ -6265,8 +5973,7 @@ object SparkEntry {
                      FROM co JOIN med USING (doc_id)
                      GROUP BY co.doc_id)
             SELECT ah.doc_id,
-                   CAST(CASE WHEN ah.s >= 9223372036854775808
-                        THEN ah.s - 18446744073709551616 ELSE ah.s END AS BIGINT) AS ahash,
+                   ${signedBigintSql("ah.s")} AS ahash,
                    ph.phash
             FROM ah JOIN ph ON ph.doc_id = ah.doc_id
             ORDER BY ah.doc_id""")
@@ -6300,7 +6007,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.imageNearDups(hashes, maxHamming = 6)
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
               SELECT d.doc_id, r.r AS r, x.x AS x,
                      CASE WHEN (d.doc_id // 40) % 2 = 1 AND r.r = 0 AND x.x = 0
                           THEN 765
@@ -6319,8 +6026,7 @@ object SparkEntry {
                             CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
                      FROM blk b JOIN tot t USING (doc_id)),
             hs AS (SELECT doc_id,
-                          CAST(CASE WHEN s >= 9223372036854775808
-                               THEN s - 18446744073709551616 ELSE s END AS BIGINT) AS ahash
+                          ${signedBigintSql("s", indent = 31)} AS ahash
                    FROM (SELECT doc_id,
                                 SUM(CASE WHEN bit = 1
                                     THEN (1::HUGEINT << (bi*8 + bj))
@@ -10170,7 +9876,7 @@ object SparkEntry {
         .select(col("id_a"), col("id_b"), col("hamming"))
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 120),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 120),
             px AS (SELECT doc_id, r.r AS r, x.x AS x,
                      (doc_id % 40 + (15 - r.r) * 31 + (3*x.x + 0) * 7) % 256
                    + (doc_id % 40 + (15 - r.r) * 31 + (3*x.x + 1) * 7) % 256
@@ -10178,22 +9884,8 @@ object SparkEntry {
                    FROM ids
                    JOIN generate_series(0, 15) r(r) ON TRUE
                    JOIN generate_series(0, 15) x(x) ON TRUE),
-            tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
-            blk AS (SELECT doc_id, r // 2 AS bi, x // 2 AS bj, SUM(gray) AS bsum
-                    FROM px GROUP BY 1, 2, 3),
-            bits AS (SELECT b.doc_id, bi, bj,
-                            CASE WHEN b.bsum * 256 >= t.total * 4 THEN 1 ELSE 0 END AS bit
-                     FROM blk b JOIN tot t USING (doc_id)),
-            hs AS (SELECT doc_id,
-                          CAST(SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << (bi*8 + bj))
-                              ELSE 0::HUGEINT END) AS UBIGINT) AS u
-                   FROM bits GROUP BY doc_id)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(bit_count(xor(a.u, b.u)) AS INT) AS hamming
-            FROM hs a JOIN hs b
-              ON a.doc_id < b.doc_id AND bit_count(xor(a.u, b.u)) <= 2
-            ORDER BY id_a, id_b"""))
+            ${grayGridAHashCtes(unsigned = true)}
+            ${hammingPairsSql(2)}"""))
 
   /** STEADY-STATE streaming image near-dup ([[graft.streaming
     * .MediaIngest.startSteady]]): the same fused decode+hash+check+admit
@@ -10256,30 +9948,12 @@ object SparkEntry {
         .select(col("id_a"), col("id_b"), col("hamming"))
         .orderBy("id_a", "id_b")
     },
-    Some("""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 120),
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 120),
             sm AS (SELECT doc_id, i.i AS i,
                           ((doc_id % 40 + i.i * 13) % 256 - 128) AS v
                    FROM ids JOIN generate_series(0, 129) i(i) ON TRUE),
-            fr AS (SELECT ids.doc_id, f.f AS f,
-                          (f.f * 130) // 65 AS lo, ((f.f + 1) * 130) // 65 AS hi
-                   FROM ids JOIN generate_series(0, 64) f(f) ON TRUE),
-            fe AS (SELECT fr.doc_id, fr.f, CAST(SUM(sm.v * sm.v) AS BIGINT) AS e
-                   FROM fr JOIN sm ON sm.doc_id = fr.doc_id
-                     AND sm.i >= fr.lo AND sm.i < fr.hi
-                   GROUP BY 1, 2),
-            bits AS (SELECT a.doc_id, a.f - 1 AS idx,
-                            CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-                     FROM fe a JOIN fe b ON b.doc_id = a.doc_id AND b.f = a.f - 1
-                     WHERE a.f >= 1),
-            hs AS (SELECT doc_id,
-                          CAST(SUM(CASE WHEN bit = 1
-                              THEN (1::HUGEINT << idx) ELSE 0::HUGEINT END) AS UBIGINT) AS u
-                   FROM bits GROUP BY doc_id)
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(bit_count(xor(a.u, b.u)) AS INT) AS hamming
-            FROM hs a JOIN hs b
-              ON a.doc_id < b.doc_id AND bit_count(xor(a.u, b.u)) <= 2
-            ORDER BY id_a, id_b"""))
+            ${energyDeltaCtes("ids", "130", unsigned = true)}
+            ${hammingPairsSql(2)}"""))
 
   /** STEADY-STATE streaming audio dedup ([[graft.streaming.MediaIngest
     * .startSteady]] with `kind = "audio"`): the fingerprint history
