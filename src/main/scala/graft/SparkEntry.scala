@@ -2572,39 +2572,10 @@ object SparkEntry {
         .select(col("qid"), col("rank"), col("cid"), col("cosine"))
         .orderBy("qid", "rank")
     },
-    Some("""WITH cents AS (
-              SELECT vec_id AS cell, embedding::DOUBLE[] AS cv
-              FROM embeddings
-              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-              LIMIT 16),
-            assign AS (
-              SELECT cid, cvec, cell FROM (
-                SELECT e.vec_id AS cid, e.embedding::DOUBLE[] AS cvec, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings e CROSS JOIN cents c)
-              WHERE rn = 1),
-            qcells AS (
-              SELECT qid, qvec, cell FROM (
-                SELECT q.vec_id AS qid, q.embedding::DOUBLE[] AS qvec, c.cell,
-                       row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY ROUND(list_dot_product(q.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings q CROSS JOIN cents c
-                WHERE q.vec_id < 5)
-              WHERE rn <= 4),
-            scored AS (
-              SELECT qc.qid, a.cid,
-                     ROUND(list_cosine_similarity(qc.qvec, a.cvec), 6) AS cosine
-              FROM qcells qc JOIN assign a ON a.cell = qc.cell
-              WHERE a.cid <> qc.qid),
-            ranked AS (
-              SELECT *, row_number() OVER (PARTITION BY qid
-                                           ORDER BY cosine DESC, cid) AS rk
-              FROM scored)
+    Some(s"""WITH ${ivfCentroidsCte(16)},
+            ${ivfAssignCte()},
+            ${ivfProbeCte()},
+            ${ivfCosineRankCtes()}
             SELECT qid, CAST(rk AS INTEGER) AS rank, cid, cosine
             FROM ranked WHERE rk <= 10 ORDER BY qid, rank"""))
 
@@ -2960,6 +2931,69 @@ object SparkEntry {
     },
     qStreamEmbedClusters.oracle)
 
+  /** `name`: the IVF centroids ([[graft.similarity.Ivf.centroids]]), the
+    * first `nLists` embeddings in md5(vec_id) order.
+    */
+  private def ivfCentroidsCte(nLists: Int, name: String = "cents"): String =
+    s"""$name AS (
+              SELECT vec_id AS cell, embedding::DOUBLE[] AS cv
+              FROM embeddings
+              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+              LIMIT $nLists)"""
+
+  /** `name`(cid, [cvec,] cell): every embedding's IVF cell
+    * ([[graft.similarity.Ivf.buildIndex]]), the centroid of `cents` with
+    * the highest rounded cosine, ties to the higher cell. `vecs` carries
+    * the vector along as `cvec`.
+    */
+  private def ivfAssignCte(cents: String = "cents", name: String = "assign",
+                           vecs: Boolean = true): String = {
+    val (cvec, ecvec) = if (vecs) ("cvec, ", "e.embedding::DOUBLE[] AS cvec, ") else ("", "")
+    s"""$name AS (
+              SELECT cid, ${cvec}cell FROM (
+                SELECT e.vec_id AS cid, ${ecvec}c.cell,
+                       row_number() OVER (PARTITION BY e.vec_id
+                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
+                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
+                                  c.cell DESC) AS rn
+                FROM embeddings e CROSS JOIN $cents c)
+              WHERE rn = 1)"""
+  }
+
+  /** `name`(qid, [qvec,] cell): the `nProbe` cells of `cents` nearest each
+    * query vec_id < 5, by the same rounded cosine as [[ivfAssignCte]].
+    */
+  private def ivfProbeCte(cents: String = "cents", name: String = "qcells", nProbe: Int = 4,
+                          vecs: Boolean = true): String = {
+    val (qvec, qqvec) = if (vecs) ("qvec, ", "q.embedding::DOUBLE[] AS qvec, ") else ("", "")
+    s"""$name AS (
+              SELECT qid, ${qvec}cell FROM (
+                SELECT q.vec_id AS qid, ${qqvec}c.cell,
+                       row_number() OVER (PARTITION BY q.vec_id
+                         ORDER BY ROUND(list_dot_product(q.embedding::DOUBLE[], c.cv)
+                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
+                                  c.cell DESC) AS rn
+                FROM embeddings q CROSS JOIN $cents c
+                WHERE q.vec_id < 5)
+              WHERE rn <= $nProbe)"""
+  }
+
+  /** `${p}scored` and `${p}ranked`: each probed query against every other
+    * vector assigned to its cells, ranked by rounded cosine, ties by cid
+    * ([[graft.similarity.Ivf.topK]]).
+    */
+  private def ivfCosineRankCtes(qcells: String = "qcells", assign: String = "assign",
+                                p: String = ""): String =
+    s"""${p}scored AS (
+              SELECT qc.qid, a.cid,
+                     ROUND(list_cosine_similarity(qc.qvec, a.cvec), 6) AS cosine
+              FROM $qcells qc JOIN $assign a ON a.cell = qc.cell
+              WHERE a.cid <> qc.qid),
+            ${p}ranked AS (
+              SELECT *, row_number() OVER (PARTITION BY qid
+                                           ORDER BY cosine DESC, cid) AS rk
+              FROM ${p}scored)"""
+
   // Shared CTEs for the PQ oracles: md5-sampled codebook rows → per-
   // subspace slices → encode (argmin of ROUND(d²,6), index tie-break).
   // Pinned knobs mirror the Spark side: dim=64, m=4 (dsub=16), ksub=16.
@@ -2989,6 +3023,19 @@ object SparkEntry {
                                   b.j ASC) AS rk
                 FROM subv v JOIN books b ON b.s = v.s)
               WHERE rk = 1)"""
+
+  /** `lut`: the ADC lookup table of queries vec_id < 5 — each subvector's
+    * squared L2 distance to every codebook entry, in micro units.
+    */
+  private val pqLutCte =
+    """lut AS (
+              SELECT v.cid AS qid, b.s, b.j,
+                     CAST(ROUND((list_dot_product(v.sv, v.sv)
+                                 - 2.0 * list_dot_product(v.sv, b.bv)
+                                 + list_dot_product(b.bv, b.bv)) * 1000000.0)
+                          AS BIGINT) AS lutv
+              FROM subv v JOIN books b ON b.s = v.s
+              WHERE v.cid < 5)"""
 
   /** PQ encode ([[graft.similarity.Pq.encode]]): every embedding
     * compressed to m=4 codebook indices (the 64× compression pass —
@@ -3029,14 +3076,7 @@ object SparkEntry {
         .orderBy("qid", "rank")
     },
     Some(s"""WITH $pqCtes,
-            lut AS (
-              SELECT v.cid AS qid, b.s, b.j,
-                     CAST(ROUND((list_dot_product(v.sv, v.sv)
-                                 - 2.0 * list_dot_product(v.sv, b.bv)
-                                 + list_dot_product(b.bv, b.bv)) * 1000000.0)
-                          AS BIGINT) AS lutv
-              FROM subv v JOIN books b ON b.s = v.s
-              WHERE v.cid < 5),
+            $pqLutCte,
             scored AS (
               SELECT l.qid, e.cid, CAST(SUM(l.lutv) AS BIGINT) AS iscore
               FROM enc e JOIN lut l ON l.s = e.s AND l.j = e.code
@@ -3066,38 +3106,10 @@ object SparkEntry {
         .orderBy("qid", "rank")
     },
     Some(s"""WITH $pqCtes,
-            lut AS (
-              SELECT v.cid AS qid, b.s, b.j,
-                     CAST(ROUND((list_dot_product(v.sv, v.sv)
-                                 - 2.0 * list_dot_product(v.sv, b.bv)
-                                 + list_dot_product(b.bv, b.bv)) * 1000000.0)
-                          AS BIGINT) AS lutv
-              FROM subv v JOIN books b ON b.s = v.s
-              WHERE v.cid < 5),
-            icents AS (
-              SELECT vec_id AS cell, embedding::DOUBLE[] AS cv
-              FROM embeddings
-              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-              LIMIT 16),
-            iassign AS (
-              SELECT cid, cell FROM (
-                SELECT e.vec_id AS cid, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings e CROSS JOIN icents c)
-              WHERE rn = 1),
-            iqcells AS (
-              SELECT qid, cell FROM (
-                SELECT q.vec_id AS qid, c.cell,
-                       row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY ROUND(list_dot_product(q.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings q CROSS JOIN icents c
-                WHERE q.vec_id < 5)
-              WHERE rn <= 4),
+            $pqLutCte,
+            ${ivfCentroidsCte(16, "icents")},
+            ${ivfAssignCte(cents = "icents", name = "iassign", vecs = false)},
+            ${ivfProbeCte(cents = "icents", name = "iqcells", vecs = false)},
             scored AS (
               SELECT l.qid, e.cid, CAST(SUM(l.lutv) AS BIGINT) AS iscore
               FROM enc e
@@ -3174,38 +3186,10 @@ object SparkEntry {
         .orderBy("qid", "rank")
     },
     Some(s"""WITH $pqCtes,
-            lut AS (
-              SELECT v.cid AS qid, b.s, b.j,
-                     CAST(ROUND((list_dot_product(v.sv, v.sv)
-                                 - 2.0 * list_dot_product(v.sv, b.bv)
-                                 + list_dot_product(b.bv, b.bv)) * 1000000.0)
-                          AS BIGINT) AS lutv
-              FROM subv v JOIN books b ON b.s = v.s
-              WHERE v.cid < 5),
-            icents AS (
-              SELECT vec_id AS cell, embedding::DOUBLE[] AS cv
-              FROM embeddings
-              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-              LIMIT 16),
-            iassign AS (
-              SELECT cid, cell FROM (
-                SELECT e.vec_id AS cid, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings e CROSS JOIN icents c)
-              WHERE rn = 1),
-            iqcells AS (
-              SELECT qid, cell FROM (
-                SELECT q.vec_id AS qid, c.cell,
-                       row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY ROUND(list_dot_product(q.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings q CROSS JOIN icents c
-                WHERE q.vec_id < 5)
-              WHERE rn <= 4),
+            $pqLutCte,
+            ${ivfCentroidsCte(16, "icents")},
+            ${ivfAssignCte(cents = "icents", name = "iassign", vecs = false)},
+            ${ivfProbeCte(cents = "icents", name = "iqcells", vecs = false)},
             scored AS (
               SELECT l.qid, e.cid, CAST(SUM(l.lutv) AS BIGINT) AS iscore
               FROM enc e
@@ -3256,20 +3240,8 @@ object SparkEntry {
       graft.similarity.SemDedup.reportFromIndex(idx, threshold = 0.3, maxCell = 4000)
         .orderBy("id")
     },
-    Some("""WITH cents AS (
-              SELECT vec_id AS cell, embedding::DOUBLE[] AS cv
-              FROM embeddings
-              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-              LIMIT 8),
-            assign AS (
-              SELECT cid, cvec, cell FROM (
-                SELECT e.vec_id AS cid, e.embedding::DOUBLE[] AS cvec, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings e CROSS JOIN cents c)
-              WHERE rn = 1),
+    Some(s"""WITH ${ivfCentroidsCte(8)},
+            ${ivfAssignCte()},
             ok AS (SELECT cell FROM assign GROUP BY cell HAVING COUNT(*) <= 4000),
             c2 AS (SELECT a.* FROM assign a JOIN ok USING (cell)),
             drops AS (
@@ -3407,7 +3379,7 @@ object SparkEntry {
       val approx = graft.similarity.Ivf.topK(idx, qs, cents, k = 10, nProbe = 4)
       graft.similarity.Ann.recallAtK(approx, exact, k = 10).orderBy("qid")
     },
-    Some("""WITH bq AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
+    Some(s"""WITH bq AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
                         FROM embeddings WHERE vec_id < 5),
             bc AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM embeddings),
             bs AS (SELECT qid, cid, ROUND(list_cosine_similarity(qv, cv), 6) AS cosine
@@ -3415,39 +3387,10 @@ object SparkEntry {
             br AS (SELECT *, row_number() OVER (PARTITION BY qid
                                                 ORDER BY cosine DESC, cid) AS rk FROM bs),
             bft AS (SELECT qid, cid FROM br WHERE rk <= 10),
-            icents AS (
-              SELECT vec_id AS cell, embedding::DOUBLE[] AS cv
-              FROM embeddings
-              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-              LIMIT 16),
-            iassign AS (
-              SELECT cid, cvec, cell FROM (
-                SELECT e.vec_id AS cid, e.embedding::DOUBLE[] AS cvec, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings e CROSS JOIN icents c)
-              WHERE rn = 1),
-            iqcells AS (
-              SELECT qid, qvec, cell FROM (
-                SELECT q.vec_id AS qid, q.embedding::DOUBLE[] AS qvec, c.cell,
-                       row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY ROUND(list_dot_product(q.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings q CROSS JOIN icents c
-                WHERE q.vec_id < 5)
-              WHERE rn <= 4),
-            iscored AS (
-              SELECT qc.qid, a.cid,
-                     ROUND(list_cosine_similarity(qc.qvec, a.cvec), 6) AS cosine
-              FROM iqcells qc JOIN iassign a ON a.cell = qc.cell
-              WHERE a.cid <> qc.qid),
-            iranked AS (
-              SELECT *, row_number() OVER (PARTITION BY qid
-                                           ORDER BY cosine DESC, cid) AS rk
-              FROM iscored),
+            ${ivfCentroidsCte(16, "icents")},
+            ${ivfAssignCte(cents = "icents", name = "iassign")},
+            ${ivfProbeCte(cents = "icents", name = "iqcells")},
+            ${ivfCosineRankCtes(qcells = "iqcells", assign = "iassign", p = "i")},
             ivt AS (SELECT qid, cid FROM iranked WHERE rk <= 10),
             hits AS (SELECT b.qid, CAST(COUNT(x.cid) AS BIGINT) AS n_hits,
                             CAST(COUNT(*) AS BIGINT) AS n_truth
@@ -6431,20 +6374,8 @@ object SparkEntry {
       graft.similarity.Kmeans.lloydStep(emb, cents)
         .orderBy("cell", "pos")
     },
-    Some("""WITH cents AS (
-              SELECT vec_id AS cell, embedding::DOUBLE[] AS cv
-              FROM embeddings
-              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-              LIMIT 8),
-            assign AS (
-              SELECT cid, cvec, cell FROM (
-                SELECT e.vec_id AS cid, e.embedding::DOUBLE[] AS cvec, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings e CROSS JOIN cents c)
-              WHERE rn = 1),
+    Some(s"""WITH ${ivfCentroidsCte(8)},
+            ${ivfAssignCte()},
             dims AS (
               SELECT cell, unnest(list_transform(generate_series(1, len(cvec)),
                        i -> {'pos': i - 1,
@@ -7150,20 +7081,8 @@ object SparkEntry {
         .select(col("qid"), col("rank"), col("cid"), col("cosine"))
         .orderBy("qid", "rank")
     },
-    Some("""WITH cents AS (
-              SELECT vec_id AS cell, embedding::DOUBLE[] AS cv
-              FROM embeddings
-              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-              LIMIT 8),
-            assign0 AS (
-              SELECT cid, cvec, cell FROM (
-                SELECT e.vec_id AS cid, e.embedding::DOUBLE[] AS cvec, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings e CROSS JOIN cents c)
-              WHERE rn = 1),
+    Some(s"""WITH ${ivfCentroidsCte(8)},
+            ${ivfAssignCte(name = "assign0")},
             dims AS (
               SELECT cell, unnest(list_transform(generate_series(1, len(cvec)),
                        i -> {'pos': i - 1,
@@ -7176,34 +7095,9 @@ object SparkEntry {
                       FROM agg GROUP BY cell),
             cents1 AS (SELECT c.cell, COALESCE(m.cv, c.cv) AS cv
                        FROM cents c LEFT JOIN moved m USING (cell)),
-            assign1 AS (
-              SELECT cid, cvec, cell FROM (
-                SELECT e.vec_id AS cid, e.embedding::DOUBLE[] AS cvec, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings e CROSS JOIN cents1 c)
-              WHERE rn = 1),
-            qcells AS (
-              SELECT qid, qvec, cell FROM (
-                SELECT q.vec_id AS qid, q.embedding::DOUBLE[] AS qvec, c.cell,
-                       row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY ROUND(list_dot_product(q.embedding::DOUBLE[], c.cv)
-                                        / sqrt(list_dot_product(c.cv, c.cv)), 6) DESC,
-                                  c.cell DESC) AS rn
-                FROM embeddings q CROSS JOIN cents1 c
-                WHERE q.vec_id < 5)
-              WHERE rn <= 2),
-            scored AS (
-              SELECT qc.qid, a.cid,
-                     ROUND(list_cosine_similarity(qc.qvec, a.cvec), 6) AS cosine
-              FROM qcells qc JOIN assign1 a ON a.cell = qc.cell
-              WHERE a.cid <> qc.qid),
-            ranked AS (
-              SELECT *, row_number() OVER (PARTITION BY qid
-                                           ORDER BY cosine DESC, cid) AS rk
-              FROM scored)
+            ${ivfAssignCte(cents = "cents1", name = "assign1")},
+            ${ivfProbeCte(cents = "cents1", nProbe = 2)},
+            ${ivfCosineRankCtes(assign = "assign1")}
             SELECT qid, CAST(rk AS INTEGER) AS rank, cid, cosine
             FROM ranked WHERE rk <= 10 ORDER BY qid, rank"""))
 
