@@ -3950,16 +3950,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some(s"""WITH dims AS (
-              SELECT doc_id,
-                     (CAST(50 + doc_id % 50 AS INT) * CAST(1 + doc_id % 2 AS INT)) AS n
-              FROM documents),
-            d2 AS (SELECT doc_id, n FROM dims WHERE n >= 65),
-            sm AS (SELECT doc_id, n, i.i AS i,
-                          ((doc_id + i.i * 13) % 256 - 128) AS v
-                   FROM d2 JOIN generate_series(0, 197) i(i) ON i.i < n),
-            ${energyDeltaCtes("d2", "d2.n")}
-            ${hashSelectSql("afp")}"""))
+    qAudioFingerprint.oracle)
 
   /** SPECTRAL-envelope audio fingerprint ([[graft.multimodal.Multimodal
     * .audioSpectralFingerprints]]): 16 time frames × 4 modulation
@@ -4072,16 +4063,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
-    Some(s"""WITH dims AS (
-              SELECT doc_id,
-                     (CAST(192 * (1 + doc_id % 4) AS INT)
-                      * CAST(1 + doc_id % 2 AS INT)) AS n
-              FROM documents),
-            sm AS (SELECT doc_id, n, i.i AS i,
-                          ((doc_id + i.i * 13) % 256 - 128) AS v
-                   FROM dims JOIN generate_series(0, 1535) i(i) ON i.i < n),
-            ${energyDeltaCtes("dims", "dims.n")}
-            ${hashSelectSql("afp")}"""))
+    qAudioFingerprintFlac.oracle)
 
   /** LOSSY audio through the real G.711 mu-law decode ([[graft
     * .multimodal.Multimodal.muLawToPcm]] — the ITU expansion law, exact
@@ -5446,17 +5428,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
-    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
-            fr AS (SELECT doc_id, f.f AS f FROM ids
-                   JOIN generate_series(0, 3) f(f) ON f.f < 2 + doc_id % 3),
-            blk AS (SELECT doc_id, f, br.bi AS bi, bc.bj AS bj,
-                           ((doc_id + f*17 + bc.bj * 31 + br.bi * 7) % 200) + 28 AS v
-                    FROM fr
-                    JOIN generate_series(0, 7) br(bi) ON TRUE
-                    JOIN generate_series(0, 7) bc(bj) ON TRUE),
-            tot AS (SELECT doc_id, f, SUM(v) AS total FROM blk GROUP BY 1, 2),
-            ${aHashCtes("b.v * 64 >= t.total", perFrame = true)}
-            ${hashSelectSql("fhash", perFrame = true)}"""))
+    qVideoMjpeg.oracle)
 
   /** Decoded-VIDEO frame hashing over APNG ([[graft.multimodal
     * .Multimodal.apngFrameGrids]] via `videoFrameHashes` — r17
@@ -5566,24 +5538,7 @@ object SparkEntry {
           maxHamming = 2, minPairs = 2)
         .orderBy("id_a", "id_b")
     },
-    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 100),
-            fr AS (SELECT doc_id, doc_id % 50 AS seed, f.f AS f FROM ids
-                   JOIN generate_series(0, 2) f(f) ON TRUE),
-            blk AS (SELECT doc_id, f, br.bi AS bi, bc.bj AS bj,
-                           ((seed + f*17 + bc.bj * 31 + br.bi * 7) % 200) + 28 AS v
-                    FROM fr
-                    JOIN generate_series(0, 7) br(bi) ON TRUE
-                    JOIN generate_series(0, 7) bc(bj) ON TRUE),
-            tot AS (SELECT doc_id, f, SUM(v) AS total FROM blk GROUP BY 1, 2),
-            ${aHashCtes("b.v * 64 >= t.total", perFrame = true, unsigned = true)},
-            p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-                  FROM hs a JOIN hs b
-                    ON a.doc_id < b.doc_id
-                   AND bit_count(xor(a.u, b.u)) <= 2),
-            agg AS (SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS n_pairs
-                    FROM p GROUP BY 1, 2)
-            SELECT id_a, id_b, n_pairs FROM agg
-            WHERE n_pairs >= 2 ORDER BY id_a, id_b"""))
+    qVideoMjpegNearDup.oracle)
 
   /** The MEASURED video-decode boundary ([[graft.multimodal.Multimodal
     * .videoCoverage]] — completes the coverage triple with audio and
@@ -6490,9 +6445,7 @@ object SparkEntry {
       graft.similarity.Pca.momentComponentDf(s, segPath, dim = 64)
         .orderBy("pos")
     },
-    Some(s"""WITH ${pcaCtes(scaleBits = 18, iters = 12)}
-            SELECT CAST(dim AS INTEGER) AS pos, CAST(vfx * sg AS BIGINT) AS loading_fx
-            FROM it12, sgn ORDER BY pos"""))
+    qPcaPower.oracle)
 
   /** Embedding drift between two corpus epochs ([[graft.similarity.Pca
     * .embeddingDrift]]): per-dimension Welch-style standardized mean
@@ -6666,7 +6619,7 @@ object SparkEntry {
       graft.ops.Hll.estimateFromSegments(s, segPath, Seq("day"))
         .orderBy("day")
     },
-    Some(s"WITH $hllCtes\n$hllSelect"))
+    qHllDistinct.oracle)
 
   /** HLL set algebra ([[graft.ops.Hll.pairwiseOverlap]]): per-source-pair
     * distinct-TOKEN overlap by inclusion–exclusion — est(A) + est(B) −
@@ -9117,9 +9070,7 @@ object SparkEntry {
           bloomDecontam = true)
         .orderBy("id")
     },
-    Some(s"""WITH $curationCtes
-            SELECT doc_id AS id, stage_order, drop_stage FROM disp
-            ORDER BY id"""))
+    qCurationDisposition.oracle)
 
   /** The attrition report ([[graft.pipeline.Curation.funnel]]): stage
     * counts that reconcile to the input total by construction — the
@@ -10646,9 +10597,7 @@ object SparkEntry {
       graft.similarity.Pca.momentComponentDf(s, seg, dim = 64)
         .orderBy("pos")
     },
-    Some(s"""WITH ${pcaCtes(scaleBits = 18, iters = 12)}
-            SELECT CAST(dim AS INTEGER) AS pos, CAST(vfx * sg AS BIGINT) AS loading_fx
-            FROM it12, sgn ORDER BY pos"""))
+    qPcaPower.oracle)
 
   /** Streaming drift monitoring ([[graft.streaming.SketchIngest
     * .startMoments]] → [[graft.similarity.Pca.embeddingDrift]]): TWO
