@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,6 +47,20 @@ object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.read(s, dir, name)
+
+  /** The `documents` table's ids. */
+  private def docIds(s: SparkSession, dir: String): Dataset[Long] = {
+    import s.implicits._
+    t(s, dir, "documents").select(col("doc_id")).as[Long]
+  }
+
+  /** The media corpus the multimodal rows decode: one (doc_id, payload)
+    * row per id of `ids`, the payload built on the executors by `bytes`.
+    */
+  private def payloads(ids: Dataset[Long])(bytes: Long => Array[Byte]): DataFrame = {
+    import ids.sparkSession.implicits._
+    ids.map(id => (id, bytes(id))).toDF("doc_id", "payload")
+  }
 
   /** Per-invocation scratch dir for queries that round-trip through disk
     * (index writes, streaming sinks), registered for recursive deletion
@@ -3429,13 +3443,11 @@ object SparkEntry {
     */
   private val qBmpDecode = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          (id, graft.multimodal.Multimodal.makeBmp(w, h, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 1 + (id % 16).toInt
+        val h = 1 + (id % 8).toInt
+        graft.multimodal.Multimodal.makeBmp(w, h, id)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("n_bytes"),
@@ -3476,12 +3488,10 @@ object SparkEntry {
     */
   private val qWavDecode = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          (id, graft.multimodal.Multimodal.makeWav(
-            (50 + id % 50).toInt, (1 + id % 2).toInt, 8000, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        graft.multimodal.Multimodal.makeWav(
+          (50 + id % 50).toInt, (1 + id % 2).toInt, 8000, id)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"),
           col("width").as("sample_rate"), col("height").as("channels"),
@@ -3521,13 +3531,11 @@ object SparkEntry {
     */
   private val qPngDecode = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          (id, graft.multimodal.Multimodal.makePng(w, h, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 1 + (id % 16).toInt
+        val h = 1 + (id % 8).toInt
+        graft.multimodal.Multimodal.makePng(w, h, id)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("n_bytes"),
@@ -3563,13 +3571,11 @@ object SparkEntry {
     */
   private val qPngAlpha = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          (id, graft.multimodal.Multimodal.makePng(w, h, id, colorType = 6))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 1 + (id % 16).toInt
+        val h = 1 + (id % 8).toInt
+        graft.multimodal.Multimodal.makePng(w, h, id, colorType = 6)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("n_bytes"),
@@ -3614,13 +3620,11 @@ object SparkEntry {
     */
   private val qPngInterlaced = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          (id, graft.multimodal.Multimodal.makePng(w, h, id, interlaced = true))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 1 + (id % 16).toInt
+        val h = 1 + (id % 8).toInt
+        graft.multimodal.Multimodal.makePng(w, h, id, interlaced = true)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("n_bytes"),
@@ -3667,14 +3671,12 @@ object SparkEntry {
     */
   private val qPng16 = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          (id, graft.multimodal.Multimodal.makePng(w, h, id, colorType = 2,
-            bitDepth = 16))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 1 + (id % 16).toInt
+        val h = 1 + (id % 8).toInt
+        graft.multimodal.Multimodal.makePng(w, h, id, colorType = 2,
+          bitDepth = 16)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("n_bytes"),
@@ -3714,13 +3716,11 @@ object SparkEntry {
     */
   private val qGifDecode = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          (id, graft.multimodal.Multimodal.makeGif(w, h, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 1 + (id % 16).toInt
+        val h = 1 + (id % 8).toInt
+        graft.multimodal.Multimodal.makeGif(w, h, id)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           round(element_at(col("features"), 4) *
@@ -3760,13 +3760,11 @@ object SparkEntry {
     */
   private val qJpegDecode = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 8 * (1 + (id % 3).toInt)
-          val h = 8 * (1 + (id % 2).toInt)
-          (id, graft.multimodal.Multimodal.makeJpeg(w, h, id, gray = true))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 8 * (1 + (id % 3).toInt)
+        val h = 8 * (1 + (id % 2).toInt)
+        graft.multimodal.Multimodal.makeJpeg(w, h, id, gray = true)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           round(element_at(col("features"), 4) *
@@ -3803,13 +3801,11 @@ object SparkEntry {
     */
   private val qJpegProgressive = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 8 * (1 + (id % 3).toInt)
-          val h = 8 * (1 + (id % 2).toInt)
-          (id, graft.multimodal.Multimodal.makeJpegProgressive(w, h, id, gray = true))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 8 * (1 + (id % 3).toInt)
+        val h = 8 * (1 + (id % 2).toInt)
+        graft.multimodal.Multimodal.makeJpegProgressive(w, h, id, gray = true)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           round(element_at(col("features"), 4) *
@@ -3829,13 +3825,11 @@ object SparkEntry {
     */
   private val qJpeg12bit = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 8 * (1 + (id % 3).toInt)
-          val h = 8 * (1 + (id % 2).toInt)
-          (id, graft.multimodal.Multimodal.makeJpeg12(w, h, id, gray = true))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 8 * (1 + (id % 3).toInt)
+        val h = 8 * (1 + (id % 2).toInt)
+        graft.multimodal.Multimodal.makeJpeg12(w, h, id, gray = true)
+      }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           round(element_at(col("features"), 4) *
@@ -3855,11 +3849,10 @@ object SparkEntry {
   private val qWavFrames = Q(
     (s, dir) => {
       import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          (id, graft.multimodal.Multimodal.makeWav(
-            (50 + id % 50).toInt, 1, 8000, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        graft.multimodal.Multimodal.makeWav(
+          (50 + id % 50).toInt, 1, 8000, id)
+      }
       graft.multimodal.Multimodal.wavFrameStats(s, bins, frameLen = 32)
         .toDF()
         .orderBy("doc_id", "frame_idx")
@@ -3904,12 +3897,10 @@ object SparkEntry {
     */
   private val qAudioFingerprint = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          (id, graft.multimodal.Multimodal.makeWav(
-            (50 + id % 50).toInt, (1 + id % 2).toInt, 8000, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        graft.multimodal.Multimodal.makeWav(
+          (50 + id % 50).toInt, (1 + id % 2).toInt, 8000, id)
+      }
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -3936,17 +3927,15 @@ object SparkEntry {
     */
   private val qAudioFingerprintFloat = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val plain = graft.multimodal.Multimodal.makeWavFloat(
-            (50 + id % 50).toInt, (1 + id % 2).toInt, 8000, id,
-            bits = if (id % 2 == 0) 32 else 64)
-          // ids 2,3 mod 4 wrap in WAVE_FORMAT_EXTENSIBLE (r17 s2) —
-          // same decoded samples, so the oracle is untouched
-          (id, if (id % 4 >= 2)
-            graft.multimodal.Multimodal.toExtensibleWav(plain) else plain)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val plain = graft.multimodal.Multimodal.makeWavFloat(
+          (50 + id % 50).toInt, (1 + id % 2).toInt, 8000, id,
+          bits = if (id % 2 == 0) 32 else 64)
+        // ids 2,3 mod 4 wrap in WAVE_FORMAT_EXTENSIBLE (r17 s2) —
+        // same decoded samples, so the oracle is untouched
+        if (id % 4 >= 2)
+          graft.multimodal.Multimodal.toExtensibleWav(plain) else plain
+      }
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -3964,12 +3953,10 @@ object SparkEntry {
     */
   private val qAudioSpectral = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          (id, graft.multimodal.Multimodal.makeWav(
-            (50 + id % 50).toInt, (1 + id % 2).toInt, 8000, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        graft.multimodal.Multimodal.makeWav(
+          (50 + id % 50).toInt, (1 + id % 2).toInt, 8000, id)
+      }
       graft.multimodal.Multimodal.audioSpectralFingerprints(s, bins)
         .orderBy("doc_id")
     }, {
@@ -4020,12 +4007,10 @@ object SparkEntry {
     */
   private val qAudioFingerprintFlac = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          (id, graft.multimodal.Flac.make(
-            (192 * (1 + id % 4)).toInt, (1 + id % 2).toInt, 8000, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        graft.multimodal.Flac.make(
+          (192 * (1 + id % 4)).toInt, (1 + id % 2).toInt, 8000, id)
+      }
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -4053,13 +4038,11 @@ object SparkEntry {
     */
   private val qAudioFingerprintOggFlac = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          (id, graft.multimodal.Multimodal.makeOggFlac(
-            (192 * (1 + id % 4)).toInt, (1 + id % 2).toInt, 8000, id,
-            withComment = id % 2 == 0))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        graft.multimodal.Multimodal.makeOggFlac(
+          (192 * (1 + id % 4)).toInt, (1 + id % 2).toInt, 8000, id,
+          withComment = id % 2 == 0)
+      }
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -4075,12 +4058,9 @@ object SparkEntry {
     */
   private val qAudioFingerprintMulaw = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 50)
-        .map(id => (id, graft.multimodal.Multimodal.makeWavG711(
-          (600 + (id % 3) * 37).toInt, 8000, id, aLaw = false)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 50))(id =>
+        graft.multimodal.Multimodal.makeWavG711(
+          (600 + (id % 3) * 37).toInt, 8000, id, aLaw = false))
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -4104,12 +4084,9 @@ object SparkEntry {
     */
   private val qAudioFingerprintAlaw = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 50)
-        .map(id => (id, graft.multimodal.Multimodal.makeWavG711(
-          (600 + (id % 3) * 37).toInt, 8000, id, aLaw = true)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 50))(id =>
+        graft.multimodal.Multimodal.makeWavG711(
+          (600 + (id % 3) * 37).toInt, 8000, id, aLaw = true))
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -4143,12 +4120,9 @@ object SparkEntry {
     */
   private val qAudioFingerprintAdpcm = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 40)
-        .map(id => (id, graft.multimodal.Multimodal.makeWavImaAdpcm(
-          2, 132, 8000, id)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 40))(id =>
+        graft.multimodal.Multimodal.makeWavImaAdpcm(
+          2, 132, 8000, id))
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     }, {
@@ -4195,12 +4169,9 @@ object SparkEntry {
     */
   private val qAudioFingerprintPcmWidths = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 50)
-        .map(id => (id, graft.multimodal.Multimodal.makeWavPcmWidth(
-          600, 8000, id, bits = if (id % 2 == 0) 8 else 24)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 50))(id =>
+        graft.multimodal.Multimodal.makeWavPcmWidth(
+          600, 8000, id, bits = if (id % 2 == 0) 8 else 24))
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -4225,12 +4196,9 @@ object SparkEntry {
     */
   private val qAudioFingerprintMsAdpcm = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 40)
-        .map(id => (id, graft.multimodal.Multimodal.makeWavMsAdpcm(
-          2, 132, 8000, id)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 40))(id =>
+        graft.multimodal.Multimodal.makeWavMsAdpcm(
+          2, 132, 8000, id))
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     }, {
@@ -4285,22 +4253,19 @@ object SparkEntry {
     */
   private val qAudioFingerprintAu = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 50)
-        .map { id =>
-          // even ids: mu-law; odd ids rotate the LINEAR encodings —
-          // PCM16 / signed-8 / float32 / float64 (r17 s2) — whose
-          // decoded samples all follow the SAME law up to a uniform
-          // scale the energy-delta fingerprint cancels, so the oracle
-          // is UNCHANGED
-          val enc = (id % 8) match {
-            case 1 => 3; case 3 => 2; case 5 => 6; case 7 => 7; case _ => 1
-          }
-          (id, graft.multimodal.Multimodal.makeAu(
-            (600 + (id % 3) * 37).toInt, 8000, id, muLaw = id % 2 == 0,
-            enc = enc))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 50)) { id =>
+        // even ids: mu-law; odd ids rotate the LINEAR encodings —
+        // PCM16 / signed-8 / float32 / float64 (r17 s2) — whose
+        // decoded samples all follow the SAME law up to a uniform
+        // scale the energy-delta fingerprint cancels, so the oracle
+        // is UNCHANGED
+        val enc = (id % 8) match {
+          case 1 => 3; case 3 => 2; case 5 => 6; case 7 => 7; case _ => 1
+        }
+        graft.multimodal.Multimodal.makeAu(
+          (600 + (id % 3) * 37).toInt, 8000, id, muLaw = id % 2 == 0,
+          enc = enc)
+      }
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -4329,18 +4294,15 @@ object SparkEntry {
     */
   private val qAudioFingerprintAiff = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 50)
-        .map(id => (id, graft.multimodal.Multimodal.makeAiff(
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 50))(id =>
+        graft.multimodal.Multimodal.makeAiff(
           (300 + (id % 5) * 23).toInt, (1 + id % 2).toInt, 8000, id,
           // r17 s2: every third file is AIFC — NONE (big-endian) or
           // sowt (byte-swapped) — under the SAME oracle; the extended
           // COMM and byte order are provably absent from the law
           aifc = (id % 3) match {
             case 1 => "NONE"; case 2 => "sowt"; case _ => ""
-          })))
-        .toDF("doc_id", "payload")
+          }))
       graft.multimodal.Multimodal.audioFingerprints(s, bins)
         .orderBy("doc_id")
     },
@@ -4365,41 +4327,38 @@ object SparkEntry {
     */
   private val qAudioCoverage = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 450)
-        .map { id =>
-          val bytes = (id % 18) match {
-            case 0 => graft.multimodal.Multimodal.makeWav(600, 1, 8000, id)
-            case 1 => graft.multimodal.Flac.make(192, 1, 8000, id)
-            case 2 => graft.multimodal.Multimodal.makeWavG711(600, 8000, id, aLaw = false)
-            case 3 => graft.multimodal.Multimodal.makeWavG711(600, 8000, id, aLaw = true)
-            case 4 => graft.multimodal.Multimodal.makeWavImaAdpcm(2, 132, 8000, id)
-            case 5 => graft.multimodal.Multimodal.makeWavMsAdpcm(2, 132, 8000, id)
-            case 6 => graft.multimodal.Multimodal.makeWavPcmWidth(600, 8000, id, bits = 8)
-            case 7 => graft.multimodal.Multimodal.makeWavPcmWidth(600, 8000, id, bits = 24)
-            case 8 => "ID3".getBytes("US-ASCII") ++ Array.tabulate(64)(i => ((id + i) % 256).toByte)
-            case 9 => "OggS".getBytes("US-ASCII") ++ Array.tabulate(64)(i => ((id + i) % 256).toByte)
-            case 10 => Array(0xff.toByte, 0xf1.toByte) ++ Array.tabulate(64)(i => ((id + i) % 256).toByte)
-            // bare (un-containered) MP3: MPEG frame sync + Layer III
-            // bits — sniffed into the SAME 'mp3' row as the ID3 case
-            case 11 => Array(0xff.toByte, 0xfb.toByte) ++ Array.tabulate(64)(i => ((id + i) % 256).toByte)
-            // r17: Sun .au (both encodings decode), AIFF (decodes),
-            // AIFC (compressed — sniffs, stays outside)
-            case 12 => graft.multimodal.Multimodal.makeAu(600, 8000, id, muLaw = id % 2 == 0)
-            case 13 => graft.multimodal.Multimodal.makeAiff(300, 1, 8000, id)
-            case 14 => "FORM".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 20) ++
-              "AIFC".getBytes("US-ASCII") ++ Array.tabulate(16)(i => ((id + i) % 256).toByte)
-            // r17 s2: IEEE-float WAV, both widths — decoded
-            case 15 => graft.multimodal.Multimodal.makeWavFloat(300, 1, 8000, id)
-            case 16 => graft.multimodal.Multimodal.makeWavFloat(300, 1, 8000, id, bits = 64)
-            // r17 s2: Ogg-FLAC sniffs into the SAME 'ogg' row as the
-            // junk page stream but DECODES — the ogg row's n_docs and
-            // n_fingerprinted now differ by exactly the junk half
-            case _ => graft.multimodal.Multimodal.makeOggFlac(192, 1, 8000, id)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 450)) { id =>
+        val bytes = (id % 18) match {
+          case 0 => graft.multimodal.Multimodal.makeWav(600, 1, 8000, id)
+          case 1 => graft.multimodal.Flac.make(192, 1, 8000, id)
+          case 2 => graft.multimodal.Multimodal.makeWavG711(600, 8000, id, aLaw = false)
+          case 3 => graft.multimodal.Multimodal.makeWavG711(600, 8000, id, aLaw = true)
+          case 4 => graft.multimodal.Multimodal.makeWavImaAdpcm(2, 132, 8000, id)
+          case 5 => graft.multimodal.Multimodal.makeWavMsAdpcm(2, 132, 8000, id)
+          case 6 => graft.multimodal.Multimodal.makeWavPcmWidth(600, 8000, id, bits = 8)
+          case 7 => graft.multimodal.Multimodal.makeWavPcmWidth(600, 8000, id, bits = 24)
+          case 8 => "ID3".getBytes("US-ASCII") ++ Array.tabulate(64)(i => ((id + i) % 256).toByte)
+          case 9 => "OggS".getBytes("US-ASCII") ++ Array.tabulate(64)(i => ((id + i) % 256).toByte)
+          case 10 => Array(0xff.toByte, 0xf1.toByte) ++ Array.tabulate(64)(i => ((id + i) % 256).toByte)
+          // bare (un-containered) MP3: MPEG frame sync + Layer III
+          // bits — sniffed into the SAME 'mp3' row as the ID3 case
+          case 11 => Array(0xff.toByte, 0xfb.toByte) ++ Array.tabulate(64)(i => ((id + i) % 256).toByte)
+          // r17: Sun .au (both encodings decode), AIFF (decodes),
+          // AIFC (compressed — sniffs, stays outside)
+          case 12 => graft.multimodal.Multimodal.makeAu(600, 8000, id, muLaw = id % 2 == 0)
+          case 13 => graft.multimodal.Multimodal.makeAiff(300, 1, 8000, id)
+          case 14 => "FORM".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 20) ++
+            "AIFC".getBytes("US-ASCII") ++ Array.tabulate(16)(i => ((id + i) % 256).toByte)
+          // r17 s2: IEEE-float WAV, both widths — decoded
+          case 15 => graft.multimodal.Multimodal.makeWavFloat(300, 1, 8000, id)
+          case 16 => graft.multimodal.Multimodal.makeWavFloat(300, 1, 8000, id, bits = 64)
+          // r17 s2: Ogg-FLAC sniffs into the SAME 'ogg' row as the
+          // junk page stream but DECODES — the ogg row's n_docs and
+          // n_fingerprinted now differ by exactly the junk half
+          case _ => graft.multimodal.Multimodal.makeOggFlac(192, 1, 8000, id)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.audioCoverage(s, bins)
         .orderBy("format")
     },
@@ -4434,10 +4393,7 @@ object SparkEntry {
     */
   private val qImageAHash = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map(id => (id, graft.multimodal.Multimodal.makeBmp(16, 16, id)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir))(id => graft.multimodal.Multimodal.makeBmp(16, 16, id))
       graft.multimodal.Multimodal.imageAHashes(s, bins)
         .orderBy("doc_id")
     },
@@ -4461,20 +4417,17 @@ object SparkEntry {
     */
   private val qMediaMetaWebp = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 240)
-        .map { id =>
-          val bytes = (id % 3) match {
-            case 0 => graft.multimodal.Multimodal.makeWebpHeader(
-              100 + (id % 7).toInt, 50)
-            case 1 => graft.multimodal.Multimodal.makeWebpAnim(
-              64, 48, 2 + (id % 3).toInt, 40 + (id % 5).toInt)
-            case _ => graft.multimodal.Multimodal.makeWebpAnim(
-              32, 32, 1, 90)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 240)) { id =>
+        val bytes = (id % 3) match {
+          case 0 => graft.multimodal.Multimodal.makeWebpHeader(
+            100 + (id % 7).toInt, 50)
+          case 1 => graft.multimodal.Multimodal.makeWebpAnim(
+            64, 48, 2 + (id % 3).toInt, 40 + (id % 5).toInt)
+          case _ => graft.multimodal.Multimodal.makeWebpAnim(
+            32, 32, 1, 90)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
     },
@@ -4505,20 +4458,17 @@ object SparkEntry {
     */
   private val qMediaMetaImages = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 240)
-        .map { id =>
-          val M = graft.multimodal.Multimodal
-          val bytes = (id % 4) match {
-            case 0 => M.makeIco((20 + id % 5).toInt, 16, id, withSmaller = true)
-            case 1 => M.makePnm(24, (10 + id % 3).toInt, id)
-            case 2 => (s"P4\n24 ${10 + id % 3}\n").getBytes("US-ASCII") ++
-              Array.tabulate(48)(i => ((id + i) % 256).toByte)
-            case _ => M.makeQoi(18, (12 + id % 2).toInt, id)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 240)) { id =>
+        val M = graft.multimodal.Multimodal
+        val bytes = (id % 4) match {
+          case 0 => M.makeIco((20 + id % 5).toInt, 16, id, withSmaller = true)
+          case 1 => M.makePnm(24, (10 + id % 3).toInt, id)
+          case 2 => (s"P4\n24 ${10 + id % 3}\n").getBytes("US-ASCII") ++
+            Array.tabulate(48)(i => ((id + i) % 256).toByte)
+          case _ => M.makeQoi(18, (12 + id % 2).toInt, id)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
     },
@@ -4548,12 +4498,9 @@ object SparkEntry {
     */
   private val qMediaMetaTiffPages = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 200)
-        .map(id => (id, graft.multimodal.Multimodal.makeTiffMultipage(
-          14, 9, id, (1 + id % 4).toInt)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 200))(id =>
+        graft.multimodal.Multimodal.makeTiffMultipage(
+          14, 9, id, (1 + id % 4).toInt))
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
     },
@@ -4578,16 +4525,13 @@ object SparkEntry {
     */
   private val qMediaMetaM4a = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 200)
-        .map { id =>
-          val rate = (id % 3) match {
-            case 0 => 44100; case 1 => 48000; case _ => 22050
-          }
-          (id, graft.multimodal.Multimodal.makeM4aHeader(
-            rate, 1 + (id % 2).toInt, 30000 + (id % 11).toInt))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 200)) { id =>
+        val rate = (id % 3) match {
+          case 0 => 44100; case 1 => 48000; case _ => 22050
+        }
+        graft.multimodal.Multimodal.makeM4aHeader(
+          rate, 1 + (id % 2).toInt, 30000 + (id % 11).toInt)
+      }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
     },
@@ -4622,20 +4566,17 @@ object SparkEntry {
     */
   private val qImageAHashTiffJ = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 150)
-        .map { id =>
-          val M = graft.multimodal.Multimodal
-          val bytes = (id % 4) match {
-            case 0 => M.makeTiffJpeg(64, 64, 16, id)
-            case 1 => M.makeTiffJpeg(64, 64, 16, id, bigEndian = true)
-            case 2 => M.makeTiffJpeg(64, 64, 16, id, sharedTables = true)
-            case _ => M.makeTiffJpeg(64, 64, 16, id, color = true,
-              sharedTables = true)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150)) { id =>
+        val M = graft.multimodal.Multimodal
+        val bytes = (id % 4) match {
+          case 0 => M.makeTiffJpeg(64, 64, 16, id)
+          case 1 => M.makeTiffJpeg(64, 64, 16, id, bigEndian = true)
+          case 2 => M.makeTiffJpeg(64, 64, 16, id, sharedTables = true)
+          case _ => M.makeTiffJpeg(64, 64, 16, id, color = true,
+            sharedTables = true)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
     Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
@@ -4664,19 +4605,17 @@ object SparkEntry {
     */
   private val qImageAHashTiff = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val bytes = (id % 4) match {
-            case 0 => graft.multimodal.Multimodal.makeTiff(16, 16, id, rgb = false)
-            case 1 => graft.multimodal.Multimodal.makeTiff(16, 16, id)
-            case 2 => graft.multimodal.Multimodal.makeTiff(16, 16, id,
-              bigEndian = true, rowsPerStrip = 5)
-            case _ => graft.multimodal.Multimodal.makeTiff(16, 16, id, rgb = false,
-              bigEndian = true, rowsPerStrip = 3)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val bytes = (id % 4) match {
+          case 0 => graft.multimodal.Multimodal.makeTiff(16, 16, id, rgb = false)
+          case 1 => graft.multimodal.Multimodal.makeTiff(16, 16, id)
+          case 2 => graft.multimodal.Multimodal.makeTiff(16, 16, id,
+            bigEndian = true, rowsPerStrip = 5)
+          case _ => graft.multimodal.Multimodal.makeTiff(16, 16, id, rgb = false,
+            bigEndian = true, rowsPerStrip = 3)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
     Some(s"""WITH px AS (
@@ -4708,23 +4647,21 @@ object SparkEntry {
     */
   private val qImageAHashTiffC = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val M = graft.multimodal.Multimodal
-          val bytes = (id % 6) match {
-            case 0 => M.makeTiff(16, 16, id, rgb = false, compression = 5)
-            case 1 => M.makeTiff(16, 16, id, compression = 5, predictor = 2)
-            case 2 => M.makeTiff(16, 16, id, compression = 8)
-            case 3 => M.makeTiff(16, 16, id, rgb = false, compression = 8,
-              predictor = 2, rowsPerStrip = 5)
-            case 4 => M.makeTiff(16, 16, id, rgb = false, compression = 32773,
-              bigEndian = true)
-            case _ => M.makeTiff(16, 16, id, compression = 32773,
-              rowsPerStrip = 3)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val M = graft.multimodal.Multimodal
+        val bytes = (id % 6) match {
+          case 0 => M.makeTiff(16, 16, id, rgb = false, compression = 5)
+          case 1 => M.makeTiff(16, 16, id, compression = 5, predictor = 2)
+          case 2 => M.makeTiff(16, 16, id, compression = 8)
+          case 3 => M.makeTiff(16, 16, id, rgb = false, compression = 8,
+            predictor = 2, rowsPerStrip = 5)
+          case 4 => M.makeTiff(16, 16, id, rgb = false, compression = 32773,
+            bigEndian = true)
+          case _ => M.makeTiff(16, 16, id, compression = 32773,
+            rowsPerStrip = 3)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
     Some(s"""WITH px AS (
@@ -4755,24 +4692,22 @@ object SparkEntry {
     */
   private val qImageAHashTiffT = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val M = graft.multimodal.Multimodal
-          val bytes = (id % 6) match {
-            case 0 => M.makeTiff(24, 24, id, rgb = false, bits = 16)
-            case 1 => M.makeTiff(24, 24, id, bits = 16, bigEndian = true,
-              compression = 8, predictor = 2, rowsPerStrip = 7)
-            case 2 => M.makeTiff(24, 24, id, tileSize = 16)
-            case 3 => M.makeTiff(24, 24, id, rgb = false, tileSize = 16,
-              bigEndian = true, compression = 5)
-            case 4 => M.makeTiff(24, 24, id, planar = true, rowsPerStrip = 5,
-              compression = 32773)
-            case _ => M.makeTiff(24, 24, id, bits = 16, planar = true,
-              tileSize = 16, compression = 5, predictor = 2)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val M = graft.multimodal.Multimodal
+        val bytes = (id % 6) match {
+          case 0 => M.makeTiff(24, 24, id, rgb = false, bits = 16)
+          case 1 => M.makeTiff(24, 24, id, bits = 16, bigEndian = true,
+            compression = 8, predictor = 2, rowsPerStrip = 7)
+          case 2 => M.makeTiff(24, 24, id, tileSize = 16)
+          case 3 => M.makeTiff(24, 24, id, rgb = false, tileSize = 16,
+            bigEndian = true, compression = 5)
+          case 4 => M.makeTiff(24, 24, id, planar = true, rowsPerStrip = 5,
+            compression = 32773)
+          case _ => M.makeTiff(24, 24, id, bits = 16, planar = true,
+            tileSize = 16, compression = 5, predictor = 2)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
     Some(s"""WITH px AS (
@@ -4806,18 +4741,16 @@ object SparkEntry {
     */
   private val qImageAHashIco = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val M = graft.multimodal.Multimodal
-          val bytes = (id % 4) match {
-            case 0 => M.makeIco(16, 16, id, withSmaller = true)
-            case 1 => M.makeIco(16, 16, id, bpp = 32)
-            case 2 => M.makeIco(16, 16, id, bpp = 8)
-            case _ => M.makeIco(16, 16, id, png = true)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val M = graft.multimodal.Multimodal
+        val bytes = (id % 4) match {
+          case 0 => M.makeIco(16, 16, id, withSmaller = true)
+          case 1 => M.makeIco(16, 16, id, bpp = 32)
+          case 2 => M.makeIco(16, 16, id, bpp = 8)
+          case _ => M.makeIco(16, 16, id, png = true)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
     Some(s"""WITH px AS (
@@ -4852,18 +4785,16 @@ object SparkEntry {
     */
   private val qImageAHashBmpX = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val M = graft.multimodal.Multimodal
-          val bytes = (id % 4) match {
-            case 0 => M.makeBmpX(16, 16, id, bpp = 32)
-            case 1 => M.makeBmpX(16, 16, id, bpp = 8)
-            case 2 => M.makeBmpX(16, 16, id, bpp = 8, rle = true)
-            case _ => M.makeBmpX(16, 16, id, topDown = true)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val M = graft.multimodal.Multimodal
+        val bytes = (id % 4) match {
+          case 0 => M.makeBmpX(16, 16, id, bpp = 32)
+          case 1 => M.makeBmpX(16, 16, id, bpp = 8)
+          case 2 => M.makeBmpX(16, 16, id, bpp = 8, rle = true)
+          case _ => M.makeBmpX(16, 16, id, topDown = true)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
     Some(s"""WITH px AS (
@@ -4897,18 +4828,16 @@ object SparkEntry {
     */
   private val qImageAHashPnm = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val M = graft.multimodal.Multimodal
-          val bytes = (id % 4) match {
-            case 0 => M.makePnm(16, 16, id)
-            case 1 => M.makePnm(16, 16, id, asciiForm = true)
-            case 2 => M.makePnm(16, 16, id, rgb = false)
-            case _ => M.makePnm(16, 16, id, rgb = false, asciiForm = true)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val M = graft.multimodal.Multimodal
+        val bytes = (id % 4) match {
+          case 0 => M.makePnm(16, 16, id)
+          case 1 => M.makePnm(16, 16, id, asciiForm = true)
+          case 2 => M.makePnm(16, 16, id, rgb = false)
+          case _ => M.makePnm(16, 16, id, rgb = false, asciiForm = true)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
     Some(s"""WITH px AS (
@@ -4936,18 +4865,15 @@ object SparkEntry {
     */
   private val qImageAHashQoi = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 300)
-        .map { id =>
-          val M = graft.multimodal.Multimodal
-          val bytes = (id % 3) match {
-            case 0 => M.makeQoi(16, 16, id)
-            case 1 => M.makeQoi(24, 8, id)
-            case _ => M.makeQoi(512, 8, id)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 300)) { id =>
+        val M = graft.multimodal.Multimodal
+        val bytes = (id % 3) match {
+          case 0 => M.makeQoi(16, 16, id)
+          case 1 => M.makeQoi(24, 8, id)
+          case _ => M.makeQoi(512, 8, id)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
     Some(s"""WITH d AS (SELECT doc_id,
@@ -4983,32 +4909,29 @@ object SparkEntry {
     */
   private val qImageCoverage = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 450)
-        .map { id =>
-          val bytes = (id % 13) match {
-            case 0 => graft.multimodal.Multimodal.makeBmp(16, 16, id)
-            case 1 => graft.multimodal.Multimodal.makePng(16, 16, id)
-            case 2 => graft.multimodal.Multimodal.makeGif(16, 16, id)
-            case 3 => graft.multimodal.Multimodal.makeJpeg(16, 16, id, gray = true)
-            case 4 => graft.multimodal.Multimodal.makeTiff(16, 16, id, rgb = false)
-            case 5 => graft.multimodal.Multimodal.makeTiff(16, 16, id,
-              bigEndian = true, rowsPerStrip = 5)
-            case 6 => "RIFF".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 0) ++
-              "WEBP".getBytes("US-ASCII") ++ Array.tabulate(16)(i => ((id + i) % 256).toByte)
-            case 7 => Array[Byte](0, 0, 0, 24) ++ "ftypavif".getBytes("US-ASCII") ++
-              Array.tabulate(16)(i => ((id + i) % 256).toByte)
-            case 8 => graft.multimodal.Multimodal.makeIco(16, 16, id) // r17 s2
-            case 9 => Array.fill(24)(1.toByte)
-            // r17 s2: netpbm + QOI decoded; a P4 bitmap sniffs pnm but
-            // stays un-hashed — the in-family boundary as a number
-            case 10 => graft.multimodal.Multimodal.makePnm(16, 16, id)
-            case 11 => graft.multimodal.Multimodal.makeQoi(16, 16, id)
-            case _ => "P4\n4 4\n".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 0)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 450)) { id =>
+        val bytes = (id % 13) match {
+          case 0 => graft.multimodal.Multimodal.makeBmp(16, 16, id)
+          case 1 => graft.multimodal.Multimodal.makePng(16, 16, id)
+          case 2 => graft.multimodal.Multimodal.makeGif(16, 16, id)
+          case 3 => graft.multimodal.Multimodal.makeJpeg(16, 16, id, gray = true)
+          case 4 => graft.multimodal.Multimodal.makeTiff(16, 16, id, rgb = false)
+          case 5 => graft.multimodal.Multimodal.makeTiff(16, 16, id,
+            bigEndian = true, rowsPerStrip = 5)
+          case 6 => "RIFF".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 0) ++
+            "WEBP".getBytes("US-ASCII") ++ Array.tabulate(16)(i => ((id + i) % 256).toByte)
+          case 7 => Array[Byte](0, 0, 0, 24) ++ "ftypavif".getBytes("US-ASCII") ++
+            Array.tabulate(16)(i => ((id + i) % 256).toByte)
+          case 8 => graft.multimodal.Multimodal.makeIco(16, 16, id) // r17 s2
+          case 9 => Array.fill(24)(1.toByte)
+          // r17 s2: netpbm + QOI decoded; a P4 bitmap sniffs pnm but
+          // stays un-hashed — the in-family boundary as a number
+          case 10 => graft.multimodal.Multimodal.makePnm(16, 16, id)
+          case 11 => graft.multimodal.Multimodal.makeQoi(16, 16, id)
+          case _ => "P4\n4 4\n".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 0)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.imageCoverage(s, bins)
         .orderBy("format")
     },
@@ -5045,11 +4968,8 @@ object SparkEntry {
     */
   private val qImagePHash = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 150)
-        .map(id => (id, graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150))(id =>
+        graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true))
       graft.multimodal.Multimodal.imagePHashes(s, bins).orderBy("doc_id")
     }, {
       val basis = graft.multimodal.Multimodal.PHashBasis.mkString(", ")
@@ -5096,12 +5016,9 @@ object SparkEntry {
     */
   private val qVideoHashes = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 200)
-        .map(id => (id, graft.multimodal.Multimodal.makeGifAnimated(
-          16, 16, id, 2 + (id % 3).toInt)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 200))(id =>
+        graft.multimodal.Multimodal.makeGifAnimated(
+          16, 16, id, 2 + (id % 3).toInt))
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
@@ -5132,12 +5049,9 @@ object SparkEntry {
     */
   private val qVideoNearDup = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 100)
-        .map(id => (id, graft.multimodal.Multimodal.makeGifAnimated(
-          16, 16, id % 50, 3)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 100))(id =>
+        graft.multimodal.Multimodal.makeGifAnimated(
+          16, 16, id % 50, 3))
       graft.multimodal.Multimodal.videoNearDups(
           graft.multimodal.Multimodal.videoFrameHashes(s, bins),
           maxHamming = 2, minPairs = 2)
@@ -5177,12 +5091,9 @@ object SparkEntry {
     */
   private val qVideoPHash = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 60)
-        .map(id => (id, graft.multimodal.Multimodal.makeGifAnimated(
-          32, 32, id, 2 + (id % 3).toInt)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 60))(id =>
+        graft.multimodal.Multimodal.makeGifAnimated(
+          32, 32, id, 2 + (id % 3).toInt))
       graft.multimodal.Multimodal.videoFramePHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     }, {
@@ -5237,12 +5148,9 @@ object SparkEntry {
     */
   private val qVideoNearDupPHash = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 80)
-        .map(id => (id, graft.multimodal.Multimodal.makeGifAnimated(
-          32, 32, id % 40, 2)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 80))(id =>
+        graft.multimodal.Multimodal.makeGifAnimated(
+          32, 32, id % 40, 2))
       graft.multimodal.Multimodal.videoNearDups(
           graft.multimodal.Multimodal.videoFramePHashes(s, bins),
           maxHamming = 2, minPairs = 2)
@@ -5304,12 +5212,9 @@ object SparkEntry {
     */
   private val qVideoMjpeg = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 150)
-        .map(id => (id, graft.multimodal.Multimodal.makeAviMjpeg(
-          64, 64, id, 2 + (id % 3).toInt)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150))(id =>
+        graft.multimodal.Multimodal.makeAviMjpeg(
+          64, 64, id, 2 + (id % 3).toInt))
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
@@ -5336,12 +5241,9 @@ object SparkEntry {
     */
   private val qVideoMjpegNearDup = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 100)
-        .map(id => (id, graft.multimodal.Multimodal.makeAviMjpeg(
-          64, 64, id % 50, 3)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 100))(id =>
+        graft.multimodal.Multimodal.makeAviMjpeg(
+          64, 64, id % 50, 3))
       graft.multimodal.Multimodal.videoNearDups(
           graft.multimodal.Multimodal.videoFrameHashes(s, bins),
           maxHamming = 2, minPairs = 2)
@@ -5379,12 +5281,9 @@ object SparkEntry {
     */
   private val qVideoDib = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 150)
-        .map(id => (id, graft.multimodal.Multimodal.makeAviDib(
-          16, 16, id, 2 + (id % 3).toInt)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150))(id =>
+        graft.multimodal.Multimodal.makeAviDib(
+          16, 16, id, 2 + (id % 3).toInt))
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
@@ -5419,12 +5318,9 @@ object SparkEntry {
     */
   private val qVideoMp4 = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 150)
-        .map(id => (id, graft.multimodal.Multimodal.makeMp4Mjpeg(
-          64, 64, id, 2 + (id % 3).toInt)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150))(id =>
+        graft.multimodal.Multimodal.makeMp4Mjpeg(
+          64, 64, id, 2 + (id % 3).toInt))
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
@@ -5444,12 +5340,9 @@ object SparkEntry {
     */
   private val qVideoApng = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 150)
-        .map(id => (id, graft.multimodal.Multimodal.makeApng(
-          16, 16, id, 2 + (id % 3).toInt)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150))(id =>
+        graft.multimodal.Multimodal.makeApng(
+          16, 16, id, 2 + (id % 3).toInt))
       graft.multimodal.Multimodal.videoFrameHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
     },
@@ -5478,18 +5371,15 @@ object SparkEntry {
     */
   private val qMediaMetaApng = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 240)
-        .map { id =>
-          val bytes = (id % 3) match {
-            case 0 => graft.multimodal.Multimodal.makeApng(24, 12, id, 3)
-            case 1 => graft.multimodal.Multimodal.makeApng(16, 16, id, 1)
-            case _ => graft.multimodal.Multimodal.makeApng(
-              32, 20, id, 2 + (id % 4).toInt)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 240)) { id =>
+        val bytes = (id % 3) match {
+          case 0 => graft.multimodal.Multimodal.makeApng(24, 12, id, 3)
+          case 1 => graft.multimodal.Multimodal.makeApng(16, 16, id, 1)
+          case _ => graft.multimodal.Multimodal.makeApng(
+            32, 20, id, 2 + (id % 4).toInt)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
     },
@@ -5523,16 +5413,12 @@ object SparkEntry {
     */
   private val qVideoMixedNearDup = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 100)
-        .map { id =>
-          val bytes =
-            if (id < 50) graft.multimodal.Multimodal.makeAviMjpeg(64, 64, id % 50, 3)
-            else graft.multimodal.Multimodal.makeMp4Mjpeg(64, 64, id % 50, 3)
-          (id, bytes)
-        }
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 100)) { id =>
+        val bytes =
+          if (id < 50) graft.multimodal.Multimodal.makeAviMjpeg(64, 64, id % 50, 3)
+          else graft.multimodal.Multimodal.makeMp4Mjpeg(64, 64, id % 50, 3)
+        bytes
+      }
       graft.multimodal.Multimodal.videoNearDups(
           graft.multimodal.Multimodal.videoFrameHashes(s, bins),
           maxHamming = 2, minPairs = 2)
@@ -5552,25 +5438,22 @@ object SparkEntry {
     */
   private val qVideoCoverage = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 480)
-        .map { id =>
-          val bytes = (id % 8) match {
-            case 0 => graft.multimodal.Multimodal.makeGifAnimated(16, 16, id, 2)
-            case 1 => graft.multimodal.Multimodal.makeAviMjpeg(16, 16, id, 2)
-            case 2 => "RIFF".getBytes("US-ASCII") ++ Array[Byte](20, 0, 0, 0) ++
-              "AVI ".getBytes("US-ASCII") ++ Array.tabulate(16)(i => ((id + i) % 256).toByte)
-            case 3 => Array[Byte](0, 0, 0, 24) ++ "ftypmp42".getBytes("US-ASCII") ++
-              Array.tabulate(16)(i => ((id + i) % 256).toByte)
-            case 4 => Array[Byte](0x1a, 0x45.toByte, 0xdf.toByte, 0xa3.toByte) ++
-              Array.tabulate(20)(i => ((id + i) % 256).toByte)
-            case 5 => graft.multimodal.Multimodal.makeMp4Mjpeg(16, 16, id, 2)
-            case 6 => graft.multimodal.Multimodal.makeMp4Mjpeg(16, 16, id, 2, brand = "qt  ")
-            case _ => Array.fill(24)(2.toByte)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 480)) { id =>
+        val bytes = (id % 8) match {
+          case 0 => graft.multimodal.Multimodal.makeGifAnimated(16, 16, id, 2)
+          case 1 => graft.multimodal.Multimodal.makeAviMjpeg(16, 16, id, 2)
+          case 2 => "RIFF".getBytes("US-ASCII") ++ Array[Byte](20, 0, 0, 0) ++
+            "AVI ".getBytes("US-ASCII") ++ Array.tabulate(16)(i => ((id + i) % 256).toByte)
+          case 3 => Array[Byte](0, 0, 0, 24) ++ "ftypmp42".getBytes("US-ASCII") ++
+            Array.tabulate(16)(i => ((id + i) % 256).toByte)
+          case 4 => Array[Byte](0x1a, 0x45.toByte, 0xdf.toByte, 0xa3.toByte) ++
+            Array.tabulate(20)(i => ((id + i) % 256).toByte)
+          case 5 => graft.multimodal.Multimodal.makeMp4Mjpeg(16, 16, id, 2)
+          case 6 => graft.multimodal.Multimodal.makeMp4Mjpeg(16, 16, id, 2, brand = "qt  ")
+          case _ => Array.fill(24)(2.toByte)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.videoCoverage(s, bins)
         .orderBy("format")
     },
@@ -5604,41 +5487,38 @@ object SparkEntry {
     */
   private val qMediaMeta = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 500)
-        .map { id =>
-          val bytes = (id % 10) match {
-            case 0 => graft.multimodal.Multimodal.makeWav(
-              400 + (id % 5).toInt, 1 + (id % 2).toInt, 8000, id)
-            case 1 => graft.multimodal.Multimodal.makeAu(
-              300 + (id % 7).toInt, 8000 + (id % 3).toInt * 4000, id, muLaw = id % 2 == 0)
-            case 2 => graft.multimodal.Multimodal.makeAiff(
-              200 + (id % 5).toInt, 1 + (id % 3).toInt, 11025, id)
-            case 3 => graft.multimodal.Multimodal.makeMp3Frames(
-              3 + (id % 4).toInt, (id % 3).toInt, 1 + (id % 14).toInt,
-              mono = id % 2 == 0, id, id3Size = if (id % 2 == 0) 48 else 0)
-            case 4 => graft.multimodal.Multimodal.makeAdtsFrames(
-              2 + (id % 3).toInt, 3 + (id % 3).toInt, 1 + (id % 2).toInt, 20, id)
-            case 5 => graft.multimodal.Multimodal.makePng(
-              4 + (id % 5).toInt, 3 + (id % 4).toInt, id)
-            case 6 =>
-              val j = graft.multimodal.Multimodal.makeJpeg(
-                8 * (1 + (id % 3).toInt), 8 * (1 + (id % 2).toInt), id)
-              // every other jpeg carries an APP1 Exif orientation
-              // (alternating byte orders) — absent is not "1"
-              if (id % 20 == 16)
-                graft.multimodal.Multimodal.withExifOrientation(
-                  j, 1 + ((id / 20) % 8).toInt, bigEndian = id % 40 == 16)
-              else j
-            case 7 => graft.multimodal.Multimodal.makeGifAnimated(
-              10 + (id % 4).toInt, 7, id, 1 + (id % 3).toInt)
-            case 8 => graft.multimodal.Multimodal.makeMp4Mjpeg(
-              16, 16, id, 2 + (id % 3).toInt)
-            case _ => Array.fill(16)(3.toByte)
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 500)) { id =>
+        val bytes = (id % 10) match {
+          case 0 => graft.multimodal.Multimodal.makeWav(
+            400 + (id % 5).toInt, 1 + (id % 2).toInt, 8000, id)
+          case 1 => graft.multimodal.Multimodal.makeAu(
+            300 + (id % 7).toInt, 8000 + (id % 3).toInt * 4000, id, muLaw = id % 2 == 0)
+          case 2 => graft.multimodal.Multimodal.makeAiff(
+            200 + (id % 5).toInt, 1 + (id % 3).toInt, 11025, id)
+          case 3 => graft.multimodal.Multimodal.makeMp3Frames(
+            3 + (id % 4).toInt, (id % 3).toInt, 1 + (id % 14).toInt,
+            mono = id % 2 == 0, id, id3Size = if (id % 2 == 0) 48 else 0)
+          case 4 => graft.multimodal.Multimodal.makeAdtsFrames(
+            2 + (id % 3).toInt, 3 + (id % 3).toInt, 1 + (id % 2).toInt, 20, id)
+          case 5 => graft.multimodal.Multimodal.makePng(
+            4 + (id % 5).toInt, 3 + (id % 4).toInt, id)
+          case 6 =>
+            val j = graft.multimodal.Multimodal.makeJpeg(
+              8 * (1 + (id % 3).toInt), 8 * (1 + (id % 2).toInt), id)
+            // every other jpeg carries an APP1 Exif orientation
+            // (alternating byte orders) — absent is not "1"
+            if (id % 20 == 16)
+              graft.multimodal.Multimodal.withExifOrientation(
+                j, 1 + ((id / 20) % 8).toInt, bigEndian = id % 40 == 16)
+            else j
+          case 7 => graft.multimodal.Multimodal.makeGifAnimated(
+            10 + (id % 4).toInt, 7, id, 1 + (id % 3).toInt)
+          case 8 => graft.multimodal.Multimodal.makeMp4Mjpeg(
+            16, 16, id, 2 + (id % 3).toInt)
+          case _ => Array.fill(16)(3.toByte)
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
     },
@@ -5713,32 +5593,29 @@ object SparkEntry {
     */
   private val qMediaMetaContainers = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 300)
-        .map { id =>
-          val bytes = (id % 8) match {
-            case 0 => graft.multimodal.Multimodal.makeWebm(
-              320 + (id % 5).toInt, 240)
-            case 1 => graft.multimodal.Multimodal.makeWebm(
-              640, 360, audioRate = if (id % 2 == 0) 44100 else 48000,
-              audioCh = 1 + (id % 2).toInt, durationMs = 1500 + (id % 7).toInt)
-            case 2 => graft.multimodal.Multimodal.makeWebm(
-              100 + (id % 7).toInt, 80, docType = "matroska")
-            case 3 => graft.multimodal.Multimodal.makeWebm(
-              25 + (id % 3).toInt, 20, unknownSegmentSize = true)
-            case 4 => graft.multimodal.Multimodal.makeOgg(
-              1000 + (id % 9), 8000 + (id % 3).toInt * 4000,
-              1 + (id % 2).toInt, opus = false, id)
-            case 5 => graft.multimodal.Multimodal.makeOgg(
-              2000 + (id % 5), 12345, 2, opus = true, id)
-            case 6 => graft.multimodal.Multimodal.makeHeifHeader(
-              200 + (id % 5).toInt, 150, "avif", thumbW = 32, thumbH = 24)
-            case _ => graft.multimodal.Multimodal.makeHeifHeader(
-              99, 77 + (id % 3).toInt, "heic1")
-          }
-          (id, bytes)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 300)) { id =>
+        val bytes = (id % 8) match {
+          case 0 => graft.multimodal.Multimodal.makeWebm(
+            320 + (id % 5).toInt, 240)
+          case 1 => graft.multimodal.Multimodal.makeWebm(
+            640, 360, audioRate = if (id % 2 == 0) 44100 else 48000,
+            audioCh = 1 + (id % 2).toInt, durationMs = 1500 + (id % 7).toInt)
+          case 2 => graft.multimodal.Multimodal.makeWebm(
+            100 + (id % 7).toInt, 80, docType = "matroska")
+          case 3 => graft.multimodal.Multimodal.makeWebm(
+            25 + (id % 3).toInt, 20, unknownSegmentSize = true)
+          case 4 => graft.multimodal.Multimodal.makeOgg(
+            1000 + (id % 9), 8000 + (id % 3).toInt * 4000,
+            1 + (id % 2).toInt, opus = false, id)
+          case 5 => graft.multimodal.Multimodal.makeOgg(
+            2000 + (id % 5), 12345, 2, opus = true, id)
+          case 6 => graft.multimodal.Multimodal.makeHeifHeader(
+            200 + (id % 5).toInt, 150, "avif", thumbW = 32, thumbH = 24)
+          case _ => graft.multimodal.Multimodal.makeHeifHeader(
+            99, 77 + (id % 3).toInt, "heic1")
+        }
+        bytes
+      }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
     },
@@ -5788,14 +5665,12 @@ object SparkEntry {
     */
   private val qImageAHashJpeg = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val b =
-            if (id % 2 == 0) graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true)
-            else graft.multimodal.Multimodal.makeJpegProgressive(64, 64, id, gray = true)
-          (id, b)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val b =
+          if (id % 2 == 0) graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true)
+          else graft.multimodal.Multimodal.makeJpegProgressive(64, 64, id, gray = true)
+        b
+      }
       graft.multimodal.Multimodal.imageAHashes(s, bins)
         .orderBy("doc_id")
     },
@@ -5820,11 +5695,8 @@ object SparkEntry {
     */
   private val qImageDualHash = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter((id: Long) => id < 150)
-        .map(id => (id, graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true)))
-        .toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150))(id =>
+        graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true))
       graft.multimodal.Multimodal.imageDualHashes(s, bins).orderBy("doc_id")
     }, {
       val basis = graft.multimodal.Multimodal.PHashBasis.mkString(", ")
@@ -5889,18 +5761,15 @@ object SparkEntry {
     */
   private val qImageNearDup = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .filter(col("doc_id") < 200)
-        .map { id =>
-          val b = graft.multimodal.Multimodal.makeBmp(16, 16, id % 40)
-          if ((id / 40) % 2 == 1) {
-            // storage row 15 = display row 0; stride(w=16) = 48
-            val base = 54 + 15 * 48
-            b(base) = 255.toByte; b(base + 1) = 255.toByte; b(base + 2) = 255.toByte
-          }
-          (id, b)
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir).filter(col("doc_id") < 200)) { id =>
+        val b = graft.multimodal.Multimodal.makeBmp(16, 16, id % 40)
+        if ((id / 40) % 2 == 1) {
+          // storage row 15 = display row 0; stride(w=16) = 48
+          val base = 54 + 15 * 48
+          b(base) = 255.toByte; b(base + 1) = 255.toByte; b(base + 2) = 255.toByte
+        }
+        b
+      }
       val hashes = graft.multimodal.Multimodal.imageAHashes(s, bins)
       graft.multimodal.Multimodal.imageNearDups(hashes, maxHamming = 6)
         .orderBy("id_a", "id_b")
@@ -5938,13 +5807,11 @@ object SparkEntry {
 
   private val qBmpResize = Q(
     (s, dir) => {
-      import s.implicits._
-      val bins = t(s, dir, "documents").select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          (id, graft.multimodal.Multimodal.makeBmp(w, h, id))
-        }.toDF("doc_id", "payload")
+      val bins = payloads(docIds(s, dir)) { id =>
+        val w = 1 + (id % 16).toInt
+        val h = 1 + (id % 8).toInt
+        graft.multimodal.Multimodal.makeBmp(w, h, id)
+      }
       val resized = graft.multimodal.Multimodal.resizePayloads(s, bins, 4, 3)
       graft.multimodal.Multimodal.extractFeatures(s, resized)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
@@ -9709,11 +9576,9 @@ object SparkEntry {
       val hashPath = tmp.resolve("hashes").toString
       val pairsPath = tmp.resolve("pairs").toString
       val ckpt = tmp.resolve("ckpt").toString
-      val stream = Tables.readTableStream(s, dir, "documents")
-        .filter(col("doc_id") < 120)
-        .select(col("doc_id")).as[Long]
-        .map(id => (id, graft.multimodal.Multimodal.makeBmp(16, 16, id % 40)))
-        .toDF("doc_id", "payload")
+      val stream = payloads(Tables.readTableStream(s, dir, "documents")
+          .filter(col("doc_id") < 120).select(col("doc_id")).as[Long])(id =>
+        graft.multimodal.Multimodal.makeBmp(16, 16, id % 40))
       val q = graft.streaming.MediaIngest.start(
         s, stream, hashPath, pairsPath, ckpt, maxHamming = 2)
       q.awaitTermination()
@@ -9749,11 +9614,9 @@ object SparkEntry {
       val idxPath = tmp.resolve("idx").toString
       val pairsPath = tmp.resolve("pairs").toString
       val ckpt = tmp.resolve("ckpt").toString
-      val stream = Tables.readTableStream(s, dir, "documents")
-        .filter(col("doc_id") < 120)
-        .select(col("doc_id")).as[Long]
-        .map(id => (id, graft.multimodal.Multimodal.makeBmp(16, 16, id % 40)))
-        .toDF("doc_id", "payload")
+      val stream = payloads(Tables.readTableStream(s, dir, "documents")
+          .filter(col("doc_id") < 120).select(col("doc_id")).as[Long])(id =>
+        graft.multimodal.Multimodal.makeBmp(16, 16, id % 40))
       val q = graft.streaming.MediaIngest.startSteady(
         s, stream, idxPath, pairsPath, ckpt, maxHamming = 2)
       q.awaitTermination()
@@ -9781,11 +9644,9 @@ object SparkEntry {
       val hashPath = tmp.resolve("hashes").toString
       val pairsPath = tmp.resolve("pairs").toString
       val ckpt = tmp.resolve("ckpt").toString
-      val stream = Tables.readTableStream(s, dir, "documents")
-        .filter(col("doc_id") < 120)
-        .select(col("doc_id")).as[Long]
-        .map(id => (id, graft.multimodal.Multimodal.makeWav(130, 1, 8000, id % 40)))
-        .toDF("doc_id", "payload")
+      val stream = payloads(Tables.readTableStream(s, dir, "documents")
+          .filter(col("doc_id") < 120).select(col("doc_id")).as[Long])(id =>
+        graft.multimodal.Multimodal.makeWav(130, 1, 8000, id % 40))
       val q = graft.streaming.MediaIngest.start(
         s, stream, hashPath, pairsPath, ckpt, maxHamming = 2, kind = "audio")
       q.awaitTermination()
@@ -9826,28 +9687,25 @@ object SparkEntry {
       val metaPath = tmp.resolve("meta").toString
       val keptPath = tmp.resolve("kept").toString
       val ckpt = tmp.resolve("ckpt").toString
-      val stream = Tables.readTableStream(s, dir, "documents")
-        .filter(col("doc_id") < 400)
-        .select(col("doc_id")).as[Long]
-        .map { id =>
-          val bytes = (id % 7) match {
-            case 0 => graft.multimodal.Multimodal.makePng(
-              4 + (id % 6).toInt, 8, id)
-            case 1 => graft.multimodal.Multimodal.makeWav(
-              100, 1, if (id % 2 == 0) 4000 else 12000, id)
-            case 2 => graft.multimodal.Multimodal.makeMp4Mjpeg(16, 16, id, 2)
-            case 3 => graft.multimodal.Multimodal.makeGifAnimated(4, 4, id, 2)
-            case 4 => Array.fill(12)(7.toByte)
-            // r17 s2: the session's formats ride the SAME gate — an
-            // APNG always passes at 8×8, an ICO sweeps the width
-            // threshold exactly like the PNG class
-            case 5 => graft.multimodal.Multimodal.makeApng(8, 8, id, 2)
-            case _ => graft.multimodal.Multimodal.makeIco(
-              (4 + id % 6).toInt, 8, id)
-          }
-          (id, bytes)
+      val stream = payloads(Tables.readTableStream(s, dir, "documents")
+          .filter(col("doc_id") < 400).select(col("doc_id")).as[Long]) { id =>
+        val bytes = (id % 7) match {
+          case 0 => graft.multimodal.Multimodal.makePng(
+            4 + (id % 6).toInt, 8, id)
+          case 1 => graft.multimodal.Multimodal.makeWav(
+            100, 1, if (id % 2 == 0) 4000 else 12000, id)
+          case 2 => graft.multimodal.Multimodal.makeMp4Mjpeg(16, 16, id, 2)
+          case 3 => graft.multimodal.Multimodal.makeGifAnimated(4, 4, id, 2)
+          case 4 => Array.fill(12)(7.toByte)
+          // r17 s2: the session's formats ride the SAME gate — an
+          // APNG always passes at 8×8, an ICO sweeps the width
+          // threshold exactly like the PNG class
+          case 5 => graft.multimodal.Multimodal.makeApng(8, 8, id, 2)
+          case _ => graft.multimodal.Multimodal.makeIco(
+            (4 + id % 6).toInt, 8, id)
         }
-        .toDF("doc_id", "payload")
+        bytes
+      }
       val q = graft.streaming.MetaIngest.start(
         s, stream, metaPath, keptPath, ckpt,
         minWidth = 6, minHeight = 5, minSampleRate = 8000)
@@ -9877,11 +9735,9 @@ object SparkEntry {
       val idxPath = tmp.resolve("idx").toString
       val pairsPath = tmp.resolve("pairs").toString
       val ckpt = tmp.resolve("ckpt").toString
-      val stream = Tables.readTableStream(s, dir, "documents")
-        .filter(col("doc_id") < 120)
-        .select(col("doc_id")).as[Long]
-        .map(id => (id, graft.multimodal.Multimodal.makeWav(130, 1, 8000, id % 40)))
-        .toDF("doc_id", "payload")
+      val stream = payloads(Tables.readTableStream(s, dir, "documents")
+          .filter(col("doc_id") < 120).select(col("doc_id")).as[Long])(id =>
+        graft.multimodal.Multimodal.makeWav(130, 1, 8000, id % 40))
       val q = graft.streaming.MediaIngest.startSteady(
         s, stream, idxPath, pairsPath, ckpt, maxHamming = 2, kind = "audio")
       q.awaitTermination()
