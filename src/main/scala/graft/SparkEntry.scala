@@ -1283,6 +1283,106 @@ object SparkEntry {
                    FROM bits GROUP BY doc_id)"""
   }
 
+  /** The pHash DCT chain ([[graft.multimodal.Multimodal.imagePHashes]])
+    * over a prior `cells`(doc_id, [f,] gx, gy, cv) 32×32 grid: `basis`, the
+    * embedded quantized DCT constants; `co`, the 63 low-frequency
+    * coefficients; `med`, their median, the bit threshold. `perFrame`
+    * keys each on (doc_id, f).
+    */
+  private def pHashCtes(perFrame: Boolean = false): String = {
+    val basis = graft.multimodal.Multimodal.PHashBasis.mkString(", ")
+    val (cf, f, by, part) =
+      if (perFrame) ("c.f, ", "f, ", "1, 2, 3, 4", "doc_id, f") else ("", "", "1, 2, 3", "doc_id")
+    s"""basis AS (SELECT t.i // 32 AS u, t.i % 32 AS x,
+                               CAST(([$basis])[t.i + 1] AS BIGINT) AS b
+                        FROM generate_series(0, 1023) t(i)),
+              co AS (SELECT c.doc_id, ${cf}bu.u AS u, bv.u AS v,
+                            SUM(c.cv * bu.b * bv.b) AS coef
+                     FROM cells c
+                     JOIN basis bu ON bu.x = c.gx AND bu.u < 8
+                     JOIN basis bv ON bv.x = c.gy AND bv.u < 8
+                     WHERE NOT (bu.u = 0 AND bv.u = 0)
+                     GROUP BY $by),
+              med AS (SELECT doc_id, ${f}coef AS m
+                      FROM (SELECT doc_id, ${f}coef,
+                                   row_number() OVER (PARTITION BY $part
+                                                      ORDER BY coef) AS rn
+                            FROM co)
+                      WHERE rn = 32)"""
+  }
+
+  /** Duplicated stride-16 window starts of every doc ([[graft.text.SubstrDedup]]),
+    * numbered into islands `isl`(id, pos, g) of overlapping windows.
+    */
+  private val dupSpanIslandCtes: String =
+    s"""sh AS (
+              SELECT doc_id AS id, i AS pos,
+                     ${md5LongSql("substr(text, i + 1, 32)")} AS h
+              FROM (SELECT doc_id, text,
+                           unnest(range(0, len(text) - 32 + 1, 16)) AS i
+                    FROM documents WHERE len(text) >= 32)),
+            cnt AS (SELECT h, COUNT(*) AS c FROM sh GROUP BY h),
+            dup AS (SELECT id, pos FROM sh JOIN cnt USING (h) WHERE c > 1),
+            lg AS (SELECT id, pos,
+                          lag(pos) OVER (PARTITION BY id ORDER BY pos) AS pp
+                   FROM dup),
+            br AS (SELECT id, pos,
+                          CASE WHEN pos - pp <= 16 THEN 0 ELSE 1 END AS brk
+                   FROM lg),
+            isl AS (SELECT id, pos,
+                           SUM(brk) OVER (PARTITION BY id ORDER BY pos
+                                          ROWS UNBOUNDED PRECEDING) AS g
+                    FROM br)"""
+
+  /** Each user's first view, then first click and first purchase
+    * within 7 days of it ([[graft.ops.Funnel.firstTouch]]): `s3`(user_id, t1, t2, t3).
+    */
+  private val funnelCtes: String =
+    """b AS (SELECT user_id, event_type AS et, epoch_us(ts) AS us
+                       FROM events),
+            s1 AS (SELECT user_id, MIN(us) AS t1 FROM b
+                   WHERE et = 'view' GROUP BY user_id),
+            s2 AS (SELECT s1.user_id, s1.t1,
+                          MIN(CASE WHEN b.us > s1.t1
+                                    AND b.us <= s1.t1 + 604800000000 THEN b.us END) AS t2
+                   FROM s1 LEFT JOIN b ON b.user_id = s1.user_id AND b.et = 'click'
+                   GROUP BY s1.user_id, s1.t1),
+            s3 AS (SELECT s2.user_id, s2.t1, s2.t2,
+                          MIN(CASE WHEN b.us > s2.t2
+                                    AND b.us <= s2.t1 + 604800000000 THEN b.us END) AS t3
+                   FROM s2 LEFT JOIN b ON b.user_id = s2.user_id AND b.et = 'purchase'
+                   GROUP BY s2.user_id, s2.t1, s2.t2)"""
+
+  /** Three [[graft.text.Bpe.train]] rounds over a prior `w0`(…, w) word
+    * list: `r1`..`r3`, each round's winning pair, `w1`/`w2` the merged words.
+    */
+  private val bpeRoundsCtes: String =
+    raw"""words AS (SELECT '|' || regexp_replace(w, '(.)', '\1|', 'g') AS s,
+                             CAST(COUNT(*) AS BIGINT) AS n
+                      FROM w0 WHERE w <> '' GROUP BY 1),
+            e1 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
+                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM words) t1
+                   WHERE len(l) >= 2),
+            p1 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
+                   FROM e1 GROUP BY 1, 2),
+            r1 AS (SELECT * FROM p1 ORDER BY pair_count DESC, pa, pb LIMIT 1),
+            w1 AS (SELECT ${bpeMergeSql("s", "r1.pa", "r1.pb")} AS s, n
+                   FROM words, r1),
+            e2 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
+                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM w1) t2
+                   WHERE len(l) >= 2),
+            p2 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
+                   FROM e2 GROUP BY 1, 2),
+            r2 AS (SELECT * FROM p2 ORDER BY pair_count DESC, pa, pb LIMIT 1),
+            w2 AS (SELECT ${bpeMergeSql("s", "r2.pa", "r2.pb")} AS s, n
+                   FROM w1, r2),
+            e3 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
+                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM w2) t3
+                   WHERE len(l) >= 2),
+            p3 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
+                   FROM e3 GROUP BY 1, 2),
+            r3 AS (SELECT * FROM p3 ORDER BY pair_count DESC, pa, pb LIMIT 1)"""
+
   /** Every doc pair of `hs`(doc_id, u) within `maxHamming` bits. */
   private def hammingPairsSql(maxHamming: Int): String =
     s"""SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -4971,38 +5071,21 @@ object SparkEntry {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150))(id =>
         graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true))
       graft.multimodal.Multimodal.imagePHashes(s, bins).orderBy("doc_id")
-    }, {
-      val basis = graft.multimodal.Multimodal.PHashBasis.mkString(", ")
-      Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
+    },
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
               cells AS (SELECT i.doc_id, gx.x AS gx, gy.x AS gy,
                                CAST(((i.doc_id + (gx.x // 4) * 31 + (gy.x // 4) * 7) % 200) + 28 AS BIGINT) AS cv
                         FROM ids i
                         JOIN generate_series(0, 31) gx(x) ON TRUE
                         JOIN generate_series(0, 31) gy(x) ON TRUE),
-              basis AS (SELECT t.i // 32 AS u, t.i % 32 AS x,
-                               CAST(([$basis])[t.i + 1] AS BIGINT) AS b
-                        FROM generate_series(0, 1023) t(i)),
-              co AS (SELECT c.doc_id, bu.u AS u, bv.u AS v,
-                            SUM(c.cv * bu.b * bv.b) AS coef
-                     FROM cells c
-                     JOIN basis bu ON bu.x = c.gx AND bu.u < 8
-                     JOIN basis bv ON bv.x = c.gy AND bv.u < 8
-                     WHERE NOT (bu.u = 0 AND bv.u = 0)
-                     GROUP BY 1, 2, 3),
-              med AS (SELECT doc_id, coef AS m
-                      FROM (SELECT doc_id, coef,
-                                   row_number() OVER (PARTITION BY doc_id
-                                                      ORDER BY coef) AS rn
-                            FROM co)
-                      WHERE rn = 32),
+              ${pHashCtes()},
               bits AS (SELECT co.doc_id,
                               CAST(SUM(CASE WHEN co.coef > med.m
                                   THEN CAST(1 AS BIGINT) << (v * 8 + u - 1)
                                   ELSE 0 END) AS BIGINT) AS phash
                        FROM co JOIN med USING (doc_id)
                        GROUP BY co.doc_id)
-            SELECT doc_id, phash FROM bits ORDER BY doc_id""")
-    })
+            SELECT doc_id, phash FROM bits ORDER BY doc_id"""))
 
   /** Decoded-VIDEO frame hashing ([[graft.multimodal.Multimodal
     * .videoFrameHashes]] over [[graft.multimodal.Multimodal
@@ -5096,9 +5179,8 @@ object SparkEntry {
           32, 32, id, 2 + (id % 3).toInt))
       graft.multimodal.Multimodal.videoFramePHashes(s, bins)
         .orderBy("doc_id", "frame_idx")
-    }, {
-      val basis = graft.multimodal.Multimodal.PHashBasis.mkString(", ")
-      Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 60),
+    },
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 60),
               fr AS (SELECT doc_id, f.f AS f FROM ids
                      JOIN generate_series(0, 3) f(f) ON f.f < 2 + doc_id % 3),
               cells AS (SELECT doc_id, f, r.r AS gy, x.x AS gx,
@@ -5109,22 +5191,7 @@ object SparkEntry {
                         FROM fr
                         JOIN generate_series(0, 31) r(r) ON TRUE
                         JOIN generate_series(0, 31) x(x) ON TRUE),
-              basis AS (SELECT t.i // 32 AS u, t.i % 32 AS x,
-                               CAST(([$basis])[t.i + 1] AS BIGINT) AS b
-                        FROM generate_series(0, 1023) t(i)),
-              co AS (SELECT c.doc_id, c.f, bu.u AS u, bv.u AS v,
-                            SUM(c.cv * bu.b * bv.b) AS coef
-                     FROM cells c
-                     JOIN basis bu ON bu.x = c.gx AND bu.u < 8
-                     JOIN basis bv ON bv.x = c.gy AND bv.u < 8
-                     WHERE NOT (bu.u = 0 AND bv.u = 0)
-                     GROUP BY 1, 2, 3, 4),
-              med AS (SELECT doc_id, f, coef AS m
-                      FROM (SELECT doc_id, f, coef,
-                                   row_number() OVER (PARTITION BY doc_id, f
-                                                      ORDER BY coef) AS rn
-                            FROM co)
-                      WHERE rn = 32),
+              ${pHashCtes(perFrame = true)},
               bits AS (SELECT co.doc_id, co.f,
                               CAST(SUM(CASE WHEN co.coef > med.m
                                   THEN CAST(1 AS BIGINT) << (v * 8 + u - 1)
@@ -5132,8 +5199,7 @@ object SparkEntry {
                        FROM co JOIN med USING (doc_id, f)
                        GROUP BY co.doc_id, co.f)
             SELECT doc_id, CAST(f AS BIGINT) AS frame_idx, fhash
-            FROM bits ORDER BY doc_id, frame_idx""")
-    })
+            FROM bits ORDER BY doc_id, frame_idx"""))
 
   /** Clip-level near-dup on the SPECTRAL key ([[graft.multimodal
     * .Multimodal.videoNearDups]] over [[graft.multimodal.Multimodal
@@ -5155,9 +5221,8 @@ object SparkEntry {
           graft.multimodal.Multimodal.videoFramePHashes(s, bins),
           maxHamming = 2, minPairs = 2)
         .orderBy("id_a", "id_b")
-    }, {
-      val basis = graft.multimodal.Multimodal.PHashBasis.mkString(", ")
-      Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 80),
+    },
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 80),
               fr AS (SELECT doc_id, doc_id % 40 AS seed, f.f AS f FROM ids
                      JOIN generate_series(0, 1) f(f) ON TRUE),
               cells AS (SELECT doc_id, f, r.r AS gy, x.x AS gx,
@@ -5168,22 +5233,7 @@ object SparkEntry {
                         FROM fr
                         JOIN generate_series(0, 31) r(r) ON TRUE
                         JOIN generate_series(0, 31) x(x) ON TRUE),
-              basis AS (SELECT t.i // 32 AS u, t.i % 32 AS x,
-                               CAST(([$basis])[t.i + 1] AS BIGINT) AS b
-                        FROM generate_series(0, 1023) t(i)),
-              co AS (SELECT c.doc_id, c.f, bu.u AS u, bv.u AS v,
-                            SUM(c.cv * bu.b * bv.b) AS coef
-                     FROM cells c
-                     JOIN basis bu ON bu.x = c.gx AND bu.u < 8
-                     JOIN basis bv ON bv.x = c.gy AND bv.u < 8
-                     WHERE NOT (bu.u = 0 AND bv.u = 0)
-                     GROUP BY 1, 2, 3, 4),
-              med AS (SELECT doc_id, f, coef AS m
-                      FROM (SELECT doc_id, f, coef,
-                                   row_number() OVER (PARTITION BY doc_id, f
-                                                      ORDER BY coef) AS rn
-                            FROM co)
-                      WHERE rn = 32),
+              ${pHashCtes(perFrame = true)},
               hs AS (SELECT co.doc_id, co.f,
                             CAST(SUM(CASE WHEN co.coef > med.m
                                 THEN 1::HUGEINT << (v * 8 + u - 1)
@@ -5197,8 +5247,7 @@ object SparkEntry {
               agg AS (SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS n_pairs
                       FROM p GROUP BY 1, 2)
             SELECT id_a, id_b, n_pairs FROM agg
-            WHERE n_pairs >= 2 ORDER BY id_a, id_b""")
-    })
+            WHERE n_pairs >= 2 ORDER BY id_a, id_b"""))
 
   /** Decoded-VIDEO frame hashing over the MJPEG AVI container
     * ([[graft.multimodal.Multimodal.aviFrameGrids]] via
@@ -5698,9 +5747,8 @@ object SparkEntry {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150))(id =>
         graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true))
       graft.multimodal.Multimodal.imageDualHashes(s, bins).orderBy("doc_id")
-    }, {
-      val basis = graft.multimodal.Multimodal.PHashBasis.mkString(", ")
-      Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
+    },
+    Some(s"""WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 150),
               blk AS (SELECT i.doc_id, br.bi AS bi, bc.bj AS bj,
                              ((i.doc_id + bc.bj * 31 + br.bi * 7) % 200) + 28 AS v
                       FROM ids i
@@ -5720,22 +5768,7 @@ object SparkEntry {
                         FROM blk b
                         JOIN generate_series(0, 31) gx(x) ON gx.x // 4 = b.bj
                         JOIN generate_series(0, 31) gy(x) ON gy.x // 4 = b.bi),
-              basis AS (SELECT t.i // 32 AS u, t.i % 32 AS x,
-                               CAST(([$basis])[t.i + 1] AS BIGINT) AS b
-                        FROM generate_series(0, 1023) t(i)),
-              co AS (SELECT c.doc_id, bu.u AS u, bv.u AS v,
-                            SUM(c.cv * bu.b * bv.b) AS coef
-                     FROM cells c
-                     JOIN basis bu ON bu.x = c.gx AND bu.u < 8
-                     JOIN basis bv ON bv.x = c.gy AND bv.u < 8
-                     WHERE NOT (bu.u = 0 AND bv.u = 0)
-                     GROUP BY 1, 2, 3),
-              med AS (SELECT doc_id, coef AS m
-                      FROM (SELECT doc_id, coef,
-                                   row_number() OVER (PARTITION BY doc_id
-                                                      ORDER BY coef) AS rn
-                            FROM co)
-                      WHERE rn = 32),
+              ${pHashCtes()},
               ph AS (SELECT co.doc_id,
                             CAST(SUM(CASE WHEN co.coef > med.m
                                 THEN CAST(1 AS BIGINT) << (v * 8 + u - 1)
@@ -5746,8 +5779,7 @@ object SparkEntry {
                    ${signedBigintSql("ah.s")} AS ahash,
                    ph.phash
             FROM ah JOIN ph ON ph.doc_id = ah.doc_id
-            ORDER BY ah.doc_id""")
-    })
+            ORDER BY ah.doc_id"""))
 
   /** Image near-dup pairs ([[graft.multimodal.Multimodal
     * .imageNearDups]] — decode → aHash → the pigeonhole-blocked Hamming
@@ -6798,24 +6830,7 @@ object SparkEntry {
       graft.text.SubstrDedup.dupSpanRanges(t(s, dir, "documents"),
         "doc_id", "text", window = 32, stride = 16)
         .orderBy("id", "span_start"),
-    Some(s"""WITH sh AS (
-              SELECT doc_id AS id, i AS pos,
-                     ${md5LongSql("substr(text, i + 1, 32)")} AS h
-              FROM (SELECT doc_id, text,
-                           unnest(range(0, len(text) - 32 + 1, 16)) AS i
-                    FROM documents WHERE len(text) >= 32)),
-            cnt AS (SELECT h, COUNT(*) AS c FROM sh GROUP BY h),
-            dup AS (SELECT id, pos FROM sh JOIN cnt USING (h) WHERE c > 1),
-            lg AS (SELECT id, pos,
-                          lag(pos) OVER (PARTITION BY id ORDER BY pos) AS pp
-                   FROM dup),
-            br AS (SELECT id, pos,
-                          CASE WHEN pos - pp <= 16 THEN 0 ELSE 1 END AS brk
-                   FROM lg),
-            isl AS (SELECT id, pos,
-                           SUM(brk) OVER (PARTITION BY id ORDER BY pos
-                                          ROWS UNBOUNDED PRECEDING) AS g
-                    FROM br)
+    Some(s"""WITH ${dupSpanIslandCtes}
             SELECT id, CAST(MIN(pos) + 1 AS INT) AS span_start,
                    CAST(MAX(pos) + 32 AS INT) AS span_end,
                    CAST(COUNT(*) AS BIGINT) AS n_windows,
@@ -6837,24 +6852,7 @@ object SparkEntry {
       graft.text.SubstrDedup.removeDupSpans(t(s, dir, "documents"),
         "doc_id", "text", window = 32, stride = 16)
         .orderBy("id"),
-    Some(s"""WITH sh AS (
-              SELECT doc_id AS id, i AS pos,
-                     ${md5LongSql("substr(text, i + 1, 32)")} AS h
-              FROM (SELECT doc_id, text,
-                           unnest(range(0, len(text) - 32 + 1, 16)) AS i
-                    FROM documents WHERE len(text) >= 32)),
-            cnt AS (SELECT h, COUNT(*) AS c FROM sh GROUP BY h),
-            dup AS (SELECT id, pos FROM sh JOIN cnt USING (h) WHERE c > 1),
-            lg AS (SELECT id, pos,
-                          lag(pos) OVER (PARTITION BY id ORDER BY pos) AS pp
-                   FROM dup),
-            br AS (SELECT id, pos,
-                          CASE WHEN pos - pp <= 16 THEN 0 ELSE 1 END AS brk
-                   FROM lg),
-            isl AS (SELECT id, pos,
-                           SUM(brk) OVER (PARTITION BY id ORDER BY pos
-                                          ROWS UNBOUNDED PRECEDING) AS g
-                    FROM br),
+    Some(s"""WITH ${dupSpanIslandCtes},
             rg AS (SELECT id, MIN(pos) + 1 AS s0, MAX(pos) + 32 AS e0
                    FROM isl GROUP BY id, g),
             seg AS (SELECT id,
@@ -7816,20 +7814,7 @@ object SparkEntry {
         Tables.readEvents(s, dir), "user_id", "event_type", "ts",
         Seq("view", "click", "purchase"), horizonMicros = 7L * 86400L * 1000000L)
         .orderBy("user_id"),
-    Some("""WITH b AS (SELECT user_id, event_type AS et, epoch_us(ts) AS us
-                       FROM events),
-            s1 AS (SELECT user_id, MIN(us) AS t1 FROM b
-                   WHERE et = 'view' GROUP BY user_id),
-            s2 AS (SELECT s1.user_id, s1.t1,
-                          MIN(CASE WHEN b.us > s1.t1
-                                    AND b.us <= s1.t1 + 604800000000 THEN b.us END) AS t2
-                   FROM s1 LEFT JOIN b ON b.user_id = s1.user_id AND b.et = 'click'
-                   GROUP BY s1.user_id, s1.t1),
-            s3 AS (SELECT s2.user_id, s2.t1, s2.t2,
-                          MIN(CASE WHEN b.us > s2.t2
-                                    AND b.us <= s2.t1 + 604800000000 THEN b.us END) AS t3
-                   FROM s2 LEFT JOIN b ON b.user_id = s2.user_id AND b.et = 'purchase'
-                   GROUP BY s2.user_id, s2.t1, s2.t2)
+    Some(s"""WITH ${funnelCtes}
             SELECT user_id, t1, t2, t3,
                    CAST(CASE WHEN t3 IS NOT NULL THEN 3
                              WHEN t2 IS NOT NULL THEN 2
@@ -7959,20 +7944,7 @@ object SparkEntry {
       graft.ops.Funnel.summary(detail, Seq("view", "click", "purchase"))
         .orderBy("step")
     },
-    Some("""WITH b AS (SELECT user_id, event_type AS et, epoch_us(ts) AS us
-                       FROM events),
-            s1 AS (SELECT user_id, MIN(us) AS t1 FROM b
-                   WHERE et = 'view' GROUP BY user_id),
-            s2 AS (SELECT s1.user_id, s1.t1,
-                          MIN(CASE WHEN b.us > s1.t1
-                                    AND b.us <= s1.t1 + 604800000000 THEN b.us END) AS t2
-                   FROM s1 LEFT JOIN b ON b.user_id = s1.user_id AND b.et = 'click'
-                   GROUP BY s1.user_id, s1.t1),
-            s3 AS (SELECT s2.user_id, s2.t1, s2.t2,
-                          MIN(CASE WHEN b.us > s2.t2
-                                    AND b.us <= s2.t1 + 604800000000 THEN b.us END) AS t3
-                   FROM s2 LEFT JOIN b ON b.user_id = s2.user_id AND b.et = 'purchase'
-                   GROUP BY s2.user_id, s2.t1, s2.t2),
+    Some(s"""WITH ${funnelCtes},
             m AS (SELECT CAST(COUNT(t1) AS BIGINT) AS n1,
                          CAST(COUNT(t2) AS BIGINT) AS n2,
                          CAST(COUNT(t3) AS BIGINT) AS n3
@@ -9848,31 +9820,7 @@ object SparkEntry {
       graft.text.Bpe.train(t(s, dir, "documents"), "text", rounds = 3)
         .orderBy("round"),
     Some(raw"""WITH w0 AS (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents),
-            words AS (SELECT '|' || regexp_replace(w, '(.)', '\1|', 'g') AS s,
-                             CAST(COUNT(*) AS BIGINT) AS n
-                      FROM w0 WHERE w <> '' GROUP BY 1),
-            e1 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
-                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM words) t1
-                   WHERE len(l) >= 2),
-            p1 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
-                   FROM e1 GROUP BY 1, 2),
-            r1 AS (SELECT * FROM p1 ORDER BY pair_count DESC, pa, pb LIMIT 1),
-            w1 AS (SELECT ${bpeMergeSql("s", "r1.pa", "r1.pb")} AS s, n
-                   FROM words, r1),
-            e2 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
-                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM w1) t2
-                   WHERE len(l) >= 2),
-            p2 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
-                   FROM e2 GROUP BY 1, 2),
-            r2 AS (SELECT * FROM p2 ORDER BY pair_count DESC, pa, pb LIMIT 1),
-            w2 AS (SELECT ${bpeMergeSql("s", "r2.pa", "r2.pb")} AS s, n
-                   FROM w1, r2),
-            e3 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
-                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM w2) t3
-                   WHERE len(l) >= 2),
-            p3 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
-                   FROM e3 GROUP BY 1, 2),
-            r3 AS (SELECT * FROM p3 ORDER BY pair_count DESC, pa, pb LIMIT 1)
+            ${bpeRoundsCtes}
             SELECT 1 AS round, pa, pb, pa || pb AS merged, pair_count FROM r1
             UNION ALL
             SELECT 2, pa, pb, pa || pb, pair_count FROM r2
@@ -9898,31 +9846,7 @@ object SparkEntry {
         .orderBy("doc_id")
     },
     Some(raw"""WITH w0 AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents),
-            words AS (SELECT '|' || regexp_replace(w, '(.)', '\1|', 'g') AS s,
-                             CAST(COUNT(*) AS BIGINT) AS n
-                      FROM w0 WHERE w <> '' GROUP BY 1),
-            e1 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
-                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM words) t1
-                   WHERE len(l) >= 2),
-            p1 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
-                   FROM e1 GROUP BY 1, 2),
-            r1 AS (SELECT * FROM p1 ORDER BY pair_count DESC, pa, pb LIMIT 1),
-            w1 AS (SELECT ${bpeMergeSql("s", "r1.pa", "r1.pb")} AS s, n
-                   FROM words, r1),
-            e2 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
-                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM w1) t2
-                   WHERE len(l) >= 2),
-            p2 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
-                   FROM e2 GROUP BY 1, 2),
-            r2 AS (SELECT * FROM p2 ORDER BY pair_count DESC, pa, pb LIMIT 1),
-            w2 AS (SELECT ${bpeMergeSql("s", "r2.pa", "r2.pb")} AS s, n
-                   FROM w1, r2),
-            e3 AS (SELECT n, l, unnest(generate_series(1, len(l) - 1)) AS i
-                   FROM (SELECT string_split(trim(s, '|'), '|') AS l, n FROM w2) t3
-                   WHERE len(l) >= 2),
-            p3 AS (SELECT l[i] AS pa, l[i + 1] AS pb, CAST(SUM(n) AS BIGINT) AS pair_count
-                   FROM e3 GROUP BY 1, 2),
-            r3 AS (SELECT * FROM p3 ORDER BY pair_count DESC, pa, pb LIMIT 1),
+            ${bpeRoundsCtes},
             v1 AS (SELECT DISTINCT w, '|' || regexp_replace(w, '(.)', '\1|', 'g') AS s
                    FROM w0 WHERE w <> ''),
             v2 AS (SELECT w, ${bpeMergeSql("s", "r1.pa", "r1.pb")} AS s
