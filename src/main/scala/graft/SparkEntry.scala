@@ -54,6 +54,22 @@ object SparkEntry {
     t(s, dir, "documents").select(col("doc_id")).as[Long]
   }
 
+  /** A decoded image's exact pixel byte sum: feats(3) = (sumB+sumG+sumR)
+    * / (3n·255), inverted to the integer (a double holds it exactly at
+    * the fixture sizes).
+    */
+  private def pixelByteSum: Column =
+    round(element_at(col("features"), 4) *
+      (col("width") * col("height") * lit(3L) * lit(255L)))
+      .cast(LongType).as("pixel_byte_sum")
+
+  /** Each decoded image's format, shape, file size and [[pixelByteSum]]. */
+  private def pixelByteSums(s: SparkSession, bins: DataFrame): DataFrame =
+    graft.multimodal.Multimodal.extractFeatures(s, bins)
+      .select(col("doc_id"), col("format"), col("width"), col("height"), col("n_bytes"),
+        pixelByteSum)
+      .orderBy("doc_id")
+
   /** The media corpus the multimodal rows decode: one (doc_id, payload)
     * row per id of `ids`, the payload built on the executors by `bytes`.
     */
@@ -2565,6 +2581,15 @@ object SparkEntry {
       s"(CASE WHEN list_dot_product($vecExpr, [${p.mkString(", ")}]) >= 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
+  /** CASE over `t.tbl` of `vecExpr`'s [[bucketSql]] bucket in each of the
+    * 4 LSH tables the Spark side pins: nBits=8, dim=64, seed=42+table
+    * (RegressionSpec pins the plane constants).
+    */
+  private def lshTableBucketSql(vecExpr: String): String =
+    (0 until 4).map { tb =>
+      s"WHEN $tb THEN ${bucketSql(vecExpr, graft.similarity.Ann.hyperplanes(8, 64, 42L + tb))}"
+    }.mkString("CASE t.tbl ", " ", " END")
+
   /** LSH-bucketed approximate top-k — the 100 TB path. Approximate w.r.t.
     * brute force (recall asserted in AnnSpec) but fully deterministic, and
     * the oracle replays the whole construction: per-table buckets from the
@@ -2579,25 +2604,16 @@ object SparkEntry {
       graft.similarity.Ann.lshBucketedTopK(emb, emb.filter(col("vec_id") < 5), k = 10, nBits = 8)
         .select(col("qid"), col("rank"), col("cid"), col("cosine"))
         .orderBy("qid", "rank")
-    }, {
-      // must mirror the pinned knobs: nBits=8, dim=64, seed=42,
-      // nTables=4, k=10 (RegressionSpec pins the plane constants)
-      val tablePlanes = (0 until 4).map(tb => graft.similarity.Ann.hyperplanes(8, 64, 42L + tb))
-      val cbCase = tablePlanes.zipWithIndex.map { case (p, tb) =>
-        s"WHEN ${tb} THEN ${bucketSql("cv", p)}"
-      }.mkString("CASE t.tbl ", " ", " END")
-      val qbCase = tablePlanes.zipWithIndex.map { case (p, tb) =>
-        s"WHEN ${tb} THEN ${bucketSql("qv", p)}"
-      }.mkString("CASE t.tbl ", " ", " END")
-      Some(s"""WITH tables(tbl) AS (VALUES (0), (1), (2), (3)),
+    },
+    Some(s"""WITH tables(tbl) AS (VALUES (0), (1), (2), (3)),
             probes(mask) AS (VALUES (0), (1), (2), (4), (8), (16), (32), (64), (128)),
             cb AS (
               SELECT vec_id AS cid, embedding::DOUBLE[] AS cv, t.tbl,
-                     $cbCase AS bucket
+                     ${lshTableBucketSql("cv")} AS bucket
               FROM embeddings CROSS JOIN tables t),
             qb AS (
               SELECT vec_id AS qid, embedding::DOUBLE[] AS qv, t.tbl,
-                     $qbCase AS b0
+                     ${lshTableBucketSql("qv")} AS b0
               FROM embeddings CROSS JOIN tables t
               WHERE vec_id < 5),
             qp AS (SELECT qid, qv, tbl, xor(b0, mask) AS bucket
@@ -2611,8 +2627,7 @@ object SparkEntry {
                                                ORDER BY cosine DESC, cid) AS rk
                   FROM s)
             SELECT qid, CAST(rk AS INTEGER) AS rank, cid, cosine
-            FROM r WHERE rk <= 10 ORDER BY qid, rank""")
-    })
+            FROM r WHERE rk <= 10 ORDER BY qid, rank"""))
 
   /** Corpus-vs-corpus LSH retrieval (every vector is a query) through the
     * NON-broadcast [[graft.similarity.Ann.lshShuffledTopK]] path — the
@@ -2629,27 +2644,18 @@ object SparkEntry {
       graft.similarity.Ann.lshShuffledTopK(emb, emb, k = 5, nBits = 8)
         .select(col("qid"), col("rank"), col("cid"), col("cosine"))
         .orderBy("qid", "rank")
-    }, {
-      // mirrors the pinned knobs: nBits=8, dim=64, seed=42,
-      // nTables=4, maxBucket=100000, k=5
-      val tablePlanes = (0 until 4).map(tb => graft.similarity.Ann.hyperplanes(8, 64, 42L + tb))
-      val cbCase = tablePlanes.zipWithIndex.map { case (p, tb) =>
-        s"WHEN ${tb} THEN ${bucketSql("cv", p)}"
-      }.mkString("CASE t.tbl ", " ", " END")
-      val qbCase = tablePlanes.zipWithIndex.map { case (p, tb) =>
-        s"WHEN ${tb} THEN ${bucketSql("qv", p)}"
-      }.mkString("CASE t.tbl ", " ", " END")
-      Some(s"""WITH tables(tbl) AS (VALUES (0), (1), (2), (3)),
+    },
+    Some(s"""WITH tables(tbl) AS (VALUES (0), (1), (2), (3)),
             probes(mask) AS (VALUES (0), (1), (2), (4), (8), (16), (32), (64), (128)),
             cb AS (
               SELECT vec_id AS cid, embedding::DOUBLE[] AS cv, t.tbl,
-                     $cbCase AS bucket
+                     ${lshTableBucketSql("cv")} AS bucket
               FROM embeddings CROSS JOIN tables t),
             okb AS (SELECT tbl, bucket FROM cb GROUP BY tbl, bucket HAVING COUNT(*) <= 100000),
             cbcap AS (SELECT cb.* FROM cb JOIN okb USING (tbl, bucket)),
             qb AS (
               SELECT vec_id AS qid, embedding::DOUBLE[] AS qv, t.tbl,
-                     $qbCase AS b0
+                     ${lshTableBucketSql("qv")} AS b0
               FROM embeddings CROSS JOIN tables t),
             qp AS (SELECT qid, qv, tbl, xor(b0, mask) AS bucket
                    FROM qb CROSS JOIN probes),
@@ -2662,8 +2668,7 @@ object SparkEntry {
                                                ORDER BY cosine DESC, cid) AS rk
                   FROM s)
             SELECT qid, CAST(rk AS INTEGER) AS rank, cid, cosine
-            FROM r WHERE rk <= 5 ORDER BY qid, rank""")
-    })
+            FROM r WHERE rk <= 5 ORDER BY qid, rank"""))
 
   /** Embedding-cosine near-dup pairs (semantic dedup) through LSH buckets.
     * Random test embeddings make high-cosine pairs rare → low threshold
@@ -3151,6 +3156,25 @@ object SparkEntry {
               FROM subv v JOIN books b ON b.s = v.s
               WHERE v.cid < 5)"""
 
+  /** IVFADC ([[graft.similarity.Pq.ivfAdcTopK]]) up to `scored`(qid, cid,
+    * iscore): the ADC score of every code in the 4 of 16 IVF cells each
+    * query probes.
+    */
+  private val ivfAdcCtes =
+    s"""$pqCtes,
+            $pqLutCte,
+            ${ivfCentroidsCte(16, "icents")},
+            ${ivfAssignCte(cents = "icents", name = "iassign", vecs = false)},
+            ${ivfProbeCte(cents = "icents", name = "iqcells", vecs = false)},
+            scored AS (
+              SELECT l.qid, e.cid, CAST(SUM(l.lutv) AS BIGINT) AS iscore
+              FROM enc e
+              JOIN iassign a ON a.cid = e.cid
+              JOIN iqcells qc ON qc.cell = a.cell
+              JOIN lut l ON l.qid = qc.qid AND l.s = e.s AND l.j = e.code
+              WHERE e.cid <> qc.qid
+              GROUP BY l.qid, e.cid)"""
+
   /** PQ encode ([[graft.similarity.Pq.encode]]): every embedding
     * compressed to m=4 codebook indices (the 64× compression pass —
     * 256 B of float32 → 4 nibbles). The oracle replays sample → slice →
@@ -3219,19 +3243,7 @@ object SparkEntry {
           idx, emb.filter(col("vec_id") < 5), cents, cb, k = 10, nProbe = 4)
         .orderBy("qid", "rank")
     },
-    Some(s"""WITH $pqCtes,
-            $pqLutCte,
-            ${ivfCentroidsCte(16, "icents")},
-            ${ivfAssignCte(cents = "icents", name = "iassign", vecs = false)},
-            ${ivfProbeCte(cents = "icents", name = "iqcells", vecs = false)},
-            scored AS (
-              SELECT l.qid, e.cid, CAST(SUM(l.lutv) AS BIGINT) AS iscore
-              FROM enc e
-              JOIN iassign a ON a.cid = e.cid
-              JOIN iqcells qc ON qc.cell = a.cell
-              JOIN lut l ON l.qid = qc.qid AND l.s = e.s AND l.j = e.code
-              WHERE e.cid <> qc.qid
-              GROUP BY l.qid, e.cid),
+    Some(s"""WITH $ivfAdcCtes,
             ranked AS (
               SELECT *, row_number() OVER (PARTITION BY qid
                                            ORDER BY iscore ASC, cid) AS rk
@@ -3299,19 +3311,7 @@ object SparkEntry {
           k = 10, shortlist = 40, nProbe = 4)
         .orderBy("qid", "rank")
     },
-    Some(s"""WITH $pqCtes,
-            $pqLutCte,
-            ${ivfCentroidsCte(16, "icents")},
-            ${ivfAssignCte(cents = "icents", name = "iassign", vecs = false)},
-            ${ivfProbeCte(cents = "icents", name = "iqcells", vecs = false)},
-            scored AS (
-              SELECT l.qid, e.cid, CAST(SUM(l.lutv) AS BIGINT) AS iscore
-              FROM enc e
-              JOIN iassign a ON a.cid = e.cid
-              JOIN iqcells qc ON qc.cell = a.cell
-              JOIN lut l ON l.qid = qc.qid AND l.s = e.s AND l.j = e.code
-              WHERE e.cid <> qc.qid
-              GROUP BY l.qid, e.cid),
+    Some(s"""WITH $ivfAdcCtes,
             shortlist AS (
               SELECT qid, cid FROM (
                 SELECT *, row_number() OVER (PARTITION BY qid
@@ -3548,15 +3548,7 @@ object SparkEntry {
         val h = 1 + (id % 8).toInt
         graft.multimodal.Multimodal.makeBmp(w, h, id)
       }
-      graft.multimodal.Multimodal.extractFeatures(s, bins)
-        .select(col("doc_id"), col("format"), col("width"), col("height"),
-          col("n_bytes"),
-          // feats(3) = (sumB+sumG+sumR) / (3n*255); invert to the exact
-          // integer byte sum (double holds it exactly at these sizes)
-          round(element_at(col("features"), 4) *
-            (col("width") * col("height") * lit(3L) * lit(255L)))
-            .cast(LongType).as("pixel_byte_sum"))
-        .orderBy("doc_id")
+      pixelByteSums(s, bins)
     },
     Some("""WITH dims AS (
               SELECT doc_id,
@@ -3636,13 +3628,7 @@ object SparkEntry {
         val h = 1 + (id % 8).toInt
         graft.multimodal.Multimodal.makePng(w, h, id)
       }
-      graft.multimodal.Multimodal.extractFeatures(s, bins)
-        .select(col("doc_id"), col("format"), col("width"), col("height"),
-          col("n_bytes"),
-          round(element_at(col("features"), 4) *
-            (col("width") * col("height") * lit(3L) * lit(255L)))
-            .cast(LongType).as("pixel_byte_sum"))
-        .orderBy("doc_id")
+      pixelByteSums(s, bins)
     },
     Some("""WITH dims AS (
               SELECT doc_id,
@@ -3679,9 +3665,7 @@ object SparkEntry {
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("n_bytes"),
-          round(element_at(col("features"), 4) *
-            (col("width") * col("height") * lit(3L) * lit(255L)))
-            .cast(LongType).as("pixel_byte_sum"),
+          pixelByteSum,
           round(element_at(col("features"), 8) *
             (col("width") * col("height") * lit(255L)))
             .cast(LongType).as("alpha_byte_sum"))
@@ -3725,13 +3709,7 @@ object SparkEntry {
         val h = 1 + (id % 8).toInt
         graft.multimodal.Multimodal.makePng(w, h, id, interlaced = true)
       }
-      graft.multimodal.Multimodal.extractFeatures(s, bins)
-        .select(col("doc_id"), col("format"), col("width"), col("height"),
-          col("n_bytes"),
-          round(element_at(col("features"), 4) *
-            (col("width") * col("height") * lit(3L) * lit(255L)))
-            .cast(LongType).as("pixel_byte_sum"))
-        .orderBy("doc_id")
+      pixelByteSums(s, bins)
     },
     Some("""WITH dims AS (
               SELECT doc_id,
@@ -3777,13 +3755,7 @@ object SparkEntry {
         graft.multimodal.Multimodal.makePng(w, h, id, colorType = 2,
           bitDepth = 16)
       }
-      graft.multimodal.Multimodal.extractFeatures(s, bins)
-        .select(col("doc_id"), col("format"), col("width"), col("height"),
-          col("n_bytes"),
-          round(element_at(col("features"), 4) *
-            (col("width") * col("height") * lit(3L) * lit(255L)))
-            .cast(LongType).as("pixel_byte_sum"))
-        .orderBy("doc_id")
+      pixelByteSums(s, bins)
     },
     Some("""WITH dims AS (
               SELECT doc_id,
@@ -3823,9 +3795,7 @@ object SparkEntry {
       }
       graft.multimodal.Multimodal.extractFeatures(s, bins)
         .select(col("doc_id"), col("format"), col("width"), col("height"),
-          round(element_at(col("features"), 4) *
-            (col("width") * col("height") * lit(3L) * lit(255L)))
-            .cast(LongType).as("pixel_byte_sum"))
+          pixelByteSum)
         .orderBy("doc_id")
     },
     Some("""WITH dims AS (
@@ -5845,13 +5815,7 @@ object SparkEntry {
         graft.multimodal.Multimodal.makeBmp(w, h, id)
       }
       val resized = graft.multimodal.Multimodal.resizePayloads(s, bins, 4, 3)
-      graft.multimodal.Multimodal.extractFeatures(s, resized)
-        .select(col("doc_id"), col("format"), col("width"), col("height"),
-          col("n_bytes"),
-          round(element_at(col("features"), 4) *
-            (col("width") * col("height") * lit(3L) * lit(255L)))
-            .cast(LongType).as("pixel_byte_sum"))
-        .orderBy("doc_id")
+      pixelByteSums(s, resized)
     },
     Some("""WITH dims AS (
               SELECT doc_id,
