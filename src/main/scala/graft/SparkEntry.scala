@@ -1272,6 +1272,23 @@ object SparkEntry {
                     FROM px GROUP BY 1, 2, 3),
             ${aHashCtes("b.bsum * 256 >= t.total * 4", unsigned = unsigned)}"""
 
+  /** `px`(doc_id, r, x, gray): the top-down `side`² TIFF fixture grid
+    * ([[graft.multimodal.Multimodal.makeTiff]]), gray = 3× the sample on
+    * the docs where `grayDocs` holds and r+g+b on the rest.
+    */
+  private def tiffGrayPxCte(grayDocs: String, side: Int = 16): String =
+    s"""px AS (
+              SELECT d.doc_id, r.r AS r, x.x AS x,
+                     CASE WHEN $grayDocs
+                          THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
+                          ELSE (d.doc_id + r.r * 31 + (3*x.x + 0) * 7) % 256
+                             + (d.doc_id + r.r * 31 + (3*x.x + 1) * 7) % 256
+                             + (d.doc_id + r.r * 31 + (3*x.x + 2) * 7) % 256
+                     END AS gray
+              FROM documents d
+              JOIN generate_series(0, ${side - 1}) r(r) ON TRUE
+              JOIN generate_series(0, ${side - 1}) x(x) ON TRUE)"""
+
   /** The 65-frame energy-delta fingerprint ([[graft.multimodal.Multimodal
     * .audioFingerprints]]) over prior CTEs `base`(doc_id, …) and
     * `samples`(doc_id, `at`, v): frame f of a doc's `n` samples is
@@ -4398,7 +4415,7 @@ object SparkEntry {
   private val qAudioCoverage = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 450)) { id =>
-        val bytes = (id % 18) match {
+        (id % 18) match {
           case 0 => graft.multimodal.Multimodal.makeWav(600, 1, 8000, id)
           case 1 => graft.multimodal.Flac.make(192, 1, 8000, id)
           case 2 => graft.multimodal.Multimodal.makeWavG711(600, 8000, id, aLaw = false)
@@ -4427,7 +4444,6 @@ object SparkEntry {
           // n_fingerprinted now differ by exactly the junk half
           case _ => graft.multimodal.Multimodal.makeOggFlac(192, 1, 8000, id)
         }
-        bytes
       }
       graft.multimodal.Multimodal.audioCoverage(s, bins)
         .orderBy("format")
@@ -4488,7 +4504,7 @@ object SparkEntry {
   private val qMediaMetaWebp = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 240)) { id =>
-        val bytes = (id % 3) match {
+        (id % 3) match {
           case 0 => graft.multimodal.Multimodal.makeWebpHeader(
             100 + (id % 7).toInt, 50)
           case 1 => graft.multimodal.Multimodal.makeWebpAnim(
@@ -4496,7 +4512,6 @@ object SparkEntry {
           case _ => graft.multimodal.Multimodal.makeWebpAnim(
             32, 32, 1, 90)
         }
-        bytes
       }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
@@ -4530,14 +4545,13 @@ object SparkEntry {
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 240)) { id =>
         val M = graft.multimodal.Multimodal
-        val bytes = (id % 4) match {
+        (id % 4) match {
           case 0 => M.makeIco((20 + id % 5).toInt, 16, id, withSmaller = true)
           case 1 => M.makePnm(24, (10 + id % 3).toInt, id)
           case 2 => (s"P4\n24 ${10 + id % 3}\n").getBytes("US-ASCII") ++
             Array.tabulate(48)(i => ((id + i) % 256).toByte)
           case _ => M.makeQoi(18, (12 + id % 2).toInt, id)
         }
-        bytes
       }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
@@ -4638,14 +4652,13 @@ object SparkEntry {
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 150)) { id =>
         val M = graft.multimodal.Multimodal
-        val bytes = (id % 4) match {
+        (id % 4) match {
           case 0 => M.makeTiffJpeg(64, 64, 16, id)
           case 1 => M.makeTiffJpeg(64, 64, 16, id, bigEndian = true)
           case 2 => M.makeTiffJpeg(64, 64, 16, id, sharedTables = true)
           case _ => M.makeTiffJpeg(64, 64, 16, id, color = true,
             sharedTables = true)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
@@ -4676,7 +4689,7 @@ object SparkEntry {
   private val qImageAHashTiff = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir)) { id =>
-        val bytes = (id % 4) match {
+        (id % 4) match {
           case 0 => graft.multimodal.Multimodal.makeTiff(16, 16, id, rgb = false)
           case 1 => graft.multimodal.Multimodal.makeTiff(16, 16, id)
           case 2 => graft.multimodal.Multimodal.makeTiff(16, 16, id,
@@ -4684,21 +4697,10 @@ object SparkEntry {
           case _ => graft.multimodal.Multimodal.makeTiff(16, 16, id, rgb = false,
             bigEndian = true, rowsPerStrip = 3)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some(s"""WITH px AS (
-              SELECT d.doc_id, r.r AS r, x.x AS x,
-                     CASE WHEN d.doc_id % 4 IN (0, 3)
-                          THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
-                          ELSE (d.doc_id + r.r * 31 + (3*x.x + 0) * 7) % 256
-                             + (d.doc_id + r.r * 31 + (3*x.x + 1) * 7) % 256
-                             + (d.doc_id + r.r * 31 + (3*x.x + 2) * 7) % 256
-                     END AS gray
-              FROM documents d
-              JOIN generate_series(0, 15) r(r) ON TRUE
-              JOIN generate_series(0, 15) x(x) ON TRUE),
+    Some(s"""WITH ${tiffGrayPxCte("d.doc_id % 4 IN (0, 3)")},
             ${grayGridAHashCtes()}
             ${hashSelectSql("ahash")}"""))
 
@@ -4719,7 +4721,7 @@ object SparkEntry {
     (s, dir) => {
       val bins = payloads(docIds(s, dir)) { id =>
         val M = graft.multimodal.Multimodal
-        val bytes = (id % 6) match {
+        (id % 6) match {
           case 0 => M.makeTiff(16, 16, id, rgb = false, compression = 5)
           case 1 => M.makeTiff(16, 16, id, compression = 5, predictor = 2)
           case 2 => M.makeTiff(16, 16, id, compression = 8)
@@ -4730,21 +4732,10 @@ object SparkEntry {
           case _ => M.makeTiff(16, 16, id, compression = 32773,
             rowsPerStrip = 3)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some(s"""WITH px AS (
-              SELECT d.doc_id, r.r AS r, x.x AS x,
-                     CASE WHEN d.doc_id % 6 IN (0, 3, 4)
-                          THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
-                          ELSE (d.doc_id + r.r * 31 + (3*x.x + 0) * 7) % 256
-                             + (d.doc_id + r.r * 31 + (3*x.x + 1) * 7) % 256
-                             + (d.doc_id + r.r * 31 + (3*x.x + 2) * 7) % 256
-                     END AS gray
-              FROM documents d
-              JOIN generate_series(0, 15) r(r) ON TRUE
-              JOIN generate_series(0, 15) x(x) ON TRUE),
+    Some(s"""WITH ${tiffGrayPxCte("d.doc_id % 6 IN (0, 3, 4)")},
             ${grayGridAHashCtes()}
             ${hashSelectSql("ahash")}"""))
 
@@ -4764,7 +4755,7 @@ object SparkEntry {
     (s, dir) => {
       val bins = payloads(docIds(s, dir)) { id =>
         val M = graft.multimodal.Multimodal
-        val bytes = (id % 6) match {
+        (id % 6) match {
           case 0 => M.makeTiff(24, 24, id, rgb = false, bits = 16)
           case 1 => M.makeTiff(24, 24, id, bits = 16, bigEndian = true,
             compression = 8, predictor = 2, rowsPerStrip = 7)
@@ -4776,21 +4767,10 @@ object SparkEntry {
           case _ => M.makeTiff(24, 24, id, bits = 16, planar = true,
             tileSize = 16, compression = 5, predictor = 2)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some(s"""WITH px AS (
-              SELECT d.doc_id, r.r AS r, x.x AS x,
-                     CASE WHEN d.doc_id % 6 IN (0, 3)
-                          THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
-                          ELSE (d.doc_id + r.r * 31 + (3*x.x + 0) * 7) % 256
-                             + (d.doc_id + r.r * 31 + (3*x.x + 1) * 7) % 256
-                             + (d.doc_id + r.r * 31 + (3*x.x + 2) * 7) % 256
-                     END AS gray
-              FROM documents d
-              JOIN generate_series(0, 23) r(r) ON TRUE
-              JOIN generate_series(0, 23) x(x) ON TRUE),
+    Some(s"""WITH ${tiffGrayPxCte("d.doc_id % 6 IN (0, 3)", side = 24)},
             tot AS (SELECT doc_id, SUM(gray) AS total FROM px GROUP BY doc_id),
             blk AS (SELECT doc_id, r // 3 AS bi, x // 3 AS bj, SUM(gray) AS bsum
                     FROM px GROUP BY 1, 2, 3),
@@ -4813,13 +4793,12 @@ object SparkEntry {
     (s, dir) => {
       val bins = payloads(docIds(s, dir)) { id =>
         val M = graft.multimodal.Multimodal
-        val bytes = (id % 4) match {
+        (id % 4) match {
           case 0 => M.makeIco(16, 16, id, withSmaller = true)
           case 1 => M.makeIco(16, 16, id, bpp = 32)
           case 2 => M.makeIco(16, 16, id, bpp = 8)
           case _ => M.makeIco(16, 16, id, png = true)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
@@ -4857,13 +4836,12 @@ object SparkEntry {
     (s, dir) => {
       val bins = payloads(docIds(s, dir)) { id =>
         val M = graft.multimodal.Multimodal
-        val bytes = (id % 4) match {
+        (id % 4) match {
           case 0 => M.makeBmpX(16, 16, id, bpp = 32)
           case 1 => M.makeBmpX(16, 16, id, bpp = 8)
           case 2 => M.makeBmpX(16, 16, id, bpp = 8, rle = true)
           case _ => M.makeBmpX(16, 16, id, topDown = true)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
@@ -4900,27 +4878,16 @@ object SparkEntry {
     (s, dir) => {
       val bins = payloads(docIds(s, dir)) { id =>
         val M = graft.multimodal.Multimodal
-        val bytes = (id % 4) match {
+        (id % 4) match {
           case 0 => M.makePnm(16, 16, id)
           case 1 => M.makePnm(16, 16, id, asciiForm = true)
           case 2 => M.makePnm(16, 16, id, rgb = false)
           case _ => M.makePnm(16, 16, id, rgb = false, asciiForm = true)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
-    Some(s"""WITH px AS (
-              SELECT d.doc_id, r.r AS r, x.x AS x,
-                     CASE WHEN d.doc_id % 4 IN (2, 3)
-                          THEN 3 * ((d.doc_id + r.r * 31 + x.x * 7) % 256)
-                          ELSE (d.doc_id + r.r * 31 + (3*x.x + 0) * 7) % 256
-                             + (d.doc_id + r.r * 31 + (3*x.x + 1) * 7) % 256
-                             + (d.doc_id + r.r * 31 + (3*x.x + 2) * 7) % 256
-                     END AS gray
-              FROM documents d
-              JOIN generate_series(0, 15) r(r) ON TRUE
-              JOIN generate_series(0, 15) x(x) ON TRUE),
+    Some(s"""WITH ${tiffGrayPxCte("d.doc_id % 4 IN (2, 3)")},
             ${grayGridAHashCtes()}
             ${hashSelectSql("ahash")}"""))
 
@@ -4937,12 +4904,11 @@ object SparkEntry {
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 300)) { id =>
         val M = graft.multimodal.Multimodal
-        val bytes = (id % 3) match {
+        (id % 3) match {
           case 0 => M.makeQoi(16, 16, id)
           case 1 => M.makeQoi(24, 8, id)
           case _ => M.makeQoi(512, 8, id)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins).orderBy("doc_id")
     },
@@ -4980,7 +4946,7 @@ object SparkEntry {
   private val qImageCoverage = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 450)) { id =>
-        val bytes = (id % 13) match {
+        (id % 13) match {
           case 0 => graft.multimodal.Multimodal.makeBmp(16, 16, id)
           case 1 => graft.multimodal.Multimodal.makePng(16, 16, id)
           case 2 => graft.multimodal.Multimodal.makeGif(16, 16, id)
@@ -5000,7 +4966,6 @@ object SparkEntry {
           case 11 => graft.multimodal.Multimodal.makeQoi(16, 16, id)
           case _ => "P4\n4 4\n".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 0)
         }
-        bytes
       }
       graft.multimodal.Multimodal.imageCoverage(s, bins)
         .orderBy("format")
@@ -5391,13 +5356,12 @@ object SparkEntry {
   private val qMediaMetaApng = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 240)) { id =>
-        val bytes = (id % 3) match {
+        (id % 3) match {
           case 0 => graft.multimodal.Multimodal.makeApng(24, 12, id, 3)
           case 1 => graft.multimodal.Multimodal.makeApng(16, 16, id, 1)
           case _ => graft.multimodal.Multimodal.makeApng(
             32, 20, id, 2 + (id % 4).toInt)
         }
-        bytes
       }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
@@ -5433,10 +5397,8 @@ object SparkEntry {
   private val qVideoMixedNearDup = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 100)) { id =>
-        val bytes =
-          if (id < 50) graft.multimodal.Multimodal.makeAviMjpeg(64, 64, id % 50, 3)
-          else graft.multimodal.Multimodal.makeMp4Mjpeg(64, 64, id % 50, 3)
-        bytes
+        if (id < 50) graft.multimodal.Multimodal.makeAviMjpeg(64, 64, id % 50, 3)
+        else graft.multimodal.Multimodal.makeMp4Mjpeg(64, 64, id % 50, 3)
       }
       graft.multimodal.Multimodal.videoNearDups(
           graft.multimodal.Multimodal.videoFrameHashes(s, bins),
@@ -5458,7 +5420,7 @@ object SparkEntry {
   private val qVideoCoverage = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 480)) { id =>
-        val bytes = (id % 8) match {
+        (id % 8) match {
           case 0 => graft.multimodal.Multimodal.makeGifAnimated(16, 16, id, 2)
           case 1 => graft.multimodal.Multimodal.makeAviMjpeg(16, 16, id, 2)
           case 2 => "RIFF".getBytes("US-ASCII") ++ Array[Byte](20, 0, 0, 0) ++
@@ -5471,7 +5433,6 @@ object SparkEntry {
           case 6 => graft.multimodal.Multimodal.makeMp4Mjpeg(16, 16, id, 2, brand = "qt  ")
           case _ => Array.fill(24)(2.toByte)
         }
-        bytes
       }
       graft.multimodal.Multimodal.videoCoverage(s, bins)
         .orderBy("format")
@@ -5507,7 +5468,7 @@ object SparkEntry {
   private val qMediaMeta = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 500)) { id =>
-        val bytes = (id % 10) match {
+        (id % 10) match {
           case 0 => graft.multimodal.Multimodal.makeWav(
             400 + (id % 5).toInt, 1 + (id % 2).toInt, 8000, id)
           case 1 => graft.multimodal.Multimodal.makeAu(
@@ -5536,7 +5497,6 @@ object SparkEntry {
             16, 16, id, 2 + (id % 3).toInt)
           case _ => Array.fill(16)(3.toByte)
         }
-        bytes
       }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
@@ -5613,7 +5573,7 @@ object SparkEntry {
   private val qMediaMetaContainers = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir).filter((id: Long) => id < 300)) { id =>
-        val bytes = (id % 8) match {
+        (id % 8) match {
           case 0 => graft.multimodal.Multimodal.makeWebm(
             320 + (id % 5).toInt, 240)
           case 1 => graft.multimodal.Multimodal.makeWebm(
@@ -5633,7 +5593,6 @@ object SparkEntry {
           case _ => graft.multimodal.Multimodal.makeHeifHeader(
             99, 77 + (id % 3).toInt, "heic1")
         }
-        bytes
       }
       graft.multimodal.Multimodal.mediaMeta(s, bins)
         .orderBy("doc_id")
@@ -5685,10 +5644,8 @@ object SparkEntry {
   private val qImageAHashJpeg = Q(
     (s, dir) => {
       val bins = payloads(docIds(s, dir)) { id =>
-        val b =
-          if (id % 2 == 0) graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true)
-          else graft.multimodal.Multimodal.makeJpegProgressive(64, 64, id, gray = true)
-        b
+        if (id % 2 == 0) graft.multimodal.Multimodal.makeJpeg(64, 64, id, gray = true)
+        else graft.multimodal.Multimodal.makeJpegProgressive(64, 64, id, gray = true)
       }
       graft.multimodal.Multimodal.imageAHashes(s, bins)
         .orderBy("doc_id")
@@ -9625,7 +9582,7 @@ object SparkEntry {
       val ckpt = tmp.resolve("ckpt").toString
       val stream = payloads(Tables.readTableStream(s, dir, "documents")
           .filter(col("doc_id") < 400).select(col("doc_id")).as[Long]) { id =>
-        val bytes = (id % 7) match {
+        (id % 7) match {
           case 0 => graft.multimodal.Multimodal.makePng(
             4 + (id % 6).toInt, 8, id)
           case 1 => graft.multimodal.Multimodal.makeWav(
@@ -9640,7 +9597,6 @@ object SparkEntry {
           case _ => graft.multimodal.Multimodal.makeIco(
             (4 + id % 6).toInt, 8, id)
         }
-        bytes
       }
       val q = graft.streaming.MetaIngest.start(
         s, stream, metaPath, keptPath, ckpt,
