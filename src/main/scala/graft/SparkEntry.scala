@@ -16,6 +16,8 @@ import graft.ops.{Cleansing, Dedup, Normalize, Tables, Windows}
   * query ends in an ORDER BY on a unique key; floating aggregates either
   * operate on integral-valued doubles (bit-exact in any summation order) or
   * are ROUNDed; no `monotonically_increasing_id`; session TZ is UTC.
+  * In the synthetic lineitem (l_orderkey, l_linenumber) is NOT unique:
+  * the unique key is (l_orderkey, l_linenumber, l_partkey, l_suppkey).
   */
 object SparkEntry {
 
@@ -166,13 +168,6 @@ object SparkEntry {
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
-
-  // Deterministic total order for lineitem rows. NOTE: in this synthetic
-  // data (l_orderkey, l_linenumber) is NOT unique — the verified unique key
-  // is (l_orderkey, l_linenumber, l_partkey, l_suppkey). Every oracle query
-  // over row-level lineitem output must order by enough columns to induce a
-  // total order on its *output* columns.
-  private val liKey: Seq[String] = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
 
   // ---------------------------------------------------------------------
   // §2.1 scans + §2.3 filters
@@ -10001,31 +9996,6 @@ object SparkEntry {
             ${unigramEmCtes("")},
             ${unigramDpCtes("vocab2", "e")},
             ${unigramSelectSql("e")}"""))
-
-  /** The vocabulary-only prefix of [[unigramCtes]] (no lattice, no
-    * recursion — [[qUnigramVocab]] doesn't need the DP).
-    */
-  private def unigramVocabOnlyCtes(minCount: Long): String = {
-    val P = graft.text.Unigram.MaxPieceLen
-    s"""w AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
-            FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-            WHERE len(word) > 0 GROUP BY word),
-        sub0 AS (SELECT word, cnt, unnest(generate_series(1, len(word))) AS p
-                 FROM w),
-        sub1 AS (SELECT word, cnt, p,
-                        unnest(generate_series(1, LEAST($P, len(word) - p + 1))) AS l
-                 FROM sub0),
-        sub AS (SELECT substr(word, p, l) AS piece, CAST(l AS INTEGER) AS plen,
-                       CAST(SUM(cnt) AS BIGINT) AS c
-                FROM sub1 GROUP BY 1, 2),
-        keep AS (SELECT piece, plen, c FROM sub
-                 WHERE plen = 1 OR c >= $minCount),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM keep),
-        vocab AS (SELECT piece, plen, c,
-                         CAST(ROUND(ln(CAST(c AS DOUBLE) / CAST(t AS DOUBLE))
-                                    * 1000000.0) AS BIGINT) AS score_micro
-                  FROM keep CROSS JOIN tot)"""
-  }
 
   private def wordpieceVocabCtes(maxPrefix: Int, minCount: Long): String =
     s"""w AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt

@@ -30,7 +30,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * no other file calls `.foreachBatch`, so the checkpoint, the trigger
   * and any per-batch hook live in one place.
   *
-  * And no `.scala` file under `src/` carries a control byte other than
+  * And in `SparkEntry.scala`, the query registry, the signed-BIGINT fold
+  * of a HUGEINT hash sum (its `18446744073709551616` constant) is written
+  * only in `signedBigintSql`, and the media corpus's
+  * `toDF("doc_id", "payload")` only in `payloads`. A row that needs either
+  * calls the builder, so the oracle law and the corpus shape each live in
+  * one place, and a new copy would bring back the hand-copied fragments
+  * that made up a third of the file. The `graft.tools` probes build their
+  * own corpora and are outside this rule.
+  *
+ * And no `.scala` file under `src/` carries a control byte other than
   * tab, newline or carriage return: grep and ripgrep treat such a file
   * as binary, so a search of the source silently skips it.
   *
@@ -79,6 +88,8 @@ class WriterPathSpec extends AnyFunSuite {
   private val ReaderStart = """\.read(?:Stream)?\b(?!\s*[(])""".r
   private val ReadSource = """\.(parquet|json|orc|csv|text|textFile|table|load)\s*\(""".r
   private val Def = """\bdef\s+(\w+)""".r
+  // an object member of SparkEntry: a builder `def` or a registry row `val`
+  private val Member = """(?m)^  (?:private(?:\[\w+\])? )?(?:lazy )?(?:def|val)\s+(\w+)""".r
   private val Builder = """\bSparkSession\s*\.\s*builder\b""".r
   // partition listing or registration as SQL text; not Spark's action
   // name "ALTER TABLE ADD PARTITION", which no `(` or `IF` follows
@@ -164,6 +175,18 @@ class WriterPathSpec extends AnyFunSuite {
           .getOrElse("-"), lineOf(src, m.start)))
     }
 
+  /** (text, the one builder it may appear in) for `SparkEntry.scala`. */
+  private val oneBuilder = Seq(
+    "18446744073709551616" -> "signedBigintSql",
+    """toDF("doc_id", "payload")""" -> "payloads")
+
+  /** (enclosing object member, line) of every occurrence of `text` in `src`. */
+  private def occurrences(src: String, text: String): Seq[(String, Int)] =
+    Iterator.iterate(src.indexOf(text))(at => src.indexOf(text, at + 1)).takeWhile(_ >= 0)
+      .map(at => (Member.findAllMatchIn(src.take(at)).map(_.group(1)).toSeq.lastOption
+        .getOrElse("-"), lineOf(src, at)))
+      .toSeq
+
   /** Lines of `src` that build partition SQL text. */
   private def partitionSql(src: String): Seq[Int] =
     PartitionSql.findAllMatchIn(src).map(m => lineOf(src, m.start)).toSeq
@@ -211,6 +234,33 @@ class WriterPathSpec extends AnyFunSuite {
         |s"ALTER TABLE t add partition ($spec)"
         |""".stripMargin)
     assert(partitionSql(src) === Seq(3, 4, 5))
+  }
+
+  test("the registry writes each shared oracle law and its media corpus in one builder") {
+    val file = "SparkEntry.scala"
+    val src = sources().collectFirst { case (`file`, s) => s }
+      .getOrElse(fail(s"no $file under $root"))
+    oneBuilder.foreach { case (text, builder) =>
+      val found = occurrences(src, text)
+      val copies = found.filterNot(_._1 == builder)
+      assert(copies.isEmpty, s"$text written outside $builder:\n" +
+        copies.map { case (d, l) => s"  $file:$l (in $d)" }.mkString("\n"))
+      assert(found.nonEmpty, s"no $text in $file: stale rule for $builder")
+    }
+  }
+
+  test("the one-builder scan attributes each copy to its member and ignores comments") {
+    val src = blankComments(
+      """  private def payloads(ids: Dataset[Long]): DataFrame = {
+        |    ids.map(id => (id, f(id))).toDF("doc_id", "payload")
+        |  }
+        |  // .toDF("doc_id", "payload")
+        |  private val qRow = Q(
+        |    (s, dir) => {
+        |      val ok = "payload"; xs.toDF("doc_id", "payload")
+        |""".stripMargin)
+    assert(occurrences(src, "toDF(\"doc_id\", \"payload\")") ===
+      Seq(("payloads", 2), ("qRow", 7)))
   }
 
   test("every micro-batch sink starts at Ingest.drain") {
