@@ -56,6 +56,14 @@ object SparkEntry {
     t(s, dir, "documents").select(col("doc_id")).as[Long]
   }
 
+  /** The media corpus the multimodal rows decode: one (doc_id, payload)
+    * row per id of `ids`, the payload built on the executors by `bytes`.
+    */
+  private def payloads(ids: Dataset[Long])(bytes: Long => Array[Byte]): DataFrame = {
+    import ids.sparkSession.implicits._
+    ids.map(id => (id, bytes(id))).toDF("doc_id", "payload")
+  }
+
   /** A decoded image's exact pixel byte sum: feats(3) = (sumB+sumG+sumR)
     * / (3n·255), inverted to the integer (a double holds it exactly at
     * the fixture sizes).
@@ -71,14 +79,6 @@ object SparkEntry {
       .select(col("doc_id"), col("format"), col("width"), col("height"), col("n_bytes"),
         pixelByteSum)
       .orderBy("doc_id")
-
-  /** The media corpus the multimodal rows decode: one (doc_id, payload)
-    * row per id of `ids`, the payload built on the executors by `bytes`.
-    */
-  private def payloads(ids: Dataset[Long])(bytes: Long => Array[Byte]): DataFrame = {
-    import ids.sparkSession.implicits._
-    ids.map(id => (id, bytes(id))).toDF("doc_id", "payload")
-  }
 
   /** Per-invocation scratch dir for queries that round-trip through disk
     * (index writes, streaming sinks), registered for recursive deletion
